@@ -12,33 +12,21 @@ import graft.functions.{TextFunctions => T}
   * Scale shape: the corpus is touched ONCE (tokens → word-frequency
   * aggregate); every merge round after that runs on the
   * WORD-FREQUENCY relation, whose size is the vocabulary — millions
-  * of rows at 100 TB, not the corpus. Two round strategies, identical
-  * output (spec-pinned parity):
+  * of rows at 100 TB, not the corpus.
   *
-  *  - `incremental = false` (default): each round re-counts adjacent
-  *    pairs with one vocab-sized explode + groupBy and rewrites the
-  *    whole symbolized vocab. MEASURED fastest at short merge
-  *    schedules (64 merges, sf0.1: 10.3s vs 32.4s incremental —
-  *    BENCH_NOTES_r10.md): early merges are single-character pairs
-  *    that occur in nearly every word, so "only touched words" is the
-  *    whole vocab and delta machinery is pure overhead.
-  *  - `incremental = true`: the pair counts live in their own
-  *    checkpointed (pair, n) relation, the argmax is a limit(1) over
-  *    that already-aggregated relation, and each merge applies ±freq
-  *    count deltas computed from only the words the merge actually
-  *    changed (a lazily-evaluated CaseWhen `array_contains(l) &&
-  *    array_contains(r)` guard keeps the interpreted merge fold off
-  *    untouched words). Per-round bound: one codegen'd whole-vocab
-  *    guard scan + fold/explode work proportional to the touched
-  *    slice + one counts-sized groupBy. This is the shape for
-  *    REALISTIC merge schedules (30k+): deep into the schedule the
-  *    best pair is a rare multi-character symbol pair, the touched
-  *    slice shrinks toward the pair frequency, and a full vocab
-  *    rewrite + recount per round would dominate.
-  *
-  * Each round re-materializes its state (lazy localCheckpoint) so
-  * lineage doesn't compound, exactly like
-  * [[Similarity.kmeansCentroids]].
+  * Each round re-counts adjacent pairs with one vocab-sized explode +
+  * groupBy and rewrites the whole symbolized vocab, then
+  * re-materializes it (eager localCheckpoint) so lineage doesn't
+  * compound, exactly like [[Similarity.kmeansCentroids]]. Rounds
+  * recount rather than patch a persistent (pair, n) relation with
+  * ±freq deltas from only the touched words: the delta design
+  * measured 3–4× slower at every schedule tried — 32.8 s vs 10.1 s
+  * at 64 merges on sf0.1 (BENCH_NOTES_r10.md), 86.9 s vs 20.0 s at
+  * 300 and 100.8 s vs 25.5 s at 1000 on sf0.01 (BENCH_NOTES_r11.md).
+  * Early merges are single-character pairs that occur in nearly
+  * every word, so the touched slice is the vocab, and each delta
+  * round's fixed costs (touch-guard scan, union + counts groupBy, a
+  * second checkpoint) outweigh one recount.
   *
   * Determinism: the best pair maximizes (count, then lexicographic
   * (left, right) ASCENDING as the tie-break) — no RNG, no
@@ -82,57 +70,9 @@ object Bpe {
   /** Learn `numMerges` BPE merges over the corpus' whitespace words.
     * Returns (merge_rank, lhs, rhs, pair_count) — rank 1 is the first
     * (highest-count) merge. Words shorter than 2 symbols stop
-    * contributing automatically (no pairs). See the object scaladoc
-    * for the `incremental` strategy trade-off.
+    * contributing automatically (no pairs).
     */
-  def learnMerges(
-      df: DataFrame, textCol: String, numMerges: Int,
-      incremental: Boolean = false): DataFrame =
-    learnMergesImpl(df, textCol, numMerges,
-      startIncremental = incremental, crossoverFrac = -1.0)._1
-
-  /** Auto-crossover strategy: rounds start on recount (measured
-    * fastest while the best pair touches most of the vocab) and
-    * switch PERMANENTLY to incremental the first round the best
-    * pair's unweighted occurrence count falls below `crossoverFrac` ×
-    * the FIRST round's best-pair occurrence count. Occurrence count
-    * estimates the touched vocab slice (what incremental's per-round
-    * cost tracks); measuring the decay against round 1's own maximum
-    * self-calibrates across corpora, where an absolute vocab-size
-    * fraction would mis-fire on corpora whose top pair is
-    * occurrence-poor. The switch round's recount seeds the
-    * incremental counts relation, so no extra pass is paid.
-    * Identical output to either pure strategy (parity spec).
-    *
-    * Measured (BENCH_NOTES_r11.md, sf0.01, 300/1000-merge
-    * schedules): incremental's per-round fixed costs run ~4× a
-    * recount round on a ~4k-word vocab, and occurrence counts
-    * collapse below 0.3–0.5× round-1's within ~10 merges yet stay
-    * above 0.2× through merge 1000 — high fractions mis-fire into
-    * the slow leg, while the 0.1 default correctly never switched
-    * there (auto == recount) and DOES switch mid-schedule on corpora
-    * with genuine deep decay (the sf0.001 spec). Keep the default
-    * unless profiling a vocab large enough that full recount passes
-    * dominate the delta machinery.
-    */
-  def learnMergesAuto(
-      df: DataFrame, textCol: String, numMerges: Int,
-      crossoverFrac: Double = 0.1): DataFrame =
-    learnMergesAutoWithSwitch(df, textCol, numMerges, crossoverFrac)._1
-
-  /** [[learnMergesAuto]] plus the 1-based rank whose merge first ran
-    * incrementally (-1 = the schedule finished all-recount) — the
-    * observable the crossover spec and tuning runs read.
-    */
-  private[graft] def learnMergesAutoWithSwitch(
-      df: DataFrame, textCol: String, numMerges: Int,
-      crossoverFrac: Double): (DataFrame, Int) =
-    learnMergesImpl(df, textCol, numMerges,
-      startIncremental = false, crossoverFrac = crossoverFrac)
-
-  private def learnMergesImpl(
-      df: DataFrame, textCol: String, numMerges: Int,
-      startIncremental: Boolean, crossoverFrac: Double): (DataFrame, Int) = {
+  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // the ONLY corpus-wide pass: word frequencies
@@ -146,30 +86,12 @@ object Bpe {
       // empty symbol (and "" would then enter the pair counts)
       .select(split(col("w"), "(?!^)(?=.)").as("syms"), col("freq"))
       .localCheckpoint(eager = true)
-    var incremental = startIncremental
-    val auto = crossoverFrac >= 0.0
-    // round 1's best-pair occurrence count — the crossover yardstick
-    var occYardstick = -1L
-    // incremental only: the ONE full pair count, patched every round
-    var counts: DataFrame =
-      if (incremental)
-        vocab.where(size(col("syms")) >= 2)
-          .select(col("freq"), pairsOf(col("syms")).as("pair"))
-          .groupBy("pair").agg(sum(col("freq")).as("n"))
-          .localCheckpoint(eager = true)
-      else null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
-    var switchRank = if (startIncremental) 1 else -1
     while (rank <= numMerges) {
-      val pairCounts =
-        if (incremental) counts
-        else vocab.where(size(col("syms")) >= 2)
-          .select(col("freq"), pairsOf(col("syms")).as("pair"))
-          .groupBy("pair").agg(sum(col("freq")).as("n"),
-            // auto only: occurrence count ≈ touched-word estimate
-            count(lit(1)).as("n_occ"))
-      val best = pairCounts
+      val best = vocab.where(size(col("syms")) >= 2)
+        .select(col("freq"), pairsOf(col("syms")).as("pair"))
+        .groupBy("pair").agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("pair").asc)
         .limit(1)
         .collect()
@@ -180,60 +102,13 @@ object Bpe {
         val sp = pairStr.indexOf(' ') // symbols never contain spaces (whitespace tokens)
         val (lS, rS) = (pairStr.substring(0, sp), pairStr.substring(sp + 1))
         merges += ((rank, lS, rS, n))
-        if (auto && !incremental && occYardstick < 0) occYardstick = best(0).getLong(2)
-        if (auto && !incremental &&
-            best(0).getLong(2) < crossoverFrac * occYardstick) {
-          // crossover: adopt THIS round's full recount as the counts
-          // relation (no extra pass) and apply the merge — and every
-          // later one — through the delta path
-          incremental = true
-          switchRank = rank
-          counts = pairCounts.select(col("pair"), col("n"))
-            .localCheckpoint(eager = true)
-        }
-        if (incremental) {
-          // only words CONTAINING both symbols can change under this
-          // merge (mergePair is identity otherwise); CaseWhen evaluates
-          // branches lazily per row, so the codegen'd guard keeps the
-          // interpreted fold off every untouched word. The fold runs
-          // ONCE, here — vocab and the count deltas both derive from
-          // this checkpointed slice.
-          val touches =
-            array_contains(col("syms"), lS) && array_contains(col("syms"), rS)
-          val touched = vocab
-            .where(touches)
-            .select(col("freq"), col("syms").as("old_syms"),
-              mergePair(col("syms"), lit(lS), lit(rS)).as("new_syms"))
-            .localCheckpoint(eager = true)
-          // contains-but-not-adjacent words merge to themselves —
-          // zero net delta, dropped before the explode
-          val delta = touched.where(!(col("old_syms") <=> col("new_syms")))
-          val minus = delta.where(size(col("old_syms")) >= 2)
-            .select(pairsOf(col("old_syms")).as("pair"), (-col("freq")).as("d"))
-          val plus = delta.where(size(col("new_syms")) >= 2)
-            .select(pairsOf(col("new_syms")).as("pair"), col("freq").as("d"))
-          // patch the counts; the groupBy's shuffle re-normalizes the
-          // union's concatenated partition list every round
-          counts = counts.select(col("pair"), col("n").as("d"))
-            .unionAll(minus).unionAll(plus)
-            .groupBy("pair").agg(sum(col("d")).as("n"))
-            .where(col("n") > 0)
-            .localCheckpoint(eager = true)
-          vocab = vocab.where(!touches)
-            .unionAll(touched.select(col("new_syms").as("syms"), col("freq")))
-            // union CONCATENATES partition lists — bound the count or
-            // it doubles every round (2^rounds tasks)
-            .coalesce(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager = true)
-        } else {
-          vocab = vocab
-            .select(mergePair(col("syms"), lit(lS), lit(rS)).as("syms"), col("freq"))
-            .localCheckpoint(eager = true)
-        }
+        vocab = vocab
+          .select(mergePair(col("syms"), lit(lS), lit(rS)).as("syms"), col("freq"))
+          .localCheckpoint(eager = true)
         rank += 1
       }
     }
-    (merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count"), switchRank)
+    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
 
   /** The tokenizer-APPLY step: encode the corpus with a learned merge

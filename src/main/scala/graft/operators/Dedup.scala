@@ -632,8 +632,7 @@ object Dedup {
     * the dominant map-side cost).
     */
   private[graft] def shingleRelation(
-      df: DataFrame, textCol: String, idCol: String,
-      eager: Boolean = true): DataFrame =
+      df: DataFrame, textCol: String, idCol: String): DataFrame =
     spread(df).select(
       col(idCol).as("id"),
       T.wordShingles(T.tokens(col(textCol))).as("s"))
@@ -644,7 +643,7 @@ object Dedup {
       // broadcast consumer opens the lock-inversion deadlock window
       // (OPTIMIZATION_r18 deadlock note). Materializing once up front
       // removes both.
-      .localCheckpoint(eager = eager)
+      .localCheckpoint(eager = true)
 
   /** [[exactJaccardPairs]] over an already-materialized
     * [[shingleRelation]]. `sh` MUST be checkpointed/persisted: the

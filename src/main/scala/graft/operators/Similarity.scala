@@ -217,6 +217,12 @@ object Similarity {
     * recall numbers never shift silently; the benchmarked driver
     * rows opt in with 512, and a WARN is logged whenever the cap
     * actually binds so a changed number is traceable.
+    *
+    * The result is a LAZY frame: every action on it re-runs the whole
+    * sweep (the probe join over the corpus, plus the brute truth leg
+    * when max(nprobes) < nlist). Callers that read it more than once
+    * (count then collect, show then write) should collect it once or
+    * checkpoint it.
     */
   def nprobeSweep(
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
@@ -307,12 +313,14 @@ object Similarity {
     val hitCols = effNps.indices.map(i =>
       coalesce(sum(size(array_intersect(col("t_ids"), col(s"ta$i.id")))
         .cast("long")), lit(0L)).as(s"h$i"))
-    // the sweep rows stay DISTRIBUTED: the single-row hit aggregate
-    // explodes into one row per sweep point at ACTION time, so
-    // construction launches no .head() job and the caller's action
-    // runs the whole scoring pass (before: the returned frame was a
-    // pre-computed 4-row local result). floor(x + 0.5) on a LongType
-    // floor replicates the previous driver-side math.round exactly:
+    // the sweep rows stay DISTRIBUTED: only the final hit aggregate
+    // (with the scoring pass it reads) and the row assembly below are
+    // deferred to the caller's action (before: the returned frame was
+    // a pre-computed 4-row local result). Construction still runs
+    // jobs: the query checkpoint, the query counts, and the centroid
+    // seeding and eager Lloyd checkpoints of kmeansCentroids (via
+    // ivfIndexBuild). floor(x + 0.5) on a LongType floor replicates
+    // the previous driver-side math.round exactly:
     // the two differ only when x sits within one ulp below a
     // half-integer, unreachable for hits·10000/(nQ·k) ratios of
     // integers this size (|2·hits·10000 − (2m+1)·nQ·k| ≥ 1 whenever

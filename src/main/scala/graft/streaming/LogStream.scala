@@ -324,15 +324,15 @@ object LogStream {
     * foreachBatch is at-least-once) overwrites its own previous
     * output instead of appending duplicates. Exactly-once by
     * idempotence, the standard foreachBatch pattern for sinks
-    * without transactional commit.
+    * without transactional commit. Dynamic mode is a per-write
+    * option, so the caller's session conf (static by default) stays
+    * untouched.
     */
   def idempotentBatchWriter(path: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, id: Long) => {
-      val spark = batch.sparkSession
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    (batch: DataFrame, id: Long) =>
       batch.withColumn("batch_id", lit(id))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-    }
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(path)
 
   /** Start a stream into an idempotent batch-partitioned parquet
     * sink (see [[idempotentBatchWriter]]).
@@ -627,20 +627,15 @@ object LogStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         // scoring is map-only, so computing it once per route is
         // cheaper than caching the scored batch
         val scored = batch.withColumn("__q",
           graft.functions.TextFunctions.qualityFlags(col(textCol)))
-        scored.where(col("__q.pass") === 1L).drop("__q")
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(passPath)
-        scored.where(col("__q.pass") =!= 1L)
-          .select(col("*"), col("__q.*")).drop("__q")
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(quarantinePath)
-        ()
+        idempotentBatchWriter(passPath)(
+          scored.where(col("__q.pass") === 1L).drop("__q"), id)
+        idempotentBatchWriter(quarantinePath)(
+          scored.where(col("__q.pass") =!= 1L)
+            .select(col("*"), col("__q.*")).drop("__q"), id)
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -666,26 +661,20 @@ object LogStream {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val sniffed = batch.withColumn("__m",
           graft.functions.imageMeta(col(binCol)))
         val ok = col("__m.format") =!= "raw" &&
           col("__m.width").isNotNull && col("__m.height").isNotNull &&
           col("__m.width").between(minDim, maxDim) &&
           col("__m.height").between(minDim, maxDim)
-        sniffed.where(ok)
-          .withColumn("format", col("__m.format"))
-          .withColumn("width", col("__m.width"))
-          .withColumn("height", col("__m.height"))
-          .drop("__m")
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(passPath)
-        sniffed.where(!ok)
-          .select(col("*"), col("__m.*")).drop("__m")
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").partitionBy("batch_id").parquet(rejectPath)
-        ()
+        idempotentBatchWriter(passPath)(
+          sniffed.where(ok)
+            .withColumn("format", col("__m.format"))
+            .withColumn("width", col("__m.width"))
+            .withColumn("height", col("__m.height"))
+            .drop("__m"), id)
+        idempotentBatchWriter(rejectPath)(
+          sniffed.where(!ok).select(col("*"), col("__m.*")).drop("__m"), id)
       }
       .option("checkpointLocation", checkpoint)
       .outputMode("append")

@@ -1001,17 +1001,28 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(StructType(Seq(StructField("data", BinaryType))))
       .parquet(payloadDir)
-    val q = LogStream.startIdempotentSink(LogStream.parse(stream), outDir, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val expected = events(spark, sf).count()
-    assert(spark.read.parquet(outDir).count() === expected)
-    // simulate the at-least-once replay: re-run batch 0's write with
-    // the same batch id — dynamic partition overwrite makes it a
-    // no-op-equivalent, not an append
-    val batch0 = spark.read.parquet(outDir).where(col("batch_id") === 0)
-      .drop("batch_id")
-    LogStream.idempotentBatchWriter(outDir)(batch0, 0L)
-    assert(spark.read.parquet(outDir).count() === expected)
+    // the sink's dynamic overwrite must not leak into the caller's
+    // session: a later static overwrite has to stay static
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val prevMode = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "STATIC")
+    try {
+      val q = LogStream.startIdempotentSink(LogStream.parse(stream), outDir, ckpt)
+      try q.processAllAvailable() finally q.stop()
+      val expected = events(spark, sf).count()
+      assert(spark.read.parquet(outDir).count() === expected)
+      // simulate the at-least-once replay: re-run batch 0's write with
+      // the same batch id — dynamic partition overwrite makes it a
+      // no-op-equivalent, not an append
+      val batch0 = spark.read.parquet(outDir).where(col("batch_id") === 0)
+        .drop("batch_id")
+      LogStream.idempotentBatchWriter(outDir)(batch0, 0L)
+      assert(spark.read.parquet(outDir).count() === expected)
+      assert(spark.conf.get(modeKey) === "STATIC")
+    } finally prevMode match {
+      case Some(v) => spark.conf.set(modeKey, v)
+      case None    => spark.conf.unset(modeKey)
+    }
   }
 
   test("st15: streaming CDC merge applies per-batch upserts and tombstones to the manifested lake") {

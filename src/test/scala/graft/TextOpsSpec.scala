@@ -216,39 +216,6 @@ class TextOpsSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
-  test("t22: incremental and recount rounds learn identical merge tables") {
-    // the incremental path patches a persistent (pair, n) relation
-    // with ±freq deltas from touched words; any accounting error
-    // (missed word, double-counted pair, stale entry) diverges the
-    // argmax within a few rounds — pin full-table equality on the
-    // real corpus
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    def table(inc: Boolean) =
-      graft.operators.Bpe.learnMerges(docs, "text", 12, incremental = inc)
-        .collect().map(_.toString).toSeq
-    assert(table(inc = true) === table(inc = false))
-  }
-
-  test("t22: auto-crossover learns the same table and actually switches mid-schedule") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val pure = graft.operators.Bpe.learnMerges(docs, "text", 12)
-      .collect().map(_.toString).toSeq
-    // a fraction high enough that the switch fires within 12 rounds
-    // on this corpus (pair occurrence counts decay fast), yet not on
-    // round 1 — both legs of the crossover run and must agree
-    val (autoDf, switched) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 0.5)
-    assert(autoDf.collect().map(_.toString).toSeq === pure)
-    assert(switched > 1 && switched <= 12, s"switch rank $switched")
-    // degenerate fractions reduce to the pure strategies
-    val (lowDf, lowSwitch) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 0.0)
-    assert(lowDf.collect().map(_.toString).toSeq === pure && lowSwitch === -1)
-    val (hiDf, hiSwitch) =
-      graft.operators.Bpe.learnMergesAutoWithSwitch(docs, "text", 12, crossoverFrac = 1e9)
-    assert(hiDf.collect().map(_.toString).toSeq === pure && hiSwitch === 1)
-  }
-
   test("t19: the permutation is bucket-width invariant") {
     // the bucket is a PREFIX of the sort key, so bucket-major order is
     // the global order at any width — widening only re-partitions the
