@@ -187,19 +187,12 @@ object BinaryOps {
     val nReject = rejectIds.count()
     val nAdmit = nInc - nReject
     val nChunkless = nInc - contained.count()
-    val stage = s"${stagePrefix}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (dataVersion, indexVersion) =
-      if (nAdmit == 0) (0, 0)
-      else {
-        ParquetLake.stageAppend(spark, dataPath, admitted, stage)
-        val dv = ParquetLake.publishStaged(spark, dataPath, stage)
-        val newFps = chunks
-          .join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .select("fp").distinct()
-          .join(index, Seq("fp"), "left_anti")
-        ParquetLake.stageAppend(spark, indexPath, newFps, stage)
-        (dv, ParquetLake.publishStaged(spark, indexPath, stage))
-      }
+    val newFps = chunks
+      .join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
+      .select("fp").distinct()
+      .join(index, Seq("fp"), "left_anti")
+    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
+      spark, dataPath, indexPath, stagePrefix, nAdmit, admitted, newFps)
     ChunkIngestReport(nAdmit, nReject, dataVersion, indexVersion, nChunkless)
   }
 

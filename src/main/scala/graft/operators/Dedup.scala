@@ -58,9 +58,11 @@ object Dedup {
     * [[dedupIndexInit]] seeds the index from the existing corpus;
     * [[indexedIngest]] gates an increment: rows whose fingerprint
     * exists in the index are rejected, within-increment repeats keep
-    * the first (min id), admitted rows publish to the DATA lake and
-    * their fingerprints append to the INDEX lake — both through the
-    * staged-commit machinery, data first (a crash between the two
+    * exactly one row (min id; a same-id redelivery is a repeat too),
+    * admitted rows publish to the DATA lake and their fingerprints
+    * append to the INDEX lake — both through the staged-commit
+    * machinery ([[graft.sources.ParquetLake.publishDataThenIndex]]),
+    * data first (a crash between the two
     * commits can admit a future duplicate, never lose a row; the
     * re-ingest of the same batch is rejected by the then-updated
     * index, making replays idempotent once both commits land).
@@ -101,35 +103,23 @@ object Dedup {
     val inc = increment
       .withColumn("fingerprint", T.contentFingerprint(col(textCol)))
       .localCheckpoint(eager = true) // feeds the gate and both appends
-    val incFirst = inc.groupBy("fingerprint")
-      .agg(min(col(idCol)).as("inc_keep_id"))
+    // exactly one keeper per fingerprint, lowest id first — a row
+    // re-delivered with the SAME id is a second copy, not a tie
+    val firstHolder = org.apache.spark.sql.expressions.Window
+      .partitionBy("fingerprint").orderBy(col(idCol))
     val gated = inc
-      .join(incFirst, Seq("fingerprint"))
       .join(index.select(col("fingerprint"), lit(true).as("indexed")),
         Seq("fingerprint"), "left")
-      .withColumn("admit",
-        col("indexed").isNull && col(idCol) === col("inc_keep_id"))
+      .withColumn("inc_rank", row_number().over(firstHolder))
       .localCheckpoint(eager = true) // counted + split below
-    val admitted = gated.where(col("admit"))
+    val admitted = gated.where(col("indexed").isNull && col("inc_rank") === 1)
     val nAdmit = admitted.count()
     val nIndexed = gated.where(col("indexed").isNotNull).count()
-    val nIntra = gated.where(
-      col("indexed").isNull && col(idCol) =!= col("inc_keep_id")).count()
-    val stage = s"dedup_${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataVersion =
-      if (nAdmit == 0) 0 // no-commit sentinel
-      else {
-        ParquetLake.stageAppend(spark, dataPath,
-          admitted.drop("fingerprint", "inc_keep_id", "indexed", "admit"), stage)
-        ParquetLake.publishStaged(spark, dataPath, stage)
-      }
-    val indexVersion =
-      if (nAdmit == 0) 0
-      else {
-        ParquetLake.stageAppend(spark, indexPath,
-          admitted.select(col("fingerprint"), col(idCol).as("keep_id")), stage)
-        ParquetLake.publishStaged(spark, indexPath, stage)
-      }
+    val nIntra = gated.where(col("indexed").isNull && col("inc_rank") > 1).count()
+    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
+      spark, dataPath, indexPath, "dedup", nAdmit,
+      admitted.drop("fingerprint", "indexed", "inc_rank"),
+      admitted.select(col("fingerprint"), col(idCol).as("keep_id")))
     IngestReport(nAdmit, nIndexed, nIntra, dataVersion, indexVersion)
   }
 
@@ -221,16 +211,9 @@ object Dedup {
     val nAdmit = admitted.count()
     val sentsIn = sents.count()
     val sentsKept = survivors.count()
-    val stage = s"line_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (dataVersion, indexVersion) =
-      if (nAdmit == 0) (0, 0)
-      else {
-        ParquetLake.stageAppend(spark, dataPath, admitted, stage)
-        val dv = ParquetLake.publishStaged(spark, dataPath, stage)
-        ParquetLake.stageAppend(spark, indexPath,
-          survivors.select("fp").distinct(), stage)
-        (dv, ParquetLake.publishStaged(spark, indexPath, stage))
-      }
+    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
+      spark, dataPath, indexPath, "line", nAdmit,
+      admitted, survivors.select("fp").distinct())
     LineIngestReport(docsIn, nAdmit, docsIn - nAdmit, sentsIn, sentsKept,
       dataVersion, indexVersion)
   }
@@ -303,16 +286,9 @@ object Dedup {
     val nAdmit = admitted.count()
     val nCorpusNear = corpusNearIds.count()
     val nIntra = inc.count() - nAdmit - nCorpusNear
-    val stage = s"neardup_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (dataVersion, indexVersion) =
-      if (nAdmit == 0) (0, 0)
-      else {
-        ParquetLake.stageAppend(spark, dataPath, admitted, stage)
-        val dv = ParquetLake.publishStaged(spark, dataPath, stage)
-        ParquetLake.stageAppend(spark, indexPath,
-          bandKeys(admitted, textCol, idCol, numPerms, bands), stage)
-        (dv, ParquetLake.publishStaged(spark, indexPath, stage))
-      }
+    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
+      spark, dataPath, indexPath, "neardup", nAdmit,
+      admitted, bandKeys(admitted, textCol, idCol, numPerms, bands))
     NearDupIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
   }
 

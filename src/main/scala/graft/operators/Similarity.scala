@@ -1307,17 +1307,9 @@ object Similarity {
     val nAdmit = admitted.count()
     val nCorpusNear = corpusNearIds.count()
     val nIntra = inc.count() - nAdmit - nCorpusNear
-    val stage = s"embedgate_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (dataVersion, indexVersion) =
-      if (nAdmit == 0) (0, 0)
-      else {
-        ParquetLake.stageAppend(spark, dataPath, admitted, stage)
-        val dv = ParquetLake.publishStaged(spark, dataPath, stage)
-        ParquetLake.stageAppend(spark, indexPath,
-          incIx.join(admitted.select(col(idCol).as("n_id")), Seq("n_id"), "left_semi"),
-          stage)
-        (dv, ParquetLake.publishStaged(spark, indexPath, stage))
-      }
+    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
+      spark, dataPath, indexPath, "embedgate", nAdmit, admitted,
+      incIx.join(admitted.select(col(idCol).as("n_id")), Seq("n_id"), "left_semi"))
     EmbedIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
   }
 

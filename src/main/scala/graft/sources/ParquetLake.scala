@@ -915,6 +915,29 @@ object ParquetLake {
     doomed
   }
 
+  /** The commit tail of the index-gated ingest family (lk41–lk47):
+    * publish the admitted rows to the data lake, THEN `indexRows` to
+    * the index lake, each as one staged-append commit under a shared
+    * random stage name. Data first is the crash-window contract
+    * documented on [[graft.operators.Dedup.indexedIngest]]: a crash
+    * between the two commits can admit a future duplicate, never lose
+    * a row. Returns (dataVersion, indexVersion), or (0, 0) when
+    * `nAdmitted` is 0 — nothing is committed and real versions start
+    * at 1.
+    */
+  def publishDataThenIndex(
+      spark: SparkSession, dataPath: String, indexPath: String,
+      stagePrefix: String, nAdmitted: Long,
+      admitted: DataFrame, indexRows: DataFrame): (Int, Int) =
+    if (nAdmitted == 0) (0, 0)
+    else {
+      val stage = s"${stagePrefix}_${java.util.UUID.randomUUID().toString.take(8)}"
+      stageAppend(spark, dataPath, admitted, stage)
+      val dataVersion = publishStaged(spark, dataPath, stage)
+      stageAppend(spark, indexPath, indexRows, stage)
+      (dataVersion, publishStaged(spark, indexPath, stage))
+    }
+
   // ---------------------------------------------------------------
   // lk38: branches — multi-commit isolation over the manifest log
   // (the WAP stage generalized from one pending append to a chain of

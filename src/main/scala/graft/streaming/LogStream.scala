@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.CloudWatchLogs
@@ -318,15 +318,45 @@ object LogStream {
     }
   }
 
+  /** The one streaming sink: run `writer` on every micro-batch of
+    * `stream` (foreachBatch) with progress checkpointed at
+    * `checkpoint`. foreachBatch is at-least-once — a restart between
+    * the write and the offset commit re-delivers the batch under the
+    * same id — so every writer must make a replay harmless: the
+    * `…BatchWriter`s below by batch-id-partitioned overwrite or an
+    * atomic batch marker, the lake gates by content (a fully-landed
+    * batch re-gates to zero admits against the index it extended).
+    * Output mode is Spark's default append: the sinks consume
+    * stateless streams, for which update ≡ append.
+    *
+    * The lake gates and the CDC merge need no wrapper of their own;
+    * the writer calls them on the batch, e.g. st35:
+    * {{{
+    * LogStream.startBatchSink(docs, ckpt) { (batch, _) =>
+    *   Dedup.indexedIngest(batch.sparkSession, dataPath, indexPath, batch, "text", "doc_id")
+    * }
+    * }}}
+    * and likewise st38 `Dedup.lineGatedIngest`, st36
+    * `BinaryOps.chunkGatedIngest`, st40 `BinaryOps.frameGatedIngest`,
+    * st43 `Similarity.embedGatedIngest` (each commits nothing on an
+    * empty batch; replay and crash-window semantics as documented on
+    * [[graft.operators.Dedup.indexedIngest]]), and the streaming CDC
+    * apply `ParquetLake.mergeManifested`, content-idempotent on replay.
+    */
+  def startBatchSink(stream: DataFrame, checkpoint: String)(
+      writer: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .foreachBatch(writer)
+      .option("checkpointLocation", checkpoint)
+      .start()
+
   /** Batch writer for [[startIdempotentSink]]: batch `id` lands in a
     * `batch_id=id` partition under dynamic partition overwrite, so a
-    * REPLAYED batch (restart between sink write and offset commit —
-    * foreachBatch is at-least-once) overwrites its own previous
-    * output instead of appending duplicates. Exactly-once by
-    * idempotence, the standard foreachBatch pattern for sinks
-    * without transactional commit. Dynamic mode is a per-write
-    * option, so the caller's session conf (static by default) stays
-    * untouched.
+    * REPLAYED batch overwrites its own previous output instead of
+    * appending duplicates. Exactly-once by idempotence, the standard
+    * foreachBatch pattern for sinks without transactional commit.
+    * Dynamic mode is a per-write option, so the caller's session conf
+    * (static by default) stays untouched.
     */
   def idempotentBatchWriter(path: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, id: Long) =>
@@ -338,125 +368,8 @@ object LogStream {
     * sink (see [[idempotentBatchWriter]]).
     */
   def startIdempotentSink(
-      flat: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    flat.writeStream
-      .foreachBatch(idempotentBatchWriter(path))
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
-
-  /** Continuous CDC apply: each micro-batch of keyed change rows
-    * (updates, inserts, and `deleteCol`-flagged tombstones) MERGEs
-    * into the manifested lake — the row-level-upsert counterpart of
-    * the append-only st7/st12 sinks. Copy-on-write at the partition
-    * grain and single-manifest-commit visibility come from
-    * [[graft.sources.ParquetLake.mergeManifested]]; at-least-once
-    * replay is CONTENT-idempotent: re-merging a batch re-matches the
-    * same keys and writes the same rows (a fresh manifest version,
-    * identical snapshot content). Single-writer, like all lake
-    * maintenance.
-    */
-  def startMergeSink(
-      changes: DataFrame, lakeDir: String, checkpoint: String,
-      keyCols: Seq[String], partCol: String = "p_date",
-      deleteCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.ParquetLake.mergeManifested(
-            batch.sparkSession, lakeDir, batch, keyCols, partCol, deleteCol)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
-
-  /** st35: continuous dedup-gated ingest — lk41's persisted-index
-    * gate run per micro-batch: every batch is admitted/rejected
-    * against the fingerprint index, admitted rows publish to the
-    * data lake and their fingerprints to the index, so the lake
-    * stays exactly-deduplicated AS it ingests (no nightly dedup job
-    * over accumulated dupes). Cross-batch dedup is free: batch 2's
-    * repeats of batch 1 reject against the index batch 1 just
-    * updated. Re-delivered batches are idempotent once both commits
-    * landed (lk41's replay contract — a replayed batch admits
-    * nothing); the crash window between the data and index commits
-    * can admit a future duplicate but never lose a row, exactly as
-    * documented on [[graft.operators.Dedup.indexedIngest]].
-    */
-  def startDedupIngestSink(
-      docs: DataFrame, dataPath: String, indexPath: String,
-      textCol: String, idCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dedup.indexedIngest(
-            batch.sparkSession, dataPath, indexPath, batch, textCol, idCol)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
-
-  /** st43: continuous embedding near-dup gated ingest — lk47's
-    * MIH-band gate per micro-batch, the vector-grain member of this
-    * sink family (st35 doc fingerprints, st36 CDC chunks, st38 lines,
-    * st40 frames): arriving vectors within `maxHamming` sign-bits of
-    * an indexed (or earlier-in-batch) vector reject, admitted vectors
-    * publish to the data lake and their band rows to the index — so
-    * an embedding store stays near-dup-free AS it ingests, with
-    * lk47's exactness guarantee (pigeonhole: no true near-dup can
-    * slip past the band join). Replay/crash semantics inherit lk47's.
-    */
-  def startEmbedGateSink(
-      vecs: DataFrame, dataPath: String, indexPath: String,
-      vecCol: String, idCol: String, checkpoint: String,
-      maxHamming: Int = 7)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Similarity.embedGatedIngest(
-            batch.sparkSession, dataPath, indexPath, batch, vecCol, idCol,
-            maxHamming)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
-
-  /** st38: continuous C4-style LINE scrubbing ingest — lk44's
-    * sentence-grain gate per micro-batch, the scrubbing (not
-    * rejecting) member of this sink family: each arriving document is
-    * rebuilt without the sentences the line index has already seen
-    * (corpus boilerplate, earlier batches' text, earlier occurrences
-    * within the batch), wholly-boilerplate docs drop, and the
-    * survivors' fingerprints extend the index — so cross-batch
-    * repeated sentences scrub for free and a re-delivered batch
-    * admits nothing (every sentence then indexed). Replay/crash
-    * semantics inherit lk44's.
-    */
-  def startLineScrubIngestSink(
-      docs: DataFrame, dataPath: String, indexPath: String,
-      textCol: String, idCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dedup.lineGatedIngest(
-            batch.sparkSession, dataPath, indexPath, batch, textCol, idCol)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
+      flat: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    startBatchSink(flat, checkpoint)(idempotentBatchWriter(path))
 
   /** Batch body for [[startMatviewSink]], factored out so specs can
     * drive replay directly: land the micro-batch in the manifested
@@ -535,14 +448,9 @@ object LogStream {
   def startMatviewSink(
       rows: DataFrame, dataPath: String, name: String, keys: Seq[String],
       measures: Seq[String], checkpoint: String,
-      partCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch(matviewBatchWriter(dataPath, name, keys, measures, partCol,
-        matviewSinkId(checkpoint)))
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
+      partCol: Option[String] = None): StreamingQuery =
+    startBatchSink(rows, checkpoint)(matviewBatchWriter(
+      dataPath, name, keys, measures, partCol, matviewSinkId(checkpoint)))
 
   /** Deterministic per-checkpoint marker namespace for
     * [[matviewBatchWriter]]: the same checkpoint path resumes its own
@@ -554,92 +462,32 @@ object LogStream {
     java.util.UUID.nameUUIDFromBytes(
       checkpoint.getBytes("UTF-8")).toString.take(8)
 
-  /** st36: continuous chunk-gated BLOB ingest — lk43's gate per
-    * micro-batch, the binary sibling of [[startDedupIngestSink]]: a
-    * media/checkpoint/crawl-blob stream lands exactly-deduplicated at
-    * the chunk grain (near-copies — edited images, re-encoded headers
-    * over the same body — reject by containment against the persisted
-    * chunk index, which each batch extends with only its UNIQUE
-    * chunks). Replay/crash semantics inherit lk43's.
-    */
-  def startChunkIngestSink(
-      blobs: DataFrame, dataPath: String, indexPath: String,
-      binCol: String, idCol: String, checkpoint: String,
-      maxContainment: Double = 0.5,
-      minLen: Int = 64, maskBits: Int = 8, maxLen: Int = 4096)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    blobs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.multimodal.BinaryOps.chunkGatedIngest(
-            batch.sparkSession, dataPath, indexPath, batch, binCol, idCol,
-            maxContainment, minLen, maskBits, maxLen)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
-
-  /** st40: continuous FRAME-gated blob ingest — lk46's gate per
-    * micro-batch, [[startChunkIngestSink]]'s decoded-pixel sibling: a
-    * multi-frame media stream lands exactly-deduplicated at the
-    * FRAME grain (a re-encoded or re-muxed copy of seen footage
-    * rejects by perceptual-hash containment against the persisted
-    * frame index — the case the chunk gate misses once re-encoding
-    * rewrites every byte; the index grows by each batch's unseen
-    * stills only). Undecodable blobs admit in the frameless bucket,
-    * never kill the query. Replay/crash semantics inherit lk46's.
-    */
-  def startFrameIngestSink(
-      blobs: DataFrame, dataPath: String, indexPath: String,
-      binCol: String, idCol: String, checkpoint: String,
-      maxContainment: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    blobs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.multimodal.BinaryOps.frameGatedIngest(
-            batch.sparkSession, dataPath, indexPath, batch, binCol, idCol,
-            maxContainment)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("update")
-      .start()
-
   /** st24: streaming quality-gate admission — every incoming document
     * is scored by the ROW-LOCAL Gopher flags
     * ([[graft.functions.TextFunctions.qualityFlags]]: no explode, no
     * shuffle, pure codegen'd array expressions — a map-only pass per
     * micro-batch) and routed to the pass or quarantine sink. Both
-    * sinks are batch-id-partitioned dynamic overwrites, so
-    * at-least-once foreachBatch replay is exactly-once by idempotence
-    * (st12's pattern). The flags flatten onto quarantine rows so
-    * triage sees WHICH rule rejected each doc; pass rows keep the
-    * input schema for the training pipeline. Batch-vs-stream flag
-    * parity with t17 is spec-pinned (TextOpsSpec / StreamingSpec).
+    * routes are [[idempotentBatchWriter]]s, so a replayed batch id
+    * rewrites both partitions with the same rows. The flags flatten
+    * onto quarantine rows so triage sees WHICH rule rejected each
+    * doc; pass rows keep the input schema for the training pipeline.
+    * Batch-vs-stream flag parity with t17 is spec-pinned (TextOpsSpec
+    * / StreamingSpec).
     */
-  def startQualityGateSink(
-      stream: DataFrame, textCol: String,
-      passPath: String, quarantinePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // scoring is map-only, so computing it once per route is
-        // cheaper than caching the scored batch
-        val scored = batch.withColumn("__q",
-          graft.functions.TextFunctions.qualityFlags(col(textCol)))
-        idempotentBatchWriter(passPath)(
-          scored.where(col("__q.pass") === 1L).drop("__q"), id)
-        idempotentBatchWriter(quarantinePath)(
-          scored.where(col("__q.pass") =!= 1L)
-            .select(col("*"), col("__q.*")).drop("__q"), id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+  def qualityGateBatchWriter(
+      textCol: String, passPath: String, quarantinePath: String)
+      : (DataFrame, Long) => Unit =
+    (batch: DataFrame, id: Long) => {
+      // scoring is map-only, so computing it once per route is
+      // cheaper than caching the scored batch
+      val scored = batch.withColumn("__q",
+        graft.functions.TextFunctions.qualityFlags(col(textCol)))
+      idempotentBatchWriter(passPath)(
+        scored.where(col("__q.pass") === 1L).drop("__q"), id)
+      idempotentBatchWriter(quarantinePath)(
+        scored.where(col("__q.pass") =!= 1L)
+          .select(col("*"), col("__q.*")).drop("__q"), id)
+    }
 
   /** st37: streaming image-admission gate — every incoming blob's
     * container header is sniffed by the native
@@ -651,34 +499,29 @@ object LogStream {
     * to the reject sink with its sniffed metadata flattened on for
     * triage. The m11 parser's never-throw contract is what makes this
     * safe as a FRONT gate: one corrupt blob must not kill the ingest
-    * query. Exactly-once via the batch-id-partitioned idempotent
-    * overwrite (st12's pattern), same as the text quality gate st24.
+    * query. Exactly-once via two [[idempotentBatchWriter]] routes,
+    * same as the text quality gate st24.
     */
-  def startImageGateSink(
-      stream: DataFrame, binCol: String,
-      passPath: String, rejectPath: String, checkpoint: String,
+  def imageGateBatchWriter(
+      binCol: String, passPath: String, rejectPath: String,
       minDim: Int = 1, maxDim: Int = 1 << 20)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val sniffed = batch.withColumn("__m",
-          graft.functions.imageMeta(col(binCol)))
-        val ok = col("__m.format") =!= "raw" &&
-          col("__m.width").isNotNull && col("__m.height").isNotNull &&
-          col("__m.width").between(minDim, maxDim) &&
-          col("__m.height").between(minDim, maxDim)
-        idempotentBatchWriter(passPath)(
-          sniffed.where(ok)
-            .withColumn("format", col("__m.format"))
-            .withColumn("width", col("__m.width"))
-            .withColumn("height", col("__m.height"))
-            .drop("__m"), id)
-        idempotentBatchWriter(rejectPath)(
-          sniffed.where(!ok).select(col("*"), col("__m.*")).drop("__m"), id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      : (DataFrame, Long) => Unit =
+    (batch: DataFrame, id: Long) => {
+      val sniffed = batch.withColumn("__m",
+        graft.functions.imageMeta(col(binCol)))
+      val ok = col("__m.format") =!= "raw" &&
+        col("__m.width").isNotNull && col("__m.height").isNotNull &&
+        col("__m.width").between(minDim, maxDim) &&
+        col("__m.height").between(minDim, maxDim)
+      idempotentBatchWriter(passPath)(
+        sniffed.where(ok)
+          .withColumn("format", col("__m.format"))
+          .withColumn("width", col("__m.width"))
+          .withColumn("height", col("__m.height"))
+          .drop("__m"), id)
+      idempotentBatchWriter(rejectPath)(
+        sniffed.where(!ok).select(col("*"), col("__m.*")).drop("__m"), id)
+    }
 
   /** st28: streaming PII scrub at the ingest gate — every incoming
     * row's text column is rewritten through the SAME row-local
@@ -692,61 +535,45 @@ object LogStream {
     * about ONE transform instead of two. Scrubbing at ingest matters
     * at 100 TB: PII that reaches the lake is copied into every
     * downstream snapshot, shard export, and checkpoint; here it never
-    * lands. Exactly-once from the idempotent batch-id sink (st12).
+    * lands. Exactly-once from [[idempotentBatchWriter]] (st12).
     */
-  def startPiiScrubSink(
-      stream: DataFrame, textCol: String,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val scrubbed = batch
-          .withColumn("__p", graft.functions.TextFunctions.piiScrub(col(textCol)))
-          .withColumn(textCol, col("__p.scrubbed"))
-          .withColumn("n_emails", col("__p.n_emails"))
-          .withColumn("n_ips", col("__p.n_ips"))
-          .drop("__p")
-        idempotentBatchWriter(outPath)(scrubbed, id)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+  def piiScrubBatchWriter(textCol: String, outPath: String)
+      : (DataFrame, Long) => Unit =
+    (batch: DataFrame, id: Long) =>
+      idempotentBatchWriter(outPath)(batch
+        .withColumn("__p", graft.functions.TextFunctions.piiScrub(col(textCol)))
+        .withColumn(textCol, col("__p.scrubbed"))
+        .withColumn("n_emails", col("__p.n_emails"))
+        .withColumn("n_ips", col("__p.n_ips"))
+        .drop("__p"), id)
 
   /** st21: streaming enrichment against a VERSIONED dimension — each
     * micro-batch broadcast-joins the manifested lake's snapshot that
-    * is CURRENT when the batch processes (re-resolved per batch via
-    * foreachBatch), and stamps the dim version it used. This is the
-    * feature-store / slowly-changing-dimension shape: a long-running
-    * ingest picks up dimension refreshes (published as manifest
-    * commits by a concurrent batch job, atomically — lk15/lk19)
-    * without restart, and every output row records which snapshot
-    * enriched it, so any row is replayable bit-exactly with
-    * readManifested(version).
+    * is CURRENT when the batch processes (re-resolved per batch), and
+    * stamps the dim version it used. This is the feature-store /
+    * slowly-changing-dimension shape: a long-running ingest picks up
+    * dimension refreshes (published as manifest commits by a
+    * concurrent batch job, atomically — lk15/lk19) without restart,
+    * and every output row records which snapshot enriched it, so any
+    * row is replayable bit-exactly with readManifested(version).
     *
     * The dim read per batch is manifest-gated (never a torn
     * mid-maintenance directory listing) and broadcast-joined
-    * (dim-sized). Exactly-once inherits the idempotent batch-id
-    * partition overwrite sink. */
-  def startEnrichManifestedSink(
-      stream: DataFrame, dimLake: String, usingColumns: Seq[String],
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val log = graft.sources.ParquetLake.manifestLog(spark, dimLake)
-          require(log.nonEmpty, s"no committed manifest under $dimLake")
-          val v = log.last._1
-          val dim = graft.sources.ParquetLake.readManifested(spark, dimLake, Some(v))
-          val enriched = batch.join(broadcast(dim), usingColumns, "left")
-            .withColumn("dim_version", lit(v))
-          idempotentBatchWriter(outPath)(enriched, id)
-        }
+    * (dim-sized). Exactly-once inherits [[idempotentBatchWriter]]. */
+  def enrichManifestedBatchWriter(
+      dimLake: String, usingColumns: Seq[String], outPath: String)
+      : (DataFrame, Long) => Unit =
+    (batch: DataFrame, id: Long) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val log = graft.sources.ParquetLake.manifestLog(spark, dimLake)
+        require(log.nonEmpty, s"no committed manifest under $dimLake")
+        val v = log.last._1
+        val dim = graft.sources.ParquetLake.readManifested(spark, dimLake, Some(v))
+        val enriched = batch.join(broadcast(dim), usingColumns, "left")
+          .withColumn("dim_version", lit(v))
+        idempotentBatchWriter(outPath)(enriched, id)
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
 
   /** st22: read-side stream-static enrichment against a PINNED
     * manifested-lake snapshot — the plain-streaming-query twin of
@@ -785,13 +612,13 @@ object LogStream {
 
   /** st23: streaming consumption of the lake's row-level change feed —
     * CDC-as-a-source, the consumer side of [[graft.sources.ParquetLake
-    * .changeFeed]]. Each micro-batch of `ticks` (any ticking stream — a
-    * rate source, or the ingest stream itself) advances a cursor over
-    * the lake's committed manifest versions: for every version newer
-    * than the cursor, the row-level feed from its retained predecessor
-    * is computed (churn-bounded — only files added/removed by that
+    * .changeFeed]]. Each micro-batch of a ticking stream (a rate
+    * source, or the ingest stream itself) advances a cursor over the
+    * lake's committed manifest versions: for every version newer than
+    * the cursor, the row-level feed from its retained predecessor is
+    * computed (churn-bounded — only files added/removed by that
     * commit are scanned) and written to `outPath/version=<v>/`,
-    * stamped `_commit_version`.
+    * stamped `_commit_version`. The tick batch's rows are not read.
     *
     * The cursor IS the sink: a version counts as consumed when its
     * directory holds a `_SUCCESS` marker, so restarts (or a crash
@@ -805,36 +632,31 @@ object LogStream {
     * Vacuum retention must cover the consumer's lag (lk22 tags pin
     * versions a slow consumer still needs).
     */
-  def startChangeFeedSink(
-      ticks: DataFrame, lakeDir: String, keyCols: Seq[String],
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    ticks.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val versions = graft.sources.ParquetLake.manifestLog(spark, lakeDir).map(_._1)
-        if (versions.nonEmpty) {
-          val out = new org.apache.hadoop.fs.Path(outPath)
-          val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-          val done =
-            if (!fs.exists(out)) Seq.empty
-            else fs.listStatus(out).toSeq
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("version=") &&
-                fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-              .map(_.getPath.getName.stripPrefix("version=").toInt)
-          val cursor = if (done.isEmpty) versions.head else done.max
-          versions.sliding(2).foreach {
-            case Seq(prev, v) if v > cursor =>
-              graft.sources.ParquetLake.changeFeed(spark, lakeDir, prev, keyCols, Some(v))
-                .withColumn("_commit_version", lit(v))
-                .write.mode("overwrite").parquet(s"$outPath/version=$v")
-            case _ => ()
-          }
+  def changeFeedBatchWriter(
+      lakeDir: String, keyCols: Seq[String], outPath: String)
+      : (DataFrame, Long) => Unit =
+    (batch: DataFrame, _: Long) => {
+      val spark = batch.sparkSession
+      val versions = graft.sources.ParquetLake.manifestLog(spark, lakeDir).map(_._1)
+      if (versions.nonEmpty) {
+        val out = new org.apache.hadoop.fs.Path(outPath)
+        val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+        val done =
+          if (!fs.exists(out)) Seq.empty
+          else fs.listStatus(out).toSeq
+            .filter(s => s.isDirectory && s.getPath.getName.startsWith("version=") &&
+              fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+            .map(_.getPath.getName.stripPrefix("version=").toInt)
+        val cursor = if (done.isEmpty) versions.head else done.max
+        versions.sliding(2).foreach {
+          case Seq(prev, v) if v > cursor =>
+            graft.sources.ParquetLake.changeFeed(spark, lakeDir, prev, keyCols, Some(v))
+              .withColumn("_commit_version", lit(v))
+              .write.mode("overwrite").parquet(s"$outPath/version=$v")
+          case _ => ()
         }
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+    }
 
   case class AsOfIn(userId: Long, tsNs: Long, side: Int, id: Long)
   case class LatestRight(tsNs: Long, id: Long)

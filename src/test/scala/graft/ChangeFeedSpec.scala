@@ -162,7 +162,8 @@ class ChangeFeedSpec extends SparkSpec {
     val ticks = spark.readStream
       .schema(StructType(Seq(StructField("n", IntegerType))))
       .parquet(tickDir)
-    val q = LogStream.startChangeFeedSink(ticks, dir, Seq("event_id"), outPath, ckpt1)
+    val q = LogStream.startBatchSink(ticks, ckpt1)(
+      LogStream.changeFeedBatchWriter(dir, Seq("event_id"), outPath))
     try {
       q.processAllAvailable()
       assert(versionDirs() === Set.empty) // baseline snapshot is not a change
@@ -184,9 +185,10 @@ class ChangeFeedSpec extends SparkSpec {
     // sink-derived cursor prevents re-emission — same dirs, same rows
     val countsBefore = versionDirs().map(d =>
       d -> spark.read.parquet(s"$outPath/$d").count()).toMap
-    val q2 = LogStream.startChangeFeedSink(
+    val q2 = LogStream.startBatchSink(
       spark.readStream.schema(StructType(Seq(StructField("n", IntegerType))))
-        .parquet(tickDir), dir, Seq("event_id"), outPath, ckpt2)
+        .parquet(tickDir), ckpt2)(
+      LogStream.changeFeedBatchWriter(dir, Seq("event_id"), outPath))
     try { tick(3); q2.processAllAvailable() } finally q2.stop()
     val countsAfter = versionDirs().map(d =>
       d -> spark.read.parquet(s"$outPath/$d").count()).toMap

@@ -397,18 +397,22 @@ class DedupSpec extends SparkSpec {
     Dedup.dedupIndexInit(spark, indexPath, corpusA, "text", "doc_id")
 
     // the increment: fresh docs, re-crawls of corpus docs (same text,
-    // new ids), and intra-increment repeats of fresh docs
+    // new ids), intra-increment repeats of fresh docs, and
+    // at-least-once redeliveries (fresh docs repeated with the SAME id)
     val fresh = docs.where(col("doc_id") % 3 === 0)
     val dupOfA = corpusA.where(col("doc_id") % 7 === 1)
       .withColumn("doc_id", col("doc_id") + 100000L)
     val intra = fresh.where(col("doc_id") % 5 === 0)
       .withColumn("doc_id", col("doc_id") + 200000L)
+    val redelivered = fresh.where(col("doc_id") % 11 === 0)
+    assert(redelivered.count() > 0)
     val increment = fresh.unionByName(dupOfA).unionByName(intra)
+      .unionByName(redelivered)
       .localCheckpoint(eager = false)
     val r = Dedup.indexedIngest(spark, dataPath, indexPath, increment, "text", "doc_id")
     assert(r.admitted === fresh.count())
     assert(r.rejectedIndexed === dupOfA.count())
-    assert(r.rejectedIntra === intra.count())
+    assert(r.rejectedIntra === intra.count() + redelivered.count())
     // the lake holds exactly one row per distinct fingerprint, and
     // the index IS the lake's fingerprint set
     val lake = graft.sources.ParquetLake.readManifested(spark, dataPath)

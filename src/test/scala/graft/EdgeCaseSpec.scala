@@ -173,6 +173,45 @@ class EdgeCaseSpec extends SparkSpec {
     assert(r === Dedup.IngestReport(0L, 0L, 0L, 0, 0))
     assert(ParquetLake.readManifest(spark, dataPath, None).get === before)
 
+    // the rest of the index-gated family on an empty increment: the
+    // same zeroed report, and neither the data nor the index lake
+    // gains a commit
+    import graft.multimodal.BinaryOps
+    def emptyIngest[R](corpus: org.apache.spark.sql.DataFrame, initIndex: String => Int)(
+        ingest: (String, String, org.apache.spark.sql.DataFrame) => R): R = {
+      val d = Files.createTempDirectory("graft_edge_gdata").toString + "/lake"
+      val i = Files.createTempDirectory("graft_edge_gidx").toString + "/index"
+      corpus.write.parquet(d)
+      ParquetLake.snapshotManifest(spark, d)
+      initIndex(i)
+      def state() = Seq(d, i).map(p =>
+        (ParquetLake.manifestLog(spark, p).map(_._1), ParquetLake.readManifest(spark, p, None)))
+      val before = state()
+      val report = ingest(d, i, corpus.where(lit(false)))
+      assert(state() === before)
+      report
+    }
+    assert(emptyIngest(docs, Dedup.lineIndexInit(spark, _, docs, "text", "doc_id"))(
+      Dedup.lineGatedIngest(spark, _, _, _, "text", "doc_id")) ===
+      Dedup.LineIngestReport(0L, 0L, 0L, 0L, 0L, 0, 0))
+    assert(emptyIngest(docs, Dedup.nearDupIndexInit(spark, _, docs, "text", "doc_id"))(
+      Dedup.nearDupIngest(spark, _, _, _, "text", "doc_id")) ===
+      Dedup.NearDupIngestReport(0L, 0L, 0L, 0, 0))
+    val blobs = Seq((1L, "chunk gate payload " * 20)).toDF("blob_id", "t")
+      .select(col("blob_id"), col("t").cast("binary").as("payload"))
+    assert(emptyIngest(blobs, BinaryOps.chunkIndexInit(spark, _, blobs, "payload", "blob_id"))(
+      BinaryOps.chunkGatedIngest(spark, _, _, _, "payload", "blob_id")) ===
+      BinaryOps.ChunkIngestReport(0L, 0L, 0, 0, 0L))
+    val clips = BinaryOps.renderAnimatedGifs(
+      Seq((1L, 16, 16, Array(1L, 2L))).toDS()).toDF("blob_id", "payload")
+    assert(emptyIngest(clips, BinaryOps.frameIndexInit(spark, _, clips, "payload", "blob_id"))(
+      BinaryOps.frameGatedIngest(spark, _, _, _, "payload", "blob_id")) ===
+      BinaryOps.ChunkIngestReport(0L, 0L, 0, 0, 0L))
+    val vecs = Seq(1L -> Seq.fill(64)(1.0f)).toDF("vec_id", "embedding")
+    assert(emptyIngest(vecs, Similarity.embedIndexInit(spark, _, vecs, "embedding", "vec_id"))(
+      Similarity.embedGatedIngest(spark, _, _, _, "embedding", "vec_id")) ===
+      Similarity.EmbedIngestReport(0L, 0L, 0L, 0, 0))
+
     // vectored delete matching nothing: version unchanged, no dv
     // header, no stray .dv dir referenced
     val lakeDir = Files.createTempDirectory("graft_edge_dv").toString

@@ -330,7 +330,8 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType))))
       .parquet(docsDir)
-    val q = LogStream.startQualityGateSink(stream, "text", passDir, quarDir, ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt)(
+      LogStream.qualityGateBatchWriter("text", passDir, quarDir))
     try { q.processAllAvailable() } finally q.stop()
     // expected routing from the batch flags on the same input
     val flags = spark.read.parquet(docsDir)
@@ -354,6 +355,25 @@ class StreamingSpec extends SparkSpec {
       Set("doc_id", "text", "batch_id"))
     assert(Set("n_tok", "r_len", "r_wlen", "r_stop", "r_rep", "pass")
       .subsetOf(spark.read.parquet(quarDir).columns.toSet))
+  }
+
+  test("st24: the two-route quality-gate writer is idempotent on a replayed batch") {
+    val passDir = Files.createTempDirectory("graft_qgate_rp_pass").toString
+    val quarDir = Files.createTempDirectory("graft_qgate_rp_quar").toString
+    val batch = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+      .unionByName(Seq((900001L, "tiny")).toDF("doc_id", "text"))
+    val writer = LogStream.qualityGateBatchWriter("text", passDir, quarDir)
+    def rows(dir: String): Seq[String] =
+      spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
+    writer(batch, 7L)
+    val (pass1, quar1) = (rows(passDir), rows(quarDir))
+    assert(pass1.nonEmpty && quar1.nonEmpty)
+    assert(pass1.size + quar1.size === batch.count())
+    // at-least-once redelivery: same batch, same id
+    writer(batch, 7L)
+    assert(rows(passDir) === pass1)
+    assert(rows(quarDir) === quar1)
   }
 
   test("st37: streaming image gate admits in-range parseable containers, rejects raw/truncated/oversized") {
@@ -383,8 +403,8 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("img_id", LongType), StructField("payload", BinaryType))))
       .parquet(inDir)
-    val q = LogStream.startImageGateSink(
-      stream, "payload", passDir, rejDir, ckpt, minDim = 1, maxDim = 100)
+    val q = LogStream.startBatchSink(stream, ckpt)(LogStream.imageGateBatchWriter(
+      "payload", passDir, rejDir, minDim = 1, maxDim = 100))
     try { q.processAllAvailable() } finally q.stop()
     val gotPass = spark.read.parquet(passDir)
       .select("img_id", "format", "width", "height")
@@ -419,7 +439,8 @@ class StreamingSpec extends SparkSpec {
         StructField("doc_id", LongType), StructField("text", StringType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(inDir)
-    val q = LogStream.startPiiScrubSink(stream, "text", outDir, ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt)(
+      LogStream.piiScrubBatchWriter("text", outDir))
     try { q.processAllAvailable() } finally q.stop()
     val got = spark.read.parquet(outDir)
     assert(got.select("batch_id").distinct().count() >= 2)
@@ -802,8 +823,8 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("user_id", LongType), StructField("v", LongType))))
       .parquet(inDir)
-    val q = LogStream.startEnrichManifestedSink(
-      stream, dimDir, Seq("user_id"), outDir, ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt)(
+      LogStream.enrichManifestedBatchWriter(dimDir, Seq("user_id"), outDir))
     try {
       q.processAllAvailable()
       // dim refresh lands BETWEEN batches as one atomic manifest commit
@@ -1053,8 +1074,11 @@ class StreamingSpec extends SparkSpec {
       .schema(upd.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(chgDir)
-    val q = LogStream.startMergeSink(
-      stream, lakeDir, ckpt, keyCols = Seq("event_id"), deleteCol = Some("_del"))
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      if (!batch.isEmpty)
+        ParquetLake.mergeManifested(batch.sparkSession, lakeDir, batch,
+          keyCols = Seq("event_id"), deleteCol = Some("_del"))
+    }
     try q.processAllAvailable() finally q.stop()
 
     val expected = before.map {
@@ -1581,8 +1605,10 @@ class StreamingSpec extends SparkSpec {
         StructField("doc_id", LongType), StructField("source", StringType),
         StructField("text", StringType))))
       .parquet(inDir)
-    val q = LogStream.startDedupIngestSink(
-      stream, dataPath, indexPath, "text", "doc_id", ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      Dedup.indexedIngest(
+        batch.sparkSession, dataPath, indexPath, batch, "text", "doc_id")
+    }
     try {
       q.processAllAvailable()
       // batch 2 repeats batch 1's docs — the index batch 1 just
@@ -1628,8 +1654,10 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType))))
       .parquet(inDir)
-    val q = LogStream.startLineScrubIngestSink(
-      stream, dataPath, indexPath, "text", "doc_id", ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      Dedup.lineGatedIngest(
+        batch.sparkSession, dataPath, indexPath, batch, "text", "doc_id")
+    }
     try {
       q.processAllAvailable()
       // batch 2 repeats batch 1's sentences — the index batch 1 just
@@ -1769,9 +1797,11 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("blob_id", LongType), StructField("payload", BinaryType))))
       .parquet(inDir)
-    val q = LogStream.startChunkIngestSink(
-      stream, dataPath, indexPath, "payload", "blob_id", ckpt,
-      maxContainment = 0.5, minLen = 16, maskBits = 4, maxLen = 256)
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      BinaryOps.chunkGatedIngest(
+        batch.sparkSession, dataPath, indexPath, batch, "payload", "blob_id",
+        maxContainment = 0.5, minLen = 16, maskBits = 4, maxLen = 256)
+    }
     try {
       q.processAllAvailable()
       b2.write.mode(SaveMode.Append).parquet(inDir)
@@ -1809,9 +1839,11 @@ class StreamingSpec extends SparkSpec {
       .schema(StructType(Seq(
         StructField("blob_id", LongType), StructField("payload", BinaryType))))
       .parquet(inDir)
-    val q = LogStream.startFrameIngestSink(
-      stream, dataPath, indexPath, "payload", "blob_id", ckpt,
-      maxContainment = 0.5)
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      BinaryOps.frameGatedIngest(
+        batch.sparkSession, dataPath, indexPath, batch, "payload", "blob_id",
+        maxContainment = 0.5)
+    }
     try {
       q.processAllAvailable()
       b2.write.mode(SaveMode.Append).parquet(inDir)
@@ -1948,8 +1980,10 @@ class StreamingSpec extends SparkSpec {
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)))))
       .parquet(inDir)
-    val q = LogStream.startEmbedGateSink(
-      stream, dataPath, indexPath, "embedding", "vec_id", ckpt)
+    val q = LogStream.startBatchSink(stream, ckpt) { (batch, _) =>
+      Similarity.embedGatedIngest(
+        batch.sparkSession, dataPath, indexPath, batch, "embedding", "vec_id")
+    }
     try {
       q.processAllAvailable()
       // batch 2 carries near-copies of batch 1's admissions — the
