@@ -382,6 +382,21 @@ object ParquetLake {
       .map(s => s.getPath.getName.stripPrefix(ManifestPrefix).toInt -> s.getPath)
       .sortBy(_._1)
 
+  /** The head (latest committed) version, or None before the first
+    * commit.
+    */
+  private def latestVersion(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Int] =
+    manifestVersions(fs, root).lastOption.map(_._1)
+
+  /** [[latestVersion]] for ops that need a committed lake. */
+  private def headVersion(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, path: String): Int =
+    latestVersion(fs, root).getOrElse(
+      throw new IllegalStateException(s"no committed manifest under $path"))
+
   /** Lake-relative data-file paths of a committed snapshot — the
     * latest by default, or an explicit `version` (which must be a
     * still-retained manifest) — or None if the lake has never
@@ -522,10 +537,8 @@ object ParquetLake {
       spark: SparkSession, path: String, name: String,
       version: Option[Int] = None): Int = {
     val (fs, root) = fsFor(spark, path)
-    val versions = manifestVersions(fs, root)
-    val v = version.getOrElse(versions.lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
-    require(versions.exists(_._1 == v),
+    val v = version.getOrElse(headVersion(fs, root, path))
+    require(manifestVersions(fs, root).exists(_._1 == v),
       s"cannot tag: version $v is not a committed manifest under $path")
     writeAtomic(fs, tagPath(root, name), s"$v\n")
     v
@@ -578,8 +591,7 @@ object ParquetLake {
     */
   def restoreManifested(spark: SparkSession, path: String, toVersion: Int): Int = {
     val (fs, root) = fsFor(spark, path)
-    val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val latest = headVersion(fs, root, path)
     if (toVersion == latest) return latest
     val files = readManifest(spark, path, Some(toVersion)).getOrElse(
       throw new IllegalArgumentException(
@@ -810,28 +822,37 @@ object ParquetLake {
     * ([[readStaged]]) or [[abandonStaged]] — and because staging is
     * invisible to readers, a refused batch never poisons a snapshot,
     * which is the entire point of auditing before the CAS commit.
+    * The check runs inside each rebase attempt, against the version
+    * that attempt's CAS expects: a commit landing between check and
+    * CAS fails the CAS, and the rebase re-checks against the new head.
     */
   def publishStagedChecked(
       spark: SparkSession, path: String, stage: String,
       notNull: Seq[String] = Seq.empty, uniqueKey: Seq[String] = Seq.empty,
-      ranges: Map[String, (Double, Double)] = Map.empty,
-      maxRetries: Int = 5): Int = {
+      ranges: Map[String, (Double, Double)] = Map.empty): Int = {
+    val (fs, root) = fsFor(spark, path)
     val staged = stagedManifests(spark, path).getOrElse(stage,
       throw new IllegalArgumentException(s"no stage '$stage' under $path"))
     val delta = spark.read.option("basePath", path)
       .parquet(staged.map(f => s"$path/$f"): _*)
-    // the head side is the MERGE-ON-READ view: a key whose only
-    // occurrence is tombstoned by a pending deletion vector is gone
-    // for every reader, so it must not count as a uniqueness clash
-    val head = readManifest(spark, path, None)
-      .filter(_.nonEmpty).map(_ => readManifestedMoR(spark, path))
-    val bad = constraintViolations(delta, head, notNull, uniqueKey, ranges)
-      .where(col("n_violations") > 0)
-      .collect().map(r => s"${r.getString(0)}: ${r.getLong(1)}")
-    if (bad.nonEmpty)
-      throw new IllegalStateException(
-        s"publish of stage '$stage' refused — constraint violations: ${bad.mkString("; ")}")
-    publishStaged(spark, path, stage, maxRetries)
+    val committed = rebasing("publishStagedChecked", path) {
+      val head = latestVersion(fs, root)
+      // the head side is the MERGE-ON-READ view: a key whose only
+      // occurrence is tombstoned by a pending deletion vector is gone
+      // for every reader, so it must not count as a uniqueness clash
+      val headView = head
+        .filter(v => readManifest(spark, path, Some(v)).exists(_.nonEmpty))
+        .map(v => readManifestedMoR(spark, path, Some(v)))
+      val bad = constraintViolations(delta, headView, notNull, uniqueKey, ranges)
+        .where(col("n_violations") > 0)
+        .collect().map(r => s"${r.getString(0)}: ${r.getLong(1)}")
+      if (bad.nonEmpty)
+        throw new IllegalStateException(
+          s"publish of stage '$stage' refused — constraint violations: ${bad.mkString("; ")}")
+      appendOntoHead(spark, path, head.getOrElse(0), staged, Map.empty)
+    }
+    fs.delete(stagedRefPath(root, stage), false)
+    committed
   }
 
   /** Audit view: the snapshot [[publishStaged]] WOULD commit right
@@ -855,46 +876,47 @@ object ParquetLake {
     * files the new snapshot; readers flip from seeing none of the
     * staged rows to all of them. Because the stage recorded a DELTA,
     * a concurrent commit landing between stage and publish just means
-    * rebase-and-retry on the new head — append-only staging composes
-    * with any interleaving, nothing is lost on either side. The
-    * staging ref is deleted after the commit (publish is idempotent
-    * in effect: a crash between commit and ref-delete leaves a stale
-    * ref whose re-publish would double-reference the same files —
-    * guarded by dropping already-referenced files from the delta).
+    * a rebase onto the new head ([[rebasing]]) — append-only staging
+    * composes with any interleaving, nothing is lost on either side.
+    * The staging ref is deleted after the commit (publish is
+    * idempotent in effect: a crash between commit and ref-delete
+    * leaves a stale ref whose re-publish would double-reference the
+    * same files — guarded by dropping already-referenced files from
+    * the delta). Caller `headers` (e.g. st39's stream-batch marker)
+    * ride the same commit.
     */
   def publishStaged(
       spark: SparkSession, path: String, stage: String,
-      maxRetries: Int = 5, headers: Map[String, String] = Map.empty): Int = {
+      headers: Map[String, String] = Map.empty): Int = {
     val (fs, root) = fsFor(spark, path)
-    val ref = stagedRefPath(root, stage)
     val staged = stagedManifests(spark, path).getOrElse(stage,
       throw new IllegalArgumentException(s"no stage '$stage' under $path"))
-    var attempt = 0
-    var committed = -1
-    while (committed < 0) {
-      val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(0)
-      val base = if (latest == 0) Seq.empty[String]
-        else readManifest(spark, path, Some(latest)).getOrElse(Seq.empty)
-      val delta = staged.filterNot(base.toSet) // crash-replay guard
-      // an append changes no existing file, but the head's pending
-      // deletion vectors must ride along or MoR readers of the new
-      // head would see the deleted rows return; caller `headers`
-      // (e.g. st39's stream-batch marker) ride the same commit
-      val dvs = if (latest == 0) Seq.empty[String]
-        else dvList(spark, path, Some(latest))
-      try committed =
-        if (delta.isEmpty) latest
-        else commitManifest(spark, path, base ++ delta, Some(latest),
-          headers = headers ++ (if (dvs.isEmpty) Map.empty[String, String]
-            else Map(DvHeaderKey -> dvs.mkString(","))))
-      catch {
-        case e: ManifestConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    fs.delete(ref, false)
+    val committed = rebasing("publishStaged", path)(
+      appendOntoHead(spark, path, latestVersion(fs, root).getOrElse(0), staged, headers))
+    fs.delete(stagedRefPath(root, stage), false)
     committed
+  }
+
+  /** One append attempt onto main at `head` (0 = nothing committed
+    * yet), shared by [[publishStaged]], [[publishStagedChecked]] and
+    * [[publishBranchRebase]]: files `head` already references are
+    * dropped (the crash-replay guard), the head's pending deletion
+    * vectors ride along (an append changes no existing file, but MoR
+    * readers of the new head must not see deleted rows return), and
+    * head ++ delta is CASed at `head` — or `head` is returned when
+    * nothing is new.
+    */
+  private def appendOntoHead(
+      spark: SparkSession, path: String, head: Int, files: Seq[String],
+      headers: Map[String, String]): Int = {
+    val (base, dvs) =
+      if (head == 0) (Seq.empty[String], Seq.empty[String])
+      else (readManifest(spark, path, Some(head)).get, dvList(spark, path, Some(head)))
+    val delta = files.filterNot(base.toSet)
+    if (delta.isEmpty) head
+    else commitManifest(spark, path, base ++ delta, Some(head),
+      headers = headers ++ (if (dvs.isEmpty) Map.empty[String, String]
+        else Map(DvHeaderKey -> dvs.mkString(","))))
   }
 
   /** Drop a staged append without publishing: deletes the staged data
@@ -981,8 +1003,7 @@ object ParquetLake {
     val (fs, root) = fsFor(spark, path)
     require(branchVersions(fs, root, name).isEmpty,
       s"branch '$name' already exists under $path; publish or drop it first")
-    val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val latest = headVersion(fs, root, path)
     val fork = fromVersion.getOrElse(latest)
     val files = readManifest(spark, path, Some(fork)).get
     val dvs = dvList(spark, path, Some(fork))
@@ -1032,35 +1053,22 @@ object ParquetLake {
   def appendBranch(
       spark: SparkSession, path: String, name: String, df: DataFrame,
       partCol: Option[String] = None,
-      allowEvolution: Boolean = false, maxRetries: Int = 8): Int = {
+      allowEvolution: Boolean = false): Int = {
     val (fs, root) = fsFor(spark, path)
-    val (v0, base0, _) = branchListing(spark, path, name, None)
-    schemaGate(spark, path, Some(base0), df, allowEvolution)
+    schemaGate(spark, path, Some(branchListing(spark, path, name, None)._2),
+      df, allowEvolution)
     // the data files are written ONCE; a CAS loser rebases by
     // re-reading the branch head and re-adopting the same files —
     // appends compose, so unlike publishBranch this retry is safe
     val moved = writeDataFiles(spark, path, df, partCol)
-    var attempt = 0
-    var v = v0
-    var base = base0
-    while (true) {
-      val (vNow, baseNow, headers) = branchListing(spark, path, name, None)
-      v = vNow; base = baseNow
+    rebasing("appendBranch", s"$path/$name") {
+      val (v, base, headers) = branchListing(spark, path, name, None)
       val carried = headers.view.filterKeys(k => k == "fork" || k == DvHeaderKey).toMap
-      try {
-        atomicPublishListing(fs, root, s"${branchName(name)}${v + 1}",
-          base ++ moved, carried,
-          s"branch '$name' version ${v + 1} already committed by a concurrent writer under $path")
-        return v + 1
-      } catch {
-        case e: ManifestConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          log.info(s"appendBranch conflict on $path/$name " +
-            s"(attempt $attempt/$maxRetries), rebasing: ${e.getMessage}")
-      }
+      atomicPublishListing(fs, root, s"${branchName(name)}${v + 1}",
+        base ++ moved, carried,
+        s"branch '$name' version ${v + 1} already committed by a concurrent writer under $path")
+      v + 1
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Read a branch head (or an explicit branch version) — the
@@ -1120,18 +1128,16 @@ object ParquetLake {
     * (head listing minus fork listing), and appends compose with any
     * interleaving (the [[publishStaged]] argument, generalized from
     * one pending stage to a branch chain), so the publish re-reads
-    * the CURRENT main head and commits head ++ delta via the same
-    * CAS-rebase loop — concurrent main commits just mean retry, and
-    * the current head's pending deletion vectors ride along (the
-    * fork's dv header is stale by construction: main owns those
-    * files now). A branch that rewrote or dropped any fork file
+    * the CURRENT main head and commits head ++ delta through the same
+    * append attempt — concurrent main commits just mean a rebase
+    * ([[rebasing]]), and the current head's pending deletion vectors
+    * ride along (the fork's dv header is stale by construction: main
+    * owns those files now). A branch that rewrote or dropped any fork file
     * refuses loudly — a replace cannot rebase a concurrent delta;
     * use [[publishBranch]] at the fork head or re-branch and replay.
     * Returns the committed main version.
     */
-  def publishBranchRebase(
-      spark: SparkSession, path: String, name: String,
-      maxRetries: Int = 8): Int = {
+  def publishBranchRebase(spark: SparkSession, path: String, name: String): Int = {
     val (fs, root) = fsFor(spark, path)
     val (_, files, headers) = branchListing(spark, path, name, None)
     val fork = headers.getOrElse("fork",
@@ -1144,27 +1150,8 @@ object ParquetLake {
         s"file(s), e.g. ${removed.take(3).mkString(", ")}); a rewrite cannot " +
         "rebase onto a moved main — publishBranch at the fork head or re-branch")
     val branchDelta = files.filterNot(forkFiles.toSet)
-    var attempt = 0
-    var committed = -1
-    while (committed < 0) {
-      val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $path"))
-      val base = readManifest(spark, path, Some(latest)).getOrElse(Seq.empty)
-      val delta = branchDelta.filterNot(base.toSet) // crash-replay guard
-      val dvs = dvList(spark, path, Some(latest))
-      try committed =
-        if (delta.isEmpty) latest
-        else commitManifest(spark, path, base ++ delta, Some(latest),
-          headers = if (dvs.isEmpty) Map.empty[String, String]
-            else Map(DvHeaderKey -> dvs.mkString(",")))
-      catch {
-        case e: ManifestConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          log.info(s"publishBranchRebase conflict on $path/$name " +
-            s"(attempt $attempt/$maxRetries), rebasing: ${e.getMessage}")
-      }
-    }
+    val committed = rebasing("publishBranchRebase", s"$path/$name")(
+      appendOntoHead(spark, path, headVersion(fs, root, path), branchDelta, Map.empty))
     branchVersions(fs, root, name).foreach { case (_, p) => fs.delete(p, false) }
     committed
   }
@@ -1209,8 +1196,7 @@ object ParquetLake {
   def repartitionManifested(
       spark: SparkSession, path: String, partCol: String): Int = {
     val (fs, root) = fsFor(spark, path)
-    val base = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val base = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, base, "repartitionManifested")
     val snap = readManifested(spark, path, Some(base))
     require(snap.columns.contains(partCol),
@@ -1241,8 +1227,7 @@ object ParquetLake {
       spark: SparkSession, path: String, sortCol: String,
       numFiles: Int): Int = {
     val (fs, root) = fsFor(spark, path)
-    val base = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val base = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, base, "reclusterManifested")
     val snap = readManifested(spark, path, Some(base))
     require(snap.columns.contains(sortCol),
@@ -1341,8 +1326,7 @@ object ParquetLake {
       version: Option[Int] = None): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val files = readManifest(spark, path, Some(v)).get
     val rows = harvestFooterStats(spark, root.toString, files, cols.toSet)
     val target = new Path(root, s"$StatsPrefix$v")
@@ -1400,8 +1384,7 @@ object ParquetLake {
       version: Option[Int] = None): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val files = readManifest(spark, path, Some(v)).get.toSet
     // newest older version that still has a sidecar to inherit from
     val prev = manifestVersions(fs, root).map(_._1)
@@ -1445,8 +1428,7 @@ object ParquetLake {
   def countManifested(
       spark: SparkSession, path: String, version: Option[Int] = None): Long = {
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val files = readManifest(spark, path, Some(v)).get
     if (files.isEmpty) return 0L
     val confEntries = {
@@ -1495,8 +1477,7 @@ object ParquetLake {
       version: Option[Int] = None): DataFrame = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val statsPath = new Path(root, s"$StatsPrefix$v")
     if (!fs.exists(statsPath))
       throw new IllegalStateException(
@@ -1711,8 +1692,7 @@ object ParquetLake {
       predicate: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val statsPath = new Path(root, s"$StatsPrefix$v")
     if (!fs.exists(statsPath))
       throw new IllegalStateException(
@@ -1761,8 +1741,7 @@ object ParquetLake {
       version: Option[Int] = None): Unit = {
     graft.GraftSession.ensureRegistered(spark) // graft_bloom_agg
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val files = readManifest(spark, path, Some(v)).get
     val full = spark.read.option("basePath", path)
       .parquet(files.map(f => s"$path/$f"): _*)
@@ -1820,8 +1799,7 @@ object ParquetLake {
       version: Option[Int]): DataFrame = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")))
+    val v = version.getOrElse(headVersion(fs, root, path))
     val sidecar = new Path(root, s"$BloomPrefix$v")
     if (!fs.exists(sidecar))
       throw new IllegalStateException(
@@ -1851,11 +1829,45 @@ object ParquetLake {
   /** Thrown when an optimistic commit loses the race: the expected
     * version is no longer the latest, or another writer published the
     * target version first. The snapshot the loser computed from is
-    * stale — re-read and recompute (what [[mergeManifested]]'s retry
-    * loop does), never blind-retry the same commit.
+    * stale — re-read and recompute (what [[rebasing]] does), never
+    * blind-retry the same commit. The single-CAS ops
+    * ([[publishBranch]], [[restoreManifested]], [[compactManifested]],
+    * [[repartitionManifested]], [[reclusterManifested]]) throw it on
+    * the first conflict by design: a full replace cannot rebase a
+    * concurrent delta.
     */
   final class ManifestConflictException(msg: String)
     extends java.io.IOException(msg)
+
+  /** How many times [[rebasing]] re-runs a conflicting attempt. */
+  private[graft] val MaxRebases = 8
+
+  /** The lake's multi-writer conflict policy, written once: run
+    * `attempt` — which reads the head, plans against it and CASes —
+    * and when it throws [[ManifestConflictException]], log the op,
+    * path and rebase number and re-run it from scratch, up to
+    * [[MaxRebases]] times; then rethrow the last conflict. Any other
+    * exception propagates on the first throw. A conflict means
+    * another writer committed, so a writer racing n others loses at
+    * most n times. An attempt must be safe to re-run: it re-reads
+    * everything it plans from, and what a lost attempt wrote is
+    * unreferenced garbage for [[vacuum]] unless it cleans up itself
+    * ([[matviewRefresh]]).
+    */
+  private[graft] def rebasing[A](op: String, path: String)(attempt: => A): A = {
+    @annotation.tailrec
+    def run(rebases: Int): A =
+      (try Right(attempt) catch {
+        case e: ManifestConflictException if rebases < MaxRebases => Left(e)
+      }) match {
+        case Right(a) => a
+        case Left(e) =>
+          log.info(s"$op conflict on $path (rebase ${rebases + 1}/$MaxRebases): " +
+            e.getMessage)
+          run(rebases + 1)
+      }
+    run(0)
+  }
 
   /** Atomically commit a new snapshot listing `files` (lake-relative)
     * as the next manifest version; returns that version.
@@ -1884,7 +1896,7 @@ object ParquetLake {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     if (!fs.exists(root)) fs.mkdirs(root)
-    val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(0)
+    val latest = latestVersion(fs, root).getOrElse(0)
     expectedVersion.foreach { v =>
       if (latest != v)
         throw new ManifestConflictException(
@@ -2054,8 +2066,7 @@ object ParquetLake {
       parallelism: Int = 8): Seq[CompactionStat] = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "compactManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
     val byPartition = current.groupBy(_.split('/').head)
@@ -2120,10 +2131,9 @@ object ParquetLake {
     * compare-and-swap at the snapshot version the merge planned
     * against ([[commitManifest]]'s `expectedVersion`), and on
     * conflict the merge REBASES — re-reads the new current snapshot,
-    * recomputes the rewrite against it, and retries, up to
-    * `maxRetries` times before throwing the final
-    * [[ManifestConflictException]]. Two concurrent merges therefore
-    * serialize: both batches land, in commit order. A lost attempt's
+    * recomputes the rewrite against it, and retries ([[rebasing]]).
+    * Two concurrent merges therefore serialize: both batches land,
+    * in commit order. A lost attempt's
     * already-renamed files are unreferenced garbage for [[vacuum]],
     * never duplicates (readers only see committed manifests). Returns
     * the committed manifest version (the current one when the merge
@@ -2140,24 +2150,14 @@ object ParquetLake {
   def mergeManifested(
       spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String], partCol: String = "p_date",
-      deleteCol: Option[String] = None, maxRetries: Int = 3): Int = {
+      deleteCol: Option[String] = None): Int = {
     require(keyCols.nonEmpty, "mergeManifested needs at least one key column")
     // the change batch is read several times (matched-partition probe,
     // anti-join, insert union) and by every rebase attempt —
     // materialize once
     val src = source.localCheckpoint(eager = true)
-    var attempt = 0
-    while (true) {
-      try return mergeAttempt(spark, path, src, keyCols, partCol, deleteCol)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"mergeManifested conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    rebasing("mergeManifested", path)(
+      mergeAttempt(spark, path, src, keyCols, partCol, deleteCol))
   }
 
   private def mergeAttempt(
@@ -2166,8 +2166,7 @@ object ParquetLake {
       deleteCol: Option[String]): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "mergeManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
     val isDelete = deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
@@ -2330,28 +2329,14 @@ object ParquetLake {
     * when nothing matches).
     */
   def deleteManifested(
-      spark: SparkSession, path: String, predicate: Column,
-      maxRetries: Int = 3): Int = {
-    var attempt = 0
-    while (true) {
-      try return deleteAttempt(spark, path, predicate)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"deleteManifested conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      spark: SparkSession, path: String, predicate: Column): Int =
+    rebasing("deleteManifested", path)(deleteAttempt(spark, path, predicate))
 
   private def deleteAttempt(
       spark: SparkSession, path: String, predicate: Column): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "deleteManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
     // which files hold a matching row? One pushed-down scan, file names
@@ -2408,20 +2393,9 @@ object ParquetLake {
     */
   def updateManifested(
       spark: SparkSession, path: String, predicate: Column,
-      set: Map[String, Column], maxRetries: Int = 3): Int = {
+      set: Map[String, Column]): Int = {
     require(set.nonEmpty, "updateManifested needs at least one SET column")
-    var attempt = 0
-    while (true) {
-      try return updateAttempt(spark, path, predicate, set)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"updateManifested conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    rebasing("updateManifested", path)(updateAttempt(spark, path, predicate, set))
   }
 
   private def updateAttempt(
@@ -2429,8 +2403,7 @@ object ParquetLake {
       set: Map[String, Column]): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "updateManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
     val rootPath = fs.makeQualified(root).toUri.getPath
@@ -2606,28 +2579,14 @@ object ParquetLake {
     * committed version (the current one when nothing matched).
     */
   def deleteVectored(
-      spark: SparkSession, path: String, predicate: Column,
-      maxRetries: Int = 3): Int = {
-    var attempt = 0
-    while (true) {
-      try return deleteVectoredAttempt(spark, path, predicate)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"deleteVectored conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      spark: SparkSession, path: String, predicate: Column): Int =
+    rebasing("deleteVectored", path)(deleteVectoredAttempt(spark, path, predicate))
 
   private def deleteVectoredAttempt(
       spark: SparkSession, path: String, predicate: Column): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     val current = readManifest(spark, path, Some(currentVersion)).get
     val rootPath = fs.makeQualified(root).toUri.getPath
     val prior = dvList(spark, path, Some(currentVersion))
@@ -2673,8 +2632,7 @@ object ParquetLake {
       spark: SparkSession, path: String, version: Option[Int] = None,
       mergeSchema: Boolean = false): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    val latest = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val latest = headVersion(fs, root, path)
     val v = version.getOrElse(latest)
     val base = readManifested(spark, path, Some(v), mergeSchema)
     applyDvAntiJoin(spark, path, base, dvList(spark, path, Some(v)))
@@ -2724,21 +2682,11 @@ object ParquetLake {
   def mergeOnRead(
       spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String], partCol: Option[String] = None,
-      deleteCol: Option[String] = None, maxRetries: Int = 3): Int = {
+      deleteCol: Option[String] = None): Int = {
     require(keyCols.nonEmpty, "mergeOnRead needs at least one key column")
     val src = source.localCheckpoint(eager = true)
-    var attempt = 0
-    while (true) {
-      try return mergeOnReadAttempt(spark, path, src, keyCols, partCol, deleteCol)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"mergeOnRead conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    rebasing("mergeOnRead", path)(
+      mergeOnReadAttempt(spark, path, src, keyCols, partCol, deleteCol))
   }
 
   private def mergeOnReadAttempt(
@@ -2747,8 +2695,7 @@ object ParquetLake {
       deleteCol: Option[String]): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     val current = readManifest(spark, path, Some(currentVersion)).get
     val rootPath = fs.makeQualified(root).toUri.getPath
     val prior = dvList(spark, path, Some(currentVersion))
@@ -2795,27 +2742,13 @@ object ParquetLake {
     * vector files stay on disk for retained older versions'
     * [[readManifestedMoR]]; [[vacuum]] sweeps them once unreferenced.
     */
-  def materializeDeletes(
-      spark: SparkSession, path: String, maxRetries: Int = 3): Int = {
-    var attempt = 0
-    while (true) {
-      try return materializeAttempt(spark, path)
-      catch {
-        case e: ManifestConflictException if attempt < maxRetries =>
-          attempt += 1
-          log.info(
-            s"materializeDeletes conflict on $path (attempt $attempt/$maxRetries), " +
-              s"rebasing onto the new snapshot: ${e.getMessage}")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def materializeDeletes(spark: SparkSession, path: String): Int =
+    rebasing("materializeDeletes", path)(materializeAttempt(spark, path))
 
   private def materializeAttempt(spark: SparkSession, path: String): Int = {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val currentVersion = headVersion(fs, root, path)
     val dvs = dvList(spark, path, Some(currentVersion))
     if (dvs.isEmpty) return currentVersion
     val current = readManifest(spark, path, Some(currentVersion)).get
@@ -2892,8 +2825,7 @@ object ParquetLake {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     val (fs, root) = fsFor(spark, path)
-    val head = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+    val head = headVersion(fs, root, path)
     val actions = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String)]
     // 1. pending deletion vectors gate everything copy-on-write
     val dvs = dvList(spark, path, Some(head))
@@ -3116,114 +3048,113 @@ object ParquetLake {
     * and the deletion-vector set is unchanged, `full` (recompute
     * from the MoR view) otherwise. `keys`/`measures` must match
     * across refreshes of the same name (the stored schema is the
-    * contract). Multi-refresher safe via the manifest CAS: a loser
-    * re-reads and retries against the new state.
+    * contract). Multi-refresher safe via the listing CAS: a loser
+    * deletes its unpublished data dir and re-reads and retries
+    * against the new state ([[rebasing]]).
     */
   def matviewRefresh(
       spark: SparkSession, path: String, name: String,
-      keys: Seq[String], measures: Seq[String] = Seq.empty,
-      maxRetries: Int = 5): MatviewRefresh = {
+      keys: Seq[String], measures: Seq[String] = Seq.empty): MatviewRefresh = {
     require(keys.nonEmpty, "matview needs at least one key column")
+    rebasing("matviewRefresh", s"$path/$name")(
+      matviewRefreshAttempt(spark, path, name, keys, measures))
+  }
+
+  private def matviewRefreshAttempt(
+      spark: SparkSession, path: String, name: String,
+      keys: Seq[String], measures: Seq[String]): MatviewRefresh = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (true) {
-      val headV = manifestVersions(fs, root).lastOption.map(_._1).getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $path"))
-      val headFiles = readManifest(spark, path, Some(headV)).get
-      val headDvs = dvList(spark, path, Some(headV)).sorted
-      val prev = matviewVersions(fs, root, name).lastOption
-      val prevState = prev.map { case (v, p) =>
-        val lines = manifestLines(fs, p)
-        val headers = lines.filter(_.startsWith("# ")).flatMap { l =>
-          val kv = l.stripPrefix("# "); val i = kv.indexOf('=')
-          if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
-        }.toMap
-        (v, lines.filterNot(_.startsWith("#")), headers("base").toInt)
+    val headV = headVersion(fs, root, path)
+    val headFiles = readManifest(spark, path, Some(headV)).get
+    val headDvs = dvList(spark, path, Some(headV)).sorted
+    val prev = matviewVersions(fs, root, name).lastOption
+    val prevState = prev.map { case (v, p) =>
+      val lines = manifestLines(fs, p)
+      val headers = lines.filter(_.startsWith("# ")).flatMap { l =>
+        val kv = l.stripPrefix("# "); val i = kv.indexOf('=')
+        if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
+      }.toMap
+      (v, lines.filterNot(_.startsWith("#")), headers("base").toInt)
+    }
+    prevState match {
+      case Some((v, _, base)) if base == headV =>
+        return MatviewRefresh(v, "noop", 0, headV)
+      case _ =>
+    }
+    // decide incremental vs full: the base manifest must still be
+    // retained (vacuum may have dropped it), the diff append-only,
+    // and the dv set unchanged
+    val incremental: Option[Seq[String]] = prevState.flatMap { case (_, _, base) =>
+      val baseFiles = try readManifest(spark, path, Some(base))
+        catch { case _: IllegalArgumentException => None }
+      baseFiles.flatMap { bf =>
+        val baseDvs = dvList(spark, path, Some(base)).sorted
+        val removed = bf.filterNot(headFiles.toSet)
+        if (removed.isEmpty && baseDvs == headDvs)
+          Some(headFiles.filterNot(bf.toSet))
+        else None
       }
-      prevState match {
-        case Some((v, _, base)) if base == headV =>
-          return MatviewRefresh(v, "noop", 0, headV)
-        case _ =>
-      }
-      // decide incremental vs full: the base manifest must still be
-      // retained (vacuum may have dropped it), the diff append-only,
-      // and the dv set unchanged
-      val incremental: Option[Seq[String]] = prevState.flatMap { case (_, _, base) =>
-        val baseFiles = try readManifest(spark, path, Some(base))
-          catch { case _: IllegalArgumentException => None }
-        baseFiles.flatMap { bf =>
-          val baseDvs = dvList(spark, path, Some(base)).sorted
-          val removed = bf.filterNot(headFiles.toSet)
-          if (removed.isEmpty && baseDvs == headDvs)
-            Some(headFiles.filterNot(bf.toSet))
-          else None
-        }
-      }
-      val (mode, scanned, merged) = incremental match {
-        case Some(added) =>
-          val (mvV, mvFiles, _) = prevState.map(s => (s._1, s._2, s._3)).get
-          val stored = spark.read.option("basePath", path)
-            .parquet(mvFiles.map(f => s"$path/$f"): _*)
-          // legacy matviews (written before the per-measure cnt_
-          // partials) can't merge incrementally — their partial schema
-          // lacks the non-null counts; one full recompute upgrades them
-          val legacy = measures.exists(m => !stored.columns.contains(s"cnt_$m"))
-          if (legacy)
-            ("full", headFiles.length,
-              matviewAggregate(readManifestedMoR(spark, path, Some(headV)),
-                keys, measures))
-          else if (added.isEmpty) ("incremental", 0, stored)
-          else {
-            val fresh = matviewAggregate(
-              spark.read.option("basePath", path)
-                .parquet(added.map(f => s"$path/$f"): _*),
-              keys, measures)
-            ("incremental", added.length,
-              matviewMerge(stored.unionByName(fresh), keys, measures))
-          }
-        case None =>
+    }
+    val (mode, scanned, merged) = incremental match {
+      case Some(added) =>
+        val mvFiles = prevState.get._2
+        val stored = spark.read.option("basePath", path)
+          .parquet(mvFiles.map(f => s"$path/$f"): _*)
+        // legacy matviews (written before the per-measure cnt_
+        // partials) can't merge incrementally — their partial schema
+        // lacks the non-null counts; one full recompute upgrades them
+        val legacy = measures.exists(m => !stored.columns.contains(s"cnt_$m"))
+        if (legacy)
           ("full", headFiles.length,
             matviewAggregate(readManifestedMoR(spark, path, Some(headV)),
               keys, measures))
-      }
-      val nextV = prevState.map(_._1 + 1).getOrElse(1)
-      // Attempt-unique staging dir (same discipline as publishStaged's
-      // stage names): two racing refreshers both compute nextV from the
-      // same prevState, and a shared `v$nextV` dir would let the CAS
-      // loser's overwrite/cleanup delete the winner's published part
-      // files. The listing records the actual per-file paths, so
-      // readers never derive the dir from the version number.
-      val dataDir = s"_graft_matview_data_$name/v$nextV-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      merged.write.mode("overwrite").parquet(s"$path/$dataDir")
-      val parts = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
-        .toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => s"$dataDir/${s.getPath.getName}")
-      try {
-        atomicPublishListing(fs, root, s"${matviewPrefix(name)}$nextV",
-          parts, Map("base" -> headV.toString, "mode" -> mode),
-          s"matview '$name' version $nextV already committed by a concurrent refresher under $path")
-        // retain the previous snapshot for in-flight readers; sweep
-        // older — data dirs are derived from each swept listing's own
-        // part paths (dirs are attempt-unique, never version-derived)
-        matviewVersions(fs, root, name).dropRight(2).foreach { case (_, p) =>
-          val oldDirs = manifestLines(fs, p).filterNot(_.startsWith("#"))
-            .map(f => f.take(f.lastIndexOf('/'))).filter(_.nonEmpty).distinct
-          fs.delete(p, false)
-          oldDirs.foreach(d =>
-            fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
+        else if (added.isEmpty) ("incremental", 0, stored)
+        else {
+          val fresh = matviewAggregate(
+            spark.read.option("basePath", path)
+              .parquet(added.map(f => s"$path/$f"): _*),
+            keys, measures)
+          ("incremental", added.length,
+            matviewMerge(stored.unionByName(fresh), keys, measures))
         }
-        return MatviewRefresh(nextV, mode, scanned, headV)
-      } catch {
-        case e: ManifestConflictException =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, dataDir), true)
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          log.info(s"matviewRefresh conflict on $path/$name " +
-            s"(attempt $attempt/$maxRetries), retrying: ${e.getMessage}")
-      }
+      case None =>
+        ("full", headFiles.length,
+          matviewAggregate(readManifestedMoR(spark, path, Some(headV)),
+            keys, measures))
     }
-    throw new IllegalStateException("unreachable")
+    val nextV = prevState.map(_._1 + 1).getOrElse(1)
+    // Attempt-unique staging dir (same discipline as publishStaged's
+    // stage names): two racing refreshers both compute nextV from the
+    // same prevState, and a shared `v$nextV` dir would let the CAS
+    // loser's overwrite/cleanup delete the winner's published part
+    // files. The listing records the actual per-file paths, so
+    // readers never derive the dir from the version number.
+    val dataDir = s"_graft_matview_data_$name/v$nextV-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    merged.write.mode("overwrite").parquet(s"$path/$dataDir")
+    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
+      .toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(s => s"$dataDir/${s.getPath.getName}")
+    try atomicPublishListing(fs, root, s"${matviewPrefix(name)}$nextV",
+      parts, Map("base" -> headV.toString, "mode" -> mode),
+      s"matview '$name' version $nextV already committed by a concurrent refresher under $path")
+    catch {
+      case e: ManifestConflictException =>
+        // no listing will ever reference the loser's attempt-unique dir
+        fs.delete(new org.apache.hadoop.fs.Path(root, dataDir), true)
+        throw e
+    }
+    // retain the previous snapshot for in-flight readers; sweep
+    // older — data dirs are derived from each swept listing's own
+    // part paths (dirs are attempt-unique, never version-derived)
+    matviewVersions(fs, root, name).dropRight(2).foreach { case (_, p) =>
+      val oldDirs = manifestLines(fs, p).filterNot(_.startsWith("#"))
+        .map(f => f.take(f.lastIndexOf('/'))).filter(_.nonEmpty).distinct
+      fs.delete(p, false)
+      oldDirs.foreach(d =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
+    }
+    MatviewRefresh(nextV, mode, scanned, headV)
   }
 
   /** Read the matview's current rollup: the stored group rows plus a

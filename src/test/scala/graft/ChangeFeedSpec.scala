@@ -82,7 +82,7 @@ class ChangeFeedSpec extends SparkSpec {
           override def call(): Int = {
             gate.await()
             ParquetLake.deleteManifested(
-              spark, dir, col("event_type") === t, maxRetries = 8)
+              spark, dir, col("event_type") === t)
           }
         })
       }

@@ -127,7 +127,7 @@ class ConcurrencySpec extends SparkSpec {
         pool.submit(new Callable[Int] {
           override def call(): Int = {
             gate.await()
-            ParquetLake.publishStaged(spark, dir, s"wap-$w", maxRetries = 32)
+            ParquetLake.publishStaged(spark, dir, s"wap-$w")
           }
         })
       }
@@ -140,7 +140,7 @@ class ConcurrencySpec extends SparkSpec {
             .toDF("event_id", "user_id", "event_type", "ts_ms")
             .withColumn("p_date", lit(one.getAs[Any]("p_date")).cast(pdType))
           ParquetLake.mergeManifested(spark, dir, change,
-            keyCols = Seq("event_id"), maxRetries = 32)
+            keyCols = Seq("event_id"))
         }
       })
       gate.countDown()
@@ -192,14 +192,14 @@ class ConcurrencySpec extends SparkSpec {
         pool.submit(new Callable[Int] {
           override def call(): Int = {
             gate.await()
-            ParquetLake.deleteVectored(spark, dir, p, maxRetries = 32)
+            ParquetLake.deleteVectored(spark, dir, p)
           }
         })
       }
       val pub = pool.submit(new Callable[Int] {
         override def call(): Int = {
           gate.await()
-          ParquetLake.publishStaged(spark, dir, "dv-race", maxRetries = 32)
+          ParquetLake.publishStaged(spark, dir, "dv-race")
         }
       })
       gate.countDown()
@@ -248,7 +248,7 @@ class ConcurrencySpec extends SparkSpec {
         pool.submit(new Callable[Int] {
           override def call(): Int = {
             gate.await()
-            ParquetLake.appendBranch(spark, dir, "race", b, Some("p_date"), maxRetries = 32)
+            ParquetLake.appendBranch(spark, dir, "race", b, Some("p_date"))
           }
         })
       }
@@ -368,5 +368,96 @@ class ConcurrencySpec extends SparkSpec {
     assert(mor.where(delPred).count() === 0)
     assert(mor.where(col("event_id") >= 10000000L).count() === n1)
     assert(ParquetLake.fsck(spark, dir).missing.isEmpty)
+  }
+
+  test("lk35: two racing checked publishes of one new key — exactly one lands, the other is refused against the head it would commit on") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import graft.sources.ParquetLake
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_checked_race").toString
+    ParquetLake.writePartitioned(
+      graft.queries.events(spark, sf).select("event_id", "user_id", "event_type", "ts_ms"),
+      dir, "ts_ms", sortCols = Nil)
+    ParquetLake.snapshotManifest(spark, dir)
+    val base = ParquetLake.readManifested(spark, dir)
+    val newId = base.agg(max("event_id")).head().getLong(0) + 1
+    // both stages hold the same fresh event_id: each passes the check
+    // against the pre-race head, only one may pass against the other's
+    val row = base.orderBy("event_id").limit(1)
+      .withColumn("event_id", lit(newId)).localCheckpoint()
+    (1 to 2).foreach(w => ParquetLake.stageAppend(spark, dir, row, s"dup-$w", Some("p_date")))
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futs = (1 to 2).map { w =>
+        pool.submit(new Callable[Either[IllegalStateException, Int]] {
+          override def call(): Either[IllegalStateException, Int] = {
+            gate.await()
+            try Right(ParquetLake.publishStagedChecked(spark, dir, s"dup-$w",
+              uniqueKey = Seq("event_id")))
+            catch { case e: IllegalStateException => Left(e) }
+          }
+        })
+      }
+      gate.countDown()
+      val outcomes = futs.map(_.get(180, TimeUnit.SECONDS))
+      assert(outcomes.count(_.isRight) === 1, s"outcomes: $outcomes")
+      val refused = outcomes.collect { case Left(e) => e.getMessage }
+      assert(refused.size === 1)
+      assert(refused.head.contains("unique(event_id) vs head"), refused.head)
+    } finally {
+      pool.shutdownNow()
+      ()
+    }
+    assert(ParquetLake.readManifested(spark, dir).where(col("event_id") === newId).count() === 1)
+  }
+
+  test("lk45: two racing matview refreshers agree on one version; the CAS loser leaves no unreferenced data dir") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import graft.sources.ParquetLake
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_matview_race").toString
+    ParquetLake.writePartitioned(
+      graft.queries.events(spark, sf).select("event_id", "user_id", "event_type", "ts_ms"),
+      dir, "ts_ms", sortCols = Nil)
+    ParquetLake.snapshotManifest(spark, dir)
+    val (keys, ms) = (Seq("event_type"), Seq("user_id"))
+    ParquetLake.matviewRefresh(spark, dir, "mv", keys, ms)
+    val batch = ParquetLake.readManifested(spark, dir)
+      .where(col("event_id") % 5 === 0)
+      .withColumn("event_id", col("event_id") + 10000000L)
+    ParquetLake.stageAppend(spark, dir, batch, "mv-race", Some("p_date"))
+    ParquetLake.publishStaged(spark, dir, "mv-race")
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futs = (1 to 2).map { _ =>
+        pool.submit(new Callable[ParquetLake.MatviewRefresh] {
+          override def call(): ParquetLake.MatviewRefresh = {
+            gate.await()
+            ParquetLake.matviewRefresh(spark, dir, "mv", keys, ms)
+          }
+        })
+      }
+      gate.countDown()
+      val results = futs.map(_.get(180, TimeUnit.SECONDS))
+      assert(results.map(_.version).distinct.size === 1, s"results: $results")
+      assert(results.map(_.mode).toSet === Set("incremental", "noop"), s"results: $results")
+    } finally {
+      pool.shutdownNow()
+      ()
+    }
+    val root = new java.io.File(dir)
+    val listed = root.listFiles().filter(_.getName.startsWith("_graft_matview_mv.v"))
+      .flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala)
+      .filterNot(_.startsWith("#"))
+      .map(f => f.take(f.lastIndexOf('/'))).toSet
+    val dirs = new java.io.File(root, "_graft_matview_data_mv").listFiles()
+      .filter(_.isDirectory).map(d => s"_graft_matview_data_mv/${d.getName}").toSet
+    assert(dirs.nonEmpty)
+    assert(dirs.subsetOf(listed), s"unreferenced: ${dirs -- listed}")
+    assert(ParquetLake.matviewRead(spark, dir, "mv").agg(sum("n_rows")).head().getLong(0)
+      === ParquetLake.readManifestedMoR(spark, dir).count())
   }
 }

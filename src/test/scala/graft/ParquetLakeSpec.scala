@@ -1654,4 +1654,38 @@ class ParquetLakeSpec extends SparkSpec {
     assert(ParquetLake.matviewRead(spark, dir, "mv", ms)
       .columns.contains("cnt_user_id"))
   }
+
+  test("rebasing: a conflict re-runs the attempt at most MaxRebases times; any other failure runs it once") {
+    val max = ParquetLake.MaxRebases
+    // always conflicting: 1 + MaxRebases runs, then the LAST conflict
+    var runs = 0
+    val last = intercept[ParquetLake.ManifestConflictException] {
+      ParquetLake.rebasing("spec", "lake") {
+        runs += 1
+        throw new ParquetLake.ManifestConflictException(s"conflict $runs")
+      }
+    }
+    assert(runs === 1 + max)
+    assert(last.getMessage === s"conflict ${1 + max}")
+    // any other exception propagates from the first run
+    runs = 0
+    intercept[IllegalStateException] {
+      ParquetLake.rebasing("spec", "lake") {
+        runs += 1
+        throw new IllegalStateException("not a conflict")
+      }
+    }
+    assert(runs === 1)
+    // k conflicts within the budget, then the attempt's value
+    Seq(0, 1, max - 1, max).foreach { k =>
+      runs = 0
+      val got = ParquetLake.rebasing("spec", "lake") {
+        runs += 1
+        if (runs <= k) throw new ParquetLake.ManifestConflictException(s"conflict $runs")
+        runs * 10
+      }
+      assert(runs === k + 1)
+      assert(got === (k + 1) * 10)
+    }
+  }
 }
