@@ -3,14 +3,14 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
-  /** Shuffle/spill scratch for the TIMING mains (Bench/Headroom/
-    * IngestGateBench — not the library: a user session keeps Spark's
-    * default). The benchmark box backs /tmp with a virtio disk whose
-    * file create/write latency is both slow and NOISY — jstack
+  /** Shuffle/spill scratch for the timing mains' [[session]] (not
+    * the library: a user session keeps Spark's default). The
+    * benchmark box backs /tmp with a virtio disk whose file
+    * create/write latency is both slow and NOISY — jstack
     * samples of slow passes sat in FileOutputStream.open0/write0, and
     * shuffle-heavy rows swung 3.5-22s pass-to-pass for identical work
     * (q4 at 10x data, r14). A real cluster gives executors local
@@ -25,30 +25,111 @@ object Bench {
       else None
     }
 
-  private[graft] def withScratchDir(b: SparkSession.Builder): SparkSession.Builder =
-    scratchDir.fold(b)(d => b.config("spark.local.dir", d))
+  /** The timing mains' session: [[GraftSession.builder]] on `cpus`
+    * cores plus [[scratchDir]], with the root locale, ERROR logging and
+    * the accumulator-noise filter.
+    */
+  private[graft] def session(cpus: Int): SparkSession = {
+    // f"" interpolators honor the default locale; a comma-decimal
+    // locale would emit invalid JSON ("0,488")
+    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    val b = GraftSession.builder(cpus)
+    val spark = scratchDir.fold(b)(d => b.config("spark.local.dir", d)).getOrCreate()
+    // ERROR, not WARN: unpersisting localCheckpointed RDDs between
+    // queries emits a WARN per RDD, and a caller that keeps only the
+    // last ~2KB of merged output would lose the final metric line
+    // to that noise
+    spark.sparkContext.setLogLevel("ERROR")
+    // limit-shaped queries (q3/r7) end their job as soon as enough rows
+    // arrive and cancel the rest; the cancelled stragglers' task-end
+    // events then reference weakly-held accumulators the finished query
+    // already dropped, and DAGScheduler ERROR-logs each one ("attempted
+    // to access non-existent accumulator", ~500/run — benign, known
+    // straggler race). A message-targeted filter mutes exactly that
+    // line so the stack traces can't land inside a ~2KB captured
+    // stdout tail, while genuine scheduler errors (lost executors,
+    // taskset aborts) still surface.
+    muteNonExistentAccumulatorNoise()
+    spark
+  }
 
-  /** Sums executor task metrics across all tasks; per-query deltas are
-    * taken by snapshotting before/after each run. Catches what wall
+  /** Summed executor task metrics; a run's numbers are the difference
+    * of two snapshots. */
+  private[graft] final case class Counters(
+      cpuNs: Long, runMs: Long, gcMs: Long, memSpilled: Long, diskSpilled: Long) {
+    def -(o: Counters): Counters = Counters(cpuNs - o.cpuNs, runMs - o.runMs,
+      gcMs - o.gcMs, memSpilled - o.memSpilled, diskSpilled - o.diskSpilled)
+  }
+
+  /** Sums executor task metrics across all tasks. Catches what wall
     * time alone hides: a query that "runs" in 2s while spilling 4 GB
     * is a scale problem the timer can't see (the round-3 d6 anomaly
-    * was invisible until cross-checked standalone).
+    * was invisible until cross-checked standalone), and task CPU time
+    * is charged only while a task thread runs, so host steal that
+    * swings wall time 2-4x leaves it nearly unchanged.
     */
-  private final class TaskMetricsListener extends SparkListener {
-    val memSpilled = new AtomicLong
-    val diskSpilled = new AtomicLong
+  private[graft] final class TaskMetricsListener extends SparkListener {
+    private val cpuNs = new AtomicLong
+    private val runMs = new AtomicLong
+    private val gcMs = new AtomicLong
+    private val memSpilled = new AtomicLong
+    private val diskSpilled = new AtomicLong
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
+        cpuNs.addAndGet(m.executorCpuTime)
+        runMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
         memSpilled.addAndGet(m.memoryBytesSpilled)
         diskSpilled.addAndGet(m.diskBytesSpilled)
       }
     }
+    def counters: Counters =
+      Counters(cpuNs.get(), runMs.get(), gcMs.get(), memSpilled.get(), diskSpilled.get())
+  }
+
+  /** The async listener bus may still be draining a query's tail task
+    * events when the query returns; wait for the counters to go quiet
+    * (bounded) so those events aren't attributed to the next run.
+    */
+  private[graft] def quiesce(listener: TaskMetricsListener): Unit = {
+    var prev = listener.counters
+    var stable = 0
+    val deadline = System.nanoTime() + 500000000L
+    while (stable < 2 && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      val cur = listener.counters
+      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+    }
+  }
+
+  /** Runs `body` under [[GraftSession.withBoundedObjectAgg]] when
+    * [[SparkEntry.boundedObjectAggQueries]] lists row `name`, else
+    * plainly. */
+  private[graft] def inRowScope[A](spark: SparkSession, name: String)(body: => A): A =
+    if (SparkEntry.boundedObjectAggQueries(name)) GraftSession.withBoundedObjectAgg(spark)(body)
+    else body
+
+  /** The one way a query row is measured: build row `name`'s frame
+    * over `dir` and write it to the noop sink (which materializes
+    * every output column; count() would let Catalyst prune the computed
+    * columns of map-only queries), inside [[inRowScope]]. The seconds
+    * run from before the frame is built — its eager checkpoints are
+    * query cost — to the end of the write. Freeing the row's blocks is
+    * left to the caller.
+    */
+  private[graft] def runQuery(spark: SparkSession, name: String, dir: String): (DataFrame, Double) = {
+    val t0 = System.nanoTime()
+    val df = inRowScope(spark, name) {
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.write.mode("overwrite").format("noop").save()
+      df
+    }
+    (df, (System.nanoTime() - t0) / 1e9)
   }
 
   private case class Run(
-      sec: Double, memSpilled: Long, diskSpilled: Long,
-      residentBefore: BlockHygiene.StorageSnapshot)
+      sec: Double, tasks: Counters, residentBefore: BlockHygiene.StorageSnapshot)
 
   /** Codec-bound rows (ImageIO / javax.sound render+decode legs, plus
     * s17 whose truth leg shares the same multi-second profile). They
@@ -71,22 +152,6 @@ object Bench {
   private[graft] def coolDown(): Unit = {
     System.gc()
     Thread.sleep(750)
-  }
-
-  /** The async listener bus may still be draining a query's tail task
-    * events when the query returns; wait for the spill counters to go
-    * quiet (bounded) so those events aren't attributed to the next
-    * query's delta.
-    */
-  private def quiesce(listener: TaskMetricsListener): Unit = {
-    var prev = (listener.memSpilled.get(), listener.diskSpilled.get())
-    var stable = 0
-    val deadline = System.nanoTime() + 500000000L
-    while (stable < 2 && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      val cur = (listener.memSpilled.get(), listener.diskSpilled.get())
-      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-    }
   }
 
   /** Denies only log events whose formatted message mentions the
@@ -124,49 +189,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // f"" interpolators honor the default locale; a comma-decimal
-    // locale would emit invalid JSON ("0,488")
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // hygiene: free dead checkpoint/cache blocks between queries (the
-    // round-3 pathology was block accumulation ACROSS queries — set
-    // SPARK_GRAFT_BENCH_HYGIENE=0 to reproduce it for diagnosis)
-    val hygiene = sys.env.getOrElse("SPARK_GRAFT_BENCH_HYGIENE", "1") != "0"
-    val spark = withScratchDir(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // 67 queries × several codegen units each cycle the default
-      // 100-entry LRU, forcing Janino recompiles every pass; a
-      // many-query session wants them all resident
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // moderate raise over the 128 default (see GraftSession.builder
-      // for the bound rationale); the all-bounded-buffer queries in
-      // SparkEntry.boundedObjectAggQueries additionally run under
-      // withBoundedObjectAgg, which lifts the fallback entirely.
-      // SPARK_GRAFT_OBJAGG_FALLBACK overrides for A/B diagnosis.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: unpersisting localCheckpointed RDDs between
-    // queries emits a WARN per RDD, and the driver keeps only the
-    // last ~2KB of merged output — noise there can push the final
-    // metric line out of the captured tail
-    spark.sparkContext.setLogLevel("ERROR")
-    // limit-shaped queries (q3/r7) end their job as soon as enough rows
-    // arrive and cancel the rest; the cancelled stragglers' task-end
-    // events then reference weakly-held accumulators the finished query
-    // already dropped, and DAGScheduler ERROR-logs each one ("attempted
-    // to access non-existent accumulator", ~500/run — benign, known
-    // straggler race). A message-targeted RegexFilter mutes exactly
-    // that line so the stack traces can't land inside the driver's
-    // ~2KB captured stdout tail, while genuine scheduler errors (lost
-    // executors, taskset aborts) still surface.
-    muteNonExistentAccumulatorNoise()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = session(cpus)
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -175,12 +200,10 @@ object Bench {
     // alphabetical, except the codec-bound tail (see codecTail) which
     // always measures last
     val allOrdered = {
-      val base = SparkEntry.queries.toSeq.sortBy(_._1)
-      val (tail, head) = base.partition { case (n, _) => codecTail(n) }
+      val (tail, head) = SparkEntry.queries.keys.toSeq.sorted.partition(codecTail)
       head ++ tail
     }
-    val ordered = allOrdered
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val ordered = allOrdered.filter(n => only.forall(_.contains(n)))
     // diagnosis aid: SPARK_GRAFT_WARMUP_ALL=1 warms the FULL suite
     // even when BENCH_ONLY narrows the measured set — reproduces the
     // full-run JIT/codegen/AQE context around a few measured rows
@@ -273,14 +296,14 @@ object Bench {
     // past the cutoff measures cold (first-call codegen cost in its
     // number), and the comparison tooling needs to know which.
     var warmupCompleted = 0
-    warmupSet.foreach { case (_, fn) =>
+    warmupSet.foreach { name =>
       if (elapsedSec <= deadlineSec / 2 || deadlineSec <= 0) {
-        try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
+        try runQuery(spark, name, warmDir)
         catch { case _: Throwable => () }
         warmupCompleted += 1
       }
     }
-    if (hygiene) BlockHygiene.freeBlocks(spark)
+    BlockHygiene.freeBlocks(spark)
 
     // two measured passes, min per query: scheduler/GC noise between
     // runs exceeds per-query cost at this scale, and the metric
@@ -288,29 +311,26 @@ object Bench {
     // separately — its (near-zero) time-to-failure must not make the
     // total look faster.
     val failed = scala.collection.mutable.TreeSet.empty[String]
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, name: String): Run = {
+    def once(name: String): Run = {
       val resident = BlockHygiene.snapshot(spark)
-      val mem0 = listener.memSpilled.get(); val disk0 = listener.diskSpilled.get()
+      val before = listener.counters
       val t0 = System.nanoTime()
-      // noop sink: materializes every output column (count() would let
-      // Catalyst prune the computed columns of map-only queries)
-      def run(): Unit = fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      try {
-        if (SparkEntry.boundedObjectAggQueries(name))
-          GraftSession.withBoundedObjectAgg(spark)(run())
-        else run()
-      } catch {
-        case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name: ${e.getMessage}")
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec =
+        try runQuery(spark, name, sfDir)._2
+        catch {
+          case e: Throwable =>
+            failed += name
+            System.err.println(s"[bench] $name: ${e.getMessage}")
+            (System.nanoTime() - t0) / 1e9
+        }
       quiesce(listener)
       // free the query's own checkpoint blocks AFTER the timer: block
       // release is session hygiene, not part of query cost, and on a
-      // long-lived session it runs at stage boundaries
-      if (hygiene) BlockHygiene.freeBlocks(spark)
-      Run(sec, listener.memSpilled.get() - mem0, listener.diskSpilled.get() - disk0, resident)
+      // long-lived session it runs at stage boundaries. Freeing between
+      // queries is what keeps blocks from accumulating ACROSS queries
+      // (the round-3 pathology).
+      BlockHygiene.freeBlocks(spark)
+      Run(sec, listener.counters - before, resident)
     }
     // measured passes, deadline-checked between queries: a query not
     // reached before the deadline is SKIPPED (listed, never averaged
@@ -323,11 +343,11 @@ object Bench {
       var p = 0
       while (p < passes) {
         var cooled = false
-        ordered.foreach { case (name, fn) =>
+        ordered.foreach { name =>
           if (!pastDeadline) {
             // settle once per pass before the codec-bound tail block
             if (codecTail(name) && !cooled) { coolDown(); cooled = true }
-            byName(name) = byName.getOrElse(name, Nil) :+ once(fn, name)
+            byName(name) = byName.getOrElse(name, Nil) :+ once(name)
           }
           else if (!byName.contains(name)) skipped += name
         }
@@ -345,7 +365,7 @@ object Bench {
     // was truncated into unparseability)
     val detail = measured.map { case (name, runs) =>
       def one(r: Run) =
-        s"""{"sec":${f"${r.sec}%.3f"},"mem_spilled":${r.memSpilled},"disk_spilled":${r.diskSpilled},""" +
+        s"""{"sec":${f"${r.sec}%.3f"},"mem_spilled":${r.tasks.memSpilled},"disk_spilled":${r.tasks.diskSpilled},""" +
           s""""resident_rdds_before":${r.residentBefore.nRdds},"resident_mem_before":${r.residentBefore.memBytes},""" +
           s""""resident_disk_before":${r.residentBefore.diskBytes}}"""
       val passJson = runs.zipWithIndex
@@ -367,7 +387,7 @@ object Bench {
       new java.io.File(sfDir).getName != "sf0.1"
     val detailFile = if (isPartial) "BENCH_DETAIL_partial.json" else "BENCH_DETAIL.json"
     val detailJson =
-      s"""{\n"method":"min-of-$passes-passes-after-warmup","warm_dir":"$warmDir","scratch_dir":"${scratchDir.getOrElse("default")}","hygiene":$hygiene,"cpus":$cpus,"sf":"$sfDir",""" +
+      s"""{\n"method":"min-of-$passes-passes-after-warmup","warm_dir":"$warmDir","scratch_dir":"${scratchDir.getOrElse("default")}","hygiene":true,"cpus":$cpus,"sf":"$sfDir",""" +
         s""""partial":$isPartial,""" +
         s""""skipped":${skipped.size},"rows_min_of_2":${measured.count(_._2.size >= 2)},""" +
         s""""warmup_completed":$warmupCompleted,"warmup_total":${warmupSet.size},""" +

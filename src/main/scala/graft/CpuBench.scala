@@ -1,68 +1,40 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Dev utility for A/B timing on a NOISY box: per query, reports
   * min-of-N wall seconds plus min-of-N summed task executorCpuTime /
-  * executorRunTime deltas. Thread CPU time is charged only while a
+  * executorRunTime / GC deltas. Thread CPU time is charged only while a
   * task thread actually runs, so host steal/throttle weather that
   * swings wall time 2-4x leaves the CPU column nearly unchanged —
   * the robust metric for comparing two plan shapes on shared
-  * hardware. Args: dir query [query ...]; env SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_BENCH_PASSES (default 3).
+  * hardware. Args: dir query [query ...]; env SPARK_GRAFT_CPUS
+  * (default 32), SPARK_GRAFT_BENCH_PASSES (default 3).
   */
 object CpuBench {
-  private final class CpuListener extends SparkListener {
-    val cpuNs = new AtomicLong
-    val runMs = new AtomicLong
-    val gcMs = new AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        cpuNs.addAndGet(m.executorCpuTime)
-        runMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.head
     val names = args.tail.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = Bench.withScratchDir(GraftSession.builder(cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val listener = new CpuListener
+    val spark = Bench.session(cpus)
+    val listener = new Bench.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     // one untimed warm pass over the whole set (JIT/codegen)
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, dir).write.mode("overwrite").format("noop").save()
+      try Bench.runQuery(spark, n, dir)
       catch { case e: Throwable => System.err.println(s"[cpubench] warm $n: $e") }
     }
+    BlockHygiene.freeBlocks(spark)
     names.foreach { n =>
-      var wall = Double.MaxValue; var cpu = Long.MaxValue
-      var run = Long.MaxValue; var gc = Long.MaxValue
-      (1 to passes).foreach { _ =>
-        val c0 = listener.cpuNs.get(); val r0 = listener.runMs.get()
-        val g0 = listener.gcMs.get()
-        val t0 = System.nanoTime()
-        def go(): Unit =
-          SparkEntry.queries(n)(spark, dir).write.mode("overwrite").format("noop").save()
-        if (SparkEntry.boundedObjectAggQueries(n))
-          GraftSession.withBoundedObjectAgg(spark)(go())
-        else go()
-        val w = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(150) // let the listener bus drain
-        wall = math.min(wall, w)
-        cpu = math.min(cpu, listener.cpuNs.get() - c0)
-        run = math.min(run, listener.runMs.get() - r0)
-        gc = math.min(gc, listener.gcMs.get() - g0)
+      val runs = (1 to passes).map { _ =>
+        val before = listener.counters
+        val (_, wall) = Bench.runQuery(spark, n, dir)
+        Bench.quiesce(listener)
+        BlockHygiene.freeBlocks(spark)
+        (wall, listener.counters - before)
       }
-      println(f"""CPUBENCH $n wall=${wall}%.3f cpu_s=${cpu / 1e9}%.3f run_s=${run / 1e3}%.3f gc_s=${gc / 1e3}%.3f""")
+      val c = runs.map(_._2)
+      println(f"""CPUBENCH $n wall=${runs.map(_._1).min}%.3f cpu_s=${c.map(_.cpuNs).min / 1e9}%.3f """ +
+        f"""run_s=${c.map(_.runMs).min / 1e3}%.3f gc_s=${c.map(_.gcMs).min / 1e3}%.3f""")
     }
     spark.stop()
   }

@@ -107,7 +107,7 @@ object GraftSession {
       // Queries whose object-agg buffers are ALL size-bounded (k-entry
       // heaps, fixed-width sketches) should run under
       // [[withBoundedObjectAgg]], which lifts the fallback entirely.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      .config(FallbackKey, "65536")
       .config("spark.ui.enabled", "false")
 
   private val FallbackKey =

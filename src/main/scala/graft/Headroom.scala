@@ -27,14 +27,10 @@ object Headroom {
       val (codec, plain) = picked.partition(Bench.codecTail)
       plain ++ codec
     }
-    val spark = Bench.withScratchDir(GraftSession.builder(32)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(32)
 
     def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (_, sec) = Bench.runQuery(spark, name, dir)
       // same inter-query hygiene as graft.Bench: localCheckpoint blocks
       // left by one query otherwise accumulate across this run's 4
       // passes per row and bleed into later rows' numbers (the round-3

@@ -34,11 +34,9 @@ object IngestGateBench {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val outFile = args(0)
     val dirs = args.drop(1).toSeq
-    val spark = Bench.withScratchDir(GraftSession.builder(32)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(32)
     import spark.implicits._
 
     def docs(dir: String): DataFrame =
@@ -63,68 +61,61 @@ object IngestGateBench {
         label: String, nCorpus: Long, initSec: Double,
         pass1Sec: Double, replaySec: Double)
 
+    // one gate at one scale: `corpus` becomes the data lake and
+    // `seed(idx, corpus)` builds the index over it in fresh dirs
+    // (init); `ingest(data, idx)`
+    // admits the fixed increment and returns its `admitted` count —
+    // once as pass1, then as the replays, which must admit nothing
+    def cell(label: String, corpus: DataFrame)(seed: (String, DataFrame) => Unit)(
+        ingest: (String, String) => Long): Cell = {
+      val n = corpus.count()
+      val (data, idx) = (tmp(s"${label}_data"), tmp(s"${label}_idx"))
+      val (_, initSec) = time {
+        corpus.write.parquet(data)
+        graft.sources.ParquetLake.snapshotManifest(spark, data)
+        seed(idx, corpus)
+      }
+      val (_, p1) = time(ingest(data, idx))
+      // min of 3 replays: the steady-state gate number is the claim,
+      // and a single sample at the 100x cell caught block-manager/
+      // IO noise from the just-checkpointed corpus (r14: 3.45s one-
+      // shot vs 0.8s steady on the same lake)
+      val replay = (1 to 3).map { _ =>
+        val (admitted, t) = time(ingest(data, idx))
+        require(admitted == 0L, s"$label replay admitted $admitted")
+        t
+      }.min
+      Cell(label, n, initSec, p1, replay)
+    }
+
     // one warmed measurement per gate per scale; the increment is the
     // same SIZE everywhere (200 docs / 100 clips)
     def runGate(gate: String, dir: String): Cell = {
       val corpus = docs(dir).localCheckpoint(eager = true)
-      val n = corpus.count()
       val recrawl = corpus.orderBy("doc_id").limit(100)
         .select((col("doc_id") + 8000000000L).as("doc_id"), col("text"))
       val increment = recrawl.unionByName(freshDocs(100))
         .localCheckpoint(eager = true)
       gate match {
         case "lk42_neardup" =>
-          val (data, idx) = (tmp("nd_data"), tmp("nd_idx"))
-          val (_, initSec) = time {
-            corpus.write.parquet(data)
-            graft.sources.ParquetLake.snapshotManifest(spark, data)
-            graft.operators.Dedup.nearDupIndexInit(spark, idx, corpus, "text", "doc_id")
+          cell(gate, corpus)(
+            graft.operators.Dedup.nearDupIndexInit(spark, _, _, "text", "doc_id")) {
+            (data, idx) => graft.operators.Dedup.nearDupIngest(
+              spark, data, idx, increment, "text", "doc_id").admitted
           }
-          val (_, p1) = time {
-            graft.operators.Dedup.nearDupIngest(spark, data, idx, increment, "text", "doc_id")
-          }
-          // min of 3 replays: the steady-state gate number is the claim,
-          // and a single sample at the 100x cell caught block-manager/
-          // IO noise from the just-checkpointed corpus (r14: 3.45s one-
-          // shot vs 0.8s steady on the same lake)
-          val p2 = (1 to 3).map { _ =>
-            val (r2, t) = time {
-              graft.operators.Dedup.nearDupIngest(spark, data, idx, increment, "text", "doc_id")
-            }
-            require(r2.admitted == 0L, s"lk42 replay admitted ${r2.admitted}")
-            t
-          }.min
-          Cell("lk42_neardup", n, initSec, p1, p2)
         case "lk43_chunk" =>
-          val (data, idx) = (tmp("ck_data"), tmp("ck_idx"))
           val bin = (df: DataFrame) =>
             df.select(col("doc_id"), col("text").cast("binary").as("payload"))
           // doc texts are ~300 chars: chunk at the m7 spec grain so
           // each doc yields several chunks
           val (minLen, maskBits, maxLen) = (16, 4, 256)
-          val (_, initSec) = time {
-            bin(corpus).write.parquet(data)
-            graft.sources.ParquetLake.snapshotManifest(spark, data)
-            graft.multimodal.BinaryOps.chunkIndexInit(
-              spark, idx, bin(corpus), "payload", "doc_id", minLen, maskBits, maxLen)
-          }
-          val (_, p1) = time {
-            graft.multimodal.BinaryOps.chunkGatedIngest(
+          cell(gate, bin(corpus))(graft.multimodal.BinaryOps.chunkIndexInit(
+            spark, _, _, "payload", "doc_id", minLen, maskBits, maxLen)) {
+            (data, idx) => graft.multimodal.BinaryOps.chunkGatedIngest(
               spark, data, idx, bin(increment), "payload", "doc_id",
-              maxContainment = 0.5, minLen, maskBits, maxLen)
+              maxContainment = 0.5, minLen, maskBits, maxLen).admitted
           }
-          val p2 = (1 to 3).map { _ =>
-            val (r2, t) = time {
-              graft.multimodal.BinaryOps.chunkGatedIngest(
-                spark, data, idx, bin(increment), "payload", "doc_id",
-                maxContainment = 0.5, minLen, maskBits, maxLen)
-            }
-            require(r2.admitted == 0L, s"lk43 replay admitted ${r2.admitted}")
-            t
-          }.min
-          Cell("lk43_chunk", n, initSec, p1, p2)
         case "lk46_frame" =>
-          val (data, idx) = (tmp("fr_data"), tmp("fr_idx"))
           def gifs(ids: DataFrame, seedBase: Long) = {
             val specs = ids.select("doc_id").as[Long]
               .map(id => (id, 16, 16,
@@ -141,30 +132,14 @@ object IngestGateBench {
             .withColumn("blob_id", col("blob_id") + 8000000000L)
             .unionByName(gifs(freshDocs(50), 7000000000L))
             .localCheckpoint(eager = true)
-          val (_, initSec) = time {
-            gifCorpus.write.parquet(data)
-            graft.sources.ParquetLake.snapshotManifest(spark, data)
-            graft.multimodal.BinaryOps.frameIndexInit(
-              spark, idx, gifCorpus, "payload", "blob_id")
+          cell(gate, gifCorpus)(graft.multimodal.BinaryOps.frameIndexInit(
+            spark, _, _, "payload", "blob_id")) {
+            (data, idx) => graft.multimodal.BinaryOps.frameGatedIngest(
+              spark, data, idx, gifIncrement, "payload", "blob_id", maxContainment = 0.5).admitted
           }
-          val (_, p1) = time {
-            graft.multimodal.BinaryOps.frameGatedIngest(
-              spark, data, idx, gifIncrement, "payload", "blob_id", maxContainment = 0.5)
-          }
-          val p2 = (1 to 3).map { _ =>
-            val (r2, t) = time {
-              graft.multimodal.BinaryOps.frameGatedIngest(
-                spark, data, idx, gifIncrement, "payload", "blob_id", maxContainment = 0.5)
-            }
-            require(r2.admitted == 0L, s"lk46 replay admitted ${r2.admitted}")
-            t
-          }.min
-          Cell("lk46_frame", n, initSec, p1, p2)
         case "lk47_embed" =>
-          val (data, idx) = (tmp("eg_data"), tmp("eg_idx"))
           val emb = graft.queries.table(spark, dir, "embeddings")
             .select("vec_id", "embedding").localCheckpoint(eager = true)
-          val nVec = emb.count()
           // 100 re-uploads of corpus vectors (new ids, Hamming 0 to
           // their originals → reject) + 100 fresh murmur-mixed ±1
           // patterns (sign bits iid uniform, so distance to ANY fixed
@@ -180,25 +155,11 @@ object IngestGateBench {
             (9000000000L + i, v)
           }.toDF("vec_id", "embedding")
           val vecIncrement = reup.unionByName(freshVecs).localCheckpoint(eager = true)
-          val (_, initSec) = time {
-            emb.write.parquet(data)
-            graft.sources.ParquetLake.snapshotManifest(spark, data)
-            graft.operators.Similarity.embedIndexInit(
-              spark, idx, emb, "embedding", "vec_id")
+          cell(gate, emb)(graft.operators.Similarity.embedIndexInit(
+            spark, _, _, "embedding", "vec_id")) {
+            (data, idx) => graft.operators.Similarity.embedGatedIngest(
+              spark, data, idx, vecIncrement, "embedding", "vec_id").admitted
           }
-          val (_, p1) = time {
-            graft.operators.Similarity.embedGatedIngest(
-              spark, data, idx, vecIncrement, "embedding", "vec_id")
-          }
-          val p2 = (1 to 3).map { _ =>
-            val (r2, t) = time {
-              graft.operators.Similarity.embedGatedIngest(
-                spark, data, idx, vecIncrement, "embedding", "vec_id")
-            }
-            require(r2.admitted == 0L, s"lk47 replay admitted ${r2.admitted}")
-            t
-          }.min
-          Cell("lk47_embed", nVec, initSec, p1, p2)
       }
     }
 

@@ -4,11 +4,12 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev utility (guide §1/§7 substitute for the disabled Spark UI):
-  * run the named queries through the noop sink, then walk the FINAL
-  * adaptive plan and print every node with its populated SQLMetrics —
-  * the per-operator time/rows/spill evidence the UI's SQL tab would
-  * show. Args: name dir [name dir ...]; SPARK_GRAFT_PROFILE_CPUS
-  * overrides core count (default 32).
+  * run the named queries through [[Bench.runQuery]], then walk the
+  * FINAL adaptive plan and print every node with its populated
+  * SQLMetrics — the per-operator time/rows/spill evidence the UI's SQL
+  * tab would show. Args: name dir [name dir ...]; env
+  * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PASSES (default 2:
+  * one warm pass, then the measured and profiled one).
   */
 object ProfileOne {
   private def walk(p: SparkPlan, depth: Int, sb: StringBuilder): Unit = {
@@ -28,28 +29,25 @@ object ProfileOne {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_PROFILE_CPUS", "32").toInt
-    val spark = Bench.withScratchDir(GraftSession.builder(cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    val spark = Bench.session(cpus)
     args.sliding(2, 2).foreach { case Array(name, dir) =>
-      // one warm pass (JIT/codegen), then the measured+profiled pass
-      val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
-      var qe: org.apache.spark.sql.execution.QueryExecution = null
+      var plan: SparkPlan = null
       var best = Double.MaxValue
       (1 to passes).foreach { _ =>
-        val df = SparkEntry.queries(name)(spark, dir)
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (sec < best) best = sec
-        qe = df.queryExecution
+        val (df, sec) = Bench.runQuery(spark, name, dir)
+        best = math.min(best, sec)
+        plan = df.queryExecution.executedPlan
         // executedPlan of THIS DataFrame was not the one the write ran;
-        // execute it directly so its metrics populate for the dump
-        qe.executedPlan.execute().foreach(_ => ())
+        // execute it directly so its metrics populate for the dump —
+        // in the row's scope, and before its checkpoint blocks go
+        Bench.inRowScope(spark, name)(plan.execute().foreach(_ => ()))
+        BlockHygiene.freeBlocks(spark)
       }
       val sb = new StringBuilder
       sb.append(f"===== PROFILE $name best=${best}%.2f s =====\n")
-      walk(qe.executedPlan, 0, sb)
+      walk(plan, 0, sb)
       println(sb.result())
     }
     spark.stop()

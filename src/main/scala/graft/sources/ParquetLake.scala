@@ -1702,12 +1702,21 @@ object ParquetLake {
       .collect { case Array(f, c, tag, mn, mx) if c == col => f -> ((tag, mn, mx)) }
       .toMap
     val files = readManifest(spark, path, Some(v)).get
-    val kept = files.filter(f => ranges.get(f).forall(keep))
-    val reader = spark.read.option("basePath", path)
-      .option("mergeSchema", mergeSchema.toString)
-    val all = reader.parquet(files.map(f => s"$path/$f"): _*)
+    readKept(spark.read.option("mergeSchema", mergeSchema.toString), path, files,
+      files.filter(f => ranges.get(f).forall(keep)), predicate)
+  }
+
+  /** The skip-reads' shared tail: read the `kept` subset of the
+    * snapshot's `files` with the FULL snapshot's schema (as `reader`
+    * infers it), or an empty frame of that schema when nothing is
+    * kept, and apply `predicate`.
+    */
+  private def readKept(
+      reader: org.apache.spark.sql.DataFrameReader, path: String, files: Seq[String],
+      kept: Seq[String], predicate: org.apache.spark.sql.Column): DataFrame = {
+    val all = reader.option("basePath", path).parquet(files.map(f => s"$path/$f"): _*)
     if (kept.isEmpty) all.where(lit(false)).where(predicate)
-    else spark.read.schema(all.schema).option("basePath", path)
+    else all.sparkSession.read.schema(all.schema).option("basePath", path)
       .parquet(kept.map(f => s"$path/$f"): _*)
       .where(predicate)
   }
@@ -1817,13 +1826,7 @@ object ParquetLake {
       })
       .collect().toSet
     val files = readManifest(spark, path, Some(v)).get
-    val kept = files.filterNot(rejected)
-    val reader = spark.read.option("basePath", path)
-    val all = reader.parquet(files.map(f => s"$path/$f"): _*)
-    if (kept.isEmpty) all.where(lit(false)).where(predicate)
-    else spark.read.schema(all.schema).option("basePath", path)
-      .parquet(kept.map(f => s"$path/$f"): _*)
-      .where(predicate)
+    readKept(spark.read, path, files, files.filterNot(rejected), predicate)
   }
 
   /** Thrown when an optimistic commit loses the race: the expected

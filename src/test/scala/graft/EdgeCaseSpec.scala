@@ -290,4 +290,44 @@ class EdgeCaseSpec extends SparkSpec {
       sampledSqlAt("SELECT * FROM embeddings", "documents", "doc_id", 5))
       .getMessage.contains("no 'FROM documents'"))
   }
+
+  test("Bench.runQuery runs a listed row under the lifted object-agg fallback and a plain row without it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    // the threshold each SQL job ran under: SQL execution propagates
+    // the session conf into the job's local properties
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        Option(s.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    // the listener bus is async; settle by polling until the count
+    // stops moving before the listener is removed
+    def thresholds(name: String): Set[String] = {
+      seen.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Bench.runQuery(spark, name, sf)
+        var prev = -1
+        while (seen.size != prev) { prev = seen.size; Thread.sleep(200) }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      seen.asScala.toSet
+    }
+    val before = spark.conf.getOption(key)
+    assert(SparkEntry.boundedObjectAggQueries("a2_sketch_merge"))
+    assert(!SparkEntry.boundedObjectAggQueries("q1_pricing_summary"))
+    assert(thresholds("a2_sketch_merge") === Set("10000000"))
+    assert(spark.conf.getOption(key) === before)
+    assert(thresholds("q1_pricing_summary") === Set("65536"))
+    assert(spark.conf.getOption(key) === before)
+  }
+
+  test("every bounded-object-agg row and every codec-tail row is a SparkEntry query") {
+    // a renamed row would otherwise silently lose its scope in
+    // Bench.runQuery or its tail placement in the timing mains
+    val names = SparkEntry.queries.keySet
+    assert(SparkEntry.boundedObjectAggQueries -- names === Set.empty[String])
+    assert(Bench.codecTail -- names === Set.empty[String])
+  }
 }
