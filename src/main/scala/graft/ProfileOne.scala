@@ -1,15 +1,21 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev utility (guide §1/§7 substitute for the disabled Spark UI):
   * run the named queries through [[Bench.runQuery]], then walk the
-  * FINAL adaptive plan and print every node with its populated
-  * SQLMetrics — the per-operator time/rows/spill evidence the UI's SQL
-  * tab would show. Args: name dir [name dir ...]; env
-  * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PASSES (default 2:
-  * one warm pass, then the measured and profiled one).
+  * FINAL adaptive plan of the timed noop write (its own
+  * QueryExecution, caught by a listener, so every plan runs once per
+  * pass) and print every node with its populated SQLMetrics — the
+  * per-operator time/rows/spill evidence the UI's SQL tab would show.
+  * Args: name dir [name dir ...]; env SPARK_GRAFT_CPUS (default 32),
+  * SPARK_GRAFT_BENCH_PASSES (default 2: one warm pass, then the
+  * measured and profiled one).
   */
 object ProfileOne {
   private def walk(p: SparkPlan, depth: Int, sb: StringBuilder): Unit = {
@@ -32,17 +38,25 @@ object ProfileOne {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val spark = Bench.session(cpus)
+    // the noop sink is the only v2 write a row runs; listener events
+    // arrive asynchronously, after the write returns
+    val written = new AtomicReference[QueryExecution]
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec]) written.set(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     args.sliding(2, 2).foreach { case Array(name, dir) =>
       var plan: SparkPlan = null
       var best = Double.MaxValue
       (1 to passes).foreach { _ =>
-        val (df, sec) = Bench.runQuery(spark, name, dir)
+        written.set(null)
+        val (_, sec) = Bench.runQuery(spark, name, dir)
         best = math.min(best, sec)
-        plan = df.queryExecution.executedPlan
-        // executedPlan of THIS DataFrame was not the one the write ran;
-        // execute it directly so its metrics populate for the dump —
-        // in the row's scope, and before its checkpoint blocks go
-        Bench.inRowScope(spark, name)(plan.execute().foreach(_ => ()))
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (written.get == null && System.nanoTime() < deadline) Thread.sleep(10)
+        plan = Option(written.get).getOrElse(
+          sys.error(s"no write event for $name within 30 s")).executedPlan
         BlockHygiene.freeBlocks(spark)
       }
       val sb = new StringBuilder

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{TextFunctions => T}
 
@@ -10,16 +11,26 @@ import graft.functions.{TextFunctions => T}
   * iterative DataFrame computation.
   *
   * Scale shape: the corpus is touched ONCE (tokens → word-frequency
-  * aggregate); every merge round after that runs on the
-  * WORD-FREQUENCY relation, whose size is the vocabulary — millions
-  * of rows at 100 TB, not the corpus.
+  * aggregate, symbolized by Spark's split and checkpointed); every
+  * merge round after that runs on the WORD-FREQUENCY relation, whose
+  * size is the vocabulary, not the corpus. One bounded collect of at
+  * most `DriverVocabCutoff + 1` rows (a private constant, 100 000
+  * words, the [[ConnectedComponents]] union-find bound) picks one of
+  * two exact learners:
   *
-  * Each round re-counts adjacent pairs with one vocab-sized explode +
-  * groupBy and rewrites the whole symbolized vocab, then
-  * re-materializes it (eager localCheckpoint) so lineage doesn't
-  * compound, exactly like [[Similarity.kmeansCentroids]]. Rounds
-  * recount rather than patch a persistent (pair, n) relation with
-  * ±freq deltas from only the touched words: the delta design
+  *   - a vocab that fits runs the recount-and-merge rounds on the
+  *     driver over the collected symbol arrays, so a merge costs no
+  *     Spark job — at sf0.1 the vocab is 31 words and the per-round
+  *     job pair was most of t22/t35's time;
+  *   - a larger vocab (millions of rows at 100 TB) runs them as Spark
+  *     rounds: one vocab-sized explode + groupBy recount and a rewrite
+  *     of the symbolized vocab per round, re-materialized (eager
+  *     localCheckpoint) so lineage doesn't compound, exactly like
+  *     [[Similarity.kmeansCentroids]]. This loop is also the reference
+  *     the driver learner is spec-checked against.
+  *
+  * Rounds recount rather than patch a persistent (pair, n) relation
+  * with ±freq deltas from only the touched words: the delta design
   * measured 3–4× slower at every schedule tried — 32.8 s vs 10.1 s
   * at 64 merges on sf0.1 (BENCH_NOTES_r10.md), 86.9 s vs 20.0 s at
   * 300 and 100.8 s vs 25.5 s at 1000 on sf0.01 (BENCH_NOTES_r11.md).
@@ -28,9 +39,9 @@ import graft.functions.{TextFunctions => T}
   * round's fixed costs (touch-guard scan, union + counts groupBy, a
   * second checkpoint) outweigh one recount.
   *
-  * Determinism: the best pair maximizes (count, then lexicographic
-  * (left, right) ASCENDING as the tie-break) — no RNG, no
-  * partitioning sensitivity, so the learned merge table is
+  * Determinism: the best pair maximizes (count, then the " "-joined
+  * pair string ASCENDING in UTF-8 byte order as the tie-break) — no
+  * RNG, no partitioning sensitivity, so the learned merge table is
   * reproducible on any cluster. The merge-apply is a left-to-right
   * non-overlapping fold (aaa + (a,a) → [aa, a]), the standard BPE
   * semantics.
@@ -70,14 +81,38 @@ object Bpe {
   /** Learn `numMerges` BPE merges over the corpus' whitespace words.
     * Returns (merge_rank, lhs, rhs, pair_count) — rank 1 is the first
     * (highest-count) merge. Words shorter than 2 symbols stop
-    * contributing automatically (no pairs).
+    * contributing automatically (no pairs). One bounded collect of the
+    * symbolized vocab picks the learner: at most `DriverVocabCutoff`
+    * words learn on the driver, larger vocabularies in Spark rounds.
     */
   def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the ONLY corpus-wide pass: word frequencies
-    var vocab = df
-      .select(explode(T.tokens(col(textCol))).as("w"))
+    val vocab = symbolizedVocab(df, textCol)
+    val head = vocab.limit(DriverVocabCutoff + 1).collect()
+    if (head.length <= DriverVocabCutoff) learnOnDriver(df.sparkSession, head, numMerges)
+    else learnDistributed(vocab, numMerges)
+  }
+
+  /** [[learnMerges]] forced onto the driver learner, whatever the
+    * vocab size. */
+  private[graft] def learnMergesOnDriver(
+      df: DataFrame, textCol: String, numMerges: Int): DataFrame =
+    learnOnDriver(df.sparkSession, symbolizedVocab(df, textCol).collect(), numMerges)
+
+  /** [[learnMerges]] forced onto the distributed loop, whatever the
+    * vocab size — the reference the driver learner is checked against. */
+  private[graft] def learnMergesDistributed(
+      df: DataFrame, textCol: String, numMerges: Int): DataFrame =
+    learnDistributed(symbolizedVocab(df, textCol), numMerges)
+
+  /** Vocabularies up to this many distinct words learn on the driver:
+    * the same bound as [[ConnectedComponents]]' union-find, a few tens
+    * of MB of symbol arrays. */
+  private val DriverVocabCutoff = 100000
+
+  /** The ONLY corpus-wide pass: (syms, freq) per distinct word,
+    * materialized. Both learners take their symbols from here. */
+  private def symbolizedVocab(df: DataFrame, textCol: String): DataFrame =
+    df.select(explode(T.tokens(col(textCol))).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       // char symbolization: split strictly BETWEEN characters — the
@@ -86,29 +121,77 @@ object Bpe {
       // empty symbol (and "" would then enter the pair counts)
       .select(split(col("w"), "(?!^)(?=.)").as("syms"), col("freq"))
       .localCheckpoint(eager = true)
+
+  /** The round skeleton both learners share: `best` names the round's
+    * winning " "-joined pair and its count (None once no pair is
+    * left, which stops learning early), `merge` rewrites the vocab. */
+  private def learnRounds(spark: SparkSession, numMerges: Int)(
+      best: () => Option[(String, Long)])(merge: (String, String) => Unit): DataFrame = {
+    import spark.implicits._
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    while (rank <= numMerges) {
-      val best = vocab.where(size(col("syms")) >= 2)
+    var next = if (numMerges >= 1) best() else None
+    while (next.isDefined) {
+      val (pairStr, n) = next.get
+      val sp = pairStr.indexOf(' ') // symbols never contain spaces (whitespace tokens)
+      val (lS, rS) = (pairStr.substring(0, sp), pairStr.substring(sp + 1))
+      merges += ((merges.length + 1, lS, rS, n))
+      merge(lS, rS)
+      next = if (merges.length < numMerges) best() else None
+    }
+    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
+  }
+
+  /** Each round re-counts pairs over the checkpointed vocab, collects
+    * the best, and re-materializes the rewritten vocab. */
+  private def learnDistributed(vocab0: DataFrame, numMerges: Int): DataFrame = {
+    var vocab = vocab0
+    learnRounds(vocab.sparkSession, numMerges) { () =>
+      vocab.where(size(col("syms")) >= 2)
         .select(col("freq"), pairsOf(col("syms")).as("pair"))
         .groupBy("pair").agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("pair").asc)
         .limit(1)
         .collect()
-      if (best.isEmpty) rank = numMerges + 1
-      else {
-        val pairStr = best(0).getString(0)
-        val n = best(0).getLong(1)
-        val sp = pairStr.indexOf(' ') // symbols never contain spaces (whitespace tokens)
-        val (lS, rS) = (pairStr.substring(0, sp), pairStr.substring(sp + 1))
-        merges += ((rank, lS, rS, n))
-        vocab = vocab
-          .select(mergePair(col("syms"), lit(lS), lit(rS)).as("syms"), col("freq"))
-          .localCheckpoint(eager = true)
-        rank += 1
-      }
+        .headOption.map(r => (r.getString(0), r.getLong(1)))
+    } { (lS, rS) =>
+      vocab = vocab
+        .select(mergePair(col("syms"), lit(lS), lit(rS)).as("syms"), col("freq"))
+        .localCheckpoint(eager = true)
     }
-    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
+  }
+
+  /** The same rounds over the collected vocab: freq-weighted counts of
+    * the " "-joined adjacent pairs, ties broken by the pair string in
+    * UTF-8 byte order — the order of Spark's `pair ASC`, which differs
+    * from `String.compareTo` above U+FFFF — and [[mergeOnce]] as the
+    * rewrite. No Spark job runs. */
+  private def learnOnDriver(spark: SparkSession, vocab: Array[Row], numMerges: Int): DataFrame = {
+    val words = vocab.map(_.getSeq[String](0).toArray)
+    val freqs = vocab.map(_.getLong(1))
+    learnRounds(spark, numMerges) { () =>
+      val counts = scala.collection.mutable.HashMap.empty[String, Long]
+      var i = 0
+      while (i < words.length) {
+        val s = words(i)
+        var j = 1
+        while (j < s.length) {
+          val p = s(j - 1) + " " + s(j)
+          counts(p) = counts.getOrElse(p, 0L) + freqs(i)
+          j += 1
+        }
+        i += 1
+      }
+      if (counts.isEmpty) None
+      else {
+        val n = counts.valuesIterator.max
+        val pair = counts.iterator.collect { case (p, `n`) => UTF8String.fromString(p) }
+          .reduce((a, b) => if (a.compareTo(b) <= 0) a else b)
+        Some((pair.toString, n))
+      }
+    } { (lS, rS) =>
+      var i = 0
+      while (i < words.length) { words(i) = mergeOnce(words(i), lS, rS); i += 1 }
+    }
   }
 
   /** The tokenizer-APPLY step: encode the corpus with a learned merge
@@ -162,8 +245,17 @@ object Bpe {
     var syms: Array[String] = w.map(_.toString).toArray
     var i = 0
     while (i < ms.length && syms.length >= 2) {
-      val l = ms(i)._1; val r = ms(i)._2
-      // left-to-right non-overlapping fold, identical to mergePair
+      syms = mergeOnce(syms, ms(i)._1, ms(i)._2)
+      i += 1
+    }
+    syms.toSeq
+  }
+
+  /** One merge of (l, r) over a symbol array: the left-to-right
+    * non-overlapping fold of [[mergePair]], in Scala. */
+  private def mergeOnce(syms: Array[String], l: String, r: String): Array[String] =
+    if (syms.length < 2) syms
+    else {
       val out = Array.newBuilder[String]
       var pend: String = null
       var j = 0
@@ -175,9 +267,6 @@ object Bpe {
         j += 1
       }
       if (pend != null) out += pend
-      syms = out.result()
-      i += 1
+      out.result()
     }
-    syms.toSeq
-  }
 }

@@ -798,14 +798,18 @@ object TextQueries {
 
     // BPE merge learning (tokenizer fitting): one corpus pass builds
     // word frequencies, then 16 deterministic pair-merge rounds over
-    // the vocab-sized relation. Fully oracle-checked: the rounds
-    // unroll as 16 chained CTE steps in the DuckDB replay (bpeCtes).
+    // the vocab-sized relation — on the driver, with no job per
+    // round, when the vocab is at most Bpe's constant 100 000-word
+    // cutoff (sf0.1: 31 words), else as Spark rounds. Fully
+    // oracle-checked: the rounds unroll as 16 chained CTE steps in
+    // the DuckDB replay (bpeCtes).
     "t22_bpe_merges" -> ((s, dir) =>
       graft.operators.Bpe.learnMerges(table(s, dir, "documents"), "text", 16)
         .orderBy("merge_rank")),
 
     // BPE tokenizer APPLY (t22's other half — learn → ENCODE): the
-    // merge fold runs over the vocab-sized distinct-word relation,
+    // merges are learned as in t22 (driver learner below the cutoff),
+    // the merge fold runs over the vocab-sized distinct-word relation,
     // the corpus pays one broadcast join from words to their token
     // counts, so per-lang token mass under the learned tokenizer
     // costs a word aggregate, never a corpus-through-the-fold pass.

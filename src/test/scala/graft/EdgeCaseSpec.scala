@@ -145,12 +145,14 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("BPE: zero merges, empty corpus, single-char words") {
     import graft.operators.Bpe
-    assert(Bpe.learnMerges(noDocs, "text", 4).count() === 0)
-    assert(Bpe.learnMerges(
-      Seq((1L, "hello world")).toDF("doc_id", "text"), "text", 0).count() === 0)
-    // single-char words carry no pairs: merge learning stops early
-    assert(Bpe.learnMerges(
-      Seq((1L, "a b c a b")).toDF("doc_id", "text"), "text", 8).count() === 0)
+    // the public entry point and both learners it picks between
+    Seq[(org.apache.spark.sql.DataFrame, String, Int) => org.apache.spark.sql.DataFrame](
+      Bpe.learnMerges, Bpe.learnMergesOnDriver, Bpe.learnMergesDistributed).foreach { learn =>
+      assert(learn(noDocs, "text", 4).count() === 0)
+      assert(learn(Seq((1L, "hello world")).toDF("doc_id", "text"), "text", 0).count() === 0)
+      // single-char words carry no pairs: merge learning stops early
+      assert(learn(Seq((1L, "a b c a b")).toDF("doc_id", "text"), "text", 8).count() === 0)
+    }
   }
 
   test("session-5 edges: empty ingest increment, no-match vectored delete, single-event resample") {

@@ -1149,9 +1149,23 @@ class StreamingSpec extends SparkSpec {
     def rows(is: Range): Seq[(Long, Long, Double)] =
       for { u <- 1L to 3L; i <- is } yield
         (u, i.toLong * 1000L + u, if (u == 1L && i == 29) 100.0 else (i % 7) * 0.5)
-    def writeIn(is: Range, mode: SaveMode): Unit =
-      rows(is).toDF("userId", "tsNs", "value").write.mode(mode).parquet(inDir)
-    writeIn(0 until 20, SaveMode.Overwrite)
+    def delivery(is: Range) = rows(is).toDF("userId", "tsNs", "value")
+    delivery(0 until 20).write.mode(SaveMode.Overwrite).parquet(inDir)
+    // a later delivery lands while the stream runs: staged in a
+    // sibling dir with every key's rows in one part file, then moved
+    // in one atomic rename per file — a trigger listing between two
+    // moves still sees each key's rows whole, never a later slice of
+    // a key ahead of an earlier one
+    def deliver(is: Range): Unit = {
+      import java.nio.file.{Paths, StandardCopyOption}
+      import scala.jdk.CollectionConverters._
+      val stage = Files.createTempDirectory("graft_anom_stage").toString
+      delivery(is).repartition(col("userId")).write.mode(SaveMode.Overwrite).parquet(stage)
+      val parts = Files.list(Paths.get(stage)).iterator.asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
+      parts.foreach(p => Files.move(p, Paths.get(inDir).resolve(p.getFileName),
+        StandardCopyOption.ATOMIC_MOVE))
+    }
     val stream = spark.readStream
       .schema(StructType(Seq(
         StructField("userId", LongType), StructField("tsNs", LongType),
@@ -1162,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName(s"st25_out$tag").outputMode("append").start()
     try {
       q.processAllAvailable()
-      writeIn(20 until 30, SaveMode.Append) // second micro-batch: state carries
+      deliver(20 until 30) // second delivery: state carries
       q.processAllAvailable()
     } finally q.stop()
     val out = spark.table(s"st25_out$tag").collect()

@@ -131,6 +131,77 @@ class TextOpsSpec extends SparkSpec {
     assert(merges(1) === ((2, "aa", "aa", 4L)))
   }
 
+  test("t22: the driver learner and the distributed loop learn identical merge tables") {
+    import spark.implicits._
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import graft.operators.Bpe
+    def table(m: org.apache.spark.sql.DataFrame) =
+      m.as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    def both(docs: Seq[String], k: Int) = {
+      val df = docs.toDF("text")
+      (table(Bpe.learnMergesOnDriver(df, "text", k)),
+        table(Bpe.learnMergesDistributed(df, "text", k)))
+    }
+    // a count tie that only the pair STRING breaks: round 2 ties
+    // (a\u0001, b) and (a, b) at 2; "a\u0001 b" sorts first because
+    // U+0001 is below the joining space, though "a" < "a\u0001"
+    val tie = Seq.fill(5)("a\u0001") ++ Seq.fill(2)("ab") ++ Seq.fill(2)("a\u0001b")
+    val (d, s) = both(tie, 2)
+    assert(d === Seq((1, "a", "\u0001", 7L), (2, "a\u0001", "b", 2L)))
+    assert(s === d)
+    // random corpora: ASCII symbols plus U+FF21 and U+1F600 (ordered
+    // differently by UTF-8 bytes and UTF-16 units; Spark's split cuts
+    // U+1F600's surrogate pair into two "?" symbols) and U+0001;
+    // single-char words, aaa/aaaa overlaps, abc next to ab and bc
+    // (abc can merge as a+bc or ab+c), 0 merges, more merges than the
+    // corpus has, and the empty corpus
+    val alphabet = Seq("a", "b", "c", "\uFF21", "\uD83D\uDE00", "\u0001")
+    val word = Gen.frequency(
+      3 -> Gen.oneOf("a", "b", "aaa", "aaaa", "abc", "ab", "bc", "\uFF21\u0001", "\uD83D\uDE00\u0001"),
+      2 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet))).map(_.mkString))
+    val corpus = Gen.choose(0, 8)
+      .flatMap(Gen.listOfN(_, Gen.zip(word, Gen.choose(1, 4))))
+      .map(_.flatMap { case (w, f) => Seq.fill(f)(w) }.grouped(3).map(_.mkString(" ")).toSeq)
+    val merges = Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 12), 1 -> Gen.const(64))
+    val prop = Prop.forAllNoShrink(corpus, merges) { (docs, k) =>
+      val (d, s) = both(docs, k)
+      Prop(d == s) :| s"docs=$docs k=$k driver=$d distributed=$s"
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(40).withWorkers(1).withInitialSeed(Seed(2016L)), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("t22: below the driver cutoff a merge costs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.operators.Bpe
+    import spark.implicits._
+    val docs = Seq("low lowest newer wider", "tokenization hyperparameter",
+      "lower newest widest", "parameterization tokenizer").toDF("text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // the listener bus is async; settle by polling until the count
+    // stops moving before the listener is removed
+    def run(k: Int): (Int, Int) = {
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val n = Bpe.learnMerges(docs, "text", k).collect().length
+        var prev = -1
+        while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
+        (n, jobs.get)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (n2, j2) = run(2)
+    val (n16, j16) = run(16)
+    assert((n2, n16) === ((2, 16)))
+    assert(j2 > 0)
+    assert(j16 === j2)
+  }
+
   test("t35: BPE encode applies the learned table exactly; symbols reconstruct every word") {
     import spark.implicits._
     // the t22 Sennrich fixture: merges are (e,r), (l,o), (lo,w)
