@@ -11,17 +11,18 @@ import graft.functions.{TextFunctions => T}
   * iterative DataFrame computation.
   *
   * Scale shape: the corpus is touched ONCE (tokens → word-frequency
-  * aggregate, symbolized by Spark's split and checkpointed); every
-  * merge round after that runs on the WORD-FREQUENCY relation, whose
-  * size is the vocabulary, not the corpus. One bounded collect of at
-  * most `DriverVocabCutoff + 1` rows (a private constant, 100 000
-  * words, the [[ConnectedComponents]] union-find bound) picks one of
-  * two exact learners:
+  * aggregate, checkpointed); every merge round after that runs on the
+  * WORD-FREQUENCY relation, whose size is the vocabulary, not the
+  * corpus. Both learners split its words into code-point symbols with
+  * the one symbolizer encode uses ([[symbols]]). One bounded collect
+  * of at most `DriverVocabCutoff + 1` rows (a private constant,
+  * 100 000 words, the [[ConnectedComponents]] union-find bound) picks
+  * one of two exact learners:
   *
   *   - a vocab that fits runs the recount-and-merge rounds on the
-  *     driver over the collected symbol arrays, so a merge costs no
-  *     Spark job — at sf0.1 the vocab is 31 words and the per-round
-  *     job pair was most of t22/t35's time;
+  *     driver over the collected words' symbol arrays, so a merge
+  *     costs no Spark job — at sf0.1 the vocab is 31 words and the
+  *     per-round job pair was most of t22/t35's time;
   *   - a larger vocab (millions of rows at 100 TB) runs them as Spark
   *     rounds: one vocab-sized explode + groupBy recount and a rewrite
   *     of the symbolized vocab per round, re-materialized (eager
@@ -86,7 +87,7 @@ object Bpe {
     * words learn on the driver, larger vocabularies in Spark rounds.
     */
   def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val vocab = symbolizedVocab(df, textCol)
+    val vocab = wordFreqs(df, textCol)
     val head = vocab.limit(DriverVocabCutoff + 1).collect()
     if (head.length <= DriverVocabCutoff) learnOnDriver(df.sparkSession, head, numMerges)
     else learnDistributed(vocab, numMerges)
@@ -96,31 +97,33 @@ object Bpe {
     * vocab size. */
   private[graft] def learnMergesOnDriver(
       df: DataFrame, textCol: String, numMerges: Int): DataFrame =
-    learnOnDriver(df.sparkSession, symbolizedVocab(df, textCol).collect(), numMerges)
+    learnOnDriver(df.sparkSession, wordFreqs(df, textCol).collect(), numMerges)
 
   /** [[learnMerges]] forced onto the distributed loop, whatever the
     * vocab size — the reference the driver learner is checked against. */
   private[graft] def learnMergesDistributed(
       df: DataFrame, textCol: String, numMerges: Int): DataFrame =
-    learnDistributed(symbolizedVocab(df, textCol), numMerges)
+    learnDistributed(wordFreqs(df, textCol), numMerges)
 
   /** Vocabularies up to this many distinct words learn on the driver:
     * the same bound as [[ConnectedComponents]]' union-find, a few tens
     * of MB of symbol arrays. */
   private val DriverVocabCutoff = 100000
 
-  /** The ONLY corpus-wide pass: (syms, freq) per distinct word,
-    * materialized. Both learners take their symbols from here. */
-  private def symbolizedVocab(df: DataFrame, textCol: String): DataFrame =
+  /** The ONLY corpus-wide pass: (w, freq) per distinct word,
+    * materialized. Both learners symbolize its words with [[symbols]]. */
+  private def wordFreqs(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(T.tokens(col(textCol))).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      // char symbolization: split strictly BETWEEN characters — the
-      // (?=.) guard stops the lookahead matching at end-of-string,
-      // which under Spark's limit=-1 split would append a trailing
-      // empty symbol (and "" would then enter the pair counts)
-      .select(split(col("w"), "(?!^)(?=.)").as("syms"), col("freq"))
       .localCheckpoint(eager = true)
+
+  /** The one symbolizer, shared by both learners and [[applyMerges]]:
+    * one symbol per Unicode code point, so a surrogate pair is one
+    * symbol and a line separator is a symbol of its own — learned
+    * merges are over exactly the symbols encode folds. */
+  private def symbols(w: String): Array[String] =
+    w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
 
   /** The round skeleton both learners share: `best` names the round's
     * winning " "-joined pair and its count (None once no pair is
@@ -141,10 +144,11 @@ object Bpe {
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
 
-  /** Each round re-counts pairs over the checkpointed vocab, collects
+  /** Each round re-counts pairs over the symbolized vocab, collects
     * the best, and re-materializes the rewritten vocab. */
-  private def learnDistributed(vocab0: DataFrame, numMerges: Int): DataFrame = {
-    var vocab = vocab0
+  private def learnDistributed(freqs: DataFrame, numMerges: Int): DataFrame = {
+    var vocab = freqs.select(
+      udf((w: String) => symbols(w).toSeq).apply(col("w")).as("syms"), col("freq"))
     learnRounds(vocab.sparkSession, numMerges) { () =>
       vocab.where(size(col("syms")) >= 2)
         .select(col("freq"), pairsOf(col("syms")).as("pair"))
@@ -166,7 +170,7 @@ object Bpe {
     * from `String.compareTo` above U+FFFF — and [[mergeOnce]] as the
     * rewrite. No Spark job runs. */
   private def learnOnDriver(spark: SparkSession, vocab: Array[Row], numMerges: Int): DataFrame = {
-    val words = vocab.map(_.getSeq[String](0).toArray)
+    val words = vocab.map(r => symbols(r.getString(0)))
     val freqs = vocab.map(_.getLong(1))
     learnRounds(spark, numMerges) { () =>
       val counts = scala.collection.mutable.HashMap.empty[String, Long]
@@ -242,7 +246,7 @@ object Bpe {
 
   private[graft] def applyMerges(
       w: String, ms: Array[(String, String)]): Seq[String] = {
-    var syms: Array[String] = w.map(_.toString).toArray
+    var syms: Array[String] = symbols(w)
     var i = 0
     while (i < ms.length && syms.length >= 2) {
       syms = mergeOnce(syms, ms(i)._1, ms(i)._2)

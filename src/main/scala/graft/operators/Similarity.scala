@@ -811,16 +811,8 @@ object Similarity {
     * snapshot's data out from under its manifest; this keeps every
     * prior index version replayable until vacuum.
     */
-  private def replaceSnapshot(df: DataFrame, path: String): Int = {
-    import graft.sources.ParquetLake
-    val spark = df.sparkSession
-    val stage = s"ivfsave_${java.util.UUID.randomUUID().toString.take(8)}"
-    val files = ParquetLake.stageAppend(spark, path, df, stage)
-    val v = ParquetLake.commitManifest(spark, path, files)
-    // the files are now manifest-referenced, so this only drops the ref
-    ParquetLake.abandonStaged(spark, path, stage)
-    v
-  }
+  private def replaceSnapshot(df: DataFrame, path: String): Int =
+    graft.sources.ParquetLake.replaceSnapshot(df.sparkSession, path, df, "ivfsave")
 
   /** Load a persisted IVF index (latest snapshot, or pinned versions
     * for bit-exact replay of a serving release).

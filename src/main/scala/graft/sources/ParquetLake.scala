@@ -210,21 +210,19 @@ object ParquetLake {
       .toSeq.sortBy(_.getPath.getName)
     inParallel(parts, parallelism) { p =>
       recoverInterrupted(fs, p.getPath)
-      val files = fs.listStatus(p.getPath)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      val files = fs.listStatus(p.getPath).filter(isPartFile)
       val bytes = files.map(_.getLen).sum
       val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       if (files.length <= nOut) None
       else {
-        val aside = rewriteAside(spark, fs, p.getPath, files.map(_.getPath).toSeq, nOut, sortCols)
+        rewriteAside(spark, fs, p.getPath, files.map(_.getPath).toSeq, nOut, sortCols)
         // commit point: from here the swap must complete (this run or
         // the next one's recovery) — the aside copy is the only place
         // the listed originals' rows live once deletes start
         writeAtomic(fs, commitMarker(p.getPath),
           files.map(_.getPath.getName).sorted.mkString("", "\n", "\n"))
         files.foreach(f => fs.delete(f.getPath, false))
-        aside.foreach(f => renameOrThrow(fs, f, new Path(p.getPath, f.getName)))
-        fs.delete(asideDir(p.getPath), true)
+        moveIntoLake(fs, asideDir(p.getPath), root, Some(p.getPath.getName))
         fs.delete(commitMarker(p.getPath), false)
         Some(CompactionStat(p.getPath.getName, files.length, nOut))
       }
@@ -242,6 +240,72 @@ object ParquetLake {
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
+
+  /** A data file: Spark's writers name every one `part-*`. */
+  private def isPartFile(s: org.apache.hadoop.fs.FileStatus): Boolean =
+    s.isFile && s.getPath.getName.startsWith("part-")
+
+  /** The lake's one MOVER: rename the data files an aside write left
+    * under `aside` (found by [[dataFilesOnDisk]], the aside laid out
+    * like a lake) into the lake at `root` — a root-level file into
+    * partition dir `dir` (None = the root itself), a file under a
+    * `col=value` subdir into the same-named dir under `root` — then
+    * delete the aside. Only files whose lake-relative name passes
+    * `keep` move; the rest go with the aside. Returns the moved files'
+    * lake-relative names, sorted. renameOrThrow, not bare rename: a
+    * silently-failed rename would still be committed into a manifest
+    * that then references a missing file. Re-running it after a crash
+    * mid-loop is safe — a half-moved aside just has fewer files left.
+    */
+  private def moveIntoLake(
+      fs: org.apache.hadoop.fs.FileSystem,
+      aside: org.apache.hadoop.fs.Path, root: org.apache.hadoop.fs.Path,
+      dir: Option[String], keep: String => Boolean = _ => true): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val moved = dataFilesOnDisk(fs, aside).flatMap { case (asideRel, f) =>
+      val to = partitionDirOf(asideRel).orElse(dir)
+      val rel = to.fold(f.getPath.getName)(d => s"$d/${f.getPath.getName}")
+      if (!keep(rel)) None
+      else {
+        val dst = to.fold(root)(new Path(root, _))
+        if (!fs.exists(dst)) fs.mkdirs(dst)
+        renameOrThrow(fs, f.getPath, new Path(dst, f.getPath.getName))
+        Some(rel)
+      }
+    }
+    fs.delete(aside, true)
+    moved.sorted
+  }
+
+  /** The lake's one LISTER: every data file on disk — root-level
+    * `part-*` files plus those one level down in [[isPartitionDir]]
+    * dirs — by lake-relative name. Dot-prefixed dirs (asides, `.dv/`)
+    * and non-`col=value` dirs (matview data) are never listed.
+    */
+  private def dataFilesOnDisk(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap { e =>
+      if (isPartFile(e)) Seq(e.getPath.getName -> e)
+      else if (isPartitionDir(e))
+        fs.listStatus(e.getPath).toSeq.filter(isPartFile)
+          .map(f => s"${e.getPath.getName}/${f.getPath.getName}" -> f)
+      else Seq.empty
+    }
+
+  /** The lake's one LOCATOR: the partition dir of a lake-relative data
+    * file, None for a root-level file.
+    */
+  private def partitionDirOf(rel: String): Option[String] =
+    rel.lastIndexOf('/') match {
+      case -1 => None
+      case i => Some(rel.substring(0, i))
+    }
+
+  /** How reports ([[lakeHealth]], [[compactManifested]]'s stats) name
+    * the root-level files' group. */
+  private val RootPartition = "<root>"
 
   /** Write `content` to `target` atomically: create a sibling `.tmp`
     * and rename it in, so a reader (or crash-recovery) never sees a
@@ -292,11 +356,7 @@ object ParquetLake {
         val f = new Path(partDir, name)
         if (fs.exists(f)) fs.delete(f, false)
       }
-      if (fs.exists(aside))
-        fs.listStatus(aside)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-          .foreach(f => renameOrThrow(fs, f.getPath, new Path(partDir, f.getPath.getName)))
-      fs.delete(aside, true)
+      moveIntoLake(fs, aside, partDir.getParent, Some(partDir.getName))
       fs.delete(marker, false)
       true
     } else {
@@ -306,8 +366,7 @@ object ParquetLake {
   }
 
   /** Rewrite EXACTLY `inputFiles` into `nOut` files under the
-    * partition's hidden `.compact_*` aside directory, returning the
-    * written files' paths (still in the aside dir — the swap/commit
+    * partition's hidden `.compact_*` aside directory (the swap/commit
     * protocol is the caller's). Reading the explicit file list, not
     * the directory, means orphans from a crashed prior run or files
     * appended after listing are never folded into the rewrite.
@@ -316,20 +375,26 @@ object ParquetLake {
       spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       partDir: org.apache.hadoop.fs.Path,
       inputFiles: Seq[org.apache.hadoop.fs.Path], nOut: Int,
-      sortCols: Seq[String]): Seq[org.apache.hadoop.fs.Path] = {
+      sortCols: Seq[String]): Unit = {
     val tmp = asideDir(partDir)
     if (fs.exists(commitMarker(partDir)))
       throw new IllegalStateException(
         s"interrupted compact() swap committed for $partDir — the aside dir holds the only " +
         s"copy of deleted originals; run compact()/recoverInterrupted on this lake first")
     fs.delete(tmp, true)
+    writeCompacted(spark, inputFiles, nOut, sortCols, tmp)
+  }
+
+  /** `inputFiles`' rows as `nOut` files under `out`, optionally sorted
+    * within each file — the rewrite both compactions share.
+    */
+  private def writeCompacted(
+      spark: SparkSession, inputFiles: Seq[org.apache.hadoop.fs.Path], nOut: Int,
+      sortCols: Seq[String], out: org.apache.hadoop.fs.Path): Unit = {
     val part = spark.read.parquet(inputFiles.map(_.toString): _*).repartition(nOut)
     val sorted =
       if (sortCols.isEmpty) part else part.sortWithinPartitions(sortCols.map(col): _*)
-    sorted.write.mode("overwrite").parquet(tmp.toString)
-    fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(_.getPath).toSeq
+    sorted.write.mode("overwrite").parquet(out.toString)
   }
 
   // ---------------------------------------------------------------
@@ -346,6 +411,18 @@ object ParquetLake {
   // a compaction crash leaves either the old version (new files
   // present but unreferenced — garbage, not duplicates) or the new
   // one (old files unreferenced until [[vacuum]]).
+  //
+  // File layout, decided once each: a data file is a `part-*` file at
+  // the root or one level down in a `col=value` dir, named in
+  // manifests by its lake-relative path. Every write lands in an
+  // aside dir first and enters the layout through the one mover
+  // ([[moveIntoLake]]); [[snapshotManifest]], [[fsck]] and [[vacuum]]
+  // see the disk through the one lister ([[dataFilesOnDisk]]); and
+  // every "which partition is this file in" is the one locator
+  // ([[partitionDirOf]], None = a root-level file). Unpartitioned
+  // lakes (a plain `df.write`, every index-gated ingest batch) are
+  // therefore first-class: their root files are listed, checked,
+  // vacuumed and compacted like any partition's.
   // ---------------------------------------------------------------
 
   private val ManifestPrefix = "_graft_manifest.v"
@@ -735,36 +812,14 @@ object ParquetLake {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val aside = new Path(root, s".stage_${java.util.UUID.randomUUID().toString.take(12)}")
-    val moved: Seq[String] = partCol match {
+    partCol match {
       case Some(pc) =>
         df.repartition(col(pc))
           .write.mode("overwrite").partitionBy(pc).parquet(aside.toString)
-        val m = fs.listStatus(aside)
-          .filter(isPartitionDir)
-          .flatMap { d =>
-            val dst = new Path(root, d.getPath.getName)
-            if (!fs.exists(dst)) fs.mkdirs(dst)
-            fs.listStatus(d.getPath)
-              .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-              .map { f =>
-                renameOrThrow(fs, f.getPath, new Path(dst, f.getPath.getName))
-                s"${d.getPath.getName}/${f.getPath.getName}"
-              }
-          }.toSeq
-        fs.delete(aside, true)
-        m
       case None =>
         df.write.mode("overwrite").parquet(aside.toString)
-        val m = fs.listStatus(aside)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-          .map { f =>
-            renameOrThrow(fs, f.getPath, new Path(root, f.getPath.getName))
-            f.getPath.getName
-          }.toSeq
-        fs.delete(aside, true)
-        m
     }
-    moved.sorted
+    moveIntoLake(fs, aside, root, None)
   }
 
   /** lk35: declarative row-level constraint report over a staged
@@ -1202,10 +1257,7 @@ object ParquetLake {
     require(snap.columns.contains(partCol),
       s"partition-evolution column '$partCol' is not a column of the snapshot " +
         s"(${snap.columns.mkString(", ")})")
-    val stage = s"evolve_${java.util.UUID.randomUUID().toString.take(8)}"
-    val files = stageAppend(spark, path, snap, stage, Some(partCol))
-    try commitManifest(spark, path, files, Some(base))
-    finally abandonStaged(spark, path, stage)
+    replaceSnapshot(spark, path, snap, "evolve", Some(partCol), Some(base))
   }
 
   /** lk36: re-cluster the CURRENT snapshot by a sort column as one
@@ -1236,9 +1288,22 @@ object ParquetLake {
     val sorted = snap
       .repartitionByRange(numFiles, col(sortCol))
       .sortWithinPartitions(sortCol)
-    val stage = s"recluster_${java.util.UUID.randomUUID().toString.take(8)}"
-    val files = stageAppend(spark, path, sorted, stage, None)
-    try commitManifest(spark, path, files, Some(base))
+    replaceSnapshot(spark, path, sorted, "recluster", None, Some(base))
+  }
+
+  /** The one full-replace commit tail ([[repartitionManifested]],
+    * [[reclusterManifested]], the Similarity index saves): stage `df`
+    * through the WAP machinery, commit a manifest of ONLY the staged
+    * files (a CAS at `expectedVersion` when given), then abandon the
+    * stage in a `finally` — after a commit that only drops the ref,
+    * after a failed one it also deletes the never-visible files.
+    */
+  private[graft] def replaceSnapshot(
+      spark: SparkSession, path: String, df: DataFrame, stagePrefix: String,
+      partCol: Option[String] = None, expectedVersion: Option[Int] = None): Int = {
+    val stage = s"${stagePrefix}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val files = stageAppend(spark, path, df, stage, partCol)
+    try commitManifest(spark, path, files, expectedVersion)
     finally abandonStaged(spark, path, stage)
   }
 
@@ -1246,7 +1311,9 @@ object ParquetLake {
   // lk28: lake health report — the compaction planner's input.
 
   /** Read-only lake health report over the CURRENT snapshot: one row
-    * per partition directory (`"<root>"` for unpartitioned files)
+    * per partition directory, as [[partitionDirOf]] locates it
+    * (`"<root>"` for root-level files — the same group
+    * [[compactManifested]] compacts)
     * with file count, byte totals, small-file count/share, and a
     * `needs_compaction` flag (≥ 2 files under `smallFileBytes`). All
     * inputs are the manifest listing plus one `getFileStatus` per
@@ -1263,13 +1330,8 @@ object ParquetLake {
     val (fs, root) = fsFor(spark, path)
     val files = readManifest(spark, path, None).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $path"))
-    val rows = files.map { f =>
-      val part = f.split('/') match {
-        case Array(dir, _) => dir
-        case _ => "<root>"
-      }
-      (part, fs.getFileStatus(new Path(root, f)).getLen)
-    }
+    val rows = files.map(f =>
+      (partitionDirOf(f).getOrElse(RootPartition), fs.getFileStatus(new Path(root, f)).getLen))
     import spark.implicits._
     rows.toDF("partition", "bytes")
       .groupBy("partition")
@@ -1972,16 +2034,7 @@ object ParquetLake {
     */
   def snapshotManifest(spark: SparkSession, path: String): Int = {
     val (fs, root) = fsFor(spark, path)
-    val top = fs.listStatus(root)
-    val flat = top
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(_.getPath.getName)
-    val partitioned = top
-      .filter(isPartitionDir)
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}")
-    commitManifest(spark, path, (flat ++ partitioned).toSeq)
+    commitManifest(spark, path, dataFilesOnDisk(fs, root).map(_._1))
   }
 
   /** Read the lake through a committed manifest (latest by default):
@@ -2059,8 +2112,13 @@ object ParquetLake {
     * every instant; [[vacuum]] is the only deletion point. A crash at
     * any step leaves the previous snapshot intact (half-written
     * compaction output is unreferenced garbage, not duplicates).
-    * Requires a committed manifest ([[snapshotManifest]] to
-    * bootstrap).
+    * Files group by [[partitionDirOf]]: each partition dir is one
+    * group, written back into the dir it was read from (never a dir
+    * re-derived from inferred values — `p=007` would read back as
+    * `p=7`), and the root-level files of an unpartitioned lake are one
+    * more group, `"<root>"`, written back into the root — the groups
+    * [[lakeHealth]] reports. Requires a committed manifest
+    * ([[snapshotManifest]] to bootstrap).
     */
   def compactManifested(
       spark: SparkSession, path: String,
@@ -2072,28 +2130,22 @@ object ParquetLake {
     val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "compactManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
-    val byPartition = current.groupBy(_.split('/').head)
-    val results = inParallel(byPartition.toSeq.sortBy(_._1), parallelism) {
-      case (part, files) =>
-        val partDir = new Path(root, part)
+    val byPartition = current.groupBy(partitionDirOf)
+    val results = inParallel(byPartition.toSeq.sortBy(_._1.getOrElse("")), parallelism) {
+      case (dir, files) =>
         val bytes = files.map(f => fs.getFileStatus(new Path(root, f)).getLen).sum
         val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        if (files.length <= nOut) (part, files, None)
+        if (files.length <= nOut) (files, None)
         else {
-          val aside = rewriteAside(
-            spark, fs, partDir, files.map(f => new Path(root, f)), nOut, sortCols)
-          // renameOrThrow, not bare rename: a silently-failed rename
-          // would still be committed into the manifest, and the next
-          // readManifested of that snapshot would fail on a missing file
-          val newFiles = aside.map { f =>
-            renameOrThrow(fs, f, new Path(partDir, f.getName))
-            s"$part/${f.getName}"
-          }
-          fs.delete(asideDir(partDir), true)
-          (part, newFiles, Some(CompactionStat(part, files.length, nOut)))
+          // back into the dir the files came from — never re-derived
+          // from inferred partition values (p=007 would read back p=7)
+          val aside = new Path(root, s".compact_${java.util.UUID.randomUUID().toString.take(12)}")
+          writeCompacted(spark, files.map(f => new Path(root, f)), nOut, sortCols, aside)
+          (moveIntoLake(fs, aside, root, dir),
+            Some(CompactionStat(dir.getOrElse(RootPartition), files.length, nOut)))
         }
     }
-    val stats = results.flatMap(_._3)
+    val stats = results.flatMap(_._2)
     // CAS at the version this compaction planned against: if a merge
     // or ingest committed meanwhile, committing our file list would
     // silently DROP their files from the snapshot — fail loudly
@@ -2101,7 +2153,7 @@ object ParquetLake {
     // The compacted files stay on disk as unreferenced garbage for
     // [[vacuum]].
     if (stats.nonEmpty)
-      commitManifest(spark, path, results.flatMap(_._2), Some(currentVersion))
+      commitManifest(spark, path, results.flatMap(_._1), Some(currentVersion))
     stats
   }
 
@@ -2167,7 +2219,6 @@ object ParquetLake {
       spark: SparkSession, path: String, src: DataFrame,
       keyCols: Seq[String], partCol: String,
       deleteCol: Option[String]): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "mergeManifested")
@@ -2187,8 +2238,8 @@ object ParquetLake {
       .collect().map(_.getString(0))
     val affectedDirs = (matchedParts ++ insertParts).distinct.map(v => s"$partCol=$v").toSet
     if (affectedDirs.isEmpty) return currentVersion
-    val carried = current.filterNot(f => affectedDirs.contains(f.split('/').head))
-    val rewriteInputs = current.filter(f => affectedDirs.contains(f.split('/').head))
+    val (rewriteInputs, carried) =
+      current.partition(f => partitionDirOf(f).exists(affectedDirs))
     val survivors =
       if (rewriteInputs.isEmpty) None
       else Some(
@@ -2208,24 +2259,9 @@ object ParquetLake {
     val newData = survivors
       .map(_.unionByName(upserts, allowMissingColumns = true))
       .getOrElse(upserts)
-    // write-aside, then rename into the live partition dirs; the files
-    // are invisible until the manifest commit below
-    val aside = new Path(root, s".merge_${java.util.UUID.randomUUID().toString.take(12)}")
-    newData.repartition(col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(aside.toString)
-    val moved = fs.listStatus(aside)
-      .filter(isPartitionDir)
-      .flatMap { d =>
-        val dst = new Path(root, d.getPath.getName)
-        if (!fs.exists(dst)) fs.mkdirs(dst)
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-          .map { f =>
-            renameOrThrow(fs, f.getPath, new Path(dst, f.getPath.getName))
-            s"${d.getPath.getName}/${f.getPath.getName}"
-          }
-      }.toSeq
-    fs.delete(aside, true)
+    // written into the live partition dirs, invisible until the
+    // manifest commit below
+    val moved = writeDataFiles(spark, path, newData, Some(partCol))
     // CAS at the snapshot this attempt planned against — a concurrent
     // commit means `carried` is stale, so the conflict propagates to
     // the rebase loop; this attempt's moved files become unreferenced
@@ -2235,15 +2271,16 @@ object ParquetLake {
 
   /** Copy-on-write rewrite of `affected` snapshot files as ONE
     * distributed Spark job per partition SCHEME — never one job per
-    * file. The affected set is grouped by the partition-column list
-    * its directory layout encodes (a handful of schemes under
-    * partition evolution, exactly one for a stable lake — bounded by
-    * evolution history, not file count); each group is read in a
-    * single snapshot-schema-pinned scan, passed through `transform`
-    * (which sees partition columns as data columns via basePath and
-    * must keep them), and written once with dynamic partitioning into
-    * an aside directory whose part files are then renamed into the
-    * lake layout. At 10⁴-10⁵ affected files this is O(schemes) job
+    * file. The affected set is grouped by the partition column its
+    * [[partitionDirOf]] dir encodes, none for root-level files (a
+    * handful of schemes under partition evolution, exactly one for a
+    * stable lake — bounded by evolution history, not file count);
+    * each group is read in a single snapshot-schema-pinned scan,
+    * passed through `transform` (which sees partition columns as data
+    * columns via basePath and must keep them), and written once with
+    * dynamic partitioning into an aside directory whose part files
+    * [[moveIntoLake]] then renames into the lake layout. At 10⁴-10⁵
+    * affected files this is O(schemes) job
     * scheduling instead of O(files) — the driver-dispatch bottleneck
     * the per-file loop had — while output file grain still tracks
     * input splits (tasks = affected-file splits; no shuffle is
@@ -2262,17 +2299,15 @@ object ParquetLake {
     import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val bySchemes = affected
-      .groupBy(_.split('/').dropRight(1).filter(_.contains('='))
-        .map(_.split('=')(0)).toSeq)
-      .toSeq.sortBy(_._1.mkString(","))
-    bySchemes.flatMap { case (partCols, rels) =>
+      .groupBy(partitionDirOf(_).map(_.takeWhile(_ != '=')))
+      .toSeq.sortBy(_._1.getOrElse(""))
+    bySchemes.flatMap { case (partCol, rels) =>
       val src = spark.read.schema(snapshotSchema).option("basePath", path)
         .parquet(rels.map(r => new Path(root, r).toString): _*)
       val out = transform(src)
       val aside = new Path(root, s".$tag${java.util.UUID.randomUUID().toString.take(12)}")
       val writer = out.write.mode("overwrite")
-      (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
-        .parquet(aside.toString)
+      partCol.fold(writer)(writer.partitionBy(_)).parquet(aside.toString)
       // which written files actually hold rows? Empty tasks can leave
       // zero-row part files; those must not enter the manifest
       val asidePath = fs.makeQualified(aside).toUri.getPath
@@ -2282,27 +2317,7 @@ object ParquetLake {
         .parquet(aside.toString)
         .select(relFileCol(asidePath).as("f")).distinct()
         .collect().map(_.getString(0)).toSet
-      val moved = fs.listStatus(aside)
-        .flatMap { e =>
-          if (e.isFile) Seq(e).filter(_.getPath.getName.startsWith("part-"))
-            .map(f => (Seq.empty[String], f))
-          else if (isPartitionDir(e))
-            fs.listStatus(e.getPath)
-              .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-              .map(f => (Seq(e.getPath.getName), f)).toSeq
-          else Seq.empty[(Seq[String], org.apache.hadoop.fs.FileStatus)]
-        }
-        .filter { case (dirRel, f) =>
-          nonEmpty.contains((dirRel :+ f.getPath.getName).mkString("/"))
-        }
-        .map { case (dirRel, f) =>
-          val dstDir = dirRel.foldLeft(root)((p, d) => new Path(p, d))
-          if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
-          renameOrThrow(fs, f.getPath, new Path(dstDir, f.getPath.getName))
-          (dirRel :+ f.getPath.getName).mkString("/")
-        }.toSeq
-      fs.delete(aside, true)
-      moved
+      moveIntoLake(fs, aside, root, None, nonEmpty)
     }
   }
 
@@ -2425,8 +2440,7 @@ object ParquetLake {
     require(unknown.isEmpty,
       s"update probe returned files outside the snapshot: ${unknown.take(3).mkString(",")}")
     val affectedPartCols = affected
-      .flatMap(_.split('/').dropRight(1).filter(_.contains('='))
-        .map(_.split('=')(0))).toSet
+      .flatMap(partitionDirOf(_).map(_.takeWhile(_ != '='))).toSet
     val illegal = set.keySet.intersect(affectedPartCols)
     require(illegal.isEmpty,
       s"cannot UPDATE partition column(s) ${illegal.mkString(",")}: partition values " +
@@ -2533,10 +2547,13 @@ object ParquetLake {
     *   - `missing`: manifest entries whose file is gone from disk —
     *     external deletion; time travel to a version listing them
     *     would fail, so this is the data-loss alarm.
-    * Costs two listings (manifests + partition dirs) and no data
-    * reads; the repair actions stay where they are (vacuum deletes
-    * orphans, recoverInterrupted finishes swaps) — fsck never
-    * mutates.
+    * On-disk data files come from [[dataFilesOnDisk]] — root-level
+    * files plus one level of partition dirs, the set
+    * [[snapshotManifest]] manifests and [[vacuum]] sweeps — so an
+    * unpartitioned lake checks clean too. Costs two listings
+    * (manifests + data files) and no data reads; the repair actions
+    * stay where they are (vacuum deletes orphans, recoverInterrupted
+    * finishes swaps) — fsck never mutates.
     */
   // ---------------------------------------------------------------
   // lk37: merge-on-read DELETE via deletion vectors.
@@ -2587,41 +2604,63 @@ object ParquetLake {
 
   private def deleteVectoredAttempt(
       spark: SparkSession, path: String, predicate: Column): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val currentVersion = headVersion(fs, root, path)
     val current = readManifest(spark, path, Some(currentVersion)).get
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val prior = dvList(spark, path, Some(currentVersion))
     // positions tag onto the SCAN relation (metadata columns resolve
-    // there), then already-vectored rows are anti-joined away so a
-    // replayed delete is a no-op — one pushed-down pass, and the
-    // vector carries positions only, never row data
-    val tagged = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
-      .withColumn("_graft_dv_file", relFileCol(rootPath))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
+    // there) — one pushed-down pass, and the vector carries positions
+    // only, never row data
+    val hits = withPositions(fs, root,
+      readManifested(spark, path, Some(currentVersion), mergeSchema = true))
       .where(predicate)
-    val fresh =
-      if (prior.isEmpty) tagged
-      else {
-        val pdv = spark.read.parquet(prior.map(f => s"$path/$f"): _*)
-        tagged.join(broadcast(pdv),
-          tagged("_graft_dv_file") === pdv("file") &&
-            tagged("_graft_dv_pos") === pdv("pos"),
-          "left_anti")
-      }
-    val hits = fresh.select(col("_graft_dv_file").as("file"),
-      col("_graft_dv_pos").as("pos"))
-    val dvRel = s"$DvDir/dv_${java.util.UUID.randomUUID().toString.take(12)}"
-    val aside = new Path(root, dvRel)
-    hits.coalesce(1).write.mode("errorifexists").parquet(aside.toString)
-    if (spark.read.parquet(aside.toString).isEmpty) {
-      fs.delete(aside, true)
-      return currentVersion
+    writeVector(spark, path, hits, prior) match {
+      case None => currentVersion
+      case Some(dv) =>
+        commitManifest(spark, path, current, Some(currentVersion),
+          headers = Map(DvHeaderKey -> (prior :+ dv).mkString(",")))
     }
-    val all = dvList(spark, path, Some(currentVersion)) :+ dvRel
-    commitManifest(spark, path, current, Some(currentVersion),
-      headers = Map(DvHeaderKey -> all.mkString(",")))
+  }
+
+  /** Tag each row of a snapshot scan with its `(file, position)`
+    * deletion-vector key: the lake-relative file ([[relFileCol]]) and
+    * the row's index within it.
+    */
+  private def withPositions(
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      df: DataFrame): DataFrame =
+    df.withColumn("_graft_dv_file", relFileCol(fs.makeQualified(root).toUri.getPath))
+      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
+
+  /** The [[withPositions]]-tagged rows NOT in vector relation `dv` —
+    * a broadcast left-anti join on `(file, position)`: map-side, no
+    * shuffle of the data rows.
+    */
+  private def notVectored(tagged: DataFrame, dv: DataFrame): DataFrame =
+    tagged.join(broadcast(dv),
+      tagged("_graft_dv_file") === dv("file") && tagged("_graft_dv_pos") === dv("pos"),
+      "left_anti")
+
+  /** The one deletion-vector writer ([[deleteVectored]],
+    * [[mergeOnRead]]): the positions of the [[withPositions]]-tagged
+    * `hits` that no `prior` vector holds yet (so a replayed delete is
+    * a no-op), written as one `.dv/dv_*` file. Returns its
+    * lake-relative name, or None — the file deleted — when no fresh
+    * position was left.
+    */
+  private def writeVector(
+      spark: SparkSession, path: String, hits: DataFrame,
+      prior: Seq[String]): Option[String] = {
+    val (fs, root) = fsFor(spark, path)
+    val fresh =
+      if (prior.isEmpty) hits
+      else notVectored(hits, spark.read.parquet(prior.map(f => s"$path/$f"): _*))
+    val dvRel = s"$DvDir/dv_${java.util.UUID.randomUUID().toString.take(12)}"
+    val out = new org.apache.hadoop.fs.Path(root, dvRel)
+    fresh.select(col("_graft_dv_file").as("file"), col("_graft_dv_pos").as("pos"))
+      .coalesce(1).write.mode("errorifexists").parquet(out.toString)
+    if (spark.read.parquet(out.toString).isEmpty) { fs.delete(out, true); None }
+    else Some(dvRel)
   }
 
   /** Read a snapshot with its pending deletion vectors applied — the
@@ -2651,16 +2690,8 @@ object ParquetLake {
       dvs: Seq[String]): DataFrame = {
     if (dvs.isEmpty) return base
     val (fs, root) = fsFor(spark, path)
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val dv = spark.read.parquet(dvs.map(f => s"$path/$f"): _*)
-    val tagged = base
-      .withColumn("_graft_dv_file", relFileCol(rootPath))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-    tagged.join(broadcast(dv),
-        tagged("_graft_dv_file") === dv("file") &&
-          tagged("_graft_dv_pos") === dv("pos"),
-        "left_anti")
-      .drop("_graft_dv_file", "_graft_dv_pos")
+    notVectored(withPositions(fs, root, base), dv).drop("_graft_dv_file", "_graft_dv_pos")
   }
 
   /** lk39: merge-on-read UPSERT — [[mergeManifested]]'s
@@ -2696,41 +2727,26 @@ object ParquetLake {
       spark: SparkSession, path: String, src: DataFrame,
       keyCols: Seq[String], partCol: Option[String],
       deleteCol: Option[String]): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val currentVersion = headVersion(fs, root, path)
     val current = readManifest(spark, path, Some(currentVersion)).get
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val prior = dvList(spark, path, Some(currentVersion))
     // tombstone every CURRENT row whose key appears in the batch: a
     // broadcast-able key set (change batches are small by contract)
     // semi-joins against one tagged snapshot scan — positions out,
     // no data shuffled
     val keys = src.select(keyCols.map(col): _*).distinct()
-    val tagged = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
-      .withColumn("_graft_dv_file", relFileCol(rootPath))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
+    val hits = withPositions(fs, root,
+      readManifested(spark, path, Some(currentVersion), mergeSchema = true))
       .join(broadcast(keys), keyCols, "left_semi")
-    val fresh =
-      if (prior.isEmpty) tagged
-      else {
-        val pdv = spark.read.parquet(prior.map(f => s"$path/$f"): _*)
-        tagged.join(broadcast(pdv),
-          tagged("_graft_dv_file") === pdv("file") &&
-            tagged("_graft_dv_pos") === pdv("pos"), "left_anti")
-      }
-    val dvRel = s"$DvDir/dv_${java.util.UUID.randomUUID().toString.take(12)}"
-    fresh.select(col("_graft_dv_file").as("file"), col("_graft_dv_pos").as("pos"))
-      .coalesce(1).write.mode("errorifexists").parquet(new Path(root, dvRel).toString)
-    val tombstoned = !spark.read.parquet(new Path(root, dvRel).toString).isEmpty
-    if (!tombstoned) fs.delete(new Path(root, dvRel), true)
+    val dv = writeVector(spark, path, hits, prior)
     // inserts + replacements: every non-tombstone source row appends
     // (lk33 schema gate, as for any append)
     val inserts = deleteCol.map(c => src.where(!col(c)).drop(c)).getOrElse(src)
     schemaGate(spark, path, Some(current), inserts, allowEvolution = false)
     val moved = writeDataFiles(spark, path, inserts, partCol)
-    if (!tombstoned && moved.isEmpty) return currentVersion
-    val dvs = prior ++ (if (tombstoned) Seq(dvRel) else Seq.empty)
+    if (dv.isEmpty && moved.isEmpty) return currentVersion
+    val dvs = prior ++ dv
     commitManifest(spark, path, current ++ moved, Some(currentVersion),
       headers = if (dvs.isEmpty) Map.empty
         else Map(DvHeaderKey -> dvs.mkString(",")))
@@ -2755,7 +2771,6 @@ object ParquetLake {
     val dvs = dvList(spark, path, Some(currentVersion))
     if (dvs.isEmpty) return currentVersion
     val current = readManifest(spark, path, Some(currentVersion)).get
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val dv = spark.read.parquet(dvs.map(f => s"$path/$f"): _*)
       .localCheckpoint(eager = true)
     val affected = dv.select("file").distinct()
@@ -2771,14 +2786,7 @@ object ParquetLake {
     // positions stay correct however the scan bundles files into tasks
     val rewritten = cowRewriteGrouped(
       spark, path, snapshot.schema, affected, "dvmat_") { src =>
-      val one = src
-        .withColumn("_graft_dv_file", relFileCol(rootPath))
-        .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-      one.join(broadcast(dv),
-          one("_graft_dv_file") === dv("file") &&
-            one("_graft_dv_pos") === dv("pos"),
-          "left_anti")
-        .drop("_graft_dv_file", "_graft_dv_pos")
+      notVectored(withPositions(fs, root, src), dv).drop("_graft_dv_file", "_graft_dv_pos")
     }
     commitManifest(spark, path,
       current.filterNot(affected.contains) ++ rewritten, Some(currentVersion))
@@ -2876,12 +2884,7 @@ object ParquetLake {
       readManifest(spark, path, Some(v)).getOrElse(Seq.empty)
     } ++ stagedManifests(spark, path).values.flatten ++
       allBranchFiles(spark, path)).toSet
-    val onDisk: Set[String] = fs.listStatus(root)
-      .filter(isPartitionDir)
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}")
-      .toSet
+    val onDisk: Set[String] = dataFilesOnDisk(fs, root).map(_._1).toSet
     FsckReport(
       orphans = (onDisk -- referenced).toSeq.sorted,
       missing = (referenced -- onDisk).toSeq.sorted)
@@ -2902,7 +2905,10 @@ object ParquetLake {
     * in that window would make the next committed manifest reference
     * missing files. The default 7-day horizon is far longer than any
     * in-flight write; pass `retainMillis = 0` only when no writer or
-    * compaction can be running. Returns the deleted lake-relative
+    * compaction can be running. The sweep covers every data file
+    * [[dataFilesOnDisk]] lists — root-level files of an unpartitioned
+    * lake included — and refuses to run while a legacy [[compact]]
+    * COMMIT marker is pending. Returns the deleted lake-relative
     * paths.
     */
   def vacuum(
@@ -2945,14 +2951,9 @@ object ParquetLake {
     } ++ stagedManifests(spark, path).values.flatten ++
       allBranchFiles(spark, path)).toSet
     val horizon = System.currentTimeMillis() - math.max(0L, retainMillis)
-    val dataOrphans = fs.listStatus(root)
-      .filter(isPartitionDir)
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-      .filter(_.getModificationTime <= horizon)
-      .map(f => s"${f.getPath.getParent.getName}/${f.getPath.getName}")
-      .filterNot(referenced)
-      .toSeq
+    val dataOrphans = dataFilesOnDisk(fs, root).collect {
+      case (rel, f) if f.getModificationTime <= horizon && !referenced(rel) => rel
+    }
     dataOrphans.foreach(f => fs.delete(new Path(root, f), false))
     // deletion vectors referenced by NO retained manifest header are
     // spent (materialized, or their version aged out) — same horizon

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.CloudWatchLogs
-
 /** Structured Streaming face of the engine (SURVEY §2.1 st1–st3).
   *
   * The reference's long-poll loop over shard iterators
@@ -19,20 +17,13 @@ import graft.sources.CloudWatchLogs
   */
 object LogStream {
 
-  /** Streaming variant of Reader.readLogs (no global sort/limit —
-    * those are not stream semantics; use watermarks + windows).
+  /** The strict decode → filter → explode → select chain of
+    * [[graft.operators.Reader.readLogs]], which it calls without a
+    * start time or a take-N (a global sort/limit is not stream
+    * semantics; use watermarks + windows).
     */
   def parse(records: DataFrame, dataCol: String = "data"): DataFrame =
-    records
-      .withColumn("_payload",
-        graft.functions.opaque(CloudWatchLogs.decodePayload(col(dataCol))))
-      .where(col("_payload.messageType") === CloudWatchLogs.DataMessage)
-      .select(explode(col("_payload.logEvents")).as("_logEvent"))
-      .select(
-        col("_logEvent.id").as("log_id"),
-        col("_logEvent.timestamp").as("timestamp_ms"),
-        col("_logEvent.message").as("message"),
-        col("_logEvent.extractedFields").as("fields"))
+    graft.operators.Reader.readLogs(records, dataCol)
 
   /** Event-time tumbling-window counts with a watermark bounding
     * state retention.

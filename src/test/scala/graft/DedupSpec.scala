@@ -435,6 +435,12 @@ class DedupSpec extends SparkSpec {
     assert(r2.rejectedIntra === 0L)
     assert(r2.rejectedIndexed === increment.count())
     assert(graft.sources.ParquetLake.readManifested(spark, dataPath).count() === lake.count())
+    // both lakes are unpartitioned (every batch lands root-level
+    // files): fsck sees each file on disk referenced, none missing
+    Seq(dataPath, indexPath).foreach { p =>
+      val fsck = graft.sources.ParquetLake.fsck(spark, p)
+      assert(fsck.orphans.isEmpty && fsck.missing.isEmpty, s"$p: $fsck")
+    }
   }
 
   test("lk44: line index scrubs ingest at sentence grain — rebuilds docs, drops boilerplate-only, replays to zero") {

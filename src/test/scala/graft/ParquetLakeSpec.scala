@@ -107,6 +107,19 @@ class ParquetLakeSpec extends SparkSpec {
     dir
   }
 
+  /** Unpartitioned lake fixture: `nFiles` root-level data files, the
+    * layout a plain `df.write.parquet` (and every index-gated ingest
+    * batch) leaves.
+    */
+  private def flatLake(nFiles: Int): String = {
+    val dir = Files.createTempDirectory("graft_lake_flat").toString + "/lake"
+    events(spark, sf).select("event_id", "user_id", "event_type", "ts_ms")
+      .repartition(nFiles).write.parquet(dir)
+    ParquetLake.snapshotManifest(spark, dir)
+    assert(ParquetLake.readManifest(spark, dir).get.count(!_.contains('/')) === nFiles)
+    dir
+  }
+
   private def plantOrphan(dir: String): java.io.File = {
     // simulate a crashed prior compaction: a stray data file in a
     // partition directory that no manifest references
@@ -164,6 +177,16 @@ class ParquetLakeSpec extends SparkSpec {
     }
     assert(ParquetLake.readManifested(spark, dir)
       .collect().map(_.toString).sorted.toSeq === expected)
+    // unpartitioned: a recluster supersedes the root-level files, and
+    // the vacuum that ages their version out deletes them
+    val flat = flatLake(2)
+    val superseded = ParquetLake.readManifest(spark, flat).get
+    val flatRows = ParquetLake.readManifested(spark, flat).count()
+    ParquetLake.reclusterManifested(spark, flat, "ts_ms", numFiles = 2)
+    val deletedFlat = ParquetLake.vacuum(spark, flat, keepVersions = 1, retainMillis = 0)
+    assert(superseded.forall(deletedFlat.contains), deletedFlat.mkString(","))
+    assert(superseded.forall(f => !new java.io.File(flat, f).exists()))
+    assert(ParquetLake.readManifested(spark, flat).count() === flatRows)
   }
 
   test("lk7: morton interleave matches the bit model") {
@@ -605,8 +628,12 @@ class ParquetLakeSpec extends SparkSpec {
       events(spark, sf).select("event_id", "user_id", "event_type", "ts_ms"),
       dir, "ts_ms", sortCols = Seq("user_id"))
     ParquetLake.snapshotManifest(spark, dir)
-    val clean = ParquetLake.fsck(spark, dir)
-    assert(clean.orphans.isEmpty && clean.missing.isEmpty, clean.toString)
+    // healthy partitioned and unpartitioned lakes: root-level files
+    // are on-disk data files like any other
+    Seq(dir, flatLake(2)).foreach { d =>
+      val clean = ParquetLake.fsck(spark, d)
+      assert(clean.orphans.isEmpty && clean.missing.isEmpty, s"$d: $clean")
+    }
 
     // a crashed maintenance run leaves an unreferenced file behind
     val part = new java.io.File(dir).listFiles()
@@ -1014,6 +1041,20 @@ class ParquetLakeSpec extends SparkSpec {
     val after = ParquetLake.lakeHealth(spark, dir).collect()
     assert(after.forall(_.getAs[Long]("n_files") === 1L))
     assert(after.forall(!_.getAs[Boolean]("needs_compaction")))
+    // unpartitioned: the root-level files are one "<root>" group, and
+    // compaction writes them back into the root
+    val flat = flatLake(4)
+    val flatRows = ParquetLake.readManifested(spark, flat).collect().map(_.toString).sorted.toSeq
+    assert(ParquetLake.lakeHealth(spark, flat).collect()
+      .map(r => (r.getAs[String]("partition"), r.getAs[Boolean]("needs_compaction"))).toSeq
+      === Seq(("<root>", true)))
+    assert(ParquetLake.compactManifested(spark, flat, targetFileBytes = 1L << 30)
+      === Seq(ParquetLake.CompactionStat("<root>", 4, 1)))
+    assert(ParquetLake.readManifest(spark, flat).get.count(!_.contains('/')) === 1)
+    assert(ParquetLake.readManifested(spark, flat)
+      .collect().map(_.toString).sorted.toSeq === flatRows)
+    val plan = ParquetLake.maintenancePlan(spark, flat).collect().map(_.getString(1))
+    assert(!plan.contains("compact"), plan.mkString(","))
   }
 
   test("lk29: bloom sidecars skip files on point lookups; results identical; absent key reads nothing") {

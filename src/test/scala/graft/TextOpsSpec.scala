@@ -143,6 +143,18 @@ class TextOpsSpec extends SparkSpec {
       (table(Bpe.learnMergesOnDriver(df, "text", k)),
         table(Bpe.learnMergesDistributed(df, "text", k)))
     }
+    // encode replays the learner: with the first r-1 merges applied by
+    // applyMerges, merge r's pair occurs exactly pair_count times
+    def replays(docs: Seq[String], t: Seq[(Int, String, String, Long)]): Boolean = {
+      val words = docs.toDF("text")
+        .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
+        .where(length(col("w")) > 0).as[String].collect()
+      t.forall { case (r, l, rr, n) =>
+        val ms = t.take(r - 1).map(m => (m._2, m._3)).toArray
+        words.map(w => Bpe.applyMerges(w, ms).sliding(2)
+          .count(p => p.length == 2 && p(0) == l && p(1) == rr).toLong).sum == n
+      }
+    }
     // a count tie that only the pair STRING breaks: round 2 ties
     // (a\u0001, b) and (a, b) at 2; "a\u0001 b" sorts first because
     // U+0001 is below the joining space, though "a" < "a\u0001"
@@ -151,14 +163,15 @@ class TextOpsSpec extends SparkSpec {
     assert(d === Seq((1, "a", "\u0001", 7L), (2, "a\u0001", "b", 2L)))
     assert(s === d)
     // random corpora: ASCII symbols plus U+FF21 and U+1F600 (ordered
-    // differently by UTF-8 bytes and UTF-16 units; Spark's split cuts
-    // U+1F600's surrogate pair into two "?" symbols) and U+0001;
-    // single-char words, aaa/aaaa overlaps, abc next to ab and bc
-    // (abc can merge as a+bc or ab+c), 0 merges, more merges than the
-    // corpus has, and the empty corpus
+    // differently by UTF-8 bytes and UTF-16 units; U+1F600 is a
+    // surrogate pair), U+2028 (a line terminator to Java regex) and
+    // U+0001; single-char words, aaa/aaaa overlaps, abc next to ab and
+    // bc (abc can merge as a+bc or ab+c), 0 merges, more merges than
+    // the corpus has, and the empty corpus
     val alphabet = Seq("a", "b", "c", "\uFF21", "\uD83D\uDE00", "\u0001")
     val word = Gen.frequency(
-      3 -> Gen.oneOf("a", "b", "aaa", "aaaa", "abc", "ab", "bc", "\uFF21\u0001", "\uD83D\uDE00\u0001"),
+      3 -> Gen.oneOf("a", "b", "aaa", "aaaa", "abc", "ab", "bc", "\uFF21\u0001",
+        "\uD83D\uDE00\u0001", "\uFF21\uD83D\uDE00b", "a\u2028b"),
       2 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet))).map(_.mkString))
     val corpus = Gen.choose(0, 8)
       .flatMap(Gen.listOfN(_, Gen.zip(word, Gen.choose(1, 4))))
@@ -166,7 +179,7 @@ class TextOpsSpec extends SparkSpec {
     val merges = Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 12), 1 -> Gen.const(64))
     val prop = Prop.forAllNoShrink(corpus, merges) { (docs, k) =>
       val (d, s) = both(docs, k)
-      Prop(d == s) :| s"docs=$docs k=$k driver=$d distributed=$s"
+      Prop(d == s && replays(docs, d)) :| s"docs=$docs k=$k driver=$d distributed=$s"
     }
     val res = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(40).withWorkers(1).withInitialSeed(Seed(2016L)), prop)
@@ -217,12 +230,23 @@ class TextOpsSpec extends SparkSpec {
     assert(enc("lowest") === Seq("low", "e", "s", "t"))
     assert(enc("newer") === Seq("n", "e", "w", "er"))
     assert(enc("wider") === Seq("w", "i", "d", "er"))
+    // symbols are code points in learning AND encode: a surrogate pair
+    // and a line separator are symbols like any other, so every
+    // learned merge fires (tokens lower-case U+FF21 to U+FF41)
+    val uni = (Seq.fill(3)("\uFF21\uD83D\uDE00b") ++ Seq.fill(2)("a\u2028b")).toDF("text")
+    val uniWords = uni.select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
+    val uniEnc = graft.operators.Bpe.encodeVocab(uniWords, "w",
+      graft.operators.Bpe.learnMerges(uni, "text", 8))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    assert(uniEnc === Map(
+      "\uFF41\uD83D\uDE00b" -> Seq("\uFF41\uD83D\uDE00b"), "a\u2028b" -> Seq("a\u2028b")))
     // round-trip on real corpus vocab: concatenated symbols == word
     val corpus = graft.queries.table(spark, sf, "documents")
     val m16 = graft.operators.Bpe.learnMerges(corpus, "text", 8)
     val vocab = corpus
       .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
       .where(length(col("w")) > 0).distinct().limit(500)
+      .union(uniWords)
     val bad = graft.operators.Bpe.encodeVocab(vocab, "w", m16)
       .where(concat_ws("", col("syms")) =!= col("w")).count()
     assert(bad === 0L)
