@@ -53,7 +53,7 @@ object GraftSession {
   }
 
   /** Local-mode builder with scale-appropriate defaults (AQE on,
-    * shuffle partitions sized to cores, UTC).
+    * shuffle partitions sized to cores, UTC) and [[GraftExtensions]].
     *
     * `rocksdbStateStore = true` swaps streaming state onto Spark's
     * RocksDB provider: the default HDFSBackedStateStoreProvider holds
@@ -82,6 +82,7 @@ object GraftSession {
 
   private def baseBuilder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

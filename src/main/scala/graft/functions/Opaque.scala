@@ -9,15 +9,17 @@ import org.apache.spark.sql.types.DataType
   * optimizer will not substitute it through aliases.
   *
   * Why it exists: CollapseProject / filter pushdown re-inline an
-  * aliased expensive expression into every consumer. For the CWL
-  * decode chain that means `from_json(gunzip(data))` is evaluated
-  * once for the `messageType` filter and again for the `logEvents`
-  * explode — 2× the gunzip+parse work of the whole ingest path (and
-  * per-field JSON schema pruning makes the copies non-identical, so
-  * codegen subexpression elimination cannot merge them back).
-  * Wrapping the decode in Opaque pins it to a single Project, where
-  * it is computed once per record; downstream operators consume the
-  * resulting attribute.
+  * aliased expensive expression into every consumer. r8's ingest
+  * report (`ReferenceQueries.r8IngestReport`) aliases
+  * `graft_try_gunzip(data)` and `from_json` of it, then reads each in
+  * several aggregate branches; without the fence every branch would
+  * gunzip and parse the record again (and per-field JSON schema
+  * pruning makes the copies non-identical, so codegen subexpression
+  * elimination cannot merge them back). Wrapping each in Opaque pins
+  * it to a single Project, where it is computed once per record;
+  * downstream operators consume the resulting attribute. The reader
+  * path needs no fence: [[CwlEvents]] decodes, filters and explodes
+  * in one generator.
   *
   * The value is genuinely deterministic — the flag is only an
   * optimizer fence (same technique Spark itself uses when it must

@@ -18,6 +18,13 @@ package object functions {
     */
   def opaque(c: Column): Column = col1(Opaque.apply)(c)
 
+  /** One row per log event of each gzipped CWL payload in `data`:
+    * (log_id, timestamp_ms, message, fields) — see [[CwlEvents]].
+    * Use as the only item of a `select`.
+    */
+  def cwlEvents(data: Column, permissive: Boolean): Column =
+    col1(CwlEvents(_, permissive))(data)
+
   /** Gzip-compress a binary column. */
   def graft_gzip(c: Column): Column = col1(GzipBytes.apply)(c)
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.sources.CloudWatchLogs
 
 /** Batch re-expression of the reference's `KinesisLogsReader`
   * iteration (reference: kinesis_logs_reader/kinesis_logs_reader.py:24-106).
@@ -13,10 +12,18 @@ import graft.sources.CloudWatchLogs
   * shard's records, gunzip + JSON-parse each record, drop
   * CONTROL_MESSAGEs, flatten `logEvents[*].extractedFields`, merge
   * shards until drained — maps onto Spark as: source partitions play
-  * the role of shards; the per-record pipeline is a chain of narrow,
-  * codegen'd transforms; the merge is the (order-free) union of
+  * the role of shards; the per-record loop is one generator,
+  * [[graft.functions.CwlEvents]], which streams the gunzip into the
+  * JSON parser, drops non-DATA payloads and emits one row per event,
+  * inside whole-stage codegen; the merge is the (order-free) union of
   * partitions. Nothing here shuffles, so the pipeline scales linearly
   * with input size/executors.
+  *
+  * In a session with [[graft.GraftExtensions]] (every
+  * `GraftSession.builder` session) an optimizer rule narrows the
+  * generator to the columns the query reads: a typed write of
+  * `message` never builds `fields`, a TSV render of `fields` never
+  * builds `message`, and `count()` builds neither.
   */
 object Reader {
 
@@ -38,22 +45,7 @@ object Reader {
       takeN: Option[Int] = None,
       permissive: Boolean = false): DataFrame = {
     GraftSession.ensureRegistered(records.sparkSession)
-    val decoded =
-      if (permissive) CloudWatchLogs.decodePayloadPermissive(col(dataCol))
-      else CloudWatchLogs.decodePayload(col(dataCol))
-    // opaque(): decode exactly once per record — without the fence,
-    // project-collapse duplicates the gunzip+parse into the
-    // messageType filter AND the logEvents explode (2× the whole
-    // ingest cost; see functions.Opaque).
-    val parsed = records
-      .withColumn("_payload", graft.functions.opaque(decoded))
-      .where(col("_payload.messageType") === CloudWatchLogs.DataMessage)
-      .select(explode(col("_payload.logEvents")).as("_logEvent"))
-      .select(
-        col("_logEvent.id").as("log_id"),
-        col("_logEvent.timestamp").as("timestamp_ms"),
-        col("_logEvent.message").as("message"),
-        col("_logEvent.extractedFields").as("fields"))
+    val parsed = records.select(graft.functions.cwlEvents(col(dataCol), permissive))
     val timeFiltered = startTimeMs
       .map(t => parsed.where(col("timestamp_ms") >= lit(t)))
       .getOrElse(parsed)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Key discovery mirrors the reference exactly: peek one row for the
   * key set (a LIMIT-1 job, cheap at any scale), render every row
-  * against those sorted keys, blanks for missing values.
+  * against that row's sorted keys, blanks for missing values; keys
+  * only later rows carry are not rendered.
   */
 object Tsv {
 
@@ -19,9 +20,8 @@ object Tsv {
   def render(flat: DataFrame): DataFrame = {
     val spark = flat.sparkSession
     import spark.implicits._
-    val keys = flat
-      .select(explode(map_keys(col("fields"))).as("k"))
-      .limit(32).as[String].collect().distinct.sorted
+    val keys = flat.select(map_keys(col("fields"))).limit(1).as[Option[Seq[String]]]
+      .collect().headOption.flatten.getOrElse(Nil).distinct.sorted
     val header = spark.createDataset(Seq(keys.mkString("\t"))).toDF("line")
     val rows = flat.select(
       concat_ws("\t", keys.map(k => coalesce(col("fields").getItem(k), lit(""))): _*)

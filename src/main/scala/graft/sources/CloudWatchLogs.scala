@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{graft_gunzip, graft_gzip, graft_try_gunzip}
+import graft.functions.graft_gzip
 
 /** CloudWatch Logs subscription payload model.
   *
@@ -14,6 +14,12 @@ import graft.functions.{graft_gunzip, graft_gzip, graft_try_gunzip}
   * extractedFields}]}`. The reference consumes exactly this shape
   * (reference: kinesis_logs_reader/kinesis_logs_reader.py:88-97,
   * tests/test_kinesis_logs_reader.py:36-46).
+  *
+  * Decoding lives in [[graft.functions.CwlEvents]]: one generator that
+  * gunzips, parses, drops non-DATA payloads and explodes `logEvents`.
+  * It falls back to `from_json(gunzip(data).cast("string"),
+  * payloadSchema)` for any record its fast path does not accept, so
+  * [[payloadSchema]] defines what a payload decodes to.
   */
 object CloudWatchLogs {
   val DataMessage = "DATA_MESSAGE"
@@ -33,23 +39,8 @@ object CloudWatchLogs {
     StructField("subscriptionFilters", ArrayType(StringType)),
     StructField("logEvents", ArrayType(logEventSchema))))
 
-  /** Decode one gzipped payload column into the typed payload struct.
-    * Narrow (per-row) transform: parallel over source partitions, no
-    * shuffle — the 100 TB path is scan → gunzip → parse → filter,
-    * all inside whole-stage codegen.
-    */
-  def decodePayload(data: Column): Column =
-    from_json(graft_gunzip(data).cast("string"), payloadSchema)
-
-  /** Like [[decodePayload]] but corrupt gzip records decode to NULL
-    * (and are then dropped by the DATA_MESSAGE filter) instead of
-    * failing the job.
-    */
-  def decodePayloadPermissive(data: Column): Column =
-    from_json(graft_try_gunzip(data).cast("string"), payloadSchema)
-
   /** Build a payload struct (for tests / roundtrips / sinks); the
-    * inverse of [[decodePayload]]. Mirrors the reference test
+    * inverse of [[graft.functions.CwlEvents]]. Mirrors the reference test
     * fixtures' `_data_message` (tests/test_kinesis_logs_reader.py:36-42).
     */
   def encodePayload(messageType: Column, logEvents: Column): Column =

@@ -2357,20 +2357,9 @@ object ParquetLake {
     val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "deleteManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
-    // which files hold a matching row? One pushed-down scan, file names
-    // only — the same bounded-collect class as the manifest listing
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val snapshot = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
-    val affected = snapshot
-      .where(predicate)
-      .select(input_file_name().as("f")).distinct()
-      .collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath.stripPrefix(rootPath).stripPrefix("/"))
-      .toSeq.sorted
+    val affected = affectedFiles(fs, root, snapshot, current, predicate, "delete")
     if (affected.isEmpty) return currentVersion
-    val unknown = affected.filterNot(current.contains)
-    require(unknown.isEmpty,
-      s"delete probe returned files outside the snapshot: ${unknown.take(3).mkString(",")}")
     // grouped rewrite: keep the non-matching rows — ONE distributed
     // job per partition scheme over every affected file (see
     // [[cowRewriteGrouped]]), with partition values flowing directory
@@ -2384,6 +2373,28 @@ object ParquetLake {
       spark, path, snapshot.schema, affected, "delete_")(_.where(!predicate))
     commitManifest(spark, path,
       current.filterNot(affected.contains) ++ rewritten, Some(currentVersion))
+  }
+
+  /** The lake-relative, sorted names of the `current` snapshot files
+    * holding a row that matches `predicate`: one pushed-down scan of
+    * `snapshot`, file names only — the same bounded-collect class as
+    * the manifest listing. A name outside `current` fails the `op`
+    * ("delete"/"update") probe.
+    */
+  private def affectedFiles(
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      snapshot: DataFrame, current: Seq[String], predicate: Column, op: String): Seq[String] = {
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    val affected = snapshot
+      .where(predicate)
+      .select(input_file_name().as("f")).distinct()
+      .collect()
+      .map(r => new java.net.URI(r.getString(0)).getPath.stripPrefix(rootPath).stripPrefix("/"))
+      .toSeq.sorted
+    val unknown = affected.filterNot(current.contains)
+    require(unknown.isEmpty,
+      s"$op probe returned files outside the snapshot: ${unknown.take(3).mkString(",")}")
+    affected
   }
 
   /** UPDATE … SET for the manifested lake: copy-on-write at the FILE
@@ -2424,21 +2435,12 @@ object ParquetLake {
     val currentVersion = headVersion(fs, root, path)
     requireNoPendingDv(spark, path, currentVersion, "updateManifested")
     val current = readManifest(spark, path, Some(currentVersion)).get
-    val rootPath = fs.makeQualified(root).toUri.getPath
     val snapshot = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
     val unknownCols = set.keySet -- snapshot.columns.toSet
     require(unknownCols.isEmpty,
       s"SET columns missing from the lake schema: ${unknownCols.mkString(",")}")
-    val affected = snapshot
-      .where(predicate)
-      .select(input_file_name().as("f")).distinct()
-      .collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath.stripPrefix(rootPath).stripPrefix("/"))
-      .toSeq.sorted
+    val affected = affectedFiles(fs, root, snapshot, current, predicate, "update")
     if (affected.isEmpty) return currentVersion
-    val unknown = affected.filterNot(current.contains)
-    require(unknown.isEmpty,
-      s"update probe returned files outside the snapshot: ${unknown.take(3).mkString(",")}")
     val affectedPartCols = affected
       .flatMap(partitionDirOf(_).map(_.takeWhile(_ != '='))).toSet
     val illegal = set.keySet.intersect(affectedPartCols)

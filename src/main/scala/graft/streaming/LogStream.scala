@@ -17,13 +17,14 @@ import org.apache.spark.sql.types.StructType
   */
 object LogStream {
 
-  /** The strict decode → filter → explode → select chain of
-    * [[graft.operators.Reader.readLogs]], which it calls without a
-    * start time or a take-N (a global sort/limit is not stream
-    * semantics; use watermarks + windows).
+  /** The fused decode of [[graft.operators.Reader.readLogs]], which it
+    * calls without a start time or a take-N (a global sort/limit is not
+    * stream semantics; use watermarks + windows). `permissive` is
+    * readLogs's: corrupt gzip records are dropped instead of failing
+    * the micro-batch, and with it the query.
     */
-  def parse(records: DataFrame, dataCol: String = "data"): DataFrame =
-    graft.operators.Reader.readLogs(records, dataCol)
+  def parse(records: DataFrame, dataCol: String = "data", permissive: Boolean = false): DataFrame =
+    graft.operators.Reader.readLogs(records, dataCol, permissive = permissive)
 
   /** Event-time tumbling-window counts with a watermark bounding
     * state retention.

@@ -109,9 +109,11 @@ class PlanAssertSpec extends SparkSpec {
 
   test("r1: the payload is decoded at exactly one site") {
     val p = plan("r1_cwl_parse")
-    // the Opaque fence pins gunzip+from_json to a single Project; a
-    // second occurrence means project-collapse re-inlined the decode
-    assert("gunzip".r.findAllIn(p.toLowerCase).length === 1, p.take(4000))
+    // one CwlEvents generator gunzips, parses, filters and explodes; a
+    // second occurrence means the decode was duplicated. r1 reads only
+    // timestamp_ms and fields, so the generator fills only those
+    assert("graft_cwl_events".r.findAllIn(p).length === 1, p.take(4000))
+    assert(p.contains("keep=[timestamp_ms,fields]"), p.take(4000))
   }
 
   test("s1: top-k uses the bounded-heap aggregate, not a global sort of scores") {

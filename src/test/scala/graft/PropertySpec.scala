@@ -55,4 +55,128 @@ class PropertySpec extends SparkSpec {
       assert(distributed === driver, s"case $c: nEdges=$nEdges")
     }
   }
+
+  test("CwlEvents equals the from_json chain under every keep mask, strict and permissive") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.graftshim.ColumnShim
+    import graft.functions.{CwlEvents, Gzip, graft_gunzip, graft_try_gunzip, opaque}
+    import graft.sources.CloudWatchLogs
+
+    // JSON fragments: raw non-ASCII (é, CJK, a surrogate pair, U+2028),
+    // escapes of the same, a lone surrogate escape and control escapes
+    val str = Gen.oneOf("\"\"", "\"plain\"", "\"tab\\tnl\\n\"", "\"q\\\" b\\\\\"",
+      "\"\u00e9\u65e5\u672c\"", "\"\uD83D\uDE00\"", "\"\u2028\"", "\"\\u2028\\ud83d\\ude00\"",
+      "\"\\ud800\"", "\"\\u0000\"")
+    val oddValues = Seq("5", "-1.5", "true", "{}", "[]", "[\"a\"]", "{\"k\":[1,{}]}", "\"x\"")
+    val odd = Gen.oneOf(oddValues)
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    // a field: well typed, null or missing; when it is the payload's
+    // `noisy` target also mistyped or duplicated, which the fast path
+    // hands to the chain
+    def field(k: String, good: Gen[String], noisy: String, bad: Gen[String] = odd) = {
+      val w = if (noisy == k) 8 else 0
+      Gen.frequency(14 -> good.map(v => Seq(k -> v)), 1 -> Gen.const(Seq(k -> "null")),
+        1 -> Gen.const(Seq.empty[(String, String)]), w -> bad.map(v => Seq(k -> v)),
+        w -> Gen.zip(good, good).map { case (a, b) => Seq(k -> a, k -> b) })
+    }
+    // objects carry an unknown field now and then, and are shuffled
+    def shuffled(parts: Seq[Gen[Seq[(String, String)]]]): Gen[String] =
+      Gen.sequence[Seq[Seq[(String, String)]], Seq[(String, String)]](parts :+
+        Gen.frequency(4 -> Gen.const(Seq.empty), 1 -> odd.map(v => Seq("MessageType" -> v))))
+        .flatMap(fs => Gen.long.map(seed => obj(new scala.util.Random(seed).shuffle(fs).flatten)))
+    def payload(noisy: String): Gen[String] = {
+      def w(k: String) = if (noisy == k) 8 else 0
+      val ts = Gen.choose(0L, 2000000000000L).map(_.toString)
+      val badTs = Gen.oneOf("9223372036854775808", "1e3", "-1.5", "\"12\"", "true")
+      val value = Gen.frequency(6 -> str, 1 -> Gen.const("null"), w("value") -> odd)
+      val fields = Gen.listOfN(3, Gen.zip(Gen.oneOf("a", "b", "\u00e9", "a"), value)).map(obj)
+      val event = Gen.frequency(10 -> shuffled(Seq(field("id", str, noisy),
+        field("timestamp", ts, noisy, badTs), field("message", str, noisy),
+        field("extractedFields", fields, noisy))), 1 -> Gen.const("null"), w("event") -> odd)
+      val events = Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 4)).flatMap(Gen.listOfN(_, event)).map(_.mkString("[", ",", "]"))
+      val messageType = Gen.frequency(8 -> Gen.const("\"DATA_MESSAGE\""),
+        2 -> Gen.const("\"CONTROL_MESSAGE\""), 1 -> Gen.const("\"data_message\""))
+      val filters = Gen.listOf(Gen.frequency(5 -> str, w("filter") -> odd)).map(_.mkString("[", ",", "]"))
+      shuffled(Seq(field("messageType", messageType, noisy), field("owner", str, noisy),
+        field("logGroup", str, noisy), field("logStream", str, noisy),
+        field("subscriptionFilters", filters, noisy), field("logEvents", events, noisy)))
+    }
+    val noisy = Gen.frequency(2 -> Gen.const(""), 3 -> Gen.oneOf("messageType", "owner", "logGroup",
+      "logStream", "subscriptionFilters", "filter", "logEvents", "event", "id", "timestamp",
+      "message", "extractedFields", "value"))
+    def gz(s: String): Array[Byte] = Gzip.gzip(s.getBytes("UTF-8"))
+    // record mutations: truncated gzip, not gzip, gzip of non-JSON or of
+    // an empty text, trailing text, a single-quoted key, a raw invalid
+    // UTF-8 byte
+    val record: Gen[Array[Byte]] = noisy.flatMap(payload).flatMap(p => Gen.frequency(
+      24 -> Gen.const(gz(p)),
+      1 -> Gen.choose(1, 30).map(n => gz(p).take(math.max(1, gz(p).length - n))),
+      1 -> Gen.const(p.getBytes("UTF-8")),
+      1 -> Gen.const(gz("not json <html>")), 1 -> Gen.const(gz("")),
+      1 -> Gen.const(gz(p + " trailing")), 1 -> Gen.const(gz(p.replaceFirst("\"owner\"", "'owner'"))),
+      1 -> Gen.const(Gzip.gzip(p.getBytes("UTF-8").map(b => if (b == 'q'.toByte) 0xff.toByte else b)))))
+    val records = Gen.choose(1, 6).flatMap(Gen.listOfN(_, record))
+
+    val names = CwlEvents.Schema.fieldNames.toSeq
+    // map<string,string> as (keys, values): duplicate keys stay visible
+    def normMap(c: Column): Column = when(c.isNotNull, struct(map_keys(c), map_values(c)))
+    def rowsOf(df: DataFrame): Either[String, Seq[Seq[Any]]] =
+      try Right(df.collect().toSeq.map(_.toSeq))
+      catch { case e: Exception => Left(e.getClass.getSimpleName) }
+
+    def check(recs: Seq[Array[Byte]], permissive: Boolean): Prop = {
+      val df = recs.zipWithIndex.map(_.swap).toDF("i", "data").repartition(1)
+      val dec = if (permissive) graft_try_gunzip(col("data")) else graft_gunzip(col("data"))
+      val chain = df
+        .withColumn("_p", opaque(from_json(dec.cast("string"), CloudWatchLogs.payloadSchema)))
+        .where(col("_p.messageType") === CloudWatchLogs.DataMessage)
+        .select(explode(col("_p.logEvents")).as("e"))
+        .select(col("e.id"), col("e.timestamp"), col("e.message"), normMap(col("e.extractedFields")))
+      val fused = (0 to CwlEvents.All).map { k =>
+        df.select(ColumnShim.column(CwlEvents(ColumnShim.expression(col("data")), permissive, k)))
+          .select((lit(k) +: names.take(3).map(col)) :+ normMap(col("fields")): _*)
+      }.reduce(_ unionAll _)
+      (rowsOf(chain), rowsOf(fused)) match {
+        case (Left(_), Left(_)) => Prop.passed
+        case (Right(want), Right(got)) =>
+          Prop.all((0 to CwlEvents.All).map { k =>
+            val mine = got.filter(_.head == k).map(_.tail)
+            val masked = want.map(_.zipWithIndex.map { case (v, j) => if ((k & (1 << j)) != 0) v else null })
+            Prop(mine == masked) :| s"keep=$k permissive=$permissive got=$mine want=$masked"
+          }: _*)
+        case (a, b) => Prop.falsified :| s"permissive=$permissive chain=$a fused=$b"
+      }
+    }
+    // each anomaly alone in an otherwise well-formed DATA payload
+    val ev = Seq("id" -> "\"e1\"", "timestamp" -> "17", "message" -> "\"m\"",
+      "extractedFields" -> "{\"a\":\"1\",\"b\":null,\"a\":\"2\"}")
+    def data(top: Seq[(String, String)] = Seq.empty, e: Seq[(String, String)] = ev,
+        events: String => String = e => s"[$e,null]"): String =
+      obj(Seq("messageType" -> "\"DATA_MESSAGE\"", "owner" -> "\"o\"", "logEvents" -> events(obj(e))) ++ top)
+    val alone = Seq(data(), data(events = _ => "[]"), data(events = _ => "null")) ++
+      (Seq("9223372036854775808", "1e3", "\"12\"") ++ oddValues).map(v => data(e = ev.updated(1, "timestamp" -> v))) ++
+      Seq(0, 2, 3).flatMap(j => oddValues.map(v => data(e = ev.updated(j, ev(j)._1 -> v)))) ++
+      Seq("messageType", "owner", "logGroup", "logStream", "subscriptionFilters", "logEvents")
+        .flatMap(k => oddValues.map(v => data(top = Seq(k -> v)))) ++
+      oddValues.flatMap(v => Seq(data(e = ev.updated(3, "extractedFields" -> s"{\"a\":$v}")),
+        data(events = e => s"[$e,$v]"), data(top = Seq("subscriptionFilters" -> s"[\"f\",$v]")))) ++
+      Seq(data(e = ev :+ ("id" -> "\"e2\"")), data(e = ev :+ ("message" -> "null")),
+        data(top = Seq("messageType" -> "\"CONTROL_MESSAGE\"")), data(top = Seq("logEvents" -> "[]")),
+        data(top = Seq("MessageType" -> "5", "extra" -> "{\"logEvents\":[1]}")))
+    Seq(true, false).foreach { permissive =>
+      val r = check(alone.map(gz), permissive)(Gen.Parameters.default)
+      assert(r.success, r.labels.mkString("; "))
+    }
+
+    val prop = Prop.forAllNoShrink(records) { recs =>
+      (check(recs, permissive = true) && check(recs, permissive = false)) :|
+        recs.map(r => new String(r.take(300).map(b => if (b >= 32 && b < 127) b else '.'.toByte), "ISO-8859-1")).mkString(" | ")
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(80).withWorkers(1).withInitialSeed(Seed(2018L)), prop)
+    assert(res.passed, res.status)
+  }
 }

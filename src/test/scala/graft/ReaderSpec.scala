@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Reader, Tsv}
@@ -84,5 +87,76 @@ class ReaderSpec extends SparkSpec {
     val junk = Seq("not json at all").toDF("s")
       .select(graft.functions.graft_gzip($"s".cast("binary")).as("data"))
     assert(Reader.readLogs(junk).count() === 0)
+  }
+
+  test("tsv header takes the first row's keys only (reference __main__.py peeks one row)") {
+    // one record, two events with different key sets: b only in the
+    // first, c only in the second
+    val rec = Seq(1).toDF("x").select(CloudWatchLogs.encodePayload(
+      lit(CloudWatchLogs.DataMessage),
+      array(
+        struct(lit("e1").as("id"), lit(1L).as("timestamp"), lit("").as("message"),
+          map(lit("b"), lit("2"), lit("a"), lit("1")).as("extractedFields")),
+        struct(lit("e2").as("id"), lit(2L).as("timestamp"), lit("").as("message"),
+          map(lit("a"), lit("3"), lit("c"), lit("4")).as("extractedFields")))).as("data"))
+    val lines = Tsv.render(Reader.readLogs(rec)).as[String].collect()
+    assert(lines.head === "a\tb")
+    assert(lines.tail.sorted.toSeq === Seq("1\t2", "3\t"))
+  }
+
+  test("strict mode fails on a truncated gzip whose text breaks JSON first; permissive drops it") {
+    val html = graft.functions.Gzip.gzip(("<html>" + "x" * 4000 + "</html>").getBytes("UTF-8"))
+    val bad = Seq(html.take(html.length * 3 / 5)).toDF("data")
+    val mixed = fixtureRecords.select($"data").unionAll(bad)
+    intercept[Exception](Reader.readLogs(mixed).count())
+    assert(Reader.readLogs(mixed, permissive = true).count() === 6)
+  }
+
+  test("plan: the fused decode fills only the columns each consumer reads") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.functions.CwlEvents
+    import graft.sources.FlowLogs
+    def kept(df: DataFrame): Seq[Seq[String]] = df.queryExecution.optimizedPlan.collect {
+      case Generate(c: CwlEvents, _, _, _, _, _) => c.kept
+    }
+    val flat = Reader.readLogs(fixtureRecords, permissive = true)
+    // the perfbench typed write's select
+    val typed = flat.select(col("log_id"), col("timestamp_ms"),
+      FlowLogs.parseLine(col("message")).as("f")).select("log_id", "timestamp_ms", "f.*")
+    assert(kept(typed) === Seq(Seq("log_id", "timestamp_ms", "message")))
+    assert(kept(Tsv.render(flat)) === Seq(Seq("fields")))
+    assert(kept(flat.groupBy().count()) === Seq(Seq.empty))
+    assert(kept(flat) === Seq(CwlEvents.Schema.fieldNames.toSeq))
+    // a filter, sort or dedupe column stays filled
+    assert(kept(flat.where(col("timestamp_ms") > 0).select("log_id")) === Seq(Seq("log_id", "timestamp_ms")))
+    assert(kept(Reader.readLogs(fixtureRecords, takeN = Some(2)).select("message")) ===
+      Seq(Seq("log_id", "timestamp_ms", "message")))
+    assert(kept(flat.dropDuplicates("log_id").select("message")) === Seq(Seq("log_id", "message")))
+    // a union reads its children's columns by position
+    assert(kept(flat.unionAll(flat)) === Seq.fill(2)(CwlEvents.Schema.fieldNames.toSeq))
+    assert(kept(flat.unionAll(flat).select("log_id")) === Seq.fill(2)(Seq("log_id")))
+
+    // a session built without GraftExtensions decodes every column and
+    // returns the same rows
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    try {
+      val plain = SparkSession.builder().getOrCreate()
+      assert(plain ne spark)
+      val recs = plain.createDataFrame(fixtureRecords.select("data").collect().toSeq.asJava,
+        fixtureRecords.select("data").schema)
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val bare = Reader.readLogs(recs).select(col("log_id"), col("fields")("srcport"))
+      assert(kept(bare) === Seq(CwlEvents.Schema.fieldNames.toSeq))
+      assert(rows(bare) === rows(Reader.readLogs(fixtureRecords).select(col("log_id"), col("fields")("srcport"))))
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
   }
 }

@@ -67,6 +67,28 @@ class StreamingSpec extends SparkSpec {
     assert(n === events(spark, sf).count())
   }
 
+  test("st1b: a truncated-gzip record — permissive parse commits every good event once, strict fails") {
+    val dir = Files.createTempDirectory("graft_stream_bad").toString
+    val good = spark.read.parquet(payloadDir)
+    // a DATA payload cut at 3/5 of its gzip bytes
+    val cut = good.limit(1).select(expr("substring(data, 1, int(length(data) * 3 / 5))").as("data"))
+    good.unionAll(cut).repartition(3).write.mode("overwrite").parquet(dir)
+    def run(permissive: Boolean, name: String): Unit = {
+      val stream = spark.readStream
+        .schema(StructType(Seq(StructField("data", BinaryType))))
+        .parquet(dir)
+      val q = LogStream.parse(stream, permissive = permissive).writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run(permissive = true, "st1b_out")
+    val out = spark.table("st1b_out")
+    val n = events(spark, sf).count()
+    assert(out.count() === n)
+    assert(out.select("log_id").distinct().count() === n)
+    intercept[Exception](run(permissive = false, "st1b_strict"))
+  }
+
   test("st2: watermarked tumbling-window counts match batch grouping") {
     val stream = spark.readStream
       .schema(StructType(Seq(StructField("data", BinaryType))))
