@@ -52,35 +52,27 @@ object GraftSession {
     }
   }
 
-  /** Local-mode builder with scale-appropriate defaults (AQE on,
-    * shuffle partitions sized to cores, UTC) and [[GraftExtensions]].
-    *
-    * `rocksdbStateStore = true` swaps streaming state onto Spark's
-    * RocksDB provider: the default HDFSBackedStateStoreProvider holds
-    * every key's state in executor heap, so the stateful operators
-    * (sessionization st3/st8/st18, stream-stream joins st6/st17,
-    * dedup-with-history st13) are memory-bounded by ACTIVE KEYSPACE —
-    * at 100 TB / hundreds of millions of live keys that's an OOM, not
-    * a tuning problem. RocksDB keeps state off-heap on local disk
-    * with incremental checkpointing; flag-gated because local tests
-    * and small keyspaces don't want the native-lib + disk overhead.
-    */
-  def builder(
-      cores: Int = Runtime.getRuntime.availableProcessors(),
-      rocksdbStateStore: Boolean = false): SparkSession.Builder = {
-    val b = baseBuilder(cores)
-    if (rocksdbStateStore)
-      b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    else b
-  }
-
   /** FQCN of Spark's RocksDB state store provider (public API,
     * spelled out for runtime `spark.conf.set` scoping too).
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private def baseBuilder(cores: Int): SparkSession.Builder =
+  /** Local-mode builder with scale-appropriate defaults (AQE on,
+    * shuffle partitions sized to cores, UTC) and [[GraftExtensions]].
+    *
+    * Streaming state stays on Spark's default
+    * HDFSBackedStateStoreProvider, which holds every key's state in
+    * executor heap: the stateful operators (sessionization
+    * st3/st8/st18, stream-stream joins st6/st17, dedup-with-history
+    * st13) are memory-bounded by ACTIVE KEYSPACE — at 100 TB / hundreds
+    * of millions of live keys that's an OOM, not a tuning problem. Set
+    * `spark.sql.streaming.stateStore.providerClass` to
+    * [[RocksDbProvider]] (on the builder, or per query through
+    * `spark.conf`) to keep state off-heap on local disk with
+    * incremental checkpointing.
+    */
+  def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cores]")

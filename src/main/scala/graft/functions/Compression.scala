@@ -30,12 +30,13 @@ object Gzip {
   @throws(classOf[java.io.IOException])
   def gunzip(gz: Array[Byte]): Array[Byte] = {
     val in = new GZIPInputStream(new ByteArrayInputStream(gz), 8192)
-    val bos = new ByteArrayOutputStream(math.max(gz.length * 4, 64))
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-    in.close()
-    bos.toByteArray
+    try {
+      val bos = new ByteArrayOutputStream(math.max(gz.length * 4, 64))
+      val buf = new Array[Byte](8192)
+      var n = in.read(buf)
+      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
+      bos.toByteArray
+    } finally in.close() // a corrupt record must not leave its Inflater to the GC
   }
 }
 

@@ -46,7 +46,7 @@ object ConnectedComponents {
     runWithStats(edges, maxIter).labels
 
   /** Driver-side union-find for the small-graph fast path: a dup
-    * graph of < `smallCutoff` edges is a few MB at most — the same
+    * graph of < `SmallCutoff` edges is a few MB at most — the same
     * bounded-data class as a broadcast side — and the distributed
     * fixpoint's per-round job overhead (measured ~1s for a 256-edge
     * graph) dwarfs a millisecond driver pass. Path-compressed,
@@ -104,12 +104,19 @@ object ConnectedComponents {
       sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
       sum(xxhash64(col("v"), col("u"), lit(0x9e3779b9L)).cast("decimal(38,0)"))).head().toSeq
 
-  /** `smallCutoff`: graphs under this edge count run as a driver
-    * union-find instead of distributed rounds (0 forces the
-    * distributed path — used by specs to exercise it on small data).
-    */
-  def runWithStats(
-      edges: DataFrame, maxIter: Int = 50, smallCutoff: Long = 100000L): Stats = {
+  /** Graphs under this many canonical edges run as a driver union-find
+    * instead of distributed rounds. */
+  private val SmallCutoff = 100000L
+
+  def runWithStats(edges: DataFrame, maxIter: Int = 50): Stats =
+    solve(edges, maxIter, SmallCutoff)
+
+  /** [[runWithStats]] forced onto the distributed star rounds, whatever
+    * the graph size. */
+  private[graft] def runWithStatsDistributed(edges: DataFrame, maxIter: Int = 50): Stats =
+    solve(edges, maxIter, smallCutoff = 0L)
+
+  private def solve(edges: DataFrame, maxIter: Int, smallCutoff: Long): Stats = {
     // materialize the input edge list once: it feeds the node set,
     // the canonical edge set, and (for callers like d7) is usually an
     // expensive pipeline — without this leaf each consumer re-derives

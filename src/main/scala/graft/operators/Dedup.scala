@@ -944,8 +944,7 @@ object Dedup {
       .localCheckpoint(eager = true)
     val a = e.select(
       col("id").as("id_a"), col("v").as("v_a"), col("n2").as("n2_a"),
-      explode(array(col("bucket") +: (0 until numPlanes).map(i =>
-        col("bucket").bitwiseXOR(lit(1 << i))): _*)).as("bkt"))
+      Similarity.multiprobe(col("bucket"), numPlanes).as("bkt"))
     val b = e.select(
       col("id").as("id_b"), col("v").as("v_b"), col("n2").as("n2_b"),
       col("bucket").as("bkt"))

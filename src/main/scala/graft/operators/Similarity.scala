@@ -18,24 +18,41 @@ object Similarity {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Shared guard telemetry for the quadratic truth legs (s9/s17).
-    * With a cap: WARN only when the PRE-cap sample actually exceeded
-    * `maxQueries` — `nQ == maxQueries` alone can be a coincidence (the
-    * sample landing exactly on the cap without it binding). Without
-    * one: WARN when the sampled query count is large enough that the
-    * |q| × N exact-truth leg is a scale hazard — the cap default is
-    * OFF so existing callers' recall never re-bases silently, and this
-    * is the tripwire that makes the quadratic cost visible instead.
+  /** The quadratic truth legs' query set (s9/s17), checkpointed, and
+    * its size: a deterministic md5-bucket sample of `samplePct` percent
+    * of the corpus as (q_id, q_vec), cut to the `maxQueries` lowest-md5
+    * ids when > 0. WARNs when the cap binds (the pre-cap count, a
+    * corpus scan, runs only when the set filled to the cap) and,
+    * uncapped, when the |q| × N truth leg is a scale hazard: the cap
+    * defaults OFF so callers' recall never re-bases silently, and this
+    * tripwire makes the quadratic cost visible instead.
     */
-  private def truthLegGuardWarn(
-      op: String, maxQueries: Int, nQ: Long, preCap: Long): Unit =
+  private def sampledQueries(
+      op: String, corpus: DataFrame, vecCol: String, idCol: String,
+      samplePct: Int, maxQueries: Int): (DataFrame, Long) = {
+    val q0 = corpus.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
+    val q1 = if (samplePct >= 100) q0
+      else q0.where(
+        conv(substring(md5(col("q_id").cast("string")), 1, 7), 16, 10)
+          .cast("long") % 100 < samplePct)
+    val q = (if (maxQueries > 0)
+        q1.orderBy(
+          conv(substring(md5(col("q_id").cast("string")), 1, 13), 16, 10)
+            .cast("long").asc, col("q_id").asc)
+          .limit(maxQueries).select("q_id", "q_vec")
+      else q1)
+      .localCheckpoint(eager = true) // read by every leg and the count
+    val nQ = q.count()
     if (maxQueries > 0) {
+      val preCap = if (nQ == maxQueries) q1.count() else nQ
       if (preCap > maxQueries)
         log.warn(s"$op maxQueries=$maxQueries bound the sampled query set " +
           s"($preCap sampled) — recall is estimated on the capped subset")
     } else if (nQ > 4096)
       log.warn(s"$op maxQueries=0: the exact truth leg scores $nQ queries " +
         "against the full corpus (quadratic at scale) — set maxQueries to cap it")
+    (q, nQ)
+  }
 
   /** Exact top-k cosine neighbors for each query vector.
     * `queries`: (q_id, q_vec). Self-matches (same id) are excluded.
@@ -44,10 +61,7 @@ object Similarity {
       corpus: DataFrame, vecCol: String, idCol: String,
       queries: DataFrame, k: Int): DataFrame = {
     val data = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val scored = data.crossJoin(broadcast(queries))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
+    exactTopK(data.crossJoin(broadcast(queries)), k)
   }
 
   /** Metadata-FILTERED exact kNN — "nearest neighbors among rows
@@ -107,19 +121,37 @@ object Similarity {
         round(cosine(col("q_vec"), col("n_vec")), 4).as("cos_sim"))
       .where(col("cos_sim") >= minCos)
 
-  /** Per-query top-k via the graft_topk bounded-heap aggregate:
-    * partial aggregation keeps ≤ k rows per (partition, query) before
-    * the shuffle — the scored set never moves, unlike a window sort.
-    */
-  private def topKOut(scored: DataFrame, k: Int): DataFrame =
+  /** Top-k per `keys` by the `score` column via the graft_topk
+    * bounded-heap aggregate: ≤ k rows per (partition, key) cross the
+    * shuffle — the scored set never moves, unlike a window sort.
+    * Emits (…keys, rank, neighbor_id, `out` over the heap entry `e`). */
+  private def rankTopK(
+      scored: DataFrame, score: String, k: Int, keys: Seq[String], out: Column): DataFrame = {
+    val ks = keys.map(col)
     scored
-      .groupBy("q_id")
-      .agg(topk(col("cos_exact"), col("n_id"), k).as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"),
-        round(col("e.score"), 4).as("cos_sim"))
+      .groupBy(ks: _*)
+      .agg(topk(col(score), col("n_id"), k).as("tk"))
+      .select(ks :+ posexplode(col("tk")).as(Seq("pos", "e")): _*)
+      .select(ks ++ Seq(
+        (col("pos") + 1).cast("long").as("rank"),
+        col("e.id").as("neighbor_id"), out): _*)
+  }
+
+  /** Cosine top-k of scored rows (…keys, cos_exact, n_id), emitted as
+    * (…keys, rank, neighbor_id, cos_sim) with 4-dp scores. */
+  private def topKOut(scored: DataFrame, k: Int, keys: Seq[String] = Seq("q_id")): DataFrame =
+    rankTopK(scored, "cos_exact", k, keys, round(col("e.score"), 4).as("cos_sim"))
+
+  /** Exact-cosine kNN over candidate pairs (…keys, q_vec, n_id,
+    * n_vec): self matches dropped, every pair scored by the cosine
+    * kernel, then [[topKOut]]. */
+  private[graft] def exactTopK(
+      pairs: DataFrame, k: Int, keys: Seq[String] = Seq("q_id")): DataFrame =
+    topKOut(pairs
+      .where(col("n_id") =!= col("q_id"))
+      .select(keys.map(col) ++ Seq(
+        cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id")): _*),
+      k, keys)
 
   /** s15: MMR diversified top-k re-rank (Carbonell & Goldstein 1998)
     * — retrieve-then-diversify: plain kNN happily returns k
@@ -237,24 +269,7 @@ object Similarity {
     if (nprobes.isEmpty)
       return Seq.empty[(Long, Long, Long, Double, Double)]
         .toDF("nprobe", "n_q", "n_hits", "recall", "scored_fraction")
-    val q0 = corpus.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val q1 = if (samplePct >= 100) q0
-      else q0.where(
-        conv(substring(md5(col("q_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < samplePct)
-    val q = (if (maxQueries > 0)
-        q1.orderBy(
-          conv(substring(md5(col("q_id").cast("string")), 1, 13), 16, 10)
-            .cast("long").asc, col("q_id").asc)
-          .limit(maxQueries).select("q_id", "q_vec")
-      else q1)
-      .localCheckpoint(eager = true)
-    val nQ = q.count()
-    // the limit can only have bound when it filled exactly to the cap,
-    // so preCap (needed only to label the WARN) costs its corpus-scan
-    // count job in that case alone — every non-binding run skips it
-    truthLegGuardWarn("nprobeSweep", maxQueries, nQ,
-      preCap = if (maxQueries > 0 && nQ == maxQueries) q1.count() else nQ)
+    val (q, nQ) = sampledQueries("nprobeSweep", corpus, vecCol, idCol, samplePct, maxQueries)
     val index = ivfIndexBuild(corpus, vecCol, idCol, nlist, lloydIters)
     // NOT checkpointed: the fused sweep consumes each index half
     // exactly once (centroids by the probe ranking, cells by the
@@ -275,11 +290,7 @@ object Similarity {
     // one scoring pass and one aggregate, all under the caller's action.
     val effNps = nprobes.map(np => math.min(np, nlist))
     val maxNp = effNps.max
-    val probes = q.crossJoin(broadcast(index.centroids))
-      .withColumn("qc_sim", cosine(col("q_vec"), col("c_vec")))
-      .groupBy("q_id")
-      .agg(topk(col("qc_sim"), col("c_id"), maxNp).as("tk"),
-        first(col("q_vec")).as("q_vec"))
+    val probes = ivfProbeLists(q, index.centroids, maxNp)
       .select(col("q_id"), col("q_vec"), posexplode(col("tk")).as(Seq("pos", "e")))
       .select(col("e.id").as("c_id"), col("q_id"), col("q_vec"),
         (col("pos") + 1).as("rk"))
@@ -363,20 +374,7 @@ object Similarity {
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
       samplePct: Int = 100, numPlanes: Int = 4, dim: Int = 64,
       maxQueries: Int = 0): DataFrame = {
-    val q0 = corpus.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val q1 = if (samplePct >= 100) q0
-      else q0.where(
-        conv(substring(md5(col("q_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < samplePct)
-    val q = (if (maxQueries > 0)
-        q1.orderBy(
-          conv(substring(md5(col("q_id").cast("string")), 1, 13), 16, 10)
-            .cast("long").asc, col("q_id").asc)
-          .limit(maxQueries).select("q_id", "q_vec")
-      else q1)
-      .localCheckpoint(eager = true) // feeds truth, approx, and n_q
-    truthLegGuardWarn("annRecallEval", maxQueries, q.count(),
-      preCap = if (maxQueries > 0) q1.count() else -1L)
+    val (q, _) = sampledQueries("annRecallEval", corpus, vecCol, idCol, samplePct, maxQueries)
     // NOT fused into one dual-topk corpus pass (r18 opt-2 A/B): a fused
     // truth+approx aggregate taxes EVERY (query, vector) pair with the
     // bucket test and a second null-skipping heap eval, to save cosines
@@ -413,6 +411,42 @@ object Similarity {
   private def planeCol(plane: Array[Double]): Column =
     array(plane.map(v => lit(v)): _*)
 
+  /** Hamming-1 multiprobe: a bucket and each of its `numPlanes`
+    * single-bit flips, one row each (an explode). */
+  private[graft] def multiprobe(bucket: Column, numPlanes: Int): Column =
+    explode(array(bucket +: (0 until numPlanes).map(b =>
+      bucket.bitwiseXOR(lit(1 << b))): _*))
+
+  /** Buckets holding more than `saltThreshold` rows of `bucketed`, as
+    * `f_bucket`: ≤ N/saltThreshold rows by construction, and in
+    * practice the few clustered hot spots — broadcast-class. */
+  private[graft] def fatBuckets(bucketed: DataFrame, saltThreshold: Int): DataFrame =
+    bucketed.groupBy("bucket").agg(count(lit(1)).as("bn"))
+      .where(col("bn") > saltThreshold)
+      .select(col("bucket").as("f_bucket"))
+
+  /** Salted bucket equi-join of `data` (n_id, …, bucket) and `probes`
+    * (…, probe): rows of a `fat` bucket salt by `n_id mod salts` and its
+    * probes replicate across every salt, so one hot bucket's pair work
+    * spreads over `salts` tasks; each pair still meets exactly once. */
+  private[graft] def saltedBucketJoin(
+      data: DataFrame, probes: DataFrame, fat: DataFrame, salts: Int): DataFrame = {
+    val salted = data
+      .join(broadcast(fat), col("bucket") === col("f_bucket"), "left")
+      .withColumn("d_salt",
+        when(col("f_bucket").isNotNull, pmod(col("n_id"), lit(salts)))
+          .otherwise(lit(0)))
+      .drop("f_bucket")
+    val fanned = probes
+      .join(broadcast(fat), col("probe") === col("f_bucket"), "left")
+      .withColumn("p_salt", explode(
+        when(col("f_bucket").isNotNull, sequence(lit(0), lit(salts - 1)))
+          .otherwise(array(lit(0)))))
+      .drop("f_bucket")
+    salted.join(fanned,
+      col("bucket") === col("probe") && col("d_salt") === col("p_salt"))
+  }
+
   /** LSH bucket signature: bit p = sign of dot(v, plane_p). */
   private[graft] def bucketOf(v: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
@@ -431,13 +465,8 @@ object Similarity {
     // each query probes its own bucket + all single-bit flips
     val probes = queries
       .withColumn("q_bucket", bucketOf(col("q_vec"), planes))
-      .withColumn("probe", explode(array(
-        col("q_bucket") +: (0 until numPlanes).map(b =>
-          col("q_bucket").bitwiseXOR(lit(1 << b))): _*)))
-    val scored = data.join(broadcast(probes), col("bucket") === col("probe"))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
+      .withColumn("probe", multiprobe(col("q_bucket"), numPlanes))
+    exactTopK(data.join(broadcast(probes), col("bucket") === col("probe")), k)
   }
 
   /** All-corpus kNN join: every item's approximate top-k neighbors —
@@ -497,32 +526,10 @@ object Similarity {
     // on each side of the checkpointed base rather than checkpoint a
     // second relation
     val bucketed = e.withColumn("bucket", bucketOf(col("n_vec"), planes))
-    // fat-bucket set: ≤ N/saltThreshold rows by construction, and in
-    // practice the few clustered hot spots — broadcast-class
-    val fat = bucketed.groupBy("bucket").agg(count(lit(1)).as("bn"))
-      .where(col("bn") > saltThreshold)
-      .select(col("bucket").as("f_bucket"))
-    val data = bucketed
-      .join(broadcast(fat), col("bucket") === col("f_bucket"), "left")
-      .withColumn("d_salt",
-        when(col("f_bucket").isNotNull, pmod(col("n_id"), lit(salts)))
-          .otherwise(lit(0)))
-      .drop("f_bucket")
-    val probes = bucketed
-      .select(
-        col("n_id").as("q_id"), col("n_vec").as("q_vec"),
-        explode(array(col("bucket") +: (0 until nP).map(b =>
-          col("bucket").bitwiseXOR(lit(1 << b))): _*)).as("probe"))
-      .join(broadcast(fat), col("probe") === col("f_bucket"), "left")
-      .withColumn("p_salt", explode(
-        when(col("f_bucket").isNotNull, sequence(lit(0), lit(salts - 1)))
-          .otherwise(array(lit(0)))))
-      .drop("f_bucket")
-    val scored = data.join(probes,
-        col("bucket") === col("probe") && col("d_salt") === col("p_salt"))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
+    val probes = bucketed.select(col("n_id").as("q_id"), col("n_vec").as("q_vec"),
+      multiprobe(col("bucket"), nP).as("probe"))
+    exactTopK(saltedBucketJoin(
+      bucketed, probes, fatBuckets(bucketed, saltThreshold), salts), k)
   }
 
   /** Embedding-space label diagnostics: partition the corpus into
@@ -595,25 +602,31 @@ object Similarity {
     * partial buffer per (partition, cell) crosses the shuffle, where
     * the relational posexplode → groupBy(c_id, pos) form shuffled
     * N×dim rows per round. Each round re-materializes the tiny
-    * centroid relation (lazy localCheckpoint) so centroid lineage
+    * centroid relation (eager localCheckpoint) so centroid lineage
     * doesn't compound across iterations. No RNG anywhere → results
     * are cluster-size invariant.
     */
   private[graft] def kmeansCentroids(data: DataFrame, nlist: Int, iters: Int): DataFrame = {
-    var cents = data
+    val seeds = data
       .orderBy(md5(col("n_id").cast("string")), col("n_id")).limit(nlist)
       .select(col("n_id").as("c_id"), col("n_vec").as("c_vec"))
       .localCheckpoint(eager = true)
-    (0 until math.max(0, iters)).foreach { _ =>
-      cents = assignNearest(data, cents)
-        .groupBy("c_id")
-        .agg(vecsum(col("n_vec")).as("s"))
-        .select(col("c_id"),
-          transform(col("s.sum"), x => (x / col("s.n")).cast("float")).as("c_vec"))
+    lloyd(seeds, iters, Seq("c_id"), "n_vec")(assignNearest(data, _))
+  }
+
+  /** `iters` Lloyd rounds from `seeds`, recentering as in
+    * [[kmeansCentroids]]: `assign` maps the centroids to their member
+    * rows, and each (…keys) cell moves to the mean of its members' `vec`. */
+  private def lloyd(seeds: DataFrame, iters: Int, keys: Seq[String], vec: String)(
+      assign: DataFrame => DataFrame): DataFrame =
+    (0 until math.max(0, iters)).foldLeft(seeds) { (cents, _) =>
+      assign(cents)
+        .groupBy(keys.map(col): _*)
+        .agg(vecsum(col(vec)).as("s"))
+        .select(keys.map(col) :+
+          transform(col("s.sum"), x => (x / col("s.n")).cast("float")).as("c_vec"): _*)
         .localCheckpoint(eager = true)
     }
-    cents
-  }
 
   /** (sub, n_id, sv): per-subspace training/encoding relation —
     * materialized once, reused by every Lloyd round and the encode.
@@ -656,18 +669,10 @@ object Similarity {
     val seedIds = data
       .orderBy(md5(col("n_id").cast("string")), col("n_id")).limit(ksub)
       .select(col("n_id").as("c_id"))
-    var cents = subv.join(broadcast(seedIds), col("n_id") === col("c_id"))
+    val seeds = subv.join(broadcast(seedIds), col("n_id") === col("c_id"))
       .select(col("sub"), col("c_id"), col("sv").as("c_vec"))
       .localCheckpoint(eager = true)
-    (0 until math.max(0, lloydIters)).foreach { _ =>
-      cents = pqAssign(subv, cents)
-        .groupBy("sub", "c_id")
-        .agg(vecsum(col("sv")).as("s"))
-        .select(col("sub"), col("c_id"),
-          transform(col("s.sum"), x => (x / col("s.n")).cast("float")).as("c_vec"))
-        .localCheckpoint(eager = true)
-    }
-    cents
+    lloyd(seeds, lloydIters, Seq("sub", "c_id"), "sv")(pqAssign(subv, _))
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product
@@ -698,40 +703,60 @@ object Similarity {
       corpus: DataFrame, vecCol: String, idCol: String,
       queries: DataFrame, k: Int, m: Int = 8, ksub: Int = 16,
       dim: Int = 64, lloydIters: Int = 1, rerankFactor: Int = 4): DataFrame = {
-    import graft.functions.dot
-    val subLen = dim / m
     val data = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val subv = pqSubvectors(data, m, subLen)
+    val subv = pqSubvectors(data, m, dim / m)
     val cents = pqCodebooks(data, subv, ksub, lloydIters)
     // the PQ "index": m codes per corpus vector
     val codes = pqAssign(subv, cents).select("sub", "n_id", "c_id")
-    // ADC lookup table: partial dot + codebook-entry norm per
-    // (query, subspace, code); Q·m·ksub rows — broadcast-class
-    val qsub = queries
+    val adc = adcCosine(codes
+      .join(broadcast(pqLut(queries, cents, m, dim / m)), Seq("sub", "c_id"))
+      .where(col("n_id") =!= col("q_id")))
+    rerankExact(adc, "cos_adc", k * rerankFactor, data, queries, k)
+  }
+
+  /** ADC lookup table: the partial dot `pdot` and codebook-entry
+    * squared norm `cn2` per (query, subspace, code), beside the
+    * query's squared norm `qn2`; Q·m·ksub rows — broadcast-class.
+    * `cents`: (sub, c_id, c_vec). */
+  private def pqLut(queries: DataFrame, cents: DataFrame, m: Int, subLen: Int): DataFrame = {
+    import graft.functions.dot
+    queries
       .select(col("q_id"), col("q_vec"), explode(sequence(lit(0), lit(m - 1))).as("sub"))
       .select(col("q_id"), col("sub"),
         slice(col("q_vec"), col("sub") * subLen + 1, lit(subLen)).as("qv"),
         dot(col("q_vec"), col("q_vec")).as("qn2"))
-    val lut = qsub.join(cents, Seq("sub"))
+      .join(cents, Seq("sub"))
       .select(col("q_id"), col("sub"), col("c_id"),
         dot(col("qv"), col("c_vec")).as("pdot"),
         dot(col("c_vec"), col("c_vec")).as("cn2"),
         col("qn2"))
-    val adc = codes.join(broadcast(lut), Seq("sub", "c_id"))
-      .where(col("n_id") =!= col("q_id"))
-      .groupBy("q_id", "n_id")
+  }
+
+  /** ADC score per (query, vector) from its m code rows matched to
+    * [[pqLut]] rows: the summed partial dots over the query norm and
+    * the composed code norm (|x̂|² = Σ_sub |ĉ_sub|²), as `cos_adc`. */
+  private def adcCosine(matched: DataFrame): DataFrame =
+    matched.groupBy("q_id", "n_id")
       .agg(sum(col("pdot")).as("sdot"), sum(col("cn2")).as("sc2"),
         first(col("qn2")).as("qn2"))
       .withColumn("cos_adc", col("sdot") / (sqrt(col("qn2")) * sqrt(col("sc2"))))
-    val shortlist = adc.groupBy("q_id")
-      .agg(topk(col("cos_adc"), col("n_id"), k * rerankFactor).as("tk"))
+
+  /** Shortlist, then exact rerank (s4/s7/s13): each query's top `keep`
+    * by the approximate `score` (bounded heap), re-scored from the raw
+    * vectors by the exact cosine into [[topKOut]], so quantization
+    * costs only recall. `data`: (n_id, `nVec`); `queries`: (q_id, `qVec`). */
+  private def rerankExact(
+      scored: DataFrame, score: String, keep: Int, data: DataFrame,
+      queries: DataFrame, k: Int,
+      qVec: String = "q_vec", nVec: String = "n_vec"): DataFrame = {
+    val shortlist = scored.groupBy("q_id")
+      .agg(topk(col(score), col("n_id"), keep).as("tk"))
       .select(col("q_id"), explode(col("tk")).as("e"))
       .select(col("q_id"), col("e.id").as("n_id"))
-    val scored = shortlist
+    topKOut(shortlist
       .join(data, Seq("n_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
+      .select(col("q_id"), cosine(col(qVec), col(nVec)).as("cos_exact"), col("n_id")), k)
   }
 
   /** IVF-style ANN: the corpus is partitioned into `nlist` inverted
@@ -775,22 +800,26 @@ object Similarity {
     */
   def ivfKnnWith(
       index: IvfIndex, queries: DataFrame, k: Int,
-      nprobe: Int = 4): DataFrame = {
-    // top-nprobe lists per query via the bounded-heap aggregate
-    // (same tie semantics as the old window: sim desc, c_id asc)
-    val probes = queries.crossJoin(broadcast(index.centroids))
+      nprobe: Int = 4): DataFrame =
+    exactTopK(index.cells.join(
+      broadcast(ivfProbes(queries, index.centroids, nprobe)), Seq("c_id")), k)
+
+  /** Each query's `nprobe` nearest centroids as one bounded-heap list
+    * `tk` (graft_topk order: sim desc, then c_id asc), beside the
+    * query: (q_id, tk, q_vec). */
+  private def ivfProbeLists(queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
+    queries.crossJoin(broadcast(centroids))
       .withColumn("qc_sim", cosine(col("q_vec"), col("c_vec")))
       .groupBy("q_id")
       .agg(
         topk(col("qc_sim"), col("c_id"), nprobe).as("tk"),
         first(col("q_vec")).as("q_vec"))
+
+  /** [[ivfProbeLists]], one row per probed cell: (c_id, q_id, q_vec). */
+  private def ivfProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
+    ivfProbeLists(queries, centroids, nprobe)
       .select(col("q_id"), col("q_vec"), explode(col("tk")).as("e"))
       .select(col("e.id").as("c_id"), col("q_id"), col("q_vec"))
-    val scored = index.cells.join(broadcast(probes), Seq("c_id"))
-      .where(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
-  }
 
   /** Persist an IVF index as two manifested lakes (`<path>/centroids`,
     * `<path>/cells`) — the build-once/serve-many contract a 100 TB
@@ -900,18 +929,10 @@ object Similarity {
         .as("dv"))
     val q = queries.select(col("q_id"),
       transform(col("q_vec"), x => x.cast("double")).as("qv"))
-    val shortlist = dv.crossJoin(broadcast(q))
+    val scored = dv.crossJoin(broadcast(q))
       .where(col("n_id") =!= col("q_id"))
       .select(col("q_id"), cosine(col("qv"), col("dv")).as("c_sq"), col("n_id"))
-      .groupBy("q_id")
-      .agg(topk(col("c_sq"), col("n_id"), k * rerankFactor).as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("e.id").as("n_id"))
-    val rerank = shortlist
-      .join(data, Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), cosine(col("qv"), col("v")).as("cos_exact"), col("n_id"))
-    topKOut(rerank, k)
+    rerankExact(scored, "c_sq", k * rerankFactor, data, q, k, qVec = "qv", nVec = "v")
   }
 
   /** IVF+PQ composite ANN — the FAISS-style index shape an actual
@@ -936,56 +957,27 @@ object Similarity {
       queries: DataFrame, k: Int, nlist: Int = 16, nprobe: Int = 4,
       m: Int = 8, ksub: Int = 16, dim: Int = 64, lloydIters: Int = 1,
       rerankFactor: Int = 4): DataFrame = {
-    import graft.functions.dot
-    val subLen = dim / m
     // reused by the coarse assign, PQ train/encode, and exact rerank
     val data = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .localCheckpoint(eager = true)
     // IVF layer: cells + per-query probe lists (ivfKnn's shapes)
     val coarse = kmeansCentroids(data, nlist, lloydIters)
     val cells = assignNearest(data, coarse).select("c_id", "n_id")
-    val probes = queries.crossJoin(broadcast(coarse))
-      .withColumn("qc_sim", cosine(col("q_vec"), col("c_vec")))
-      .groupBy("q_id")
-      .agg(topk(col("qc_sim"), col("c_id"), nprobe).as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("e"))
-      .select(col("e.id").as("c_id"), col("q_id"))
     // candidate set: corpus vectors in probed cells only
-    val cand = cells.join(broadcast(probes), Seq("c_id"))
+    val cand = cells.join(broadcast(ivfProbes(queries, coarse, nprobe)), Seq("c_id"))
       .where(col("n_id") =!= col("q_id"))
       .select("q_id", "n_id")
     // PQ layer: global per-subspace codebooks, m codes per vector
     // (code id column renamed to avoid colliding with the coarse c_id)
-    val subv = pqSubvectors(data, m, subLen)
+    val subv = pqSubvectors(data, m, dim / m)
     val cents = pqCodebooks(data, subv, ksub, lloydIters)
     val codes = pqAssign(subv, cents)
       .select(col("sub"), col("n_id"), col("c_id").as("code"))
-    val qsub = queries
-      .select(col("q_id"), col("q_vec"), explode(sequence(lit(0), lit(m - 1))).as("sub"))
-      .select(col("q_id"), col("sub"),
-        slice(col("q_vec"), col("sub") * subLen + 1, lit(subLen)).as("qv"),
-        dot(col("q_vec"), col("q_vec")).as("qn2"))
-    val lut = qsub.join(cents, Seq("sub"))
-      .select(col("q_id"), col("sub"), col("c_id").as("code"),
-        dot(col("qv"), col("c_vec")).as("pdot"),
-        dot(col("c_vec"), col("c_vec")).as("cn2"),
-        col("qn2"))
     // ADC restricted to the IVF candidates: cand×m rows, LUT broadcast
-    val adc = cand.join(codes, Seq("n_id"))
-      .join(broadcast(lut), Seq("q_id", "sub", "code"))
-      .groupBy("q_id", "n_id")
-      .agg(sum(col("pdot")).as("sdot"), sum(col("cn2")).as("sc2"),
-        first(col("qn2")).as("qn2"))
-      .withColumn("cos_adc", col("sdot") / (sqrt(col("qn2")) * sqrt(col("sc2"))))
-    val shortlist = adc.groupBy("q_id")
-      .agg(topk(col("cos_adc"), col("n_id"), k * rerankFactor).as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("e.id").as("n_id"))
-    val scored = shortlist
-      .join(data, Seq("n_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .select(col("q_id"), cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    topKOut(scored, k)
+    val lut = pqLut(queries, cents, m, dim / m).withColumnRenamed("c_id", "code")
+    val adc = adcCosine(cand.join(codes, Seq("n_id"))
+      .join(broadcast(lut), Seq("q_id", "sub", "code")))
+    rerankExact(adc, "cos_adc", k * rerankFactor, data, queries, k)
   }
 
   // --- binary (sign-bit) quantization: s19 brute scan, s20 MIH ------------
@@ -1093,19 +1085,30 @@ object Similarity {
     */
   def mihKnnWith(
       index: DataFrame, queries: DataFrame, k: Int,
-      dim: Int = 64, bandBits: Int = 8): DataFrame = {
-    val q = queries
-      .select(col("q_id"), signSig(col("q_vec"), dim).as("q_sig"))
-      .select(col("q_id"), col("q_sig"),
-        posexplode(bandVals(col("q_sig"), dim, bandBits)).as(Seq("qband", "qbv")))
-    val cands = index
-      .join(broadcast(q),
-        col("band") === col("qband") && col("bv") === col("qbv") &&
-          col("n_id") =!= col("q_id"))
+      dim: Int = 64, bandBits: Int = 8): DataFrame =
+    hammingTopK(mihCandidates(index, queries, dim, bandBits), k)
+
+  /** MIH candidates (q_id, q_sig, n_id, n_sig): every (query, indexed
+    * vector) pair that shares at least one band, once each — the union
+    * over bands. */
+  private def mihCandidates(
+      index: DataFrame, queries: DataFrame, dim: Int, bandBits: Int): DataFrame = {
+    val q = queries.select(col("q_id"), signSig(col("q_vec"), dim).as("q_sig"))
+    index.join(broadcast(queryBands(q, dim, bandBits)), bandMatch)
       .select("q_id", "q_sig", "n_id", "n_sig")
-      .distinct() // union over bands: one candidate row per (query, vector)
-    hammingTopK(cands, k)
+      .distinct()
   }
+
+  /** The MIH probe side: `q` (…, q_sig) exploded to one row per
+    * signature band, adding (qband, qbv). */
+  private[graft] def queryBands(q: DataFrame, dim: Int, bandBits: Int): DataFrame =
+    q.select(col("*"),
+      posexplode(bandVals(col("q_sig"), dim, bandBits)).as(Seq("qband", "qbv")))
+
+  /** Band-join condition of a posting (band, bv, n_id) and a
+    * [[queryBands]] row: the same band value, self matches excluded. */
+  private[graft] val bandMatch: Column =
+    col("band") === col("qband") && col("bv") === col("qbv") && col("n_id") =!= col("q_id")
 
   /** s22: EXACT Hamming radius search served from the band index —
     * every corpus vector within `maxHamming` of each query, with a
@@ -1135,25 +1138,23 @@ object Similarity {
   def mihRadiusWith(
       index: DataFrame, queries: DataFrame, maxHamming: Int,
       dim: Int = 64, bandBits: Int = 8): DataFrame = {
+    requirePigeonhole(maxHamming, dim, bandBits)
+    mihCandidates(index, queries, dim, bandBits)
+      .select(col("q_id"), col("n_id").as("neighbor_id"),
+        hammingDist(col("q_sig"), col("n_sig")).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+  }
+
+  /** The exactness bound of MIH radius search (s22, lk47): a vector
+    * within `maxHamming ≤ nBands − 1` of a probe differs in at most
+    * that many bits, so by pigeonhole it leaves some band untouched
+    * and must collide in the band join. */
+  private def requirePigeonhole(maxHamming: Int, dim: Int, bandBits: Int): Unit = {
     val nBands = dim / bandBits
     require(maxHamming <= nBands - 1,
-      s"exact radius search requires maxHamming ≤ nBands-1 = ${nBands - 1} " +
-        s"(pigeonhole guarantee); got $maxHamming — raise nBands (lower " +
-        "bandBits) or use mihKnn's best-effort ranking")
-    import graft.functions.hamming
-    val q = queries
-      .select(col("q_id"), signSig(col("q_vec"), dim).as("q_sig"))
-      .select(col("q_id"), col("q_sig"),
-        posexplode(bandVals(col("q_sig"), dim, bandBits)).as(Seq("qband", "qbv")))
-    index
-      .join(broadcast(q),
-        col("band") === col("qband") && col("bv") === col("qbv") &&
-          col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_sig"), col("n_id"), col("n_sig"))
-      .distinct() // union over bands: one candidate row per (query, vector)
-      .select(col("q_id"), col("n_id").as("neighbor_id"),
-        hamming(col("q_sig"), col("n_sig")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
+      s"maxHamming=$maxHamming > nBands-1=${nBands - 1}: the pigeonhole " +
+        "guarantee (no missed neighbor) needs radius ≤ bands − 1 — raise " +
+        "the band count (smaller bandBits) for a larger exact radius")
   }
 
   /** Persist / reload the MIH band index through the same WAP
@@ -1263,11 +1264,7 @@ object Similarity {
       increment: DataFrame, vecCol: String, idCol: String,
       maxHamming: Int = 7, dim: Int = 64, bandBits: Int = 8): EmbedIngestReport = {
     import graft.sources.ParquetLake
-    val nBands = dim / bandBits
-    require(maxHamming <= nBands - 1,
-      s"maxHamming=$maxHamming > nBands-1=${nBands - 1}: the pigeonhole " +
-        "guarantee (no missed near-dup) needs radius ≤ bands − 1 — raise " +
-        "the band count (smaller bandBits) for a larger exact radius")
+    requirePigeonhole(maxHamming, dim, bandBits)
     val inc = increment.localCheckpoint(eager = true)
     val incIx = mihIndexBuild(inc, vecCol, idCol, dim, bandBits)
       .localCheckpoint(eager = true) // feeds both gate joins and the index append
@@ -1353,11 +1350,7 @@ object Similarity {
     val rows = bandBitsConfigs.map { b =>
       val cIx = sigs.select(col("n_id"),
         posexplode(bandVals(col("n_sig"), dim, b)).as(Seq("band", "bv")))
-      val qIx = q.select(col("q_id"),
-        posexplode(bandVals(col("q_sig"), dim, b)).as(Seq("qband", "qbv")))
-      val cand = cIx.join(broadcast(qIx),
-          col("band") === col("qband") && col("bv") === col("qbv") &&
-            col("n_id") =!= col("q_id"))
+      val cand = cIx.join(broadcast(queryBands(q, dim, b)), bandMatch)
         .select(col("q_id"), col("n_id")).distinct()
       // truth is ≤ |Q|·k rows — broadcast it into the semi-join so the
       // candidate relation (corpus-scale at fat configs) never sorts
@@ -1383,7 +1376,7 @@ object Similarity {
 
   /** Band values of a signature: disjoint `bandBits`-bit slices of the
     * flattened bit string, each a literal shift+mask (codegen'd). */
-  private[graft] def bandVals(sig: Column, dim: Int, bandBits: Int): Column = {
+  private def bandVals(sig: Column, dim: Int, bandBits: Int): Column = {
     val wordBits = 32
     require(wordBits % bandBits == 0, s"bandBits=$bandBits must divide wordBits=$wordBits")
     val mask = (1L << bandBits) - 1
@@ -1394,22 +1387,17 @@ object Similarity {
     }: _*)
   }
 
-  /** Shared rerank tail of the Hamming family: exact distance, top-k
-    * via the bounded heap on the NEGATED distance (the heap keeps
-    * score-desc, id-asc — integer distances negate losslessly in the
-    * double score slot). Output: (q_id, rank, neighbor_id, hamming),
-    * all BIGINT — hash-stable by construction. */
-  private def hammingTopK(pairs: DataFrame, k: Int): DataFrame = {
-    val scored = pairs.select(
-      col("q_id"),
+  /** Shared rerank tail of the Hamming family over pairs (…keys,
+    * q_sig, n_id, n_sig): exact distance, top-k per key via the bounded
+    * heap on the NEGATED distance (the heap keeps score-desc, id-asc —
+    * integer distances negate losslessly in the double score slot).
+    * Output: (…keys, rank, neighbor_id, hamming), the last three BIGINT
+    * — hash-stable by construction. */
+  private[graft] def hammingTopK(
+      pairs: DataFrame, k: Int, keys: Seq[String] = Seq("q_id")): DataFrame = {
+    val scored = pairs.select(keys.map(col) ++ Seq(
       (-hammingDist(col("q_sig"), col("n_sig"))).cast("double").as("neg_hd"),
-      col("n_id"))
-    scored.groupBy("q_id")
-      .agg(topk(col("neg_hd"), col("n_id"), k).as("tk"))
-      .select(col("q_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"),
-        (-col("e.score")).cast("long").as("hamming"))
+      col("n_id")): _*)
+    rankTopK(scored, "neg_hd", k, keys, (-col("e.score")).cast("long").as("hamming"))
   }
 }

@@ -211,20 +211,8 @@ object LogStream {
     */
   def joinWithin(
       left: DataFrame, right: DataFrame, key: String,
-      lookbackMs: Long, watermarkDelay: String): DataFrame = {
-    val l = left
-      .withColumn("l_time", timestamp_millis(col("timestamp_ms")))
-      .withWatermark("l_time", watermarkDelay)
-    val r = right
-      .select(col(key), col("timestamp_ms").as("r_ts_ms"))
-      .withColumn("r_time", timestamp_millis(col("r_ts_ms")))
-      .withWatermark("r_time", watermarkDelay)
-    l.join(r,
-      l(key) === r(key) &&
-        col("r_time") >= col("l_time") - expr(s"INTERVAL $lookbackMs MILLISECONDS") &&
-        col("r_time") <= col("l_time"))
-      .drop(r(key))
-  }
+      lookbackMs: Long, watermarkDelay: String): DataFrame =
+    intervalJoin(left, right, key, lookbackMs, watermarkDelay, "inner")
 
   /** Left-outer variant of [[joinWithin]]: unmatched left rows emit
     * null-padded once the watermark passes their last possible match
@@ -237,7 +225,12 @@ object LogStream {
     */
   def joinWithinOuter(
       left: DataFrame, right: DataFrame, key: String,
-      lookbackMs: Long, watermarkDelay: String): DataFrame = {
+      lookbackMs: Long, watermarkDelay: String): DataFrame =
+    intervalJoin(left, right, key, lookbackMs, watermarkDelay, "left_outer")
+
+  private def intervalJoin(
+      left: DataFrame, right: DataFrame, key: String,
+      lookbackMs: Long, watermarkDelay: String, joinType: String): DataFrame = {
     val l = left
       .withColumn("l_time", timestamp_millis(col("timestamp_ms")))
       .withWatermark("l_time", watermarkDelay)
@@ -249,7 +242,7 @@ object LogStream {
       l(key) === r(key) &&
         col("r_time") >= col("l_time") - expr(s"INTERVAL $lookbackMs MILLISECONDS") &&
         col("r_time") <= col("l_time"),
-      "left_outer")
+      joinType)
       .drop(r(key))
   }
 
@@ -1303,12 +1296,10 @@ object LogStream {
     *     Each micro-batch shuffles only that batch's exploded probes
     *     plus the matched index partitions; the static side's
     *     bucketing is computed once and pinned via localCheckpoint.
-    *     Fat buckets (clustered corpora) salt exactly like the batch
-    *     knnJoin: the ≤ N/saltThreshold fat-bucket set — broadcast-
-    *     class BY CONSTRUCTION, unlike the index — salts index rows
-    *     deterministically (`n_id mod salts`) and replicates only the
-    *     probes of fat buckets, so one hot bucket's quadratic score
-    *     work spreads over `salts` tasks instead of one.
+    *     Fat buckets (clustered corpora) salt through the batch
+    *     knnJoin's own salted join: the fat-bucket set is broadcast-
+    *     class BY CONSTRUCTION, unlike the index, and one hot bucket's
+    *     quadratic score work spreads over `salts` tasks.
     *
     * `queries`: streaming (q_id, q_vec, event_time columns named by
     * the params). Self-matches (q_id == corpus id) are excluded,
@@ -1320,56 +1311,28 @@ object LogStream {
       windowDur: String = "1 hour", watermarkDelay: String = "10 minutes",
       eventTimeCol: String = "event_time", broadcastIndex: Boolean = true,
       salts: Int = 16, saltThreshold: Int = 1024): DataFrame = {
-    import graft.operators.Similarity.{bucketOf, hyperplanes}
-    import graft.functions.{cosine, topk}
+    import graft.operators.Similarity.{
+      bucketOf, exactTopK, fatBuckets, hyperplanes, multiprobe, saltedBucketJoin}
     val planes = hyperplanes(numPlanes, dim)
     val index = corpus
       .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("bucket", bucketOf(col("n_vec"), planes))
-    val probeBase = queries
+    val probes = queries
       .withWatermark(eventTimeCol, watermarkDelay)
       .select(col(eventTimeCol), col("q_id"), col("q_vec"),
-        explode(array(bucketOf(col("q_vec"), planes) +:
-          (0 until numPlanes).map(b =>
-            bucketOf(col("q_vec"), planes).bitwiseXOR(lit(1 << b))): _*)).as("probe"))
+        multiprobe(bucketOf(col("q_vec"), planes), numPlanes).as("probe"))
     val joined =
-      if (broadcastIndex) probeBase.join(broadcast(index), col("probe") === col("bucket"))
+      if (broadcastIndex) probes.join(broadcast(index), col("probe") === col("bucket"))
       else {
-        // static side pinned once across micro-batches; fat-bucket
-        // detection + salting mirrors Similarity.knnJoin:166-188
+        // static side and its fat-bucket set pinned once across micro-batches
         val idx = index.localCheckpoint(eager = true)
-        val fat = idx.groupBy("bucket").agg(count(lit(1)).as("bn"))
-          .where(col("bn") > saltThreshold)
-          .select(col("bucket").as("f_bucket"))
-          .localCheckpoint(eager = true)
-        val data = idx
-          .join(broadcast(fat), col("bucket") === col("f_bucket"), "left")
-          .withColumn("d_salt",
-            when(col("f_bucket").isNotNull, pmod(col("n_id"), lit(salts)))
-              .otherwise(lit(0)))
-          .drop("f_bucket")
-        val probes = probeBase
-          .join(broadcast(fat), col("probe") === col("f_bucket"), "left")
-          .withColumn("p_salt", explode(
-            when(col("f_bucket").isNotNull, sequence(lit(0), lit(salts - 1)))
-              .otherwise(array(lit(0)))))
-          .drop("f_bucket")
-        probes.join(data,
-          col("probe") === col("bucket") && col("p_salt") === col("d_salt"))
+        saltedBucketJoin(idx, probes,
+          fatBuckets(idx, saltThreshold).localCheckpoint(eager = true), salts)
       }
-    val probed = joined
-      .where(col("n_id") =!= col("q_id"))
-      .select(col(eventTimeCol), col("q_id"),
-        cosine(col("q_vec"), col("n_vec")).as("cos_exact"), col("n_id"))
-    probed
-      .groupBy(window(col(eventTimeCol), windowDur), col("q_id"))
-      .agg(topk(col("cos_exact"), col("n_id"), k).as("tk"))
-      .select(col("window.start").as("w_start"), col("q_id"),
-        posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("w_start"), col("q_id"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"),
-        round(col("e.score"), 4).as("cos_sim"))
+    exactTopK(joined.withColumn("window", window(col(eventTimeCol), windowDur)),
+        k, Seq("window", "q_id"))
+      .select(col("window.start").as("w_start"), col("q_id"), col("rank"),
+        col("neighbor_id"), col("cos_sim"))
   }
 
   /** st44: continuous MIH kNN — a stream of query vectors served from
@@ -1416,33 +1379,21 @@ object LogStream {
       windowDur: String = "1 hour", watermarkDelay: String = "10 minutes",
       eventTimeCol: String = "event_time",
       broadcastIndex: Boolean = true): DataFrame = {
-    import graft.operators.Similarity.{bandVals, signSig}
-    import graft.functions.{hamming, topk}
+    import graft.operators.Similarity.{bandMatch, hammingTopK, queryBands, signSig}
     val idx = index.select(col("n_id"), col("n_sig"), col("band"), col("bv"))
-    val probes = queries
+    val probes = queryBands(queries
       .withWatermark(eventTimeCol, watermarkDelay)
-      .select(col(eventTimeCol), col("q_id"), signSig(col("q_vec"), dim).as("q_sig"))
-      .select(col(eventTimeCol), col("q_id"), col("q_sig"),
-        posexplode(bandVals(col("q_sig"), dim, bandBits)).as(Seq("qband", "qbv")))
-    val cond = col("band") === col("qband") && col("bv") === col("qbv") &&
-      col("n_id") =!= col("q_id")
+      .select(col(eventTimeCol), col("q_id"), signSig(col("q_vec"), dim).as("q_sig")),
+      dim, bandBits)
     val joined =
-      if (broadcastIndex) probes.join(broadcast(idx), cond)
-      else probes.join(idx.localCheckpoint(eager = true), cond)
-    joined
+      if (broadcastIndex) probes.join(broadcast(idx), bandMatch)
+      else probes.join(idx.localCheckpoint(eager = true), bandMatch)
+    val pairs = joined
       .select(window(col(eventTimeCol), windowDur).as("window"),
         col("q_id"), col("q_sig"), col("n_id"), col("n_sig"))
       .dropDuplicates(Seq("window", "q_id", "q_sig", "n_id"))
-      .select(col("window"), col("q_id"),
-        (-hamming(col("q_sig"), col("n_sig"))).cast("double").as("neg_hd"),
-        col("n_id"))
-      .groupBy(col("window"), col("q_id"))
-      .agg(topk(col("neg_hd"), col("n_id"), k).as("tk"))
-      .select(col("window.start").as("w_start"), col("q_id"),
-        posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("w_start"), col("q_id"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"),
-        (-col("e.score")).cast("long").as("hamming"))
+    hammingTopK(pairs, k, Seq("window", "q_id"))
+      .select(col("window.start").as("w_start"), col("q_id"), col("rank"),
+        col("neighbor_id"), col("hamming"))
   }
 }

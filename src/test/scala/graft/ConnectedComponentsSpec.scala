@@ -37,9 +37,9 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("adversarial 10k-node path graph converges in O(log n) rounds") {
     val chain = (0L until 10000L).map(i => (i + 1, i))
-    // smallCutoff = 0: exercise the distributed star path, not the
+    // exercise the distributed star path, not the
     // driver union-find fast path
-    val stats = ConnectedComponents.runWithStats(chain.toDF("src", "dst"), smallCutoff = 0L)
+    val stats = ConnectedComponents.runWithStatsDistributed(chain.toDF("src", "dst"))
     // min-label propagation would need 10k rounds (diameter); the
     // alternating-star contraction is logarithmic
     assert(stats.rounds <= 20, s"took ${stats.rounds} rounds")
@@ -52,7 +52,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val chain = (0L until 64L).map(i => (i + 1, i))
     intercept[IllegalStateException] {
       ConnectedComponents
-        .runWithStats(chain.toDF("src", "dst"), maxIter = 1, smallCutoff = 0L)
+        .runWithStatsDistributed(chain.toDF("src", "dst"), maxIter = 1)
         .labels.collect()
     }
   }
@@ -84,7 +84,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     // fast path (default cutoff) and the distributed star fixpoint
     assert(components(edges) === expected)
     val distributed = ConnectedComponents
-      .runWithStats(edges.toDF("src", "dst"), smallCutoff = 0L)
+      .runWithStatsDistributed(edges.toDF("src", "dst"))
       .labels.as[(Long, Long)].collect().toMap
     assert(distributed === expected)
   }

@@ -104,7 +104,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("connected components of an empty edge set is empty (both paths)") {
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(ConnectedComponents.run(noEdges).count() === 0)
-    val st = ConnectedComponents.runWithStats(noEdges, smallCutoff = 0L)
+    val st = ConnectedComponents.runWithStatsDistributed(noEdges)
     assert(st.labels.count() === 0)
   }
 

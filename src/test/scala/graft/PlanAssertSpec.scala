@@ -612,6 +612,49 @@ class PlanAssertSpec extends SparkSpec {
     assert(p.contains("graft_hamming"), p)
   }
 
+  private def tree(p: String): Seq[String] =
+    p.linesIterator.takeWhile(l => !l.startsWith("(1)")).toSeq
+
+  test("s2: LSH probes broadcast into one bucket hash join; bounded-heap top-k; no Window") {
+    val p = plan("s2_knn_lsh")
+    val t = tree(p)
+    assert(t.count(_.contains("BroadcastHashJoin")) === 1, t.mkString("\n"))
+    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
+    assert(p.contains("partial_graft_topk"), p)
+    assert(!p.contains("Window"), p)
+  }
+
+  test("s9: the approx leg broadcasts its probes; the truth leg is a checkpointed leaf; no Window") {
+    val p = plan("s9_ann_recall")
+    val t = tree(p)
+    // the LSH leg's multiprobe rows broadcast into the bucket join
+    assert(t.count(_.contains("BroadcastHashJoin")) === 1, t.mkString("\n"))
+    assert(t.exists(_.contains("Scan ExistingRDD")), t.mkString("\n"))
+    assert(p.contains("partial_graft_topk"), p)
+    assert(!p.contains("Window"), p)
+    assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("s13: SQ8 scoring broadcasts the queries; shortlist and rerank cut with bounded heaps; no Window") {
+    val p = plan("s13_knn_sq8")
+    assert(tree(p).exists(_.contains("BroadcastNestedLoopJoin")), p)
+    assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"), p)
+    assert("partial_graft_topk".r.findAllIn(p).length === 2, p)
+    assert(!p.contains("Window"), p)
+  }
+
+  test("s17: every sweep point reads one scoring pass — one corpus scan, one broadcast probe join") {
+    val p = plan("s17_nprobe_sweep")
+    val t = tree(p)
+    // the full-cover truth top-k folds into the same pass, so the
+    // corpus is scanned and scored once for the whole sweep
+    assert(t.count(_.contains("Scan parquet")) === 1, t.mkString("\n"))
+    assert(t.count(_.contains("BroadcastHashJoin")) === 1, t.mkString("\n"))
+    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
+    assert(p.contains("partial_graft_topk"), p)
+    assert(!p.contains("Window"), p)
+  }
+
   test("a14: exact distinct is the two-level aggregate — no count-distinct Expand") {
     // the row exists to drive a8's exact leg through the oracle; its
     // scale property is the plan shape: a map-side (event_type,

@@ -48,7 +48,7 @@ class PropertySpec extends SparkSpec {
       val edges = (0 until nEdges).map(i =>
         (math.abs(scramble(c * 500L + i)) % 30, math.abs(scramble(c * 900L + i)) % 30))
       val df = edges.toDF("src", "dst")
-      val distributed = ConnectedComponents.runWithStats(df, smallCutoff = 0L)
+      val distributed = ConnectedComponents.runWithStatsDistributed(df)
         .labels.as[(Long, Long)].collect().toMap
       val driver = ConnectedComponents.run(df) // small → union-find path
         .as[(Long, Long)].collect().toMap

@@ -40,8 +40,8 @@ class StreamingSpec extends SparkSpec {
 
   /** Runs `body` with streaming state on the RocksDB provider — the
     * 100 TB configuration (state off-heap on local disk, no
-    * executor-heap ceiling). The conf is what
-    * `GraftSession.builder(rocksdbStateStore = true)` sets; the
+    * executor-heap ceiling), through the conf key the
+    * `GraftSession.builder` scaladoc names; the
     * provider-metrics smoke test below proves the conf takes effect
     * for queries started under it. Stateful specs run under BOTH
     * providers via this helper (the `(rocksdb)` twins).
