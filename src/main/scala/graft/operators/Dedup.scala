@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{cosine, dot, simhash64, TextFunctions => T}
@@ -24,22 +24,28 @@ object Dedup {
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Deterministic absolute-count doc cap for the quadratic
-    * evaluation harnesses (d16/d20; the s9/s17 `maxQueries` pattern
-    * at the doc grain): keep the `maxDocs` lowest-md5 ids — stable
-    * across runs, engines, and cluster sizes; no RNG — so pair work
-    * is maxDocs²-bounded no matter the corpus. The 13-hex-digit
-    * prefix compares identically as a string and as a number (fixed
-    * width), so `ORDER BY substr(md5(id),1,13), id LIMIT n` replays
-    * it in DuckDB verbatim. orderBy+limit plans as
-    * TakeOrderedAndProject: per-partition bounded heaps, never a
-    * global sort.
+  /** Deterministic sample for the quadratic evaluation harnesses
+    * (d16/d20/d24 docs, s9/s10/s17 queries): the rows whose md5
+    * percent bucket ([[graft.functions.hashShard]], the t5 split
+    * arithmetic) is below `samplePct`, then, when `maxDocs` > 0, the
+    * `maxDocs` lowest-md5 ids — stable across runs, engines, and
+    * cluster sizes; no RNG — so pair work is maxDocs²-bounded no
+    * matter the corpus. The 13-hex-digit prefix compares identically
+    * as a string and as a number (fixed width), so
+    * `ORDER BY substr(md5(id),1,13), id LIMIT n` replays it in DuckDB
+    * verbatim. orderBy+limit plans as TakeOrderedAndProject:
+    * per-partition bounded heaps, never a global sort.
     */
-  private def mdCap(df: DataFrame, idCol: String, maxDocs: Int): DataFrame =
-    if (maxDocs <= 0) df
-    else df.orderBy(
+  private[graft] def md5Sample(
+      df: DataFrame, idCol: String, samplePct: Int, maxDocs: Int): DataFrame = {
+    val sampled =
+      if (samplePct >= 100) df
+      else df.where(graft.functions.hashShard(col(idCol), 100) < samplePct)
+    if (maxDocs <= 0) sampled
+    else sampled.orderBy(
       substring(md5(col(idCol).cast("string")), 1, 13).asc, col(idCol).asc)
       .limit(maxDocs)
+  }
 
   /** Exact dedup by normalized-content fingerprint: one row per
     * distinct content, keeping the minimum id.
@@ -244,7 +250,10 @@ object Dedup {
     graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
   }
 
-  /** Version fields follow [[IngestReport]]'s 0-on-no-commit rule. */
+  /** The report of both near-dup gates, this one and
+    * [[Similarity.embedGatedIngest]]. Version fields follow
+    * [[IngestReport]]'s 0-on-no-commit rule.
+    */
   final case class NearDupIngestReport(
       admitted: Long, rejectedCorpusNear: Long, rejectedIntraNear: Long,
       dataVersion: Int, indexVersion: Int)
@@ -266,10 +275,8 @@ object Dedup {
       .localCheckpoint(eager = true)
     val matchedCorpus = ParquetLake.readManifested(spark, dataPath)
       .join(cand.select(col("id_old").as(idCol)).distinct(), Seq(idCol), "left_semi")
-    val shNew = spread(inc).select(col(idCol).as("id_new"),
-      T.wordShingles(T.tokens(col(textCol))).as("s_new"))
-    val shOld = spread(matchedCorpus).select(col(idCol).as("id_old"),
-      T.wordShingles(T.tokens(col(textCol))).as("s_old"))
+    val shNew = shingles(inc, textCol, idCol).toDF("id_new", "s_new")
+    val shOld = shingles(matchedCorpus, textCol, idCol).toDF("id_old", "s_old")
     val corpusNearIds = cand
       .join(shNew, Seq("id_new")).join(shOld, Seq("id_old"))
       .where(T.jaccard(col("s_new"), col("s_old")) >= threshold)
@@ -365,12 +372,7 @@ object Dedup {
   private def bandKeysFromShingles(
       exploded: DataFrame, numPerms: Int, bands: Int): DataFrame = {
     val r = numPerms / bands
-    val base = exploded
-      .select(col("id"),
-        conv(substring(md5(col("sng")), 1, 7), 16, 10).cast("long").as("b"))
-    val minCols = (0 until numPerms).map(p =>
-      min((col("b") * permA(p) + permB(p)) % PermMod).as(s"m$p"))
-    val sig = base.groupBy("id").agg(minCols.head, minCols.tail: _*)
+    val sig = minhashSignature(exploded, numPerms)
     val bandCols = (0 until bands).map(b =>
       struct(
         lit(b).as("band"),
@@ -378,6 +380,20 @@ object Dedup {
           (0 until r).map(k => col(s"m${b * r + k}").cast("string")): _*)).as("h")))
     sig.select(col("id"), explode(array(bandCols: _*)).as("bh"))
       .select(col("id"), col("bh.band").as("band"), col("bh.h").as("h"))
+  }
+
+  /** Per-doc MinHash signature (id, m0 … m{numPerms-1}) of an
+    * exploded (id, sng: string) shingle relation: the per-permutation
+    * `min` over each shingle's md5 base, combined map-side. The same
+    * caller contract as [[bandKeysFromShingles]].
+    */
+  private[graft] def minhashSignature(exploded: DataFrame, numPerms: Int): DataFrame = {
+    val base = exploded
+      .select(col("id"),
+        conv(substring(md5(col("sng")), 1, 7), 16, 10).cast("long").as("b"))
+    val minCols = (0 until numPerms).map(p =>
+      min((col("b") * permA(p) + permB(p)) % PermMod).as(s"m$p"))
+    base.groupBy("id").agg(minCols.head, minCols.tail: _*)
   }
 
   /** MinHash + LSH near-duplicate *candidate* pairs: docs sharing at
@@ -415,6 +431,7 @@ object Dedup {
         // window documented in lshRecallEval
         .localCheckpoint(eager = true))
 
+  /** Docs sharing a band key: (id_a, id_b, n_bands), id_a < id_b. */
   private def bandSelfJoin(keys: DataFrame): DataFrame = {
     val a = keys.toDF("id_a", "band", "h")
     val b = keys.toDF("id_b", "band", "h")
@@ -570,10 +587,7 @@ object Dedup {
     */
   def jaccardPairs(
       df: DataFrame, textCol: String, idCol: String, threshold: Double): DataFrame = {
-    val sh = spread(df).select(
-      col(idCol).as("id"),
-      T.wordShingles(T.tokens(col(textCol))).as("s"))
-      .withColumn("ns", size(col("s")))
+    val sh = shingles(df, textCol, idCol).withColumn("ns", size(col("s")))
     val a = sh.toDF("id_a", "s_a", "ns_a")
     val b = sh.toDF("id_b", "s_b", "ns_b")
     a.join(b,
@@ -601,17 +615,24 @@ object Dedup {
     exactJaccardPairsFromShingles(
       shingleRelation(df, textCol, idCol), threshold)
 
-  /** Checkpointed (id, s: array<string>) shingle relation — the ONE
-    * tokenize+shingle pass a multi-leg evaluation harness shares
-    * (d16/d24 read it from both their truth and estimator legs;
-    * without it each leg re-runs the corpus scan and the shingling,
-    * the dominant map-side cost).
+  /** (id, s: array<string>) word-3-gram shingle sets, fanned across
+    * cores. Not materialized: explode `s` only off the checkpointed
+    * [[shingleRelation]] (see [[bandKeysFromShingles]]).
     */
-  private[graft] def shingleRelation(
-      df: DataFrame, textCol: String, idCol: String): DataFrame =
+  private def shingles(df: DataFrame, textCol: String, idCol: String): DataFrame =
     spread(df).select(
       col(idCol).as("id"),
       T.wordShingles(T.tokens(col(textCol))).as("s"))
+
+  /** Checkpointed [[shingles]] — the ONE tokenize+shingle pass that
+    * several legs share (the truth and candidate legs of d16, the
+    * index and sizes of d20, the signatures and verify gather of d4,
+    * the overlap join and sizes of d6/d9); without it each leg re-runs
+    * the corpus scan and the shingling, the dominant map-side cost.
+    */
+  private[graft] def shingleRelation(
+      df: DataFrame, textCol: String, idCol: String): DataFrame =
+    shingles(df, textCol, idCol)
       // EAGER: d16 hangs three independent stage chains off this
       // relation inside one job — concurrent stages computing a lazy
       // checkpoint's partitions serialize on block locks (measured
@@ -627,21 +648,30 @@ object Dedup {
     * is only safe off a leaf relation (see [[bandKeysFromShingles]]).
     */
   private[graft] def exactJaccardPairsFromShingles(
-      sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.select(col("id"), size(col("s")).as("n_sh"))
-    val inv = sh.select(col("id"), explode(col("s")).as("sng"))
-    val common = inv.toDF("id_a", "sng")
-      .join(inv.toDF("id_b", "sng"), Seq("sng"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.toDF("id_a", "n_a"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "n_b"), Seq("id_b"))
+      sh: DataFrame, threshold: Double): DataFrame =
+    commonCounts(sh)
       .withColumn("jaccard",
         col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+
+  /** The inverted shingle index over a [[shingleRelation]] leaf: every
+    * pair sharing at least one shingle, with its shared-shingle count
+    * from one pair-keyed aggregate and both docs' distinct-shingle
+    * sizes: columns id_a < id_b, n_common, n_a, n_b, all long.
+    * Complete for any overlap measure that is 0 without a shared
+    * shingle (Jaccard, containment).
+    */
+  private def commonCounts(sh: DataFrame): DataFrame = {
+    val sizes = sh.select(col("id"), size(col("s")).cast("long").as("n_sh"))
+    val inv = sh.select(col("id"), explode(col("s")).as("sng"))
+    inv.toDF("id_a", "sng")
+      .join(inv.toDF("id_b", "sng"), Seq("sng"))
+      .where(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+      .join(sizes.toDF("id_a", "n_a"), Seq("id_a"))
+      .join(sizes.toDF("id_b", "n_b"), Seq("id_b"))
   }
 
   /** d20: exact containment pairs — the subset/quote duplicate
@@ -662,32 +692,14 @@ object Dedup {
     */
   def containmentPairs(
       df: DataFrame, textCol: String, idCol: String, pct: Int,
-      samplePct: Int = 100, maxDocs: Int = 0): DataFrame = {
-    val base = mdCap(
-      if (samplePct >= 100) df
-      else df.where(
-        conv(substring(md5(col(idCol).cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < samplePct),
-      idCol, maxDocs)
-    val sh = spread(base).select(
-      col(idCol).as("id"),
-      T.wordShingles(T.tokens(col(textCol))).as("s"))
-      .localCheckpoint(eager = true) // feeds the index AND the sizes
-    val sizes = sh.select(col("id"), size(col("s")).cast("long").as("n_sh"))
-    val inv = sh.select(col("id"), explode(col("s")).as("sng"))
-    val common = inv.toDF("id_a", "sng")
-      .join(inv.toDF("id_b", "sng"), Seq("sng"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.toDF("id_a", "n_a"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "n_b"), Seq("id_b"))
+      samplePct: Int = 100, maxDocs: Int = 0): DataFrame =
+    commonCounts(shingleRelation(
+        md5Sample(df, idCol, samplePct, maxDocs), textCol, idCol))
       .where(lit(100L) * col("n_common") >= lit(pct.toLong) * least(col("n_a"), col("n_b")))
       .select(
         col("id_a"), col("id_b"), col("n_common"), col("n_a"), col("n_b"),
         round(col("n_common").cast("double") / col("n_a"), 4).as("cont_a"),
         round(col("n_common").cast("double") / col("n_b"), 4).as("cont_b"))
-  }
 
   /** d17: analytic LSH band planner — the S-curve arithmetic that
     * chooses a (bands, rowsPerBand) split of a `numPerms` MinHash
@@ -769,12 +781,7 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
       samplePct: Int = 100, numPerms: Int = 12, bands: Int = 4,
       maxDocs: Int = 0): DataFrame = {
-    val docs = mdCap(
-      if (samplePct >= 100) df
-      else df.where(
-        conv(substring(md5(col(idCol).cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < samplePct),
-      idCol, maxDocs)
+    val docs = md5Sample(df, idCol, samplePct, maxDocs)
     // ONE tokenize+shingle pass feeds both legs: the truth side's
     // inverted index and the candidate side's MinHash signatures read
     // the same checkpointed relation instead of each re-running the
@@ -819,22 +826,17 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String, threshold: Double,
       numPerms: Int = 12, bands: Int = 4): DataFrame = {
     // One shingling pass feeds BOTH the MinHash signatures and the
-    // exact verification. Lazy localCheckpoint, not persist: same
-    // shared materialization (memory+disk), but the plan truncates to
-    // a leaf (no InferFiltersFromGenerate re-inlining) and the blocks
-    // are GC'd with the DataFrame — persist() entries live in the
-    // session CacheManager forever and accumulate across queries.
-    val sh = spread(df).select(
-      col(idCol).as("id"),
-      T.wordShingles(T.tokens(col(textCol))).as("s"))
-      .localCheckpoint(eager = true)
-    val keys = bandKeysFromShingles(
-      sh.select(col("id"), explode(col("s")).as("sng")), numPerms, bands)
-    val a = keys.toDF("id_a", "band", "h")
-    val b = keys.toDF("id_b", "band", "h")
-    val cands = a.join(b, Seq("band", "h"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    // exact verification. localCheckpoint, not persist: same shared
+    // materialization (memory+disk), but the plan truncates to a leaf
+    // (no InferFiltersFromGenerate re-inlining) and the blocks are
+    // GC'd with the DataFrame — persist() entries live in the session
+    // CacheManager forever and accumulate across queries.
+    val sh = shingleRelation(df, textCol, idCol)
+    // the pair-keyed count's output is pruned to the (id_a, id_b)
+    // grouping — the same aggregate a distinct plans as
+    val cands = bandSelfJoin(bandKeysFromShingles(
+        sh.select(col("id"), explode(col("s")).as("sng")), numPerms, bands))
+      .select("id_a", "id_b")
     // Gather both sides' shingles with ONE shingling pass: unpivot the
     // pair to (pair, side, id), join the shingle relation once, fold
     // back. Only candidate docs' shingle sets ever shuffle. The fold
@@ -883,9 +885,8 @@ object Dedup {
     *   - replication factor is ~B/2 = O(√tasks), the optimal
     *     shuffle-vs-parallelism tradeoff for a theta self-join;
     *   - per-row squared norms are computed once before replication,
-    *     and the per-pair kernel is a single fused dot product —
-    *     `dot/(sqrt(n2_a)*sqrt(n2_b))` is bit-identical to
-    *     [[graft.functions.cosine]] (same accumulation order).
+    *     and the per-pair kernel is a single fused dot product
+    *     ([[pairCosine]]).
     *
     * For true near-dup thresholds (minCos ≳ 0.8, where the qualifying
     * angle IS separated from the bulk) use [[embeddingPairsLsh]],
@@ -914,14 +915,22 @@ object Dedup {
       col("blk").as("q"))
     a.join(b, Seq("p", "q"))
       .where(col("p") =!= col("q") || col("id_a") < col("id_b"))
-      .withColumn("cos_sim",
-        dot(col("v_a"), col("v_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b"))))
+      .withColumn("cos_sim", pairCosine)
       .where(col("cos_sim") >= minCos)
       .select(
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
         round(col("cos_sim"), 4).as("cos_sim"))
   }
+
+  /** The per-pair cosine of two (v, n2) sides whose squared norms were
+    * computed once per row: `dot(v_a,v_b)/(sqrt(n2_a)*sqrt(n2_b))` is
+    * bit-identical to [[graft.functions.cosine]] (same accumulation
+    * order), which the d5/d8 oracle hashes rely on — keep this exact
+    * operation order.
+    */
+  private def pairCosine: Column =
+    dot(col("v_a"), col("v_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b")))
 
   /** Embedding near-dup pairs via hyperplane-LSH bucketing + exact
     * in-bucket verification — the sub-quadratic scale path for true
@@ -950,8 +959,7 @@ object Dedup {
       col("bucket").as("bkt"))
     a.join(b, Seq("bkt"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("cos_sim",
-        dot(col("v_a"), col("v_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b"))))
+      .withColumn("cos_sim", pairCosine)
       .where(col("cos_sim") >= minCos)
       .select(col("id_a"), col("id_b"), round(col("cos_sim"), 4).as("cos_sim"))
   }
@@ -994,14 +1002,29 @@ object Dedup {
       col("c_id"), col("n_id").as("id_b"), col("n_vec").as("v_b"), col("n2").as("n2_b"))
     val edges = a.join(b, Seq("c_id"))
       .where(col("id_a") < col("id_b"))
-      .where(dot(col("v_a"), col("v_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b"))) >= minCos)
+      .where(pairCosine >= minCos)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comp = ConnectedComponents.run(edges)
-    assigned.select(col("n_id").as("id"), col("c_id"))
-      .join(comp, Seq("id"), "left")
-      .withColumn("keep", col("component").isNull || col("component") === col("id"))
+    withKeep(assigned.select(col("n_id").as("id"), col("c_id")),
+        ConnectedComponents.run(edges))
       .select(col("id"), col("c_id"), col("keep"))
   }
+
+  /** `ids` left-joined to a components relation (id, component):
+    * `keep` is true for a doc in no dup group and for its group's
+    * min-id label — one kept representative per group.
+    */
+  private def withKeep(ids: DataFrame, comp: DataFrame): DataFrame =
+    ids.join(comp, Seq("id"), "left")
+      .withColumn("keep", col("component").isNull || col("component") === col("id"))
+
+  /** d7's clustering: connected components (id, component) over the
+    * [[jaccardVerified]] pairs — every doc with a verified near-dup,
+    * labelled with its group's min id.
+    */
+  private[graft] def dupComponents(
+      df: DataFrame, textCol: String, idCol: String, minJaccard: Double): DataFrame =
+    ConnectedComponents.run(jaccardVerified(df, textCol, idCol, minJaccard)
+      .select(col("id_a").as("src"), col("id_b").as("dst")))
 
   /** One-call corpus-level fuzzy dedup — the composition a training
     * pipeline actually runs: MinHash-LSH candidates → exact n-gram
@@ -1013,15 +1036,9 @@ object Dedup {
     * so the one-call form adds no new wide operation.
     */
   def dedupCorpus(
-      df: DataFrame, textCol: String, idCol: String, minJaccard: Double): DataFrame = {
-    val pairs = jaccardVerified(df, textCol, idCol, minJaccard)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comp = ConnectedComponents.run(pairs)
-    df.select(col(idCol).as("id"))
-      .join(comp, Seq("id"), "left")
-      .withColumn("keep", col("component").isNull || col("component") === col("id"))
+      df: DataFrame, textCol: String, idCol: String, minJaccard: Double): DataFrame =
+    withKeep(df.select(col(idCol).as("id")), dupComponents(df, textCol, idCol, minJaccard))
       .select(col("id"), col("keep"))
-  }
 
   /** Quality-aware corpus dedup: [[dedupCorpus]]'s pipeline (LSH
     * candidates → exact Jaccard verify → connected components), but
@@ -1044,10 +1061,8 @@ object Dedup {
     */
   def dedupCorpusByQuality(
       df: DataFrame, textCol: String, idCol: String, minJaccard: Double,
-      quality: org.apache.spark.sql.Column): DataFrame = {
-    val pairs = jaccardVerified(df, textCol, idCol, minJaccard)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comp = ConnectedComponents.run(pairs)
+      quality: Column): DataFrame = {
+    val comp = dupComponents(df, textCol, idCol, minJaccard)
     val best = comp
       .join(df.select(col(idCol).as("id"), quality.as("q")), Seq("id"))
       .groupBy("component")
@@ -1092,7 +1107,6 @@ object Dedup {
       isBench: org.apache.spark.sql.Column,
       estimatedShingles: Long = 1L << 20): DataFrame = {
     graft.GraftSession.ensureRegistered(df.sparkSession)
-    val docs = spread(df)
     // one shingling+distinct pass feeds BOTH the bloom build (eager
     // head() below) and the exact verify join
     // both eager: `bench` sits inside the scalar-subquery sketch build
@@ -1100,17 +1114,12 @@ object Dedup {
     // subtree and the probe side. A lazy checkpoint first-materialized
     // on a broadcast/subquery thread while the dag-scheduler submits
     // the sibling consumer's stage over the same RDD deadlocks on the
-    // RDDCheckpointData/RDD lock pair (jstack-confirmed this round;
-    // see lshRecallEval). Construction-thread materialization closes
-    // the window at identical total work.
-    val bench = docs.where(isBench)
-      .select(explode(T.wordShingles(T.tokens(col(textCol)))).as("s"))
-      .distinct()
+    // RDDCheckpointData/RDD lock pair (jstack-confirmed; see
+    // lshRecallEval). Construction-thread materialization closes the
+    // window at identical total work.
+    val bench = benchShingles(spread(df.where(isBench)), textCol)
       .localCheckpoint(eager = true)
-    val corpus = docs.where(!isBench)
-      .select(col(idCol).as("doc_id"),
-        T.wordShingles(T.tokens(col(textCol))).as("ss"))
-      .localCheckpoint(eager = true)
+    val corpus = shingleRelation(df.where(!isBench), textCol, idCol)
     // the sketch is built INSIDE the plan as a scalar subquery — the
     // at-scale form: the driver never materializes the sketch bytes,
     // and the plan carries a subquery reference instead of a multi-MB
@@ -1126,24 +1135,43 @@ object Dedup {
     bench.createOrReplaceTempView(vname)
     val sketch = expr(
       s"(SELECT graft_bloom_agg(xxhash64(s), ${estimatedShingles}L) FROM $vname)")
-    val candidates = corpus
-      .select(col("doc_id"), explode(col("ss")).as("s"))
-      .where(call_function("graft_might_contain", sketch, xxhash64(col("s"))))
-    val shared = candidates
-      .join(bench, "s")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared"))
-    val out = corpus
-      .select(col("doc_id"), size(col("ss")).cast("long").as("n_shingles"))
-      .join(shared, Seq("doc_id"), "left")
-      .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
-      .withColumn("frac", round(col("n_shared").cast("double") / col("n_shingles"), 4))
-      .withColumn("contaminated", col("n_shared") > 0)
+    val out = contaminationReport(corpus,
+      corpus.select(col("id"), explode(col("s")).as("s"))
+        .where(call_function("graft_might_contain", sketch, xxhash64(col("s")))),
+      bench)
     // DataFrame construction is eagerly analyzed, so the view's
     // relation is already inlined into `out`'s plan — drop the
     // registration now or a long-lived session grows one never-freed
     // catalog entry (each pinning its checkpoint plan) per call
     df.sparkSession.catalog.dropTempView(vname)
     out
+  }
+
+  /** A benchmark set's distinct word-3-gram shingles (s) — d6/d9's
+    * held-out side and st19's sketch input. The explode reads the
+    * shingling expression itself, never a projected attribute (see
+    * [[bandKeysFromShingles]]).
+    */
+  private[graft] def benchShingles(bench: DataFrame, textCol: String): DataFrame =
+    bench.select(explode(T.wordShingles(T.tokens(col(textCol)))).as("s")).distinct()
+
+  /** d6/d9's per-doc contamination report over a [[shingleRelation]]
+    * `corpus`: `candidates` are its exploded (id, s) shingles,
+    * possibly prefiltered, and their exact overlap with `bench` gives
+    * (doc_id, n_shingles, n_shared, frac, contaminated).
+    */
+  private[graft] def contaminationReport(
+      corpus: DataFrame, candidates: DataFrame, bench: DataFrame): DataFrame = {
+    val shared = candidates
+      .join(bench, "s")
+      .groupBy("id")
+      .agg(count(lit(1)).as("n_shared"))
+    corpus
+      .select(col("id"), size(col("s")).cast("long").as("n_shingles"))
+      .join(shared, Seq("id"), "left")
+      .select(col("id").as("doc_id"), col("n_shingles"),
+        coalesce(col("n_shared"), lit(0L)).as("n_shared"))
+      .withColumn("frac", round(col("n_shared").cast("double") / col("n_shingles"), 4))
+      .withColumn("contaminated", col("n_shared") > 0)
   }
 }

@@ -31,20 +31,12 @@ object Similarity {
       op: String, corpus: DataFrame, vecCol: String, idCol: String,
       samplePct: Int, maxQueries: Int): (DataFrame, Long) = {
     val q0 = corpus.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val q1 = if (samplePct >= 100) q0
-      else q0.where(
-        conv(substring(md5(col("q_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < samplePct)
-    val q = (if (maxQueries > 0)
-        q1.orderBy(
-          conv(substring(md5(col("q_id").cast("string")), 1, 13), 16, 10)
-            .cast("long").asc, col("q_id").asc)
-          .limit(maxQueries).select("q_id", "q_vec")
-      else q1)
+    val q = Dedup.md5Sample(q0, "q_id", samplePct, maxQueries)
       .localCheckpoint(eager = true) // read by every leg and the count
     val nQ = q.count()
     if (maxQueries > 0) {
-      val preCap = if (nQ == maxQueries) q1.count() else nQ
+      val preCap =
+        if (nQ == maxQueries) Dedup.md5Sample(q0, "q_id", samplePct, 0).count() else nQ
       if (preCap > maxQueries)
         log.warn(s"$op maxQueries=$maxQueries bound the sampled query set " +
           s"($preCap sampled) — recall is estimated on the capped subset")
@@ -374,7 +366,7 @@ object Similarity {
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
       samplePct: Int = 100, numPlanes: Int = 4, dim: Int = 64,
       maxQueries: Int = 0): DataFrame = {
-    val (q, _) = sampledQueries("annRecallEval", corpus, vecCol, idCol, samplePct, maxQueries)
+    val (q, nQ) = sampledQueries("annRecallEval", corpus, vecCol, idCol, samplePct, maxQueries)
     // NOT fused into one dual-topk corpus pass (r18 opt-2 A/B): a fused
     // truth+approx aggregate taxes EVERY (query, vector) pair with the
     // bucket test and a second null-skipping heap eval, to save cosines
@@ -386,12 +378,10 @@ object Similarity {
       .localCheckpoint(eager = true) // counted via join below
     val approx = lshKnn(corpus, vecCol, idCol, q, k, numPlanes, dim)
       .select(col("q_id"), col("neighbor_id"))
-    val hits = truth.join(approx, Seq("q_id", "neighbor_id"))
+    truth.join(approx, Seq("q_id", "neighbor_id"))
       .agg(count(lit(1)).as("n_hits"))
-    q.agg(count(lit(1)).as("n_q"))
-      .crossJoin(hits)
-      .select(col("n_q"), lit(k).cast("long").as("k"), col("n_hits"),
-        round(col("n_hits").cast("double") / (col("n_q") * lit(k)), 4).as("recall"))
+      .select(lit(nQ).as("n_q"), lit(k).cast("long").as("k"), col("n_hits"),
+        round(col("n_hits").cast("double") / (lit(nQ) * lit(k)), 4).as("recall"))
   }
 
   /** Deterministic pseudo-random hyperplanes: component d of plane p
@@ -1228,11 +1218,6 @@ object Similarity {
     graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
   }
 
-  /** Version fields follow Dedup.IngestReport's 0-on-no-commit rule. */
-  final case class EmbedIngestReport(
-      admitted: Long, rejectedCorpusNear: Long, rejectedIntraNear: Long,
-      dataVersion: Int, indexVersion: Int)
-
   /** Embedding near-dup gated ingest against the persisted MIH index —
     * and unlike every other near-dup gate in the family, this one is
     * EXACT, not approximate: `maxHamming ≤ nBands − 1` is required,
@@ -1262,7 +1247,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
       increment: DataFrame, vecCol: String, idCol: String,
-      maxHamming: Int = 7, dim: Int = 64, bandBits: Int = 8): EmbedIngestReport = {
+      maxHamming: Int = 7, dim: Int = 64, bandBits: Int = 8): Dedup.NearDupIngestReport = {
     import graft.sources.ParquetLake
     requirePigeonhole(maxHamming, dim, bandBits)
     val inc = increment.localCheckpoint(eager = true)
@@ -1299,7 +1284,7 @@ object Similarity {
     val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
       spark, dataPath, indexPath, "embedgate", nAdmit, admitted,
       incIx.join(admitted.select(col(idCol).as("n_id")), Seq("n_id"), "left_semi"))
-    EmbedIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
+    Dedup.NearDupIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
   }
 
   /** s21: the bandBits frontier for the MIH family. The pigeonhole

@@ -152,24 +152,15 @@ object DedupQueries {
     // (non-binding at oracle scale; pair work bounded at any corpus).
     "d24_jaccard_calibration" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val docs = table(s, dir, "documents")
-        .orderBy(substring(md5(col("doc_id").cast("string")), 1, 13).asc,
-          col("doc_id").asc)
-        .limit(2048)
+      import graft.functions.{TextFunctions => T}
+      val docs = Dedup.md5Sample(table(s, dir, "documents"), "doc_id", 100, 2048)
       // NOT shared with the truth leg's shingle checkpoint (r18 opt-2
       // A/B): on the 2048-doc capped set, re-shingling raw text here is
       // CHEAPER than deserializing the checkpointed array<string>
       // blocks a second time (CPU 1.06 → 2.2 s when shared — reverted)
       val truth = Dedup.exactJaccardPairs(docs, "text", "doc_id", 0.3)
-      val sh = docs.select(col("doc_id").as("id"),
-        explode(graft.functions.TextFunctions.wordShingles(
-          graft.functions.TextFunctions.tokens(col("text")))).as("sng"))
-        .select(col("id"),
-          conv(substring(md5(col("sng")), 1, 7), 16, 10).cast("long").as("b"))
-      val minCols = (0 until 12).map(p =>
-        min((col("b") * Dedup.permA(p) + Dedup.permB(p)) % Dedup.PermMod)
-          .as(s"m$p"))
-      val sig = sh.groupBy("id").agg(minCols.head, minCols.tail: _*)
+      val sig = Dedup.minhashSignature(docs.select(col("doc_id").as("id"),
+        explode(T.wordShingles(T.tokens(col("text")))).as("sng")), 12)
       val a = sig.toDF("id_a" +: (0 until 12).map(p => s"a$p"): _*)
       val bb = sig.toDF("id_b" +: (0 until 12).map(p => s"b$p"): _*)
       val agree = (0 until 12).map(p =>
@@ -274,10 +265,8 @@ object DedupQueries {
     // a dedup pipeline (see operators.ConnectedComponents)
     "d7_dup_clusters" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val pairs = Dedup
-        .jaccardVerified(qcSampledByText(table(s, dir, "documents")), "text", "doc_id", 0.5)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val comp = graft.operators.ConnectedComponents.run(pairs)
+      val comp = Dedup.dupComponents(
+        qcSampledByText(table(s, dir, "documents")), "text", "doc_id", 0.5)
       val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
       comp.join(sizes, "component")
         .select(col("id"), col("component"), col("cluster_size"))
@@ -297,10 +286,7 @@ object DedupQueries {
     "d22_cluster_size_hist" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val docs = qcSampledByText(table(s, dir, "documents"))
-      val pairs = Dedup
-        .jaccardVerified(docs, "text", "doc_id", 0.5)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val sizes = graft.operators.ConnectedComponents.run(pairs)
+      val sizes = Dedup.dupComponents(docs, "text", "doc_id", 0.5)
         .groupBy("component").agg(count(lit(1)).as("cluster_size"))
       val hist = sizes.groupBy("cluster_size")
         .agg(count(lit(1)).as("n_clusters"), sum("cluster_size").as("n_docs"))
@@ -329,41 +315,20 @@ object DedupQueries {
     // benchmark decontamination: flag corpus docs sharing word-3-gram
     // shingles with a held-out "benchmark" slice (doc_id % 97 == 0).
     // The benchmark shingle set is tiny → broadcast hash join; the
-    // corpus side stays a narrow explode, no corpus-wide shuffle.
+    // corpus side stays a narrow explode of the checkpointed shingle
+    // sets (eager: `shared` can be AQE-broadcast in the report join —
+    // see Dedup.decontaminateBloom), no corpus-wide shuffle.
     "d6_decontaminate" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      import graft.functions.{TextFunctions => T}
-      // fan the per-doc shingling across cores (single-file parquet
-      // arrives as one partition) and persist the corpus shingle sets:
-      // they feed both the overlap join and the n_shingles projection,
-      // and a cached attribute is safe to explode (see Dedup.bandKeys
-      // scaladoc on InferFiltersFromGenerate).
       val docs = table(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
       val isBench = col("doc_id") % 97 === 0
-      val benchShingles = docs.where(isBench)
-        .select(explode(T.wordShingles(T.tokens(col("text")))).as("s"))
-        .distinct()
-      val corpus = docs.where(!isBench)
-        .select(col("doc_id"), T.wordShingles(T.tokens(col("text"))).as("ss"))
-        // eager: `shared` (whose subtree contains this relation) can be
-        // AQE-broadcast in the final join, and a LAZY checkpoint
-        // first-materialized on a broadcast-exchange thread while the
-        // dag-scheduler submits the other consumer's stage is the
-        // lock-inversion deadlock observed this round (jstack-confirmed
-        // in DedupSpec; see Dedup.lshRecallEval). Pre-materializing on
-        // the construction thread closes the window; same total work.
-        .localCheckpoint(eager = true)
-      val shared = corpus
-        .select(col("doc_id"), explode(col("ss")).as("s"))
-        .join(broadcast(benchShingles), "s")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shared"))
-      corpus.select(col("doc_id"), size(col("ss")).cast("long").as("n_shingles"))
-        .join(shared, Seq("doc_id"), "left")
-        .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
-        .withColumn("frac", round(col("n_shared").cast("double") / col("n_shingles"), 4))
-        .withColumn("contaminated", col("n_shared") > 0)
+      val corpus = Dedup.shingleRelation(docs.where(!isBench), "text", "doc_id")
+      Dedup.contaminationReport(corpus,
+          corpus.select(col("id"), explode(col("s")).as("s")),
+          // fanned across cores like the corpus side (single-file
+          // parquet arrives as one partition)
+          broadcast(Dedup.benchShingles(
+            docs.where(isBench).repartition(s.sparkContext.defaultParallelism), "text")))
         .orderBy("doc_id")
     }))
 

@@ -209,12 +209,7 @@ object SimilarityQueries {
       // pct sample + absolute lowest-md5 cap (the d16/s9 pattern):
       // pair work is 2048²-bounded no matter the corpus; the cap is
       // non-binding at oracle scale and replayed in the oracle SQL
-      val sample = table(s, dir, "embeddings").where(
-        conv(substring(md5(col("vec_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100 < 50)
-        .orderBy(substring(md5(col("vec_id").cast("string")), 1, 13).asc,
-          col("vec_id").asc)
-        .limit(2048)
+      val sample = Dedup.md5Sample(table(s, dir, "embeddings"), "vec_id", 50, 2048)
       Dedup.embeddingPairs(sample, "embedding", "vec_id", -1.0)
         .groupBy(floor(col("cos_sim") * 20).cast("long").as("band"))
         .agg(count(lit(1)).as("n_pairs"))

@@ -127,8 +127,7 @@ object TextQueries {
     // deterministic hash-split: stable train/eval assignment by id —
     // reproducible across runs, engines, and cluster sizes (no RNG)
     "t5_train_split" -> ((s, dir) => {
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-        .cast("long") % 100
+      val bucket = graft.functions.hashShard(col("doc_id"), 100)
       table(s, dir, "documents")
         .withColumn("bucket", bucket)
         .withColumn("split",
@@ -235,8 +234,7 @@ object TextQueries {
     // deterministic mixture sampling: per-source keep-rate by hash
     // bucket (even sources 30%, odd 70%) — reproducible re-weighting
     "t7_mixture_sample" -> ((s, dir) => {
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-        .cast("long") % 100
+      val bucket = graft.functions.hashShard(col("doc_id"), 100)
       val srcNum = regexp_extract(col("source"), "([0-9]+)$", 1).cast("long")
       val weight = when(srcNum % 2 === 0, 30L).otherwise(70L)
       table(s, dir, "documents")
@@ -263,8 +261,7 @@ object TextQueries {
       val docs = table(s, dir, "documents")
       val counts = docs.groupBy("source").agg(count(lit(1)).as("n_src"))
       val nMin = counts.agg(min("n_src").as("n_min"))
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-        .cast("long") % 1000000L
+      val bucket = graft.functions.hashShard(col("doc_id"), 1000000)
       docs.join(broadcast(counts), "source")
         .crossJoin(broadcast(nMin))
         .withColumn("kept",
@@ -359,8 +356,7 @@ object TextQueries {
       val docs = table(s, dir, "documents")
       val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
       val target = counts.agg(min("n_lang").as("target"))
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-        .cast("long") % 1000000L
+      val bucket = graft.functions.hashShard(col("doc_id"), 1000000)
       docs
         .join(broadcast(counts), "lang")
         .crossJoin(broadcast(target))
@@ -728,31 +724,27 @@ object TextQueries {
     // shingle set broadcasts (d6's shape); the split assignment stays
     // pure hash arithmetic; one aggregate over (split, lang).
     "t20_decon_split" -> ((s, dir) => {
-      val isBench = col("doc_id") % 97 === 0
-      // shingle ONCE into a checkpointed relation (d6's shape); the
-      // bench and corpus sides partition it disjointly. The final
-      // metadata join reads the column-pruned parquet scan directly —
-      // no text there.
-      val sh = table(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), T.wordShingles(T.tokens(col("text"))).as("ss"))
-        // eager: broadcast(benchShingles) embeds this relation in a
-        // broadcast subtree — a lazy first materialization there races
-        // the corpus side's stage submission into the checkpoint
-        // lock-inversion deadlock (see d6 / Dedup.lshRecallEval)
-        .localCheckpoint(eager = true)
-      val benchShingles = sh.where(isBench)
-        .select(explode(col("ss")).as("sng")).distinct()
-      val contaminated = sh.where(!isBench)
-        .select(col("doc_id"), explode(col("ss")).as("sng"))
+      def isBench(id: String) = col(id) % 97 === 0
+      // shingle ONCE into the eagerly checkpointed relation (d6's
+      // shape — broadcast(benchShingles) embeds it in a broadcast
+      // subtree, where a lazy first materialization would race the
+      // corpus side into the lock-inversion deadlock, see
+      // Dedup.lshRecallEval); the bench and corpus sides partition it
+      // disjointly. The final metadata join reads the column-pruned
+      // parquet scan directly — no text there.
+      val sh = graft.operators.Dedup.shingleRelation(
+        table(s, dir, "documents"), "text", "doc_id")
+      val benchShingles = sh.where(isBench("id"))
+        .select(explode(col("s")).as("sng")).distinct()
+      val contaminated = sh.where(!isBench("id"))
+        .select(col("id"), explode(col("s")).as("sng"))
         .join(broadcast(benchShingles), "sng")
-        .select("doc_id").distinct()
+        .select(col("id").as("doc_id")).distinct()
         .withColumn("contam", lit(1))
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-        .cast("long") % 100
+      val bucket = graft.functions.hashShard(col("doc_id"), 100)
       table(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-        .where(!isBench)
+        .where(!isBench("doc_id"))
         .join(contaminated, Seq("doc_id"), "left")
         .withColumn("split",
           when(col("contam").isNotNull, "quarantine")

@@ -190,9 +190,7 @@ object LogStream {
     // cannot re-plan a scalar subquery per batch, and the sketch is
     // the distilled STATIC side — small (bits), immutable, broadcast
     // with the task closure like any literal
-    val sketch: Array[Byte] = bench
-      .select(explode(T.wordShingles(T.tokens(col(benchTextCol)))).as("s"))
-      .distinct()
+    val sketch: Array[Byte] = graft.operators.Dedup.benchShingles(bench, benchTextCol)
       .agg(expr(s"graft_bloom_agg(xxhash64(s), ${estimatedShingles}L)").as("bf"))
       .head().getAs[Array[Byte]]("bf")
     if (sketch == null) // empty bench: nothing can be contaminated
@@ -850,9 +848,7 @@ object LogStream {
     * same corpus arrives through different paths.
     */
   def mixtureSample(df: DataFrame, idCol: String, keepPct: Column): DataFrame =
-    df.where(
-      conv(substring(md5(col(idCol).cast("string")), 1, 7), 16, 10)
-        .cast("long") % 100 < keepPct)
+    df.where(graft.functions.hashShard(col(idCol), 100) < keepPct)
 
   /** st26: streaming as-of enrichment — the stateful latest-value
     * join, q13's streaming twin: probe events (side 1) and reference

@@ -285,6 +285,26 @@ class DedupSpec extends SparkSpec {
     assert(row(60) === sampled)
   }
 
+  test("md5Sample: a binding cap keeps the lowest (md5 prefix, id) ids of the percent sample") {
+    // the d16/d20/d24 doc caps and the s9/s10/s17 query caps: none
+    // binds at the oracle scale, so the ids kept are pinned here
+    val ids = 1L to 400L
+    val frame = ids.map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    def md5Hex(id: Long): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def expected(pct: Int, cap: Int): Seq[Long] = {
+      val sampled = ids.filter(i => java.lang.Long.parseLong(md5Hex(i).take(7), 16) % 100 < pct)
+      assert(sampled.size > cap) // the cap binds
+      sampled.sortBy(i => (md5Hex(i).take(13), i)).take(cap)
+    }
+    for ((pct, cap) <- Seq((100, 25), (40, 25))) {
+      val got = Dedup.md5Sample(frame, "doc_id", pct, cap)
+        .select("doc_id").as[Long].collect().toSeq
+      assert(got === expected(pct, cap), s"samplePct=$pct maxDocs=$cap")
+    }
+  }
+
   test("d6: decontamination excludes the benchmark slice and flags iff shared") {
     val rows = graft.queries.DedupQueries.queries("d6_decontaminate")(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -212,7 +212,7 @@ class EdgeCaseSpec extends SparkSpec {
     val vecs = Seq(1L -> Seq.fill(64)(1.0f)).toDF("vec_id", "embedding")
     assert(emptyIngest(vecs, Similarity.embedIndexInit(spark, _, vecs, "embedding", "vec_id"))(
       Similarity.embedGatedIngest(spark, _, _, _, "embedding", "vec_id")) ===
-      Similarity.EmbedIngestReport(0L, 0L, 0L, 0, 0))
+      Dedup.NearDupIngestReport(0L, 0L, 0L, 0, 0))
 
     // vectored delete matching nothing: version unchanged, no dv
     // header, no stray .dv dir referenced

@@ -635,6 +635,44 @@ class PlanAssertSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("s9: the query count is the sampled set's known size — no count aggregate, no nested-loop join") {
+    val p = plan("s9_ann_recall")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+  }
+
+  /** RDD ids of the checkpointed (id, s) shingle leaves a plan reads. */
+  private def shingleLeaves(p: String): Seq[String] =
+    """Arguments: \[id#\d+L, s#\d+\], MapPartitionsRDD\[(\d+)\] at localCheckpoint""".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+
+  test("d4: one checkpointed shingle leaf feeds the signatures and the verify gather") {
+    val p = plan("d4_ngram_jaccard")
+    val leaves = shingleLeaves(p)
+    assert(leaves.size >= 2 && leaves.distinct.size === 1, p)
+    assert(!p.contains("graft_shingles"), p)
+  }
+
+  test("d16: one checkpointed shingle leaf feeds the truth and candidate legs") {
+    val p = plan("d16_lsh_recall_eval")
+    val leaves = shingleLeaves(p)
+    assert(leaves.size >= 2 && leaves.distinct.size === 1, p)
+    assert(!p.contains("graft_shingles"), p)
+  }
+
+  test("d20: containment candidates come from the inverted-index equi-join — no cartesian") {
+    val p = plan("d20_containment")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    assert(shingleLeaves(p).distinct.size === 1, p)
+  }
+
+  test("d24: the signature leg re-shingles raw text outside any checkpoint") {
+    // the r18 A/B: on the capped set re-shingling is cheaper than a
+    // second read of the truth leg's checkpointed shingle arrays
+    val p = plan("d24_jaccard_calibration")
+    assert(p.contains("explode(graft_shingles(graft_tokenize(text"), p)
+    assert(shingleLeaves(p).distinct.size === 1, p)
+  }
+
   test("s13: SQ8 scoring broadcasts the queries; shortlist and rerank cut with bounded heaps; no Window") {
     val p = plan("s13_knn_sq8")
     assert(tree(p).exists(_.contains("BroadcastNestedLoopJoin")), p)
