@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -202,7 +203,6 @@ object ParquetLake {
       sortCols: Seq[String] = Nil,
       parallelism: Int = 8,
       partitionPrefix: String = "p_date="): Seq[CompactionStat] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val parts = fs.listStatus(root)
@@ -229,20 +229,18 @@ object ParquetLake {
     }.flatten
   }
 
-  private def asideDir(partDir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(partDir.getParent, s".compact_${partDir.getName}")
+  private def asideDir(partDir: Path) =
+    new Path(partDir.getParent, s".compact_${partDir.getName}")
 
-  private def commitMarker(partDir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(partDir.getParent, s".compact_${partDir.getName}.COMMIT")
+  private def commitMarker(partDir: Path) =
+    new Path(partDir.getParent, s".compact_${partDir.getName}.COMMIT")
 
-  private def renameOrThrow(
-      fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
 
   /** A data file: Spark's writers name every one `part-*`. */
-  private def isPartFile(s: org.apache.hadoop.fs.FileStatus): Boolean =
+  private def isPartFile(s: FileStatus): Boolean =
     s.isFile && s.getPath.getName.startsWith("part-")
 
   /** The lake's one MOVER: rename the data files an aside write left
@@ -258,10 +256,8 @@ object ParquetLake {
     * mid-loop is safe — a half-moved aside just has fewer files left.
     */
   private def moveIntoLake(
-      fs: org.apache.hadoop.fs.FileSystem,
-      aside: org.apache.hadoop.fs.Path, root: org.apache.hadoop.fs.Path,
+      fs: FileSystem, aside: Path, root: Path,
       dir: Option[String], keep: String => Boolean = _ => true): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val moved = dataFilesOnDisk(fs, aside).flatMap { case (asideRel, f) =>
       val to = partitionDirOf(asideRel).orElse(dir)
       val rel = to.fold(f.getPath.getName)(d => s"$d/${f.getPath.getName}")
@@ -282,9 +278,7 @@ object ParquetLake {
     * dirs — by lake-relative name. Dot-prefixed dirs (asides, `.dv/`)
     * and non-`col=value` dirs (matview data) are never listed.
     */
-  private def dataFilesOnDisk(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+  private def dataFilesOnDisk(fs: FileSystem, root: Path): Seq[(String, FileStatus)] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.flatMap { e =>
       if (isPartFile(e)) Seq(e.getPath.getName -> e)
@@ -307,25 +301,41 @@ object ParquetLake {
     * the root-level files' group. */
   private val RootPartition = "<root>"
 
-  /** Write `content` to `target` atomically: create a sibling `.tmp`
-    * and rename it in, so a reader (or crash-recovery) never sees a
-    * half-written file. The delete of a pre-existing target is
-    * defensive only (markers never pre-exist in normal operation).
+  /** Write `content` to `target` atomically: write a [[tempFor]]
+    * sibling and rename it in, so a reader (or crash-recovery) never
+    * sees a half-written file. The delete of a pre-existing target
+    * makes a re-tag or a sidecar rebuild replace the old file.
     * Atomicity holds where rename is atomic — HDFS and local; on an
     * object store whose rename is copy+delete (S3A without a metadata
     * layer) a concurrent reader or crash can observe a missing or
     * half-copied marker, the same caveat the manifest-commit block
     * documents for itself.
     */
-  private def writeAtomic(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s"${target.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8"))
-    finally out.close()
+  private def writeAtomic(fs: FileSystem, target: Path, content: String): Unit = {
+    val tmp = writeTemp(fs, target, content)
     fs.delete(target, false)
     renameOrThrow(fs, tmp, target)
+  }
+
+  /** Where both atomic writers ([[writeAtomic]],
+    * [[atomicPublishListing]]) stage `target`: a per-writer-unique
+    * sibling under the dot-prefixed `._graft_tmp.` name, which no
+    * lister's prefix matches — an in-flight or crashed write never
+    * shows up as a phantom tag, stage or version.
+    */
+  private[graft] def tempFor(target: Path): Path =
+    new Path(target.getParent,
+      s"._graft_tmp.${target.getName}.${java.util.UUID.randomUUID().toString.take(12)}")
+
+  /** The one temp-file writer: `content` into a fresh [[tempFor]]
+    * sibling of `target`, whose path it returns.
+    */
+  private def writeTemp(fs: FileSystem, target: Path, content: String): Path = {
+    val tmp = tempFor(target)
+    val out = fs.create(tmp, false)
+    try out.write(content.getBytes("UTF-8"))
+    finally out.close()
+    tmp
   }
 
   /** Finish or discard an interrupted [[compact]] swap of `partDir`.
@@ -341,10 +351,7 @@ object ParquetLake {
     * run's garbage from another LIVE run's in-flight rewrite, so it
     * must never race a concurrent compaction of the same lake.
     */
-  def recoverInterrupted(
-      fs: org.apache.hadoop.fs.FileSystem,
-      partDir: org.apache.hadoop.fs.Path): Boolean = {
-    import org.apache.hadoop.fs.Path
+  def recoverInterrupted(fs: FileSystem, partDir: Path): Boolean = {
     val marker = commitMarker(partDir)
     val aside = asideDir(partDir)
     if (fs.exists(marker)) {
@@ -372,9 +379,7 @@ object ParquetLake {
     * appended after listing are never folded into the rewrite.
     */
   private def rewriteAside(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      partDir: org.apache.hadoop.fs.Path,
-      inputFiles: Seq[org.apache.hadoop.fs.Path], nOut: Int,
+      spark: SparkSession, fs: FileSystem, partDir: Path, inputFiles: Seq[Path], nOut: Int,
       sortCols: Seq[String]): Unit = {
     val tmp = asideDir(partDir)
     if (fs.exists(commitMarker(partDir)))
@@ -389,8 +394,8 @@ object ParquetLake {
     * within each file — the rewrite both compactions share.
     */
   private def writeCompacted(
-      spark: SparkSession, inputFiles: Seq[org.apache.hadoop.fs.Path], nOut: Int,
-      sortCols: Seq[String], out: org.apache.hadoop.fs.Path): Unit = {
+      spark: SparkSession, inputFiles: Seq[Path], nOut: Int,
+      sortCols: Seq[String], out: Path): Unit = {
     val part = spark.read.parquet(inputFiles.map(_.toString): _*).repartition(nOut)
     val sorted =
       if (sortCols.isEmpty) part else part.sortWithinPartitions(sortCols.map(col): _*)
@@ -401,16 +406,36 @@ object ParquetLake {
   // Manifest-gated visibility: a minimal table-format commit.
   //
   // The lake root holds versioned manifests `_graft_manifest.v<N>`,
-  // each a newline-separated list of lake-relative data-file paths.
-  // A manifest is committed by writing `._graft_manifest.tmp` and
-  // renaming it to the NEXT version — rename-to-fresh-name is atomic
-  // on HDFS/local (and on object stores with a metadata layer), so a
+  // each a LISTING of the snapshot's lake-relative data files. A
+  // manifest is committed by writing a `._graft_tmp.` temp file and
+  // linking/renaming it to the NEXT version — atomic-if-absent on
+  // HDFS/local (and on object stores with a metadata layer), so a
   // version either exists completely or not at all; readers take
   // max(N). Writers never modify a committed manifest or a referenced
   // file, so any reader sees exactly one consistent snapshot —
   // a compaction crash leaves either the old version (new files
   // present but unreferenced — garbage, not duplicates) or the new
   // one (old files unreferenced until [[vacuum]]).
+  //
+  // Listing format, decided once each: a listing is UTF-8 text —
+  // `# key=value` header lines (split at the first `=`; a committed
+  // listing's first line is `# committed_ms=<epoch ms>`, then its
+  // other headers sorted by key), then the lake-relative file lines,
+  // sorted, each ending in `\n`. A listing chain is published as
+  // `<prefix><name>.v<N>` by [[atomicPublishListing]]:
+  //   - main manifests `_graft_manifest.v<N>` (name "", headers
+  //     `dv` — lk37 deletion vectors — plus caller headers),
+  //   - branches `_graft_branch_<name>.v<N>` (lk38; `fork`, `dv`),
+  //   - matviews `_graft_matview_<name>.v<N>` (lk45; `base`, `mode`).
+  // Single-file refs are written by [[writeAtomic]]: staged refs
+  // `._graft_staged.<name>` (lk27; file lines only), tags
+  // `_graft_tag.<name>` (lk22; one version number) and the stats
+  // sidecar `_graft_stats.v<N>` (lk21/lk30; TSV rows). Chains are
+  // listed by the one lister ([[listVersions]]) and refs by
+  // [[listRefs]], read by the one reader ([[readListing]], a chain
+  // version through [[readVersion]]), named through the one check
+  // ([[checkName]]); the files they keep alive are the one live set
+  // ([[liveSet]]) and the sidecar has one reader ([[statsLines]]).
   //
   // File layout, decided once each: a data file is a `part-*` file at
   // the root or one level down in a `col=value` dir, named in
@@ -425,7 +450,7 @@ object ParquetLake {
   // vacuumed and compacted like any partition's.
   // ---------------------------------------------------------------
 
-  private val ManifestPrefix = "_graft_manifest.v"
+  private val ManifestChain = "_graft_manifest"
 
   // lk37: merge-on-read deletion vectors. Position files live under
   // `.dv/` (dot-prefixed: invisible to parquet listing, fsck's orphan
@@ -442,35 +467,82 @@ object ParquetLake {
     * files that, after a post-COMMIT crash, are the only copy of the
     * deleted originals' rows.
     */
-  private def isPartitionDir(s: org.apache.hadoop.fs.FileStatus): Boolean =
+  private def isPartitionDir(s: FileStatus): Boolean =
     s.isDirectory && s.getPath.getName.contains("=") && !s.getPath.getName.startsWith(".")
 
   private def fsFor(spark: SparkSession, path: String) = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
   }
 
-  private def manifestVersions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Int, org.apache.hadoop.fs.Path)] =
+  /** A listing as read: its file lines and its `# key=value` headers. */
+  private final case class Listing(files: Seq[String], headers: Map[String, String])
+
+  /** The one LISTING READER: the listing at `p`, read once — its
+    * non-empty lines without the `#` ones, and its `# key=value`
+    * headers split at the first `=`.
+    */
+  private def readListing(fs: FileSystem, p: Path): Listing = {
+    val lines = manifestLines(fs, p)
+    Listing(lines.filterNot(_.startsWith("#")),
+      lines.filter(_.startsWith("# ")).flatMap { l =>
+        val kv = l.stripPrefix("# ")
+        val i = kv.indexOf('=')
+        if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
+      }.toMap)
+  }
+
+  /** Every file directly under `root` whose name starts with `prefix`,
+    * as (the rest of its name, path) — one `listStatus`.
+    */
+  private def listRefs(fs: FileSystem, root: Path, prefix: String): Seq[(String, Path)] =
     if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(ManifestPrefix))
-      .map(s => s.getPath.getName.stripPrefix(ManifestPrefix).toInt -> s.getPath)
-      .sortBy(_._1)
+    else fs.listStatus(root).toSeq.collect {
+      case s if s.isFile && s.getPath.getName.startsWith(prefix) =>
+        s.getPath.getName.stripPrefix(prefix) -> s.getPath
+    }
+
+  /** The one VERSION LISTER: the `<prefix><name>.v<N>` listing files
+    * under `root` as name → (N, path), oldest first. The main chain's
+    * name is "" ([[manifestVersions]]).
+    */
+  private def listVersions(
+      fs: FileSystem, root: Path, prefix: String): Map[String, Seq[(Int, Path)]] =
+    listRefs(fs, root, prefix).flatMap { case (rest, p) =>
+      val i = rest.lastIndexOf(".v")
+      if (i < 0) None else Some((rest.take(i), rest.drop(i + 2).toInt, p))
+    }.groupBy(_._1).map { case (name, vs) => name -> vs.map(v => v._2 -> v._3).sortBy(_._1) }
+
+  /** The file name of version `v` of chain `<prefix><name>`. */
+  private def versionFile(prefix: String, name: String, v: Int): String = s"$prefix$name.v$v"
+
+  private def manifestVersions(fs: FileSystem, root: Path): Seq[(Int, Path)] =
+    listVersions(fs, root, ManifestChain).getOrElse("", Seq.empty)
+
+  /** The one CHAIN LOOKUP: version `version` of a chain's `versions`
+    * (its head when None) with its listing, or None for an empty
+    * chain. A version the chain lacks is a loud
+    * IllegalArgumentException, `missing(version)`.
+    */
+  private def readVersion(
+      fs: FileSystem, versions: Seq[(Int, Path)],
+      version: Option[Int], missing: Int => String): Option[(Int, Listing)] = {
+    val chosen = version match {
+      case Some(v) => Some(versions.find(_._1 == v).getOrElse(
+        throw new IllegalArgumentException(missing(v))))
+      case None => versions.lastOption
+    }
+    chosen.map { case (v, p) => v -> readListing(fs, p) }
+  }
 
   /** The head (latest committed) version, or None before the first
     * commit.
     */
-  private def latestVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Int] =
+  private def latestVersion(fs: FileSystem, root: Path): Option[Int] =
     manifestVersions(fs, root).lastOption.map(_._1)
 
   /** [[latestVersion]] for ops that need a committed lake. */
-  private def headVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, path: String): Int =
+  private def headVersion(fs: FileSystem, root: Path, path: String): Int =
     latestVersion(fs, root).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $path"))
 
@@ -480,21 +552,27 @@ object ParquetLake {
     * committed a manifest.
     */
   def readManifest(
-      spark: SparkSession, path: String, version: Option[Int] = None): Option[Seq[String]] = {
+      spark: SparkSession, path: String, version: Option[Int] = None): Option[Seq[String]] =
+    mainListing(spark, path, version).map(_._2.files)
+
+  /** [[readManifest]]'s lookup: the main `version` (the head when
+    * None) with its listing, None before the first commit.
+    */
+  private def mainListing(
+      spark: SparkSession, path: String, version: Option[Int]): Option[(Int, Listing)] = {
     val (fs, root) = fsFor(spark, path)
     val versions = manifestVersions(fs, root)
-    val chosen = version match {
-      case Some(v) => versions.find(_._1 == v).orElse(
-        throw new IllegalArgumentException(
-          s"manifest version $v not found under $path (have ${versions.map(_._1).mkString(",")})"))
-      case None => versions.lastOption
-    }
-    chosen.map { case (_, p) => manifestLines(fs, p).filterNot(_.startsWith("#")) }
+    readVersion(fs, versions, version, v =>
+      s"manifest version $v not found under $path (have ${versions.map(_._1).mkString(",")})")
   }
 
-  private def manifestLines(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): List[String] = {
+  /** [[mainListing]] for ops that need a committed lake. */
+  private def snapshotListing(
+      spark: SparkSession, path: String, version: Option[Int]): (Int, Listing) =
+    mainListing(spark, path, version).getOrElse(
+      throw new IllegalStateException(s"no committed manifest under $path"))
+
+  private def manifestLines(fs: FileSystem, p: Path): List[String] = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
     finally in.close()
@@ -510,10 +588,8 @@ object ParquetLake {
   def manifestLog(spark: SparkSession, path: String): Seq[(Int, Long)] = {
     val (fs, root) = fsFor(spark, path)
     manifestVersions(fs, root).map { case (v, p) =>
-      val header = manifestLines(fs, p).headOption
-        .filter(_.startsWith("# committed_ms="))
-        .map(_.stripPrefix("# committed_ms=").trim.toLong)
-      v -> header.getOrElse(fs.getFileStatus(p).getModificationTime)
+      v -> readListing(fs, p).headers.get("committed_ms").map(_.trim.toLong)
+        .getOrElse(fs.getFileStatus(p).getModificationTime)
     }
   }
 
@@ -527,21 +603,10 @@ object ParquetLake {
       spark: SparkSession, path: String,
       version: Option[Int] = None): Map[String, String] = {
     val (fs, root) = fsFor(spark, path)
-    val versions = manifestVersions(fs, root)
-    val chosen = version match {
-      case Some(v) => versions.find(_._1 == v).getOrElse(
-        throw new IllegalArgumentException(
-          s"manifest version $v not found under $path"))
-      case None => versions.lastOption.getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $path"))
-    }
-    manifestLines(fs, chosen._2)
-      .filter(_.startsWith("# "))
-      .flatMap { l =>
-        val kv = l.stripPrefix("# ")
-        val i = kv.indexOf('=')
-        if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
-      }.toMap
+    readVersion(fs, manifestVersions(fs, root), version,
+      v => s"manifest version $v not found under $path")
+      .getOrElse(throw new IllegalStateException(s"no committed manifest under $path"))
+      ._2.headers
   }
 
   /** Lake-relative deletion-vector paths carried by a snapshot's
@@ -549,21 +614,30 @@ object ParquetLake {
     */
   private def dvList(
       spark: SparkSession, path: String, version: Option[Int]): Seq[String] =
-    manifestHeaders(spark, path, version).get(DvHeaderKey).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
+    dvsOf(manifestHeaders(spark, path, version))
 
-  /** Loud refusal for copy-on-write maintenance while deletion
-    * vectors are pending: such ops commit a fresh manifest without
-    * the `dv` header, which would silently RESURRECT the
-    * merge-on-read-deleted rows. [[materializeDeletes]] first.
+  /** The deletion vectors a listing's `dv` header names. */
+  private def dvsOf(headers: Map[String, String]): Seq[String] =
+    headers.get(DvHeaderKey).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+
+  /** The `dv` header that carries `dvs` (none when empty). */
+  private def dvHeader(dvs: Seq[String]): Map[String, String] =
+    if (dvs.isEmpty) Map.empty else Map(DvHeaderKey -> dvs.mkString(","))
+
+  /** The head a copy-on-write op plans against — its version and
+    * files — or a loud refusal while deletion vectors are pending:
+    * such ops commit a fresh manifest without the `dv` header, which
+    * would silently RESURRECT the merge-on-read-deleted rows.
+    * [[materializeDeletes]] first.
     */
-  private def requireNoPendingDv(
-      spark: SparkSession, path: String, version: Int, op: String): Unit = {
-    val dvs = dvList(spark, path, Some(version))
+  private def cowHead(spark: SparkSession, path: String, op: String): (Int, Seq[String]) = {
+    val (version, head) = snapshotListing(spark, path, None)
+    val dvs = dvsOf(head.headers)
     require(dvs.isEmpty,
       s"$op on $path refused: snapshot v$version carries ${dvs.length} pending " +
         "deletion vector(s); run materializeDeletes first (a copy-on-write " +
         "rewrite would drop the dv header and resurrect deleted rows)")
+    version -> head.files
   }
 
   /** Time travel by TIMESTAMP: read the snapshot that was current at
@@ -602,12 +676,23 @@ object ParquetLake {
 
   private val TagPrefix = "_graft_tag."
 
-  private def tagPath(root: org.apache.hadoop.fs.Path, name: String) = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"tag name must be [A-Za-z0-9._-]+, got '$name'")
-    new org.apache.hadoop.fs.Path(root, s"$TagPrefix$name")
+  /** A non-empty run of letters, digits, `-` and `_` — plus `.` when
+    * `dots`. */
+  private def refChars(s: String, dots: Boolean): Boolean =
+    s.nonEmpty && s.forall(c => c.isLetterOrDigit || c == '-' || c == '_' || (dots && c == '.'))
+
+  /** The one ref-NAME CHECK, returning `name`. Tags and stages name
+    * one file each and may contain `.`; branch and matview names may
+    * not, because their chain's `.v<N>` suffix parse needs that.
+    */
+  private def checkName(kind: String, name: String, dots: Boolean): String = {
+    require(refChars(name, dots),
+      s"$kind name must be [A-Za-z0-9${if (dots) "." else ""}_-]+, got '$name'")
+    name
   }
+
+  private def tagPath(root: Path, name: String) =
+    new Path(root, TagPrefix + checkName("tag", name, dots = true))
 
   /** Point tag `name` at a committed version (latest by default). */
   def tagManifest(
@@ -624,13 +709,8 @@ object ParquetLake {
   /** All tags of the lake: name → version. */
   def manifestTags(spark: SparkSession, path: String): Map[String, Int] = {
     val (fs, root) = fsFor(spark, path)
-    if (!fs.exists(root)) Map.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(TagPrefix))
-      .map { s =>
-        s.getPath.getName.stripPrefix(TagPrefix) ->
-          manifestLines(fs, s.getPath).head.trim.toInt
-      }.toMap
+    listRefs(fs, root, TagPrefix)
+      .map { case (name, p) => name -> manifestLines(fs, p).head.trim.toInt }.toMap
   }
 
   /** Delete a tag (the versions it pinned become ordinary retention
@@ -676,10 +756,8 @@ object ParquetLake {
           s"under $path (vacuumed or never committed)"))
     // the dv header is part of the restored snapshot's row-visibility
     // contract — a restore that dropped it would resurrect rows
-    val dvs = dvList(spark, path, Some(toVersion))
     commitManifest(spark, path, files, Some(latest),
-      headers = if (dvs.isEmpty) Map.empty
-        else Map(DvHeaderKey -> dvs.mkString(",")))
+      headers = dvHeader(dvList(spark, path, Some(toVersion))))
   }
 
   // ---------------------------------------------------------------
@@ -688,23 +766,14 @@ object ParquetLake {
 
   private val StagedPrefix = "._graft_staged."
 
-  private def stagedRefPath(root: org.apache.hadoop.fs.Path, name: String) = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      s"stage name must be [A-Za-z0-9._-]+, got '$name'")
-    new org.apache.hadoop.fs.Path(root, s"$StagedPrefix$name")
-  }
+  private def stagedRefPath(root: Path, name: String) =
+    new Path(root, StagedPrefix + checkName("stage", name, dots = true))
 
   /** All staged (written-but-unpublished) appends: name → new files. */
   def stagedManifests(spark: SparkSession, path: String): Map[String, Seq[String]] = {
     val (fs, root) = fsFor(spark, path)
-    if (!fs.exists(root)) Map.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(StagedPrefix))
-      .map { s =>
-        s.getPath.getName.stripPrefix(StagedPrefix) ->
-          manifestLines(fs, s.getPath).filterNot(_.startsWith("#"))
-      }.toMap
+    listRefs(fs, root, StagedPrefix)
+      .map { case (name, p) => name -> readListing(fs, p).files }.toMap
   }
 
   /** Stage an append WITHOUT publishing it — the W of
@@ -725,7 +794,6 @@ object ParquetLake {
       spark: SparkSession, path: String, df: DataFrame, stage: String,
       partCol: Option[String] = None,
       allowEvolution: Boolean = false): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     if (!fs.exists(root)) fs.mkdirs(root)
     val ref = stagedRefPath(root, stage)
@@ -809,7 +877,6 @@ object ParquetLake {
   private def writeDataFiles(
       spark: SparkSession, path: String, df: DataFrame,
       partCol: Option[String]): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val aside = new Path(root, s".stage_${java.util.UUID.randomUUID().toString.take(12)}")
     partCol match {
@@ -966,29 +1033,27 @@ object ParquetLake {
       headers: Map[String, String]): Int = {
     val (base, dvs) =
       if (head == 0) (Seq.empty[String], Seq.empty[String])
-      else (readManifest(spark, path, Some(head)).get, dvList(spark, path, Some(head)))
+      else { val l = snapshotListing(spark, path, Some(head))._2; (l.files, dvsOf(l.headers)) }
     val delta = files.filterNot(base.toSet)
     if (delta.isEmpty) head
     else commitManifest(spark, path, base ++ delta, Some(head),
-      headers = headers ++ (if (dvs.isEmpty) Map.empty[String, String]
-        else Map(DvHeaderKey -> dvs.mkString(","))))
+      headers = headers ++ dvHeader(dvs))
   }
 
-  /** Drop a staged append without publishing: deletes the staged data
-    * files (they were never visible) and the ref. The A-said-no path.
+  /** Drop a staged append without publishing: deletes the ref, then
+    * the staged data files (they were never visible). The A-said-no
+    * path.
     */
   def abandonStaged(spark: SparkSession, path: String, stage: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val staged = stagedManifests(spark, path).getOrElse(stage, Seq.empty)
-    // only delete files no committed manifest references (a crashed
-    // publish may have committed before deleting the ref)
-    val referenced = manifestVersions(fs, root).flatMap { case (v, _) =>
-      readManifest(spark, path, Some(v)).getOrElse(Seq.empty)
-    }.toSet
-    val doomed = staged.filterNot(referenced)
-    doomed.foreach(f => fs.delete(new Path(root, f), false))
     fs.delete(stagedRefPath(root, stage), false)
+    // only delete files nothing else keeps live (a crashed publish may
+    // have committed before deleting the ref); a crash mid-loop leaves
+    // unreferenced files for vacuum
+    val live = liveSet(fs, root, manifestVersions(fs, root))._1
+    val doomed = staged.filterNot(live)
+    doomed.foreach(f => fs.delete(new Path(root, f), false))
     doomed
   }
 
@@ -1029,23 +1094,11 @@ object ParquetLake {
   // only by branch listings until publish; vacuum and fsck treat
   // branch-referenced files as live.
 
-  private def branchName(name: String): String = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"branch name must be [A-Za-z0-9_-]+, got '$name'")
-    s"_graft_branch_${name}.v"
-  }
+  private val BranchPrefix = "_graft_branch_"
 
-  private def branchVersions(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      name: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    val prefix = branchName(name)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
-      .map(s => s.getPath.getName.stripPrefix(prefix).toInt -> s.getPath)
-      .sortBy(_._1)
-  }
+  private def branchVersions(fs: FileSystem, root: Path, name: String): Seq[(Int, Path)] =
+    listVersions(fs, root, BranchPrefix)
+      .getOrElse(checkName("branch", name, dots = false), Seq.empty)
 
   /** Fork a branch from a main snapshot (the current one by
     * default). Branch v1 is that snapshot's listing; the fork
@@ -1059,45 +1112,34 @@ object ParquetLake {
     require(branchVersions(fs, root, name).isEmpty,
       s"branch '$name' already exists under $path; publish or drop it first")
     val latest = headVersion(fs, root, path)
-    val fork = fromVersion.getOrElse(latest)
-    val files = readManifest(spark, path, Some(fork)).get
-    val dvs = dvList(spark, path, Some(fork))
-    val headers = Map("fork" -> fork.toString) ++
-      (if (dvs.isEmpty) Map.empty else Map(DvHeaderKey -> dvs.mkString(",")))
-    atomicPublishListing(fs, root, s"${branchName(name)}1", files, headers,
+    val (fork, snap) = snapshotListing(spark, path, Some(fromVersion.getOrElse(latest)))
+    val headers = Map("fork" -> fork.toString) ++ dvHeader(dvsOf(snap.headers))
+    atomicPublishListing(fs, root, versionFile(BranchPrefix, name, 1), snap.files, headers,
       s"branch '$name' v1 already committed by a concurrent writer under $path")
     1
   }
 
-  /** All branches: name → (head version, fork version). */
+  /** All branches: name → their versions, oldest first. */
   def branches(spark: SparkSession, path: String): Map[String, Seq[Int]] = {
     val (fs, root) = fsFor(spark, path)
-    if (!fs.exists(root)) return Map.empty
-    val pat = "^_graft_branch_([A-Za-z0-9_-]+)\\.v(\\d+)$".r
-    fs.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(n, v) => Some(n -> v.toInt)
-        case _ => None
-      }
-    }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    listVersions(fs, root, BranchPrefix).map { case (name, vs) => name -> vs.map(_._1) }
   }
 
   private def branchListing(
       spark: SparkSession, path: String, name: String,
-      version: Option[Int]): (Int, Seq[String], Map[String, String]) = {
+      version: Option[Int]): (Int, Listing) = {
     val (fs, root) = fsFor(spark, path)
     val versions = branchVersions(fs, root, name)
     require(versions.nonEmpty, s"no branch '$name' under $path")
-    val (v, p) = version.map(w => versions.find(_._1 == w).getOrElse(
-      throw new IllegalArgumentException(
-        s"branch '$name' version $w not found under $path")))
-      .getOrElse(versions.last)
-    val lines = manifestLines(fs, p)
-    val headers = lines.filter(_.startsWith("# ")).flatMap { l =>
-      val kv = l.stripPrefix("# "); val i = kv.indexOf('=')
-      if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
-    }.toMap
-    (v, lines.filterNot(_.startsWith("#")), headers)
+    readVersion(fs, versions, version,
+      w => s"branch '$name' version $w not found under $path").get
+  }
+
+  /** The branch head's listing and the main version it forked from. */
+  private def branchHead(spark: SparkSession, path: String, name: String): (Listing, Int) = {
+    val (_, head) = branchListing(spark, path, name, None)
+    head -> head.headers.getOrElse("fork",
+      throw new IllegalStateException(s"branch '$name' under $path has no fork header")).toInt
   }
 
   /** Append `df` to a branch: data files are written invisibly into
@@ -1110,17 +1152,17 @@ object ParquetLake {
       partCol: Option[String] = None,
       allowEvolution: Boolean = false): Int = {
     val (fs, root) = fsFor(spark, path)
-    schemaGate(spark, path, Some(branchListing(spark, path, name, None)._2),
+    schemaGate(spark, path, Some(branchListing(spark, path, name, None)._2.files),
       df, allowEvolution)
     // the data files are written ONCE; a CAS loser rebases by
     // re-reading the branch head and re-adopting the same files —
     // appends compose, so unlike publishBranch this retry is safe
     val moved = writeDataFiles(spark, path, df, partCol)
     rebasing("appendBranch", s"$path/$name") {
-      val (v, base, headers) = branchListing(spark, path, name, None)
-      val carried = headers.view.filterKeys(k => k == "fork" || k == DvHeaderKey).toMap
-      atomicPublishListing(fs, root, s"${branchName(name)}${v + 1}",
-        base ++ moved, carried,
+      val (v, base) = branchListing(spark, path, name, None)
+      val carried = base.headers.view.filterKeys(k => k == "fork" || k == DvHeaderKey).toMap
+      atomicPublishListing(fs, root, versionFile(BranchPrefix, name, v + 1),
+        base.files ++ moved, carried,
         s"branch '$name' version ${v + 1} already committed by a concurrent writer under $path")
       v + 1
     }
@@ -1146,13 +1188,11 @@ object ParquetLake {
   def readBranch(
       spark: SparkSession, path: String, name: String,
       version: Option[Int] = None, mergeSchema: Boolean = false): DataFrame = {
-    val (_, files, headers) = branchListing(spark, path, name, version)
+    val (_, listing) = branchListing(spark, path, name, version)
     val base = spark.read.option("basePath", path)
       .option("mergeSchema", mergeSchema)
-      .parquet(files.map(f => s"$path/$f"): _*)
-    val dvs = headers.get(DvHeaderKey).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
-    applyDvAntiJoin(spark, path, base, dvs)
+      .parquet(listing.files.map(f => s"$path/$f"): _*)
+    applyDvAntiJoin(spark, path, base, dvsOf(listing.headers))
   }
 
   /** Publish a branch: ONE fast-forward CAS makes the branch head
@@ -1165,15 +1205,10 @@ object ParquetLake {
     * lives in main. Returns the committed main version.
     */
   def publishBranch(spark: SparkSession, path: String, name: String): Int = {
-    val (fs, root) = fsFor(spark, path)
-    val (_, files, headers) = branchListing(spark, path, name, None)
-    val fork = headers.getOrElse("fork",
-      throw new IllegalStateException(
-        s"branch '$name' under $path has no fork header")).toInt
-    val dvHeaders = headers.get(DvHeaderKey)
-      .map(v => Map(DvHeaderKey -> v)).getOrElse(Map.empty[String, String])
-    val committed = commitManifest(spark, path, files, Some(fork), dvHeaders)
-    branchVersions(fs, root, name).foreach { case (_, p) => fs.delete(p, false) }
+    val (head, fork) = branchHead(spark, path, name)
+    val committed = commitManifest(spark, path, head.files, Some(fork),
+      dvHeader(dvsOf(head.headers)))
+    dropBranch(spark, path, name)
     committed
   }
 
@@ -1194,20 +1229,22 @@ object ParquetLake {
     */
   def publishBranchRebase(spark: SparkSession, path: String, name: String): Int = {
     val (fs, root) = fsFor(spark, path)
-    val (_, files, headers) = branchListing(spark, path, name, None)
-    val fork = headers.getOrElse("fork",
-      throw new IllegalStateException(
-        s"branch '$name' under $path has no fork header")).toInt
-    val forkFiles = readManifest(spark, path, Some(fork)).getOrElse(Seq.empty)
-    val removed = forkFiles.filterNot(files.toSet)
+    val (head, fork) = branchHead(spark, path, name)
+    // the delta is head minus FORK listing: with the fork version
+    // vacuumed it is unknowable, and treating the whole listing as the
+    // delta would resurrect fork files main has since deleted
+    val (_, forkListing) = readVersion(fs, manifestVersions(fs, root), Some(fork),
+      v => s"branch '$name' cannot rebase: its fork version v$v is no longer " +
+        s"retained under $path (vacuumed); re-branch from the current head and replay").get
+    val removed = forkListing.files.filterNot(head.files.toSet)
     require(removed.isEmpty,
       s"branch '$name' is not append-only (missing ${removed.length} fork " +
         s"file(s), e.g. ${removed.take(3).mkString(", ")}); a rewrite cannot " +
         "rebase onto a moved main — publishBranch at the fork head or re-branch")
-    val branchDelta = files.filterNot(forkFiles.toSet)
+    val branchDelta = head.files.filterNot(forkListing.files.toSet)
     val committed = rebasing("publishBranchRebase", s"$path/$name")(
       appendOntoHead(spark, path, headVersion(fs, root, path), branchDelta, Map.empty))
-    branchVersions(fs, root, name).foreach { case (_, p) => fs.delete(p, false) }
+    dropBranch(spark, path, name)
     committed
   }
 
@@ -1220,14 +1257,6 @@ object ParquetLake {
     versions.foreach { case (_, p) => fs.delete(p, false) }
     versions.length
   }
-
-  /** Every lake-relative path referenced by ANY branch version —
-    * branch-referenced files are live for vacuum/fsck purposes.
-    */
-  private def allBranchFiles(spark: SparkSession, path: String): Seq[String] =
-    branches(spark, path).toSeq.flatMap { case (n, vs) =>
-      vs.flatMap(v => branchListing(spark, path, n, Some(v))._2)
-    }
 
   // ---------------------------------------------------------------
   // lk32: partition-spec evolution.
@@ -1250,9 +1279,7 @@ object ParquetLake {
     */
   def repartitionManifested(
       spark: SparkSession, path: String, partCol: String): Int = {
-    val (fs, root) = fsFor(spark, path)
-    val base = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, base, "repartitionManifested")
+    val (base, _) = cowHead(spark, path, "repartitionManifested")
     val snap = readManifested(spark, path, Some(base))
     require(snap.columns.contains(partCol),
       s"partition-evolution column '$partCol' is not a column of the snapshot " +
@@ -1278,9 +1305,7 @@ object ParquetLake {
   def reclusterManifested(
       spark: SparkSession, path: String, sortCol: String,
       numFiles: Int): Int = {
-    val (fs, root) = fsFor(spark, path)
-    val base = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, base, "reclusterManifested")
+    val (base, _) = cowHead(spark, path, "reclusterManifested")
     val snap = readManifested(spark, path, Some(base))
     require(snap.columns.contains(sortCol),
       s"recluster column '$sortCol' is not a column of the snapshot " +
@@ -1326,11 +1351,8 @@ object ParquetLake {
   def lakeHealth(
       spark: SparkSession, path: String,
       smallFileBytes: Long = 32L * 1024 * 1024): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val files = readManifest(spark, path, None).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
-    val rows = files.map(f =>
+    val rows = snapshotListing(spark, path, None)._2.files.map(f =>
       (partitionDirOf(f).getOrElse(RootPartition), fs.getFileStatus(new Path(root, f)).getLen))
     import spark.implicits._
     rows.toDF("partition", "bytes")
@@ -1369,7 +1391,37 @@ object ParquetLake {
   // `num` rows are FLOAT/DOUBLE.
   // ---------------------------------------------------------------
 
-  private val StatsPrefix = "_graft_stats.v"
+  private val StatsChain = "_graft_stats"
+
+  private def statsPath(root: Path, v: Int) =
+    new Path(root, versionFile(StatsChain, "", v))
+
+  /** The one STATS SIDECAR READER: version `v`'s TSV rows, None when
+    * it has no sidecar.
+    */
+  private def statsLines(fs: FileSystem, root: Path, v: Int): Option[Seq[String]] = {
+    val p = statsPath(root, v)
+    if (fs.exists(p)) Some(manifestLines(fs, p)) else None
+  }
+
+  /** Version `v`'s sidecar rows split into (file, column, type, min,
+    * max) fields — or the loud refusal of a stats-driven read without
+    * one.
+    */
+  private def requireStats(fs: FileSystem, root: Path, path: String, v: Int): Seq[Array[String]] =
+    statsLines(fs, root, v).getOrElse(throw new IllegalStateException(
+      s"no stats sidecar for version $v under $path — run buildFileStats first"))
+      .map(_.split('\t'))
+
+  /** Publish version `v`'s sidecar: `rows` replace any existing rows
+    * for `cols`; other columns' rows survive.
+    */
+  private def publishStats(
+      fs: FileSystem, root: Path, v: Int, cols: Seq[String], rows: Seq[String]): Unit = {
+    val carried = statsLines(fs, root, v).getOrElse(Seq.empty)
+      .filterNot(l => cols.contains(l.split('\t')(1)))
+    writeAtomic(fs, statsPath(root, v), (carried ++ rows).mkString("", "\n", "\n"))
+  }
 
   /** Harvest per-file min/max footer statistics for `cols`
     * (INT32/INT64/FLOAT/DOUBLE, DATE, and UTF-8 string columns) of a
@@ -1386,30 +1438,22 @@ object ParquetLake {
   def buildFileStats(
       spark: SparkSession, path: String, cols: Seq[String],
       version: Option[Int] = None): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val files = readManifest(spark, path, Some(v)).get
-    val rows = harvestFooterStats(spark, root.toString, files, cols.toSet)
-    val target = new Path(root, s"$StatsPrefix$v")
-    // merge with an existing sidecar: this call's columns replace
-    // their old rows, other columns' stats survive
-    val carried =
-      if (!fs.exists(target)) Seq.empty
-      else manifestLines(fs, target)
-        .filterNot(l => cols.contains(l.split('\t')(1)))
-    writeAtomic(fs, target, (carried ++ rows).mkString("", "\n", "\n"))
+    val (v, snap) = snapshotListing(spark, path, version)
+    val rows = harvestFooterStats(spark, root.toString, snap.files, cols.toSet)
+    publishStats(fs, root, v, cols, rows)
     rows.size
   }
 
-  /** Distributed footer harvest over an explicit file list: the list
-    * parallelizes, each task reads only its files' footers (KBs of
-    * metadata), and only finished stat rows return to the driver.
+  /** The one distributed FOOTER PASS: `f` over each listed file's
+    * open parquet footer reader, as one job. The list parallelizes and
+    * each task reads only its files' footers (KBs of metadata); the
+    * caller collects or sums the results.
     */
-  private def harvestFooterStats(
-      spark: SparkSession, rootStr: String, files: Seq[String],
-      colSet: Set[String]): Seq[String] = {
-    if (files.isEmpty) return Seq.empty
+  private def footerPass[A: scala.reflect.ClassTag](
+      spark: SparkSession, rootStr: String, files: Seq[String])(
+      f: (String, org.apache.parquet.hadoop.ParquetFileReader) => Iterable[A])
+      : org.apache.spark.rdd.RDD[A] = {
     // Hadoop Configuration is not Serializable (and Spark's wrapper is
     // private[spark]) — ship the entries and rebuild per partition
     val confEntries = {
@@ -1421,12 +1465,27 @@ object ParquetLake {
       spark.sparkContext.defaultParallelism * 4))
     spark.sparkContext.parallelize(files, slices)
       .mapPartitions { it =>
+        import org.apache.parquet.hadoop.ParquetFileReader
+        import org.apache.parquet.hadoop.util.HadoopInputFile
         val conf = new org.apache.hadoop.conf.Configuration(false)
         confEntries.foreach { case (k, vl) => conf.set(k, vl) }
-        it.flatMap(f => footerStats(rootStr, f, colSet, conf))
+        it.flatMap { file =>
+          val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+            new Path(rootStr, file), conf))
+          try f(file, rd) finally rd.close()
+        }
       }
-      .collect().toSeq
   }
+
+  /** Footer min/max stat rows for `colSet` over an explicit file list
+    * — only finished rows return to the driver.
+    */
+  private def harvestFooterStats(
+      spark: SparkSession, rootStr: String, files: Seq[String],
+      colSet: Set[String]): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else footerPass(spark, rootStr, files)((f, rd) => footerStats(f, rd, colSet))
+      .collect().toSeq
 
   /** lk30: INCREMENTAL stats harvest — the maintenance-cost fix for a
     * lake that commits often: a copy-on-write commit (merge, delete,
@@ -1444,37 +1503,29 @@ object ParquetLake {
   def buildFileStatsIncremental(
       spark: SparkSession, path: String, cols: Seq[String],
       version: Option[Int] = None): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val files = readManifest(spark, path, Some(v)).get.toSet
-    // newest older version that still has a sidecar to inherit from
-    val prev = manifestVersions(fs, root).map(_._1)
-      .filter(_ < v).sorted.reverse
-      .find(pv => fs.exists(new Path(root, s"$StatsPrefix$pv")))
-    val inherited = prev.toSeq.flatMap { pv =>
-      manifestLines(fs, new Path(root, s"$StatsPrefix$pv"))
-        .filter { l =>
-          val p = l.split('\t')
-          files.contains(p(0)) && cols.contains(p(1))
-        }
+    val (v, snap) = snapshotListing(spark, path, version)
+    val files = snap.files.toSet
+    // newest older retained version that still has a sidecar to
+    // inherit from
+    val prev = manifestVersions(fs, root).reverseIterator.filter(_._1 < v)
+      .flatMap { case (pv, p) => statsLines(fs, root, pv).map(p -> _) }
+      .nextOption()
+    val inherited = prev.toSeq.flatMap { case (_, stats) =>
+      stats.filter { l =>
+        val p = l.split('\t')
+        files.contains(p(0)) && cols.contains(p(1))
+      }
     }
     // churn = the manifest diff (readIncremental's contract): a file
     // in the previous snapshot inherits its rows — including the
     // legitimate absence of a row for a stats-less column, which a
     // re-harvest would just re-discover
-    val prevFiles = prev.map(pv =>
-      readManifest(spark, path, Some(pv)).getOrElse(Seq.empty).toSet)
+    val prevFiles = prev.map { case (p, _) => readListing(fs, p).files.toSet }
       .getOrElse(Set.empty[String])
     val fresh = harvestFooterStats(
       spark, root.toString, (files -- prevFiles).toSeq.sorted, cols.toSet)
-    val target = new Path(root, s"$StatsPrefix$v")
-    val carried =
-      if (!fs.exists(target)) Seq.empty
-      else manifestLines(fs, target)
-        .filterNot(l => cols.contains(l.split('\t')(1)))
-    writeAtomic(fs, target,
-      (carried ++ inherited ++ fresh).mkString("", "\n", "\n"))
+    publishStats(fs, root, v, cols, inherited ++ fresh)
     fresh.size
   }
 
@@ -1489,30 +1540,9 @@ object ParquetLake {
     */
   def countManifested(
       spark: SparkSession, path: String, version: Option[Int] = None): Long = {
-    val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val files = readManifest(spark, path, Some(v)).get
-    if (files.isEmpty) return 0L
-    val confEntries = {
-      import scala.jdk.CollectionConverters._
-      spark.sessionState.newHadoopConf().asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    }
-    val rootStr = root.toString
-    val slices = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism * 4))
-    spark.sparkContext.parallelize(files, slices)
-      .mapPartitions { it =>
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, vl) => conf.set(k, vl) }
-        it.map { f =>
-          val p = new org.apache.hadoop.fs.Path(rootStr, f)
-          val rd = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-          try rd.getRecordCount finally rd.close()
-        }
-      }
+    val files = snapshotListing(spark, path, version)._2.files
+    if (files.isEmpty) 0L
+    else footerPass(spark, path, files)((_, rd) => Seq(rd.getRecordCount))
       .sum().toLong
   }
 
@@ -1537,17 +1567,12 @@ object ParquetLake {
   def clusteringReport(
       spark: SparkSession, path: String, column: String,
       version: Option[Int] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val v = version.getOrElse(headVersion(fs, root, path))
-    val statsPath = new Path(root, s"$StatsPrefix$v")
-    if (!fs.exists(statsPath))
-      throw new IllegalStateException(
-        s"no stats sidecar for version $v under $path — run buildFileStats first")
+    val stats = requireStats(fs, root, path, v)
     val nFiles = readManifest(spark, path, Some(v)).get.size
     // exact endpoints: long/date bounds never pass through Double
-    val ranges: Seq[(BigDecimal, BigDecimal)] = manifestLines(fs, statsPath)
-      .map(_.split('\t'))
+    val ranges: Seq[(BigDecimal, BigDecimal)] = stats
       .collect {
         case Array(_, c, "long" | "date", mn, mx) if c == column =>
           (BigDecimal(BigInt(mn.toLong)), BigDecimal(BigInt(mx.toLong)))
@@ -1594,52 +1619,46 @@ object ParquetLake {
     * (base64 UTF-8 bounds).
     */
   private def footerStats(
-      rootStr: String, file: String, cols: Set[String],
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+      file: String, rd: org.apache.parquet.hadoop.ParquetFileReader,
+      cols: Set[String]): Seq[String] = {
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     val b64 = java.util.Base64.getEncoder
-    val p = new org.apache.hadoop.fs.Path(rootStr, file)
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    try {
-      rd.getFooter.getBlocks.asScala
-        .flatMap(_.getColumns.asScala)
-        .filter(c => cols.contains(c.getPath.toDotString))
-        .groupBy(_.getPath.toDotString)
-        .flatMap { case (col, chunks) =>
-          val stats = chunks.map(_.getStatistics)
-            .filter(s => s != null && s.hasNonNullValue)
-          if (stats.isEmpty || stats.size != chunks.size) None
-          else {
-            val prim = chunks.head.getPrimitiveType
-            val ann = prim.getLogicalTypeAnnotation
-            val isDate = ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-            val isStr = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            prim.getPrimitiveTypeName match {
-              case INT32 | INT64 =>
-                val mins = stats.map(_.genericGetMin.asInstanceOf[Number].longValue())
-                val maxs = stats.map(_.genericGetMax.asInstanceOf[Number].longValue())
-                val tag = if (isDate) "date" else "long"
-                Some(s"$file\t$col\t$tag\t${mins.min}\t${maxs.max}")
-              case FLOAT | DOUBLE =>
-                val mins = stats.map(_.genericGetMin.asInstanceOf[Number].doubleValue())
-                val maxs = stats.map(_.genericGetMax.asInstanceOf[Number].doubleValue())
-                Some(s"$file\t$col\tnum\t${mins.min}\t${maxs.max}")
-              case BINARY if isStr =>
-                val mins = stats.map(_.genericGetMin.asInstanceOf[Binary].getBytes)
-                val maxs = stats.map(_.genericGetMax.asInstanceOf[Binary].getBytes)
-                Some(s"$file\t$col\tstr\t" +
-                  s"${b64.encodeToString(mins.min(bytesUnsignedOrdering))}\t" +
-                  s"${b64.encodeToString(maxs.max(bytesUnsignedOrdering))}")
-              case _ => None // boolean/int96/decimal/raw-binary: keep
-            }
+    rd.getFooter.getBlocks.asScala
+      .flatMap(_.getColumns.asScala)
+      .filter(c => cols.contains(c.getPath.toDotString))
+      .groupBy(_.getPath.toDotString)
+      .flatMap { case (col, chunks) =>
+        val stats = chunks.map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue)
+        if (stats.isEmpty || stats.size != chunks.size) None
+        else {
+          val prim = chunks.head.getPrimitiveType
+          val ann = prim.getLogicalTypeAnnotation
+          val isDate = ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
+          val isStr = ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+          prim.getPrimitiveTypeName match {
+            case INT32 | INT64 =>
+              val mins = stats.map(_.genericGetMin.asInstanceOf[Number].longValue())
+              val maxs = stats.map(_.genericGetMax.asInstanceOf[Number].longValue())
+              val tag = if (isDate) "date" else "long"
+              Some(s"$file\t$col\t$tag\t${mins.min}\t${maxs.max}")
+            case FLOAT | DOUBLE =>
+              val mins = stats.map(_.genericGetMin.asInstanceOf[Number].doubleValue())
+              val maxs = stats.map(_.genericGetMax.asInstanceOf[Number].doubleValue())
+              Some(s"$file\t$col\tnum\t${mins.min}\t${maxs.max}")
+            case BINARY if isStr =>
+              val mins = stats.map(_.genericGetMin.asInstanceOf[Binary].getBytes)
+              val maxs = stats.map(_.genericGetMax.asInstanceOf[Binary].getBytes)
+              Some(s"$file\t$col\tstr\t" +
+                s"${b64.encodeToString(mins.min(bytesUnsignedOrdering))}\t" +
+                s"${b64.encodeToString(maxs.max(bytesUnsignedOrdering))}")
+            case _ => None // boolean/int96/decimal/raw-binary: keep
           }
-        }.toSeq
-    } finally rd.close()
+        }
+      }.toSeq
   }
 
   /** Unsigned lexicographic byte ordering — parquet's UTF8
@@ -1752,15 +1771,9 @@ object ParquetLake {
       mergeSchema: Boolean,
       keep: ((String, String, String)) => Boolean,
       predicate: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val v = version.getOrElse(headVersion(fs, root, path))
-    val statsPath = new Path(root, s"$StatsPrefix$v")
-    if (!fs.exists(statsPath))
-      throw new IllegalStateException(
-        s"no stats sidecar for version $v under $path — run buildFileStats first")
-    val ranges = manifestLines(fs, statsPath)
-      .map(_.split('\t'))
+    val ranges = requireStats(fs, root, path, v)
       .collect { case Array(f, c, tag, mn, mx) if c == col => f -> ((tag, mn, mx)) }
       .toMap
     val files = readManifest(spark, path, Some(v)).get
@@ -1811,11 +1824,9 @@ object ParquetLake {
       expectedItems: Long = 100000L, numBits: Long = 1000000L,
       version: Option[Int] = None): Unit = {
     graft.GraftSession.ensureRegistered(spark) // graft_bloom_agg
-    val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val files = readManifest(spark, path, Some(v)).get
+    val (v, snap) = snapshotListing(spark, path, version)
     val full = spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f"): _*)
+      .parquet(snap.files.map(f => s"$path/$f"): _*)
     val hashed = cols.map { c =>
       val dt = full.schema(c).dataType
       val keyExpr = dt match {
@@ -1868,7 +1879,6 @@ object ParquetLake {
       hashCol: org.apache.spark.sql.Column,
       predicate: org.apache.spark.sql.Column,
       version: Option[Int]): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val v = version.getOrElse(headVersion(fs, root, path))
     val sidecar = new Path(root, s"$BloomPrefix$v")
@@ -1958,7 +1968,6 @@ object ParquetLake {
       spark: SparkSession, path: String, files: Seq[String],
       expectedVersion: Option[Int] = None,
       headers: Map[String, String] = Map.empty): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     if (!fs.exists(root)) fs.mkdirs(root)
     val latest = latestVersion(fs, root).getOrElse(0)
@@ -1968,7 +1977,7 @@ object ParquetLake {
           s"manifest commit expected latest version $v but found $latest under $path")
     }
     val next = latest + 1
-    atomicPublishListing(fs, root, s"$ManifestPrefix$next", files, headers,
+    atomicPublishListing(fs, root, versionFile(ManifestChain, "", next), files, headers,
       s"manifest version $next already committed by a concurrent writer under $path")
     next
   }
@@ -1978,36 +1987,30 @@ object ParquetLake {
     * local filesystem (POSIX rename would silently replace), rename
     * on HDFS-contract stores (fails when the destination exists).
     * Exactly one of two racers wins; the loser gets
-    * [[ManifestConflictException]]. Shared by main-chain commits and
-    * branch commits (lk38).
+    * [[ManifestConflictException]]. The one writer of every listing
+    * chain: main commits, branch commits (lk38), matview refreshes
+    * (lk45).
     */
   private def atomicPublishListing(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      fs: FileSystem, root: Path,
       targetName: String, files: Seq[String], headers: Map[String, String],
       conflictMsg: String): Unit = {
-    import org.apache.hadoop.fs.Path
     // '#' header = commit metadata (readers drop '#' lines; legacy
     // manifests without one still read — see manifestLog). Extra
     // `headers` entries (e.g. the lk37 deletion-vector list, lk38's
     // fork pointer) ride the same mechanism: old readers skip them,
-    // header-aware readers parse `# key=value` via [[manifestHeaders]].
+    // header-aware readers parse `# key=value` via [[readListing]].
     headers.keys.foreach { k =>
-      require(k.nonEmpty && k != "committed_ms" &&
-        k.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
+      require(k != "committed_ms" && refChars(k, dots = false),
         s"manifest header key must be [A-Za-z0-9_-]+ and not committed_ms, got '$k'")
     }
     require(headers.values.forall(v => !v.contains('\n')),
       "manifest header values must be single-line")
-    val tmp = new Path(root,
-      s"._graft_manifest.tmp.${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, true)
     val headerLines = (s"# committed_ms=${System.currentTimeMillis()}" +:
       headers.toSeq.sortBy(_._1).map { case (k, v) => s"# $k=$v" })
       .mkString("", "\n", "\n")
-    try out.write((headerLines +
-      files.sorted.mkString("", "\n", "\n")).getBytes("UTF-8"))
-    finally out.close()
     val target = new Path(root, targetName)
+    val tmp = writeTemp(fs, target, headerLines + files.sorted.mkString("", "\n", "\n"))
     val localFs = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
       fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
     try {
@@ -2052,11 +2055,9 @@ object ParquetLake {
   def readManifested(
       spark: SparkSession, path: String, version: Option[Int] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    val files = readManifest(spark, path, version).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
     spark.read.option("basePath", path)
       .option("mergeSchema", mergeSchema)
-      .parquet(files.map(f => s"$path/$f"): _*)
+      .parquet(snapshotListing(spark, path, version)._2.files.map(f => s"$path/$f"): _*)
   }
 
   /** Incremental (change-data-feed-style) read: the rows of every
@@ -2089,10 +2090,8 @@ object ParquetLake {
       mergeSchema: Boolean = false): DataFrame = {
     val baseline: Set[String] =
       if (fromVersion == 0) Set.empty
-      else readManifest(spark, path, Some(fromVersion)).map(_.toSet).getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $path"))
-    val target = readManifest(spark, path, toVersion).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path"))
+      else snapshotListing(spark, path, Some(fromVersion))._2.files.toSet
+    val target = snapshotListing(spark, path, toVersion)._2.files
     val added = target.filterNot(baseline)
     if (added.isEmpty)
       readManifested(spark, path, toVersion, mergeSchema).where(lit(false))
@@ -2125,11 +2124,8 @@ object ParquetLake {
       targetFileBytes: Long = 128L << 20,
       sortCols: Seq[String] = Nil,
       parallelism: Int = 8): Seq[CompactionStat] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, currentVersion, "compactManifested")
-    val current = readManifest(spark, path, Some(currentVersion)).get
+    val (currentVersion, current) = cowHead(spark, path, "compactManifested")
     val byPartition = current.groupBy(partitionDirOf)
     val results = inParallel(byPartition.toSeq.sortBy(_._1.getOrElse("")), parallelism) {
       case (dir, files) =>
@@ -2219,10 +2215,7 @@ object ParquetLake {
       spark: SparkSession, path: String, src: DataFrame,
       keyCols: Seq[String], partCol: String,
       deleteCol: Option[String]): Int = {
-    val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, currentVersion, "mergeManifested")
-    val current = readManifest(spark, path, Some(currentVersion)).get
+    val (currentVersion, current) = cowHead(spark, path, "mergeManifested")
     val isDelete = deleteCol.map(c => coalesce(col(c).cast("boolean"), lit(false)))
       .getOrElse(lit(false))
     val upserts = deleteCol.foldLeft(src.where(!isDelete))((d, c) => d.drop(c))
@@ -2296,7 +2289,6 @@ object ParquetLake {
       snapshotSchema: org.apache.spark.sql.types.StructType,
       affected: Seq[String], tag: String)(
       transform: DataFrame => DataFrame): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     val bySchemes = affected
       .groupBy(partitionDirOf(_).map(_.takeWhile(_ != '=')))
@@ -2352,11 +2344,8 @@ object ParquetLake {
 
   private def deleteAttempt(
       spark: SparkSession, path: String, predicate: Column): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, currentVersion, "deleteManifested")
-    val current = readManifest(spark, path, Some(currentVersion)).get
+    val (currentVersion, current) = cowHead(spark, path, "deleteManifested")
     val snapshot = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
     val affected = affectedFiles(fs, root, snapshot, current, predicate, "delete")
     if (affected.isEmpty) return currentVersion
@@ -2382,7 +2371,7 @@ object ParquetLake {
     * ("delete"/"update") probe.
     */
   private def affectedFiles(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      fs: FileSystem, root: Path,
       snapshot: DataFrame, current: Seq[String], predicate: Column, op: String): Seq[String] = {
     val rootPath = fs.makeQualified(root).toUri.getPath
     val affected = snapshot
@@ -2430,11 +2419,8 @@ object ParquetLake {
   private def updateAttempt(
       spark: SparkSession, path: String, predicate: Column,
       set: Map[String, Column]): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    requireNoPendingDv(spark, path, currentVersion, "updateManifested")
-    val current = readManifest(spark, path, Some(currentVersion)).get
+    val (currentVersion, current) = cowHead(spark, path, "updateManifested")
     val snapshot = readManifested(spark, path, Some(currentVersion), mergeSchema = true)
     val unknownCols = set.keySet -- snapshot.columns.toSet
     require(unknownCols.isEmpty,
@@ -2486,8 +2472,7 @@ object ParquetLake {
       toVersion: Option[Int] = None): DataFrame = {
     require(keyCols.nonEmpty, "changeFeed needs at least one key column")
     val fromFiles = readManifest(spark, path, Some(fromVersion)).get.toSet
-    val toFiles = readManifest(spark, path, toVersion).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $path")).toSet
+    val toFiles = snapshotListing(spark, path, toVersion)._2.files.toSet
     def side(files: Set[String], other: Set[String]): DataFrame = {
       val only = (files -- other).toSeq.sorted
       if (only.isEmpty) null
@@ -2607,9 +2592,8 @@ object ParquetLake {
   private def deleteVectoredAttempt(
       spark: SparkSession, path: String, predicate: Column): Int = {
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    val current = readManifest(spark, path, Some(currentVersion)).get
-    val prior = dvList(spark, path, Some(currentVersion))
+    val (currentVersion, snap) = snapshotListing(spark, path, None)
+    val (current, prior) = (snap.files, dvsOf(snap.headers))
     // positions tag onto the SCAN relation (metadata columns resolve
     // there) — one pushed-down pass, and the vector carries positions
     // only, never row data
@@ -2628,9 +2612,7 @@ object ParquetLake {
     * deletion-vector key: the lake-relative file ([[relFileCol]]) and
     * the row's index within it.
     */
-  private def withPositions(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      df: DataFrame): DataFrame =
+  private def withPositions(fs: FileSystem, root: Path, df: DataFrame): DataFrame =
     df.withColumn("_graft_dv_file", relFileCol(fs.makeQualified(root).toUri.getPath))
       .withColumn("_graft_dv_pos", col("_metadata.row_index"))
 
@@ -2658,7 +2640,7 @@ object ParquetLake {
       if (prior.isEmpty) hits
       else notVectored(hits, spark.read.parquet(prior.map(f => s"$path/$f"): _*))
     val dvRel = s"$DvDir/dv_${java.util.UUID.randomUUID().toString.take(12)}"
-    val out = new org.apache.hadoop.fs.Path(root, dvRel)
+    val out = new Path(root, dvRel)
     fresh.select(col("_graft_dv_file").as("file"), col("_graft_dv_pos").as("pos"))
       .coalesce(1).write.mode("errorifexists").parquet(out.toString)
     if (spark.read.parquet(out.toString).isEmpty) { fs.delete(out, true); None }
@@ -2730,9 +2712,8 @@ object ParquetLake {
       keyCols: Seq[String], partCol: Option[String],
       deleteCol: Option[String]): Int = {
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    val current = readManifest(spark, path, Some(currentVersion)).get
-    val prior = dvList(spark, path, Some(currentVersion))
+    val (currentVersion, snap) = snapshotListing(spark, path, None)
+    val (current, prior) = (snap.files, dvsOf(snap.headers))
     // tombstone every CURRENT row whose key appears in the batch: a
     // broadcast-able key set (change batches are small by contract)
     // semi-joins against one tagged snapshot scan — positions out,
@@ -2748,10 +2729,8 @@ object ParquetLake {
     schemaGate(spark, path, Some(current), inserts, allowEvolution = false)
     val moved = writeDataFiles(spark, path, inserts, partCol)
     if (dv.isEmpty && moved.isEmpty) return currentVersion
-    val dvs = prior ++ dv
     commitManifest(spark, path, current ++ moved, Some(currentVersion),
-      headers = if (dvs.isEmpty) Map.empty
-        else Map(DvHeaderKey -> dvs.mkString(",")))
+      headers = dvHeader(prior ++ dv))
   }
 
   /** Apply every pending deletion vector as a copy-on-write rewrite
@@ -2767,12 +2746,10 @@ object ParquetLake {
     rebasing("materializeDeletes", path)(materializeAttempt(spark, path))
 
   private def materializeAttempt(spark: SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
-    val currentVersion = headVersion(fs, root, path)
-    val dvs = dvList(spark, path, Some(currentVersion))
+    val (currentVersion, snap) = snapshotListing(spark, path, None)
+    val (current, dvs) = (snap.files, dvsOf(snap.headers))
     if (dvs.isEmpty) return currentVersion
-    val current = readManifest(spark, path, Some(currentVersion)).get
     val dv = spark.read.parquet(dvs.map(f => s"$path/$f"): _*)
       .localCheckpoint(eager = true)
     val affected = dv.select("file").distinct()
@@ -2835,7 +2812,6 @@ object ParquetLake {
       sortCol: Option[String] = None,
       smallFileBytes: Long = 32L * 1024 * 1024,
       maxAvgOverlap: Double = 4.0): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
     val (fs, root) = fsFor(spark, path)
     val head = headVersion(fs, root, path)
@@ -2854,7 +2830,7 @@ object ParquetLake {
       }
     // 3. clustering decay (only when a sort column and sidecar exist)
     sortCol.foreach { c =>
-      if (fs.exists(new Path(root, s"$StatsPrefix$head"))) {
+      if (fs.exists(statsPath(root, head))) {
         val rep = clusteringReport(spark, path, c).head()
         val avg = rep.getAs[Double]("avg_file_overlaps")
         if (avg > maxAvgOverlap)
@@ -2879,13 +2855,24 @@ object ParquetLake {
       .toDF("priority", "action", "target", "reason")
   }
 
+  /** The lake's one LIVE SET: the data files and deletion vectors
+    * referenced by the main `versions`, every staged ref and every
+    * branch version — what [[fsck]], [[vacuum]] and [[abandonStaged]]
+    * never treat as garbage. Each listing is read once, off one
+    * `listStatus` per kind of ref.
+    */
+  private def liveSet(
+      fs: FileSystem, root: Path, versions: Seq[(Int, Path)]): (Set[String], Set[String]) = {
+    val listings = (versions.map(_._2) ++ listRefs(fs, root, StagedPrefix).map(_._2) ++
+      listVersions(fs, root, BranchPrefix).values.flatten.map(_._2))
+      .map(readListing(fs, _))
+    (listings.flatMap(_.files).toSet, listings.flatMap(l => dvsOf(l.headers)).toSet)
+  }
+
   def fsck(spark: SparkSession, path: String): FsckReport = {
     val (fs, root) = fsFor(spark, path)
     // staged-but-unpublished WAP files are intentional, not orphans
-    val referenced: Set[String] = (manifestVersions(fs, root).flatMap { case (v, _) =>
-      readManifest(spark, path, Some(v)).getOrElse(Seq.empty)
-    } ++ stagedManifests(spark, path).values.flatten ++
-      allBranchFiles(spark, path)).toSet
+    val referenced = liveSet(fs, root, manifestVersions(fs, root))._1
     val onDisk: Set[String] = dataFilesOnDisk(fs, root).map(_._1).toSet
     FsckReport(
       orphans = (onDisk -- referenced).toSeq.sorted,
@@ -2916,60 +2903,43 @@ object ParquetLake {
   def vacuum(
       spark: SparkSession, path: String, keepVersions: Int = 2,
       retainMillis: Long = 7L * 24 * 60 * 60 * 1000): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val (fs, root) = fsFor(spark, path)
     // an interrupted plain-compact swap (COMMIT marker present) means
     // an aside dir holds the ONLY copy of already-deleted originals —
     // no deletion sweep may run until that swap is finished
-    if (fs.exists(root)) {
-      val pending = fs.listStatus(root).filter(s =>
-        s.isFile && s.getPath.getName.startsWith(".compact_") &&
-          s.getPath.getName.endsWith(".COMMIT"))
-      if (pending.nonEmpty)
-        throw new IllegalStateException(
-          s"vacuum refused: interrupted compact() swap(s) pending under $path " +
-            s"(${pending.map(_.getPath.getName).mkString(", ")}); " +
-            "run compact() or recoverInterrupted first")
-    }
+    val pending = listRefs(fs, root, ".compact_").filter(_._1.endsWith(".COMMIT"))
+    if (pending.nonEmpty)
+      throw new IllegalStateException(
+        s"vacuum refused: interrupted compact() swap(s) pending under $path " +
+          s"(${pending.map(_._2.getName).mkString(", ")}); " +
+          "run compact() or recoverInterrupted first")
     val versions = manifestVersions(fs, root)
     if (versions.isEmpty) return Seq.empty
     // tagged versions are PINNED: a "dataset release" ref must stay
     // replayable no matter how retention is configured (lk22)
     val pinned = manifestTags(spark, path).values.toSet
     val retained = versions.takeRight(math.max(1, keepVersions)).map(_._1).toSet
-    val oldManifests = versions.filterNot(v =>
-      retained(v._1) || pinned(v._1))
+    val (kept, oldManifests) = versions.partition(v => retained(v._1) || pinned(v._1))
     oldManifests.foreach { case (v, p) =>
       fs.delete(p, false)
       // a dropped version's stats/bloom sidecars go with it
-      fs.delete(new Path(root, s"$StatsPrefix$v"), false)
+      fs.delete(statsPath(root, v), false)
       fs.delete(new Path(root, s"$BloomPrefix$v"), true)
     }
-    val kept = versions.filter(v => retained(v._1) || pinned(v._1))
     // a staged-but-unpublished WAP append's files are referenced by
-    // its staging ref — deleting them would tear a later publish
-    val referenced = (kept.flatMap { case (v, _) =>
-      readManifest(spark, path, Some(v)).getOrElse(Seq.empty)
-    } ++ stagedManifests(spark, path).values.flatten ++
-      allBranchFiles(spark, path)).toSet
-    val horizon = System.currentTimeMillis() - math.max(0L, retainMillis)
-    val dataOrphans = dataFilesOnDisk(fs, root).collect {
-      case (rel, f) if f.getModificationTime <= horizon && !referenced(rel) => rel
-    }
-    dataOrphans.foreach(f => fs.delete(new Path(root, f), false))
-    // deletion vectors referenced by NO retained manifest header are
+    // its staging ref — deleting them would tear a later publish.
+    // Deletion vectors referenced by NO retained manifest header are
     // spent (materialized, or their version aged out) — same horizon
     // guard as data files for in-flight deleteVectored commits.
     // Branch headers count too: a long-lived branch forked before
     // materialization still needs its vectors for the MoR read,
     // however old they are on main
-    val branchDv = branches(spark, path).toSeq.flatMap { case (n, vs) =>
-      vs.flatMap(v => branchListing(spark, path, n, Some(v))._3
-        .get(DvHeaderKey).toSeq.flatMap(_.split(',')).filter(_.nonEmpty))
+    val (referenced, keptDv) = liveSet(fs, root, kept)
+    val horizon = System.currentTimeMillis() - math.max(0L, retainMillis)
+    val dataOrphans = dataFilesOnDisk(fs, root).collect {
+      case (rel, f) if f.getModificationTime <= horizon && !referenced(rel) => rel
     }
-    val keptDv = (kept.flatMap { case (v, _) =>
-      dvList(spark, path, Some(v))
-    } ++ branchDv).toSet
+    dataOrphans.foreach(f => fs.delete(new Path(root, f), false))
     val dvRoot = new Path(root, DvDir)
     val dvOrphans =
       if (!fs.exists(dvRoot)) Seq.empty[String]
@@ -3007,22 +2977,17 @@ object ParquetLake {
   final case class MatviewRefresh(
       version: Int, mode: String, scannedFiles: Int, baseVersion: Int)
 
-  private def matviewPrefix(name: String): String = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"matview name must be [A-Za-z0-9_-]+, got '$name'")
-    s"_graft_matview_${name}.v"
-  }
+  private val MatviewPrefix = "_graft_matview_"
 
-  private def matviewVersions(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      name: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    val prefix = matviewPrefix(name)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
-      .map(s => s.getPath.getName.stripPrefix(prefix).toInt -> s.getPath)
-      .sortBy(_._1)
+  private def matviewVersions(fs: FileSystem, root: Path, name: String): Seq[(Int, Path)] =
+    listVersions(fs, root, MatviewPrefix)
+      .getOrElse(checkName("matview", name, dots = false), Seq.empty)
+
+  /** The matview's current listing, or the loud `no matview` refusal. */
+  private def matviewHead(spark: SparkSession, path: String, name: String): Listing = {
+    val (fs, root) = fsFor(spark, path)
+    matviewVersions(fs, root, name).lastOption.map(v => readListing(fs, v._2))
+      .getOrElse(throw new IllegalArgumentException(s"no matview '$name' under $path"))
   }
 
   // cnt_<m> (per-measure non-null count) rides beside sum_<m> so the
@@ -3070,17 +3035,11 @@ object ParquetLake {
       spark: SparkSession, path: String, name: String,
       keys: Seq[String], measures: Seq[String]): MatviewRefresh = {
     val (fs, root) = fsFor(spark, path)
-    val headV = headVersion(fs, root, path)
-    val headFiles = readManifest(spark, path, Some(headV)).get
-    val headDvs = dvList(spark, path, Some(headV)).sorted
-    val prev = matviewVersions(fs, root, name).lastOption
-    val prevState = prev.map { case (v, p) =>
-      val lines = manifestLines(fs, p)
-      val headers = lines.filter(_.startsWith("# ")).flatMap { l =>
-        val kv = l.stripPrefix("# "); val i = kv.indexOf('=')
-        if (i > 0) Some(kv.take(i) -> kv.drop(i + 1)) else None
-      }.toMap
-      (v, lines.filterNot(_.startsWith("#")), headers("base").toInt)
+    val (headV, head) = snapshotListing(spark, path, None)
+    val (headFiles, headDvs) = (head.files, dvsOf(head.headers).sorted)
+    val prevState = matviewVersions(fs, root, name).lastOption.map { case (v, p) =>
+      val l = readListing(fs, p)
+      (v, l.files, l.headers("base").toInt)
     }
     prevState match {
       case Some((v, _, base)) if base == headV =>
@@ -3091,13 +3050,12 @@ object ParquetLake {
     // retained (vacuum may have dropped it), the diff append-only,
     // and the dv set unchanged
     val incremental: Option[Seq[String]] = prevState.flatMap { case (_, _, base) =>
-      val baseFiles = try readManifest(spark, path, Some(base))
+      val baseListing = try mainListing(spark, path, Some(base)).map(_._2)
         catch { case _: IllegalArgumentException => None }
-      baseFiles.flatMap { bf =>
-        val baseDvs = dvList(spark, path, Some(base)).sorted
-        val removed = bf.filterNot(headFiles.toSet)
-        if (removed.isEmpty && baseDvs == headDvs)
-          Some(headFiles.filterNot(bf.toSet))
+      baseListing.flatMap { bl =>
+        val removed = bl.files.filterNot(headFiles.toSet)
+        if (removed.isEmpty && dvsOf(bl.headers).sorted == headDvs)
+          Some(headFiles.filterNot(bl.files.toSet))
         else None
       }
     }
@@ -3138,27 +3096,27 @@ object ParquetLake {
     val dataDir = s"_graft_matview_data_$name/v$nextV-" +
       java.util.UUID.randomUUID().toString.take(8)
     merged.write.mode("overwrite").parquet(s"$path/$dataDir")
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(root, dataDir))
+    val parts = fs.listStatus(new Path(root, dataDir))
       .toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s"$dataDir/${s.getPath.getName}")
-    try atomicPublishListing(fs, root, s"${matviewPrefix(name)}$nextV",
+    try atomicPublishListing(fs, root, versionFile(MatviewPrefix, name, nextV),
       parts, Map("base" -> headV.toString, "mode" -> mode),
       s"matview '$name' version $nextV already committed by a concurrent refresher under $path")
     catch {
       case e: ManifestConflictException =>
         // no listing will ever reference the loser's attempt-unique dir
-        fs.delete(new org.apache.hadoop.fs.Path(root, dataDir), true)
+        fs.delete(new Path(root, dataDir), true)
         throw e
     }
     // retain the previous snapshot for in-flight readers; sweep
     // older — data dirs are derived from each swept listing's own
     // part paths (dirs are attempt-unique, never version-derived)
     matviewVersions(fs, root, name).dropRight(2).foreach { case (_, p) =>
-      val oldDirs = manifestLines(fs, p).filterNot(_.startsWith("#"))
+      val oldDirs = readListing(fs, p).files
         .map(f => f.take(f.lastIndexOf('/'))).filter(_.nonEmpty).distinct
       fs.delete(p, false)
       oldDirs.foreach(d =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, d), true))
+        fs.delete(new Path(root, d), true))
     }
     MatviewRefresh(nextV, mode, scanned, headV)
   }
@@ -3170,12 +3128,8 @@ object ParquetLake {
   def matviewRead(
       spark: SparkSession, path: String, name: String,
       measures: Seq[String] = Seq.empty): DataFrame = {
-    val (fs, root) = fsFor(spark, path)
-    val (_, p) = matviewVersions(fs, root, name).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no matview '$name' under $path"))
-    val files = manifestLines(fs, p).filterNot(_.startsWith("#"))
     val df = spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f"): _*)
+      .parquet(matviewHead(spark, path, name).files.map(f => s"$path/$f"): _*)
     // avg = sum / non-null count (SQL AVG): null for all-null groups
     // (Divide yields null on a zero divisor), never a diluted quotient.
     // A legacy matview (pre-cnt_ partials) falls back to the all-rows
@@ -3192,24 +3146,14 @@ object ParquetLake {
     * maintenance job audits: incremental is the contract, full means
     * something rewrote history).
     */
-  def matviewMode(spark: SparkSession, path: String, name: String): String = {
-    val (fs, root) = fsFor(spark, path)
-    val (_, p) = matviewVersions(fs, root, name).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no matview '$name' under $path"))
-    manifestLines(fs, p).find(_.startsWith("# mode=")).map(
-      _.stripPrefix("# mode=")).getOrElse(
+  def matviewMode(spark: SparkSession, path: String, name: String): String =
+    matviewHead(spark, path, name).headers.getOrElse("mode",
       throw new IllegalStateException(s"matview '$name' has no mode header"))
-  }
 
   /** The main version the matview currently reflects (its staleness
     * probe: compare against the lake head before trusting it).
     */
-  def matviewBase(spark: SparkSession, path: String, name: String): Int = {
-    val (fs, root) = fsFor(spark, path)
-    val (_, p) = matviewVersions(fs, root, name).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no matview '$name' under $path"))
-    manifestLines(fs, p).find(_.startsWith("# base=")).map(
-      _.stripPrefix("# base=").toInt).getOrElse(
-      throw new IllegalStateException(s"matview '$name' has no base header"))
-  }
+  def matviewBase(spark: SparkSession, path: String, name: String): Int =
+    matviewHead(spark, path, name).headers.getOrElse("base",
+      throw new IllegalStateException(s"matview '$name' has no base header")).toInt
 }
