@@ -91,40 +91,27 @@ object BinaryOps {
         lpad(hex(coalesce(graft.functions.simhashBytes(col(binCol)), lit(0L))), 16, "0")
           .as("simhash"))
 
-  /** lk43: the blob-grain chunk index as a lake table — lk41/lk42's
-    * binary sibling, completing the index-gated ingest family (exact
-    * text / near-dup text / binary chunks). The persisted index is
-    * the corpus's DISTINCT chunk fingerprints (one long per distinct
-    * chunk — bytes never stored, never shuffled). An incoming blob's
-    * containment = |its distinct chunks ∩ index| / |its distinct
-    * chunks|; at or above `maxContainment` it is a near-copy (edited
-    * image, re-encoded header + same body) and rejects. Admitted
-    * blobs publish to the data lake and their chunks append to the
-    * index DISTINCT-against-it, so the index stays a set and its
-    * size tracks unique content bytes, not ingest volume. Commit
-    * order and replay semantics as lk41: data first; a fully-landed
-    * batch replays to zero admits (containment 1 against its own
-    * chunks). Intra-increment near-copies are NOT resolved here by
-    * design — run [[cdcNearDupPairs]] on the increment first when
-    * that matters (documented, matching m8's separation of
-    * concerns). Single-ingest-writer per index, as documented on
-    * [[graft.operators.Dedup.indexedIngest]]. A null/empty payload
-    * produces zero chunks; such blobs ADMIT (no content ⇒ nothing to
-    * be contained by) and are reported in `admittedChunkless` — note
-    * they are invisible to this gate's replay protection (no chunks
-    * ever enter the index), so replaying a batch re-admits them; gate
-    * on lk41 exact fingerprints first when that matters.
+  /** lk43: the blob-grain chunk index as a lake table — the binary
+    * member of the index-gated ingest family, whose contract is on
+    * [[graft.operators.IndexGate]]. The index is the corpus's DISTINCT
+    * CDC chunk fingerprints (bytes never stored or shuffled). A blob
+    * whose distinct chunks are ≥ `maxContainment` indexed is a
+    * near-copy (edited image, re-encoded header + same body) and
+    * rejects; admitted blobs extend the index distinct-against-it, so
+    * its size tracks unique content bytes. Intra-increment near-copies
+    * are NOT resolved here (run [[cdcNearDupPairs]] first when that
+    * matters); a redelivered copy counts in `rejectedContained`. A
+    * null/empty payload has zero chunks: it ADMITS into
+    * `admittedChunkless` and, never entering the index, re-admits on
+    * replay — gate on lk41 exact fingerprints first when that matters.
     */
   def chunkIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       corpus: DataFrame, binCol: String, idCol: String,
-      minLen: Int = 64, maskBits: Int = 8, maxLen: Int = 4096): Int = {
-    corpus
+      minLen: Int = 64, maskBits: Int = 8, maxLen: Int = 4096): Int =
+    graft.operators.IndexGate.seed(spark, indexPath, corpus
       .select(explode(graft.functions.cdcChunks(col(binCol), minLen, maskBits, maxLen)).as("fp"))
-      .distinct()
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      .distinct())
 
   final case class ChunkIngestReport(
       admitted: Long, rejectedContained: Long,
@@ -136,17 +123,14 @@ object BinaryOps {
       dataPath: String, indexPath: String,
       increment: DataFrame, binCol: String, idCol: String,
       maxContainment: Double = 0.5,
-      minLen: Int = 64, maskBits: Int = 8, maxLen: Int = 4096): ChunkIngestReport = {
-    val inc = increment.localCheckpoint(eager = true)
-    val chunks = inc
-      .select(col(idCol).as("id"),
-        explode(graft.functions.cdcChunks(col(binCol), minLen, maskBits, maxLen)).as("fp"))
-      .distinct()
-    fpGatedIngest(spark, dataPath, indexPath, inc, idCol, chunks,
-      maxContainment, "chunk")
-  }
+      minLen: Int = 64, maskBits: Int = 8, maxLen: Int = 4096): ChunkIngestReport =
+    fpGatedIngest(spark, dataPath, indexPath, increment, binCol, idCol,
+      maxContainment, "chunk")(inc => inc
+        .select(col(idCol).as("id"),
+          explode(graft.functions.cdcChunks(col(binCol), minLen, maskBits, maxLen)).as("fp"))
+        .distinct())
 
-  /** The shared containment-gate core of the index-gated BLOB ingest
+  /** The shared containment decision of the index-gated BLOB ingest
     * family (lk43 chunk grain / lk46 frame grain): given the
     * increment's distinct (id, fp) fingerprint relation, reject rows
     * whose fingerprints are ≥ maxContainment contained in the
@@ -160,40 +144,34 @@ object BinaryOps {
   private def fpGatedIngest(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
-      inc: DataFrame, idCol: String, fpRelation: DataFrame,
-      maxContainment: Double, stagePrefix: String): ChunkIngestReport = {
-    import graft.sources.ParquetLake
-    val chunks = fpRelation
-      .localCheckpoint(eager = true) // feeds containment AND the index append
-    val index = ParquetLake.readManifested(spark, indexPath)
-    val contained = chunks
-      .join(index.select(col("fp"), lit(true).as("hit")), Seq("fp"), "left")
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_hit"))
-      .withColumn("reject",
-        col("n_hit").cast("double") / col("n_chunks") >= maxContainment)
-      .localCheckpoint(eager = true)
-    // a null/empty payload yields ZERO chunks, so it has no row in
-    // `contained` at all — a semi-join on the admit set would silently
-    // drop it (neither admitted, indexed, nor reported). Left-join and
-    // admit chunkless blobs explicitly (no content ⇒ nothing to be
-    // contained BY), accounted in their own report bucket
-    val rejectIds = contained.where(col("reject"))
-      .select(col("id").as(idCol)).localCheckpoint(eager = true)
-    val admitted = inc.join(rejectIds, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = true)
-    val nInc = inc.count()
-    val nReject = rejectIds.count()
-    val nAdmit = nInc - nReject
-    val nChunkless = nInc - contained.count()
-    val newFps = chunks
-      .join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .select("fp").distinct()
-      .join(index, Seq("fp"), "left_anti")
-    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
-      spark, dataPath, indexPath, stagePrefix, nAdmit, admitted, newFps)
-    ChunkIngestReport(nAdmit, nReject, dataVersion, indexVersion, nChunkless)
+      increment: DataFrame, binCol: String, idCol: String,
+      maxContainment: Double, stagePrefix: String)(
+      fpRelation: DataFrame => DataFrame): ChunkIngestReport = {
+    val o = graft.operators.IndexGate.ingest(
+      spark, dataPath, indexPath, stagePrefix, increment, idCol, binCol) { (inc, index) =>
+      val chunks = fpRelation(inc)
+        .localCheckpoint(eager = true) // feeds containment AND the index append
+      val contained = chunks
+        .join(index.select(col("fp"), lit(true).as("hit")), Seq("fp"), "left")
+        .groupBy("id")
+        .agg(count(lit(1)).as("n_chunks"),
+          sum(when(col("hit"), 1L).otherwise(0L)).as("n_hit"))
+        .withColumn("reject",
+          col("n_hit").cast("double") / col("n_chunks") >= maxContainment)
+        .localCheckpoint(eager = true)
+      // a chunkless (null/empty) payload has no row in `contained`: a
+      // semi-join on the admits would silently drop it, so anti-join
+      // the rejects and count the chunkless rows in their own tally
+      graft.operators.IndexGate.Decision(
+        admitted = inc.join(
+          contained.where(col("reject")).select(col("id").as(idCol)), Seq(idCol), "left_anti"),
+        indexRows = admitted => chunks
+          .join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
+          .select("fp").distinct()
+          .join(index, Seq("fp"), "left_anti"),
+        tallies = Seq(inc.join(contained.select(col("id").as(idCol)), Seq(idCol), "left_anti")))
+    }
+    ChunkIngestReport(o.admitted, o.rest, o.dataVersion, o.indexVersion, o.tallies.head)
   }
 
   /** The increment's distinct (id, frame-hash) relation via the REAL
@@ -212,44 +190,31 @@ object BinaryOps {
   }
 
   /** lk46: persisted FRAME-HASH index init — the video-grain member
-    * of the index-gated ingest family (lk41 exact text / lk42 LSH
-    * bands / lk43 CDC chunks / lk44 lines / lk46 decoded frames): the
-    * index is the corpus's distinct perceptual frame hashes (16 chars
-    * per distinct STILL, container bytes never stored or shuffled),
-    * built with the real ImageIO multi-frame decode, so a re-encoded
-    * or re-muxed copy of seen footage still collides.
+    * of the index-gated ingest family: the corpus's distinct
+    * perceptual frame hashes from the real ImageIO multi-frame decode,
+    * so a re-encoded or re-muxed copy of seen footage still collides.
     */
   def frameIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      corpus: DataFrame, binCol: String, idCol: String): Int = {
-    frameFps(corpus, binCol, idCol).select("fp").distinct()
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      corpus: DataFrame, binCol: String, idCol: String): Int =
+    graft.operators.IndexGate.seed(spark, indexPath,
+      frameFps(corpus, binCol, idCol).select("fp").distinct())
 
-  /** lk46: frame-gated blob ingest — an incoming multi-frame blob
-    * rejects when ≥ maxContainment of its decoded frames' perceptual
-    * hashes are already indexed (the re-uploaded clip with a new
-    * intro, the re-encoded copy, the shared-footage compilation —
-    * shapes byte- and chunk-grain gates miss once the container is
-    * re-encoded, because the PIXELS survive re-encoding but the bytes
-    * don't); admitted blobs land in the lake and extend the index by
-    * exactly their unseen frame hashes. Cost per batch: one decode
-    * pass over the increment + one membership join against the
-    * index — the corpus is never rescanned, and a landed batch
-    * replays to zero admits (every frame indexed ⇒ containment 1).
-    * Same single-ingest-writer / data-then-index commit contract as
-    * lk41-44.
+  /** lk46: frame-gated blob ingest — a multi-frame blob rejects when
+    * ≥ maxContainment of its decoded frames' perceptual hashes are
+    * indexed (the re-uploaded clip with a new intro, the re-encoded
+    * copy: the PIXELS survive re-encoding, the bytes don't); admitted
+    * blobs extend the index by exactly their unseen frame hashes. One
+    * decode pass over the increment + one membership join per batch;
+    * a redelivered copy counts in `rejectedContained`.
     */
   def frameGatedIngest(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
       increment: DataFrame, binCol: String, idCol: String,
-      maxContainment: Double = 0.5): ChunkIngestReport = {
-    val inc = increment.localCheckpoint(eager = true)
-    fpGatedIngest(spark, dataPath, indexPath, inc, idCol,
-      frameFps(inc, binCol, idCol), maxContainment, "frame")
-  }
+      maxContainment: Double = 0.5): ChunkIngestReport =
+    fpGatedIngest(spark, dataPath, indexPath, increment, binCol, idCol,
+      maxContainment, "frame")(frameFps(_, binCol, idCol))
 
   /** Chunk-grain dedup accounting over binary payloads via
     * content-defined chunking ([[graft.functions.CdcOps]]): each

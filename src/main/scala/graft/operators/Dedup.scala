@@ -64,33 +64,18 @@ object Dedup {
     * [[dedupIndexInit]] seeds the index from the existing corpus;
     * [[indexedIngest]] gates an increment: rows whose fingerprint
     * exists in the index are rejected, within-increment repeats keep
-    * exactly one row (min id; a same-id redelivery is a repeat too),
-    * admitted rows publish to the DATA lake and their fingerprints
-    * append to the INDEX lake — both through the staged-commit
-    * machinery ([[graft.sources.ParquetLake.publishDataThenIndex]]),
-    * data first (a crash between the two
-    * commits can admit a future duplicate, never lose a row; the
-    * re-ingest of the same batch is rejected by the then-updated
-    * index, making replays idempotent once both commits land).
-    * First-arrival-wins by construction: a fingerprint's original
-    * keeper survives any later increment, whatever the ids.
-    *
-    * SINGLE-INGEST-WRITER per index: two ingests racing the SAME
-    * index can both read it before either commits and both admit one
-    * new fingerprint (the lake-level CAS serializes the commits, not
-    * the admission reads). Run ingests serially per index — the st35
-    * streaming sink is inherently serial and is the intended
-    * continuous driver; a duplicate admitted through a torn window is
-    * later visible to d1/d19 and removable by a normal dedup pass.
+    * exactly one row (min id), admitted rows publish to the DATA lake
+    * and their fingerprints append to the INDEX lake. First-arrival
+    * wins by construction: a fingerprint's original keeper survives
+    * any later increment, whatever the ids. Commit order, replay,
+    * redelivery and the single-ingest-writer contract are the
+    * family's, documented on [[IndexGate]].
     */
   def dedupIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      corpus: DataFrame, textCol: String, idCol: String): Int = {
-    exact(corpus, textCol, idCol)
-      .select(col("fingerprint"), col("keep_id"))
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      corpus: DataFrame, textCol: String, idCol: String): Int =
+    IndexGate.seed(spark, indexPath,
+      exact(corpus, textCol, idCol).select(col("fingerprint"), col("keep_id")))
 
   /** `dataVersion`/`indexVersion` are the committed manifest
     * versions, or 0 when the ingest admitted nothing (no commit
@@ -104,29 +89,23 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
       increment: DataFrame, textCol: String, idCol: String): IngestReport = {
-    import graft.sources.ParquetLake
-    val index = ParquetLake.readManifested(spark, indexPath)
-    val inc = increment
-      .withColumn("fingerprint", T.contentFingerprint(col(textCol)))
-      .localCheckpoint(eager = true) // feeds the gate and both appends
-    // exactly one keeper per fingerprint, lowest id first — a row
-    // re-delivered with the SAME id is a second copy, not a tie
-    val firstHolder = org.apache.spark.sql.expressions.Window
-      .partitionBy("fingerprint").orderBy(col(idCol))
-    val gated = inc
-      .join(index.select(col("fingerprint"), lit(true).as("indexed")),
-        Seq("fingerprint"), "left")
-      .withColumn("inc_rank", row_number().over(firstHolder))
-      .localCheckpoint(eager = true) // counted + split below
-    val admitted = gated.where(col("indexed").isNull && col("inc_rank") === 1)
-    val nAdmit = admitted.count()
-    val nIndexed = gated.where(col("indexed").isNotNull).count()
-    val nIntra = gated.where(col("indexed").isNull && col("inc_rank") > 1).count()
-    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
-      spark, dataPath, indexPath, "dedup", nAdmit,
-      admitted.drop("fingerprint", "indexed", "inc_rank"),
-      admitted.select(col("fingerprint"), col(idCol).as("keep_id")))
-    IngestReport(nAdmit, nIndexed, nIntra, dataVersion, indexVersion)
+    val o = IndexGate.ingest(spark, dataPath, indexPath, "dedup", increment, idCol, textCol) {
+      (inc, index) =>
+        // exactly one keeper per fingerprint, lowest id first
+        val firstHolder = org.apache.spark.sql.expressions.Window
+          .partitionBy("fingerprint").orderBy(col(idCol))
+        val gated = inc
+          .withColumn("fingerprint", T.contentFingerprint(col(textCol)))
+          .join(index.select(col("fingerprint"), lit(true).as("indexed")),
+            Seq("fingerprint"), "left")
+          .withColumn("inc_rank", row_number().over(firstHolder))
+          .localCheckpoint(eager = true) // admitted + counted below
+        IndexGate.Decision(
+          admitted = gated.where(col("indexed").isNull && col("inc_rank") === 1),
+          indexRows = _.select(col("fingerprint"), col(idCol).as("keep_id")),
+          rejected = Some(gated.where(col("indexed").isNotNull)))
+    }
+    IngestReport(o.admitted, o.rejected, o.rest, o.dataVersion, o.indexVersion)
   }
 
   // ---------------------------------------------------------------
@@ -152,12 +131,9 @@ object Dedup {
     */
   def lineIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      corpus: DataFrame, textCol: String, idCol: String): Int = {
-    sentences(spread(corpus), textCol, idCol)
-      .select("fp").distinct()
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      corpus: DataFrame, textCol: String, idCol: String): Int =
+    IndexGate.seed(spark, indexPath,
+      sentences(spread(corpus), textCol, idCol).select("fp").distinct())
 
   final case class LineIngestReport(
       docsIn: Long, docsAdmitted: Long, docsDroppedEmpty: Long,
@@ -166,62 +142,49 @@ object Dedup {
 
   /** lk44: continuous C4-style line dedup — [[indexedIngest]]'s
     * SENTENCE-grain sibling, the scrubbing (not rejecting) member of
-    * the persisted-index family. Each increment document is split
-    * into sentences; a sentence already in the index (seen in the
-    * corpus or an earlier batch) or already kept by an EARLIER
-    * increment occurrence (min id, then min position — one window
-    * over the fp-grain, increment-sized) is REMOVED; the document is
-    * rebuilt from its survivors in original order and admitted unless
-    * nothing survived (a wholly-boilerplate doc drops). Surviving
-    * fingerprints append to the index distinct-against-it, so the
-    * gate's cost stays O(increment + index membership join) — the
-    * corpus is never rescanned — and a fully-landed batch replays to
-    * ZERO admits (every sentence now indexed ⇒ every doc scrubs to
-    * empty). Every wide op is INCREMENT-sized — the gate join probes
-    * the index but the corpus text is never read, let alone shuffled;
-    * the increment's own sentences shuffle once for the fp-grain
-    * first-occurrence window and once for reconstruction. Commit
-    * order data-then-index and the SINGLE-INGEST-WRITER contract as
-    * documented on [[indexedIngest]].
+    * the family whose contract is on [[IndexGate]]. A sentence already
+    * in the index or kept by an EARLIER increment occurrence (min id,
+    * then min position) is REMOVED; the document is rebuilt from its
+    * survivors in order and admitted unless nothing survived (a
+    * wholly-boilerplate doc drops — so does a redelivered copy, which
+    * counts in `docsDroppedEmpty`; sentence counts exclude such
+    * copies). Survivors' fingerprints extend the index
+    * distinct-against-it. Every wide op is INCREMENT-sized: the gate
+    * join probes the index but never reads corpus text, and the
+    * increment's sentences shuffle once for the first-occurrence
+    * window and once for reconstruction.
     */
   def lineGatedIngest(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
       increment: DataFrame, textCol: String, idCol: String): LineIngestReport = {
-    import graft.sources.ParquetLake
-    val inc = increment.localCheckpoint(eager = true)
-    val sents = sentences(spread(inc), textCol, idCol)
-      .localCheckpoint(eager = true) // feeds gate + survivors + index append
-    val index = ParquetLake.readManifested(spark, indexPath)
-    // first increment occurrence per fingerprint: min (id, pos)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-      .orderBy(col("__id"), col("pos"))
-    val gated = sents
-      .join(index.select(col("fp"), lit(true).as("indexed")), Seq("fp"), "left")
-      .withColumn("rn", row_number().over(w))
-      .withColumn("keep", col("indexed").isNull && col("rn") === 1)
-      .localCheckpoint(eager = true)
-    val survivors = gated.where(col("keep"))
-    val rebuilt = survivors
-      .groupBy("__id")
-      .agg(count(lit(1)).as("__n_kept"),
-        array_join(transform(array_sort(
-          collect_list(struct(col("pos"), col("sent")))), _.getField("sent")),
-          ". ").as("__text"))
-    val admitted = inc
-      .join(rebuilt, inc(idCol) === rebuilt("__id"), "inner")
-      .withColumn(textCol, col("__text"))
-      .drop("__id", "__n_kept", "__text")
-      .localCheckpoint(eager = true)
-    val docsIn = inc.count()
-    val nAdmit = admitted.count()
-    val sentsIn = sents.count()
-    val sentsKept = survivors.count()
-    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
-      spark, dataPath, indexPath, "line", nAdmit,
-      admitted, survivors.select("fp").distinct())
-    LineIngestReport(docsIn, nAdmit, docsIn - nAdmit, sentsIn, sentsKept,
-      dataVersion, indexVersion)
+    val o = IndexGate.ingest(spark, dataPath, indexPath, "line", increment, idCol, textCol) {
+      (inc, index) =>
+        val sents = sentences(spread(inc), textCol, idCol)
+          .localCheckpoint(eager = true) // feeds gate + survivors + index append
+        // first increment occurrence per fingerprint: min (id, pos)
+        val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
+          .orderBy(col("__id"), col("pos"))
+        val survivors = sents
+          .join(index.select(col("fp"), lit(true).as("indexed")), Seq("fp"), "left")
+          .withColumn("rn", row_number().over(w))
+          .withColumn("keep", col("indexed").isNull && col("rn") === 1)
+          .localCheckpoint(eager = true)
+          .where(col("keep"))
+        val rebuilt = survivors
+          .groupBy("__id")
+          .agg(array_join(transform(array_sort(
+            collect_list(struct(col("pos"), col("sent")))), _.getField("sent")), ". ").as("__text"))
+        IndexGate.Decision(
+          admitted = inc
+            .join(rebuilt, inc(idCol) === rebuilt("__id"), "inner")
+            .withColumn(textCol, col("__text")),
+          indexRows = _ => survivors.select("fp").distinct(),
+          tallies = Seq(sents, survivors))
+    }
+    val Seq(sentsIn, sentsKept) = o.tallies
+    LineIngestReport(o.rowsIn, o.admitted, o.rest, sentsIn, sentsKept,
+      o.dataVersion, o.indexVersion)
   }
 
   /** lk42: the NEAR-dup index as a lake table — [[indexedIngest]]'s
@@ -233,22 +196,13 @@ object Dedup {
     * are a semi-join on matched ids — candidate-sized, not
     * corpus-sized). Intra-increment near-dups resolve through the
     * full d13 pipeline (candidates → verify → components → min-id
-    * keeper). Rejection counts are DISJOINT with corpus-near taking
-    * priority, so admitted + rejectedCorpusNear + rejectedIntraNear
-    * = |increment|. Commit order and replay semantics match lk41
-    * (data first; a fully-landed batch replays to zero admits —
-    * replayed docs are exact dups of themselves, bands always
-    * collide, Jaccard = 1), as does the SINGLE-INGEST-WRITER
-    * contract documented there.
+    * keeper); the accounting is [[IndexGate.nearDecision]]'s.
     */
   def nearDupIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       corpus: DataFrame, textCol: String, idCol: String,
-      numPerms: Int = 12, bands: Int = 4): Int = {
-    bandKeys(corpus, textCol, idCol, numPerms, bands)
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      numPerms: Int = 12, bands: Int = 4): Int =
+    IndexGate.seed(spark, indexPath, bandKeys(corpus, textCol, idCol, numPerms, bands))
 
   /** The report of both near-dup gates, this one and
     * [[Similarity.embedGatedIngest]]. Version fields follow
@@ -263,40 +217,31 @@ object Dedup {
       dataPath: String, indexPath: String,
       increment: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.5, numPerms: Int = 12, bands: Int = 4): NearDupIngestReport = {
-    import graft.sources.ParquetLake
-    val inc = increment.localCheckpoint(eager = true)
-    // LSH candidates against the persisted band keys, then exact
-    // verification of only those pairs
-    val cand = bandKeys(inc, textCol, idCol, numPerms, bands)
-      .toDF("id_new", "band", "h")
-      .join(ParquetLake.readManifested(spark, indexPath)
-        .toDF("id_old", "band", "h"), Seq("band", "h"))
-      .select("id_new", "id_old").distinct()
-      .localCheckpoint(eager = true)
-    val matchedCorpus = ParquetLake.readManifested(spark, dataPath)
-      .join(cand.select(col("id_old").as(idCol)).distinct(), Seq(idCol), "left_semi")
-    val shNew = shingles(inc, textCol, idCol).toDF("id_new", "s_new")
-    val shOld = shingles(matchedCorpus, textCol, idCol).toDF("id_old", "s_old")
-    val corpusNearIds = cand
-      .join(shNew, Seq("id_new")).join(shOld, Seq("id_old"))
-      .where(T.jaccard(col("s_new"), col("s_old")) >= threshold)
-      .select(col("id_new")).distinct()
-      .localCheckpoint(eager = true)
-    // intra-increment keepers via the d13 pipeline
-    val intraKeep = dedupCorpus(inc, textCol, idCol, threshold)
-      .localCheckpoint(eager = true)
-    val admitted = inc
-      .join(intraKeep.where(col("keep")).select(col("id").as(idCol)),
-        Seq(idCol), "left_semi")
-      .join(corpusNearIds.select(col("id_new").as(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint(eager = true)
-    val nAdmit = admitted.count()
-    val nCorpusNear = corpusNearIds.count()
-    val nIntra = inc.count() - nAdmit - nCorpusNear
-    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
-      spark, dataPath, indexPath, "neardup", nAdmit,
-      admitted, bandKeys(admitted, textCol, idCol, numPerms, bands))
-    NearDupIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
+    val o = IndexGate.ingest(spark, dataPath, indexPath, "neardup", increment, idCol, textCol) {
+      (inc, index) =>
+        // LSH candidates against the persisted band keys, then exact
+        // verification of only those pairs
+        val cand = bandKeys(inc, textCol, idCol, numPerms, bands)
+          .toDF("id_new", "band", "h")
+          .join(index.toDF("id_old", "band", "h"), Seq("band", "h"))
+          .select("id_new", "id_old").distinct()
+          .localCheckpoint(eager = true)
+        val matchedCorpus = graft.sources.ParquetLake.readManifested(spark, dataPath)
+          .join(cand.select(col("id_old").as(idCol)).distinct(), Seq(idCol), "left_semi")
+        val shNew = shingles(inc, textCol, idCol).toDF("id_new", "s_new")
+        val shOld = shingles(matchedCorpus, textCol, idCol).toDF("id_old", "s_old")
+        val corpusNear = cand
+          .join(shNew, Seq("id_new")).join(shOld, Seq("id_old"))
+          .where(T.jaccard(col("s_new"), col("s_old")) >= threshold)
+          .select(col("id_new").as(idCol)).distinct()
+        // intra-increment losers: the d13 pipeline's non-keepers
+        val intraLosers = dedupCorpus(inc, textCol, idCol, threshold)
+          .localCheckpoint(eager = true)
+          .where(!col("keep")).select(col("id").as(idCol))
+        IndexGate.nearDecision(inc, idCol, corpusNear, intraLosers,
+          bandKeys(_, textCol, idCol, numPerms, bands))
+    }
+    NearDupIngestReport(o.admitted, o.rejected, o.rest, o.dataVersion, o.indexVersion)
   }
 
   /** Incremental exact dedup: the daily-crawl admission check, the

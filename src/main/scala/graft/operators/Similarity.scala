@@ -1212,11 +1212,8 @@ object Similarity {
   def embedIndexInit(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       corpus: DataFrame, vecCol: String, idCol: String,
-      dim: Int = 64, bandBits: Int = 8): Int = {
-    mihIndexBuild(corpus, vecCol, idCol, dim, bandBits)
-      .write.mode("errorifexists").parquet(indexPath)
-    graft.sources.ParquetLake.snapshotManifest(spark, indexPath)
-  }
+      dim: Int = 64, bandBits: Int = 8): Int =
+    IndexGate.seed(spark, indexPath, mihIndexBuild(corpus, vecCol, idCol, dim, bandBits))
 
   /** Embedding near-dup gated ingest against the persisted MIH index —
     * and unlike every other near-dup gate in the family, this one is
@@ -1225,66 +1222,47 @@ object Similarity {
     * indexed (or increment) vector is GUARANTEED a band collision —
     * against a fully-committed index under the single-writer contract
     * the gate never admits a true near-duplicate, and the exact
-    * xor+popcount cut never rejects a far one. (The family's
-    * carve-outs apply as documented on Dedup.indexedIngest: a crash
-    * between the data publish and the index publish, or a second
-    * concurrent writer, can land a near-dup until repaired/replayed —
-    * the exactness claim is about the GATE, not those windows.)
-    * Cost: increment
-    * packing + one band equi-join against the index + integer
-    * distance on the collision pairs (candidate-sized).
-    *
-    * Intra-increment near-dup groups keep the min-id member
-    * (connected components over the verified pairs, d7's semantics);
-    * rejection counts are disjoint with corpus-near taking priority,
-    * so admitted + rejectedCorpusNear + rejectedIntraNear =
-    * |increment|. Commit order and replay semantics match lk41/lk42
-    * (data first; a fully-landed batch replays to zero admits — every
-    * replayed vector is Hamming-0 to its indexed self), as does the
-    * SINGLE-INGEST-WRITER contract documented on Dedup.indexedIngest.
+    * xor+popcount cut never rejects a far one (the crash and
+    * concurrent-writer windows on [[IndexGate]] still apply). Cost:
+    * increment packing + one band equi-join against the index +
+    * integer distance on the collision pairs (candidate-sized).
+    * Intra-increment near-dup groups keep the min-id member (connected
+    * components, d7's semantics); the accounting is
+    * [[IndexGate.nearDecision]]'s.
     */
   def embedGatedIngest(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, indexPath: String,
       increment: DataFrame, vecCol: String, idCol: String,
       maxHamming: Int = 7, dim: Int = 64, bandBits: Int = 8): Dedup.NearDupIngestReport = {
-    import graft.sources.ParquetLake
     requirePigeonhole(maxHamming, dim, bandBits)
-    val inc = increment.localCheckpoint(eager = true)
-    val incIx = mihIndexBuild(inc, vecCol, idCol, dim, bandBits)
-      .localCheckpoint(eager = true) // feeds both gate joins and the index append
-    // rebind by NAME, not positional toDF: the loaded index's column
-    // order is a parquet artifact — a schema-evolved or reordered
-    // read-back must not silently swap id and signature
-    def rebind(df: DataFrame, idAs: String, sigAs: String): DataFrame =
-      df.select(col("n_id").as(idAs), col("n_sig").as(sigAs), col("band"), col("bv"))
-    val corpusNearIds = rebind(incIx, "id_new", "sig_new")
-      .join(rebind(ParquetLake.readManifested(spark, indexPath), "id_old", "sig_old"),
-        Seq("band", "bv"))
-      .select("id_new", "sig_new", "id_old", "sig_old").distinct()
-      .where(hammingDist(col("sig_new"), col("sig_old")) <= maxHamming)
-      .select(col("id_new")).distinct()
-      .localCheckpoint(eager = true)
-    val intraEdges = rebind(incIx, "id_a", "sig_a")
-      .join(rebind(incIx, "id_b", "sig_b"), Seq("band", "bv"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "sig_a", "id_b", "sig_b").distinct()
-      .where(hammingDist(col("sig_a"), col("sig_b")) <= maxHamming)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val intraLosers = ConnectedComponents.run(intraEdges)
-      .where(col("component") =!= col("id"))
-      .select(col("id").as(idCol))
-    val admitted = inc
-      .join(corpusNearIds.select(col("id_new").as(idCol)), Seq(idCol), "left_anti")
-      .join(intraLosers, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = true)
-    val nAdmit = admitted.count()
-    val nCorpusNear = corpusNearIds.count()
-    val nIntra = inc.count() - nAdmit - nCorpusNear
-    val (dataVersion, indexVersion) = ParquetLake.publishDataThenIndex(
-      spark, dataPath, indexPath, "embedgate", nAdmit, admitted,
-      incIx.join(admitted.select(col(idCol).as("n_id")), Seq("n_id"), "left_semi"))
-    Dedup.NearDupIngestReport(nAdmit, nCorpusNear, nIntra, dataVersion, indexVersion)
+    val o = IndexGate.ingest(spark, dataPath, indexPath, "embedgate", increment, idCol, vecCol) {
+      (inc, index) =>
+        val incIx = mihIndexBuild(inc, vecCol, idCol, dim, bandBits)
+          .localCheckpoint(eager = true) // feeds both gate joins and the index append
+        // rebind by NAME, not positional toDF: the loaded index's column
+        // order is a parquet artifact — a schema-evolved or reordered
+        // read-back must not silently swap id and signature
+        def rebind(df: DataFrame, idAs: String, sigAs: String): DataFrame =
+          df.select(col("n_id").as(idAs), col("n_sig").as(sigAs), col("band"), col("bv"))
+        val corpusNear = rebind(incIx, "id_new", "sig_new")
+          .join(rebind(index, "id_old", "sig_old"), Seq("band", "bv"))
+          .select("id_new", "sig_new", "id_old", "sig_old").distinct()
+          .where(hammingDist(col("sig_new"), col("sig_old")) <= maxHamming)
+          .select(col("id_new").as(idCol)).distinct()
+        val intraEdges = rebind(incIx, "id_a", "sig_a")
+          .join(rebind(incIx, "id_b", "sig_b"), Seq("band", "bv"))
+          .where(col("id_a") < col("id_b"))
+          .select("id_a", "sig_a", "id_b", "sig_b").distinct()
+          .where(hammingDist(col("sig_a"), col("sig_b")) <= maxHamming)
+          .select(col("id_a").as("src"), col("id_b").as("dst"))
+        val intraLosers = ConnectedComponents.run(intraEdges)
+          .where(col("component") =!= col("id"))
+          .select(col("id").as(idCol))
+        IndexGate.nearDecision(inc, idCol, corpusNear, intraLosers,
+          admitted => incIx.join(admitted.select(col(idCol).as("n_id")), Seq("n_id"), "left_semi"))
+    }
+    Dedup.NearDupIngestReport(o.admitted, o.rejected, o.rest, o.dataVersion, o.indexVersion)
   }
 
   /** s21: the bandBits frontier for the MIH family. The pigeonhole

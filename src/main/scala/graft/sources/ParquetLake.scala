@@ -609,14 +609,9 @@ object ParquetLake {
       ._2.headers
   }
 
-  /** Lake-relative deletion-vector paths carried by a snapshot's
-    * manifest header (empty = no pending merge-on-read deletes).
+  /** The deletion vectors a listing's `dv` header names (empty = no
+    * pending merge-on-read deletes).
     */
-  private def dvList(
-      spark: SparkSession, path: String, version: Option[Int]): Seq[String] =
-    dvsOf(manifestHeaders(spark, path, version))
-
-  /** The deletion vectors a listing's `dv` header names. */
   private def dvsOf(headers: Map[String, String]): Seq[String] =
     headers.get(DvHeaderKey).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
 
@@ -748,16 +743,17 @@ object ParquetLake {
     */
   def restoreManifested(spark: SparkSession, path: String, toVersion: Int): Int = {
     val (fs, root) = fsFor(spark, path)
-    val latest = headVersion(fs, root, path)
+    val versions = manifestVersions(fs, root)
+    val latest = versions.lastOption.map(_._1).getOrElse(
+      throw new IllegalStateException(s"no committed manifest under $path"))
     if (toVersion == latest) return latest
-    val files = readManifest(spark, path, Some(toVersion)).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot restore: version $toVersion is not a committed manifest " +
-          s"under $path (vacuumed or never committed)"))
+    val (_, target) = readVersion(fs, versions, Some(toVersion), v =>
+      s"cannot restore: version $v is not a committed manifest " +
+        s"under $path (vacuumed or never committed)").get
     // the dv header is part of the restored snapshot's row-visibility
     // contract — a restore that dropped it would resurrect rows
-    commitManifest(spark, path, files, Some(latest),
-      headers = dvHeader(dvList(spark, path, Some(toVersion))))
+    commitManifest(spark, path, target.files, Some(latest),
+      headers = dvHeader(dvsOf(target.headers)))
   }
 
   // ---------------------------------------------------------------
@@ -1056,29 +1052,6 @@ object ParquetLake {
     doomed.foreach(f => fs.delete(new Path(root, f), false))
     doomed
   }
-
-  /** The commit tail of the index-gated ingest family (lk41–lk47):
-    * publish the admitted rows to the data lake, THEN `indexRows` to
-    * the index lake, each as one staged-append commit under a shared
-    * random stage name. Data first is the crash-window contract
-    * documented on [[graft.operators.Dedup.indexedIngest]]: a crash
-    * between the two commits can admit a future duplicate, never lose
-    * a row. Returns (dataVersion, indexVersion), or (0, 0) when
-    * `nAdmitted` is 0 — nothing is committed and real versions start
-    * at 1.
-    */
-  def publishDataThenIndex(
-      spark: SparkSession, dataPath: String, indexPath: String,
-      stagePrefix: String, nAdmitted: Long,
-      admitted: DataFrame, indexRows: DataFrame): (Int, Int) =
-    if (nAdmitted == 0) (0, 0)
-    else {
-      val stage = s"${stagePrefix}_${java.util.UUID.randomUUID().toString.take(8)}"
-      stageAppend(spark, dataPath, admitted, stage)
-      val dataVersion = publishStaged(spark, dataPath, stage)
-      stageAppend(spark, indexPath, indexRows, stage)
-      (dataVersion, publishStaged(spark, indexPath, stage))
-    }
 
   // ---------------------------------------------------------------
   // lk38: branches — multi-commit isolation over the manifest log
@@ -1772,11 +1745,13 @@ object ParquetLake {
       keep: ((String, String, String)) => Boolean,
       predicate: org.apache.spark.sql.Column): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val ranges = requireStats(fs, root, path, v)
+    // one root listing; a pinned version's missing sidecar fails first
+    val pinned = version.map(requireStats(fs, root, path, _))
+    val (v, snapshot) = snapshotListing(spark, path, version)
+    val ranges = pinned.getOrElse(requireStats(fs, root, path, v))
       .collect { case Array(f, c, tag, mn, mx) if c == col => f -> ((tag, mn, mx)) }
       .toMap
-    val files = readManifest(spark, path, Some(v)).get
+    val files = snapshot.files
     readKept(spark.read.option("mergeSchema", mergeSchema.toString), path, files,
       files.filter(f => ranges.get(f).forall(keep)), predicate)
   }
@@ -1880,11 +1855,17 @@ object ParquetLake {
       predicate: org.apache.spark.sql.Column,
       version: Option[Int]): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    val v = version.getOrElse(headVersion(fs, root, path))
-    val sidecar = new Path(root, s"$BloomPrefix$v")
-    if (!fs.exists(sidecar))
-      throw new IllegalStateException(
-        s"no bloom sidecar for version $v under $path — run buildFileBlooms first")
+    def requireBloom(v: Int): Path = {
+      val sidecar = new Path(root, s"$BloomPrefix$v")
+      if (!fs.exists(sidecar))
+        throw new IllegalStateException(
+          s"no bloom sidecar for version $v under $path — run buildFileBlooms first")
+      sidecar
+    }
+    // one root listing; a pinned version's missing sidecar fails first
+    val pinned = version.map(requireBloom)
+    val (v, snapshot) = snapshotListing(spark, path, version)
+    val sidecar = pinned.getOrElse(requireBloom(v))
     // one tiny job pins the probe hash to the exact executor-side
     // xxhash64 the build used (same type, same seed)
     val hash = spark.range(1).select(hashCol.as("h")).head().getLong(0)
@@ -1897,8 +1878,7 @@ object ParquetLake {
           .readFrom(new java.io.ByteArrayInputStream(b)).mightContainLong(hash) => f
       })
       .collect().toSet
-    val files = readManifest(spark, path, Some(v)).get
-    readKept(spark.read, path, files, files.filterNot(rejected), predicate)
+    readKept(spark.read, path, snapshot.files, snapshot.files.filterNot(rejected), predicate)
   }
 
   /** Thrown when an optimistic commit loses the race: the expected
@@ -2054,11 +2034,15 @@ object ParquetLake {
     */
   def readManifested(
       spark: SparkSession, path: String, version: Option[Int] = None,
-      mergeSchema: Boolean = false): DataFrame = {
+      mergeSchema: Boolean = false): DataFrame =
+    readFiles(spark, path, snapshotListing(spark, path, version)._2.files, mergeSchema)
+
+  /** Read the lake-relative `files` under `path`, partition columns kept. */
+  private def readFiles(
+      spark: SparkSession, path: String, files: Seq[String], mergeSchema: Boolean): DataFrame =
     spark.read.option("basePath", path)
       .option("mergeSchema", mergeSchema)
-      .parquet(snapshotListing(spark, path, version)._2.files.map(f => s"$path/$f"): _*)
-  }
+      .parquet(files.map(f => s"$path/$f"): _*)
 
   /** Incremental (change-data-feed-style) read: the rows of every
     * data file present in manifest `toVersion` (latest by default)
@@ -2657,11 +2641,9 @@ object ParquetLake {
   def readManifestedMoR(
       spark: SparkSession, path: String, version: Option[Int] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    val (fs, root) = fsFor(spark, path)
-    val latest = headVersion(fs, root, path)
-    val v = version.getOrElse(latest)
-    val base = readManifested(spark, path, Some(v), mergeSchema)
-    applyDvAntiJoin(spark, path, base, dvList(spark, path, Some(v)))
+    val snapshot = snapshotListing(spark, path, version)._2
+    applyDvAntiJoin(spark, path, readFiles(spark, path, snapshot.files, mergeSchema),
+      dvsOf(snapshot.headers))
   }
 
   /** The merge-on-read reader core: anti-join `base` against the
@@ -2817,7 +2799,7 @@ object ParquetLake {
     val head = headVersion(fs, root, path)
     val actions = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String)]
     // 1. pending deletion vectors gate everything copy-on-write
-    val dvs = dvList(spark, path, Some(head))
+    val dvs = dvsOf(manifestHeaders(spark, path, Some(head)))
     if (dvs.nonEmpty)
       actions += ((1, "materialize_deletes", "<lake>",
         s"${dvs.length} pending deletion vector(s) block compaction/merge/recluster"))

@@ -321,10 +321,10 @@ object LogStream {
     * }}}
     * and likewise st38 `Dedup.lineGatedIngest`, st36
     * `BinaryOps.chunkGatedIngest`, st40 `BinaryOps.frameGatedIngest`,
-    * st43 `Similarity.embedGatedIngest` (each commits nothing on an
-    * empty batch; replay and crash-window semantics as documented on
-    * [[graft.operators.Dedup.indexedIngest]]), and the streaming CDC
-    * apply `ParquetLake.mergeManifested`, content-idempotent on replay.
+    * st43 `Similarity.embedGatedIngest` (their contract — replay,
+    * redelivery, crash window, single writer — is on
+    * [[graft.operators.IndexGate]]), and the streaming CDC apply
+    * `ParquetLake.mergeManifested`, content-idempotent on replay.
     */
   def startBatchSink(stream: DataFrame, checkpoint: String)(
       writer: (DataFrame, Long) => Unit): StreamingQuery =

@@ -139,4 +139,25 @@ class LakeListingSpec extends SparkSpec {
     assert(ParquetLake.readManifest(spark, dir) === Some(files))
     assert(ParquetLake.branches(spark, dir) === Map("orphaned-fork" -> Seq(1, 2)))
   }
+
+  test("lk26: restoreManifested refuses a vacuumed or unknown version with the restore's own message") {
+    val dir = smallLake()
+    val v1 = ParquetLake.snapshotManifest(spark, dir)
+    val files = ParquetLake.readManifest(spark, dir).get
+    val v2 = ParquetLake.commitManifest(spark, dir, files.take(1), Some(v1))
+    val v3 = ParquetLake.commitManifest(spark, dir, files, Some(v2))
+    ParquetLake.vacuum(spark, dir, keepVersions = 1, retainMillis = 0)
+    assert(ParquetLake.manifestLog(spark, dir).map(_._1) === Seq(v3))
+    Seq(v1, 999).foreach { v =>
+      val e = intercept[IllegalArgumentException] {
+        ParquetLake.restoreManifested(spark, dir, v)
+      }
+      assert(e.getMessage.contains(s"cannot restore: version $v is not a committed manifest"),
+        e.getMessage)
+      assert(e.getMessage.contains("(vacuumed or never committed)"), e.getMessage)
+    }
+    // the refused restores committed nothing
+    assert(ParquetLake.manifestLog(spark, dir).map(_._1) === Seq(v3))
+    assert(ParquetLake.readManifest(spark, dir) === Some(files))
+  }
 }
