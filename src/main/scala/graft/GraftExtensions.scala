@@ -11,8 +11,8 @@ import graft.functions.CwlEvents
   * spark-defaults.conf, or `SparkSession.builder().withExtensions`)
   * and every session of the application resolves the `graft_*`
   * functions from SQL with no library call at all — the cluster-wide
-  * twin of [[GraftSession.ensureRegistered]], which operators still
-  * invoke defensively so a plain driver-created session also works.
+  * twin of [[GraftSession.ensureRegistered]], which operators naming a
+  * function in SQL text invoke so a plain session also works.
   * Both paths register the same [[GraftSession.sqlFunctions]] list.
   *
   * It also injects [[graft.functions.CwlEvents.Prune]], the optimizer

@@ -11,16 +11,16 @@ import graft.functions.{AudioMeta, CosineSimilarity, DotProduct, GunzipBytes, Gz
   *
   * Registers graft's native Catalyst expressions in the session's
   * function registry so operators can use them via `call_function`
-  * (and users via SQL). Idempotent; every public operator calls
-  * [[ensureRegistered]] so a plain driver-created SparkSession works.
+  * (and users via SQL). Idempotent; only operators that name a
+  * function in SQL text call [[ensureRegistered]].
   */
 object GraftSession {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
   /** The SQL surface: name → expression builder. One list feeds both
-    * registration paths — [[ensureRegistered]] (operators self-register
-    * into whatever session they run in) and [[GraftExtensions]] (the
-    * `spark.sql.extensions` deployment hook).
+    * registration paths — [[ensureRegistered]] (operators that name one
+    * in SQL text self-register into their session) and
+    * [[GraftExtensions]] (the `spark.sql.extensions` deployment hook).
     *
     * The bloom pair exposes Spark's runtime-filter expressions, which
     * are not in the public registry, for explicit bloom prefilters

@@ -212,7 +212,6 @@ object ReadLogsCli {
     val spark = SparkSession.getActiveSession.getOrElse(
       GraftSession.builder().getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureRegistered(spark)
 
     val flat = Reader.readLogs(
       spark.read.parquet(records),

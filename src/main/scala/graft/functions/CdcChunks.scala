@@ -24,12 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   */
 object CdcOps {
 
-  private val gear: Array[Long] = Array.tabulate(256) { i =>
-    var z = i.toLong * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL
-    z ^= z >>> 30; z *= 0xbf58476d1ce4e5b9L
-    z ^= z >>> 27; z *= 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
+  private val gear: Array[Long] =
+    Array.tabulate(256)(i => splitmix64(i.toLong * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL))
 
   private def fnv1a(bytes: Array[Byte], from: Int, until: Int): Long = {
     var h = 0xcbf29ce484222325L

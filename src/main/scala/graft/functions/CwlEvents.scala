@@ -1,18 +1,18 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, InputStreamReader}
+import java.io.{ByteArrayInputStream, IOException, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.core.JsonToken._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, ExprId, Expression, Generator, GenericInternalRow, JsonToStructs, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, ExprId, Expression, Generator, GenericInternalRow, JsonToStructs, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Generate, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sort, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -39,11 +39,13 @@ import graft.sources.CloudWatchLogs
   * → DATA filter → `explode(logEvents)` is exact by construction: the
   * fast path accepts only well-formed payloads whose every field —
   * skipped ones included — has the type the schema expects, with no
-  * duplicate struct field and nothing after the top-level object. Any
-  * other record (bad gzip, bad JSON, odd types) is decoded again by
-  * that chain ([[exactChain]]), so it keeps Spark's semantics; strict
-  * mode still fails the task on corrupt gzip, even when the JSON
-  * breaks first.
+  * duplicate struct field and nothing after the top-level object. A
+  * gzip stream that fails there is corrupt: dropped in permissive mode,
+  * rethrown in strict mode. Any other record it does not accept is
+  * decoded again by that chain ([[exact]]), so it keeps Spark's
+  * semantics; strict mode still fails on corrupt gzip even when the
+  * JSON breaks first. [[fate]] is the one place a record's class is
+  * decided, for [[events]] and [[CwlFate]] alike.
   */
 case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvents.All)
     extends UnaryExpression with Generator {
@@ -60,12 +62,11 @@ case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvent
     case (n, i) if (keep & (1 << i)) != 0 => n
   }
 
-  /** The from_json chain over a one-column row holding the record. */
-  @transient private lazy val exactChain: Expression = {
-    val raw = BoundReference(0, BinaryType, nullable = true)
+  /** `from_json` over a one-column row holding a record's gunzipped text. */
+  @transient private lazy val fromJson: Expression = {
     val tz = Some(SQLConf.get.sessionLocalTimeZone)
     JsonToStructs(CloudWatchLogs.payloadSchema, Map.empty,
-      Cast(if (permissive) TryGunzipBytes(raw) else GunzipBytes(raw), StringType, tz), tz)
+      BoundReference(0, StringType, nullable = true), tz)
   }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
@@ -73,11 +74,22 @@ case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvent
 
   /** The rows of one record (none for a null one). */
   def events(bytes: Array[Byte]): Iterable[InternalRow] =
-    if (bytes == null) Nil
-    else {
-      val fast = try decode(bytes) catch { case NonFatal(_) => null }
-      if (fast != null) fast else exact(bytes)
+    if (bytes == null) Nil else fate(bytes)
+
+  /** The one per-record decode: a DATA payload's event rows, or an
+    * empty [[NoRows]] naming the record's class.
+    */
+  def fate(bytes: Array[Byte]): Iterable[InternalRow] = {
+    val fast = try decode(bytes) catch {
+      case _: JsonProcessingException => null
+      case e: IOException => corrupt(e) // only the gzip stream throws other IOExceptions
+      case NonFatal(_) => null
     }
+    if (fast != null) fast else exact(bytes)
+  }
+
+  private def corrupt(e: IOException): Iterable[InternalRow] =
+    if (permissive) Fates(CorruptGzip) else throw e
 
   // GenerateExec's generated loop calls `.iterator()` on the value
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -123,8 +135,7 @@ case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvent
         t = p.nextToken()
       }
       if (t != END_OBJECT || p.nextToken() != null) null
-      else if (mt == CloudWatchLogs.DataMessage && events != null) events
-      else Nil
+      else typed(mt, events)
     } finally p.close()
   }
 
@@ -226,12 +237,12 @@ case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvent
     k
   }
 
-  /** One record through [[exactChain]], the DATA filter and the explode. */
+  /** One record through gunzip, [[fromJson]], the DATA filter and the explode. */
   private def exact(bytes: Array[Byte]): Iterable[InternalRow] = {
-    val payload = exactChain.eval(InternalRow(bytes)).asInstanceOf[InternalRow]
-    if (payload == null || payload.isNullAt(0) || payload.isNullAt(5) ||
-        payload.getUTF8String(0).toString != CloudWatchLogs.DataMessage) Nil
-    else {
+    val text = try Gzip.gunzip(bytes) catch { case e: IOException => return corrupt(e) }
+    val payload = fromJson.eval(InternalRow(UTF8String.fromBytes(text))).asInstanceOf[InternalRow]
+    if (payload == null || payload.isNullAt(0)) Fates(BadJson)
+    else typed(payload.getUTF8String(0).toString, if (payload.isNullAt(5)) null else {
       val evs: ArrayData = payload.getArray(5)
       (0 until evs.numElements()).map { i =>
         if (evs.isNullAt(i)) NullRow
@@ -243,7 +254,7 @@ case class CwlEvents(data: Expression, permissive: Boolean, keep: Int = CwlEvent
             at(0)(e.getUTF8String), at(1)(e.getLong), at(2)(e.getUTF8String), at(3)(e.getMap)))
         }
       }
-    }
+    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): CwlEvents =
@@ -269,6 +280,36 @@ object CwlEvents {
     * relax is off, so what this factory rejects goes to the exact chain.
     */
   private val Json = new JsonFactory()
+
+  /** A record's class, as [[CwlFate]] reports it: `bad JSON` is any
+    * payload without a messageType, the rule r8's report counts by.
+    */
+  val CorruptGzip = 0
+  val BadJson = 1
+  val Control = 2
+  val OtherType = 3
+  val Data = 4
+
+  /** No event rows, and why: an empty Iterable carrying the record's
+    * [[CwlFate]] value. `Fates(Data)` is a DATA payload whose
+    * `logEvents` is null or missing.
+    */
+  final class NoRows private[CwlEvents] (fate: Int) extends Iterable[InternalRow] {
+    override def iterator: Iterator[InternalRow] = Iterator.empty
+    val classified: InternalRow = InternalRow(fate, null)
+  }
+  private[functions] val Fates: IndexedSeq[NoRows] = (CorruptGzip to Data).map(new NoRows(_))
+
+  /** The fate of a decoded payload: its messageType and its event rows
+    * (null when `logEvents` is null or missing).
+    */
+  private def typed(messageType: String, events: Iterable[InternalRow]): Iterable[InternalRow] =
+    messageType match {
+      case null => Fates(BadJson)
+      case CloudWatchLogs.DataMessage => if (events == null) Fates(Data) else events
+      case CloudWatchLogs.ControlMessage => Fates(Control)
+      case _ => Fates(OtherType)
+    }
 
   private val MaxCachedKeys = 1024
   private val EmptyMap = ArrayBasedMapData(Array.empty[Any], Array.empty[Any])
@@ -313,4 +354,35 @@ object CwlEvents {
         }
       }
   }
+}
+
+/** A record's class through the [[CwlEvents]] decode, as
+  * struct<fate: int, events: bigint>: `fate` is one of
+  * [[CwlEvents.CorruptGzip]], `BadJson`, `Control`, `OtherType` or
+  * `Data`, and `events` is a DATA payload's event count (null for any
+  * other class, and for a null `logEvents`). A null record counts as
+  * corrupt gzip, as `graft_try_gunzip` gives null for both.
+  */
+case class CwlFate(data: Expression) extends UnaryExpression with CodegenFallback {
+  import CwlEvents.{CorruptGzip, Data, Fates, NoRows}
+
+  @transient private lazy val decoder = CwlEvents(data, permissive = true, keep = 0)
+
+  override def child: Expression = data
+  override val dataType: DataType = StructType(Seq(
+    StructField("fate", IntegerType, nullable = false), StructField("events", LongType)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_cwl_fate"
+
+  override def eval(input: InternalRow): Any = {
+    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
+    if (bytes == null) Fates(CorruptGzip).classified
+    else decoder.fate(bytes) match {
+      case n: NoRows => n.classified
+      case rows => InternalRow(Data, rows.size.toLong)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CwlFate =
+    copy(data = newChild)
 }

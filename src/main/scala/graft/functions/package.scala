@@ -5,18 +5,22 @@ import org.apache.spark.sql.graftshim.ColumnShim
 
 /** Column-typed entry points for graft's native Catalyst expressions.
   * Built directly on the expression tree — no session-registry
-  * dependency, usable from any SparkSession. (The same expressions
-  * are also SQL-registered by [[GraftSession.ensureRegistered]].)
+  * dependency, usable from any SparkSession. (Some are also
+  * SQL-registered by [[GraftSession.ensureRegistered]].)
   */
 package object functions {
+  /** The splitmix64 finalizer: consecutive seed terms give unrelated
+    * 64-bit values. Each caller builds its own seed term.
+    */
+  private[graft] def splitmix64(seed: Long): Long = {
+    var z = seed
+    z ^= z >>> 30; z *= 0xbf58476d1ce4e5b9L
+    z ^= z >>> 27; z *= 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
   private[graft] def col1(f: org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression)(c: Column): Column =
     ColumnShim.column(f(ColumnShim.expression(c)))
-
-  /** Pin an expensive expression to a single evaluation site (see
-    * [[Opaque]]): the optimizer treats it as non-deterministic and so
-    * never re-inlines it into downstream filters/projections.
-    */
-  def opaque(c: Column): Column = col1(Opaque.apply)(c)
 
   /** One row per log event of each gzipped CWL payload in `data`:
     * (log_id, timestamp_ms, message, fields) — see [[CwlEvents]].
@@ -24,6 +28,9 @@ package object functions {
     */
   def cwlEvents(data: Column, permissive: Boolean): Column =
     col1(CwlEvents(_, permissive))(data)
+
+  /** Each gzipped CWL payload's class and event count — see [[CwlFate]]. */
+  def cwlFate(data: Column): Column = col1(CwlFate.apply)(data)
 
   /** Gzip-compress a binary column. */
   def graft_gzip(c: Column): Column = col1(GzipBytes.apply)(c)

@@ -378,10 +378,7 @@ object BinaryOps {
     // rasters (a LINEAR seed term shifts values mod 256, which can
     // leave two seeds' 8×8 threshold patterns — and thus their
     // aHashes — identical)
-    var z = seed * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL
-    z ^= z >>> 30; z *= 0xbf58476d1ce4e5b9L
-    z ^= z >>> 27; z *= 0x94d049bb133111ebL
-    z ^= z >>> 31
+    val z = graft.functions.splitmix64(seed * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL)
     var y = 0
     while (y < h) {
       var x = 0
@@ -539,10 +536,7 @@ object BinaryOps {
     val bigEndian = fmt != "wav"
     val af = new AudioFormat(rate.toFloat, 16, ch, true, bigEndian)
     val pcm = new Array[Byte](frames * ch * 2)
-    var z = seed * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL
-    z ^= z >>> 30; z *= 0xbf58476d1ce4e5b9L
-    z ^= z >>> 27; z *= 0x94d049bb133111ebL
-    z ^= z >>> 31
+    val z = graft.functions.splitmix64(seed * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL)
     var i = 0
     while (i < frames * ch) {
       val s = ((z >>> ((i & 3) * 16)) + i * 2654435761L).toShort

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,31 +25,9 @@ object AsOfJoin {
   def lastBefore(
       left: DataFrame, right: DataFrame,
       key: String, leftTs: String, rightTs: String,
-      payload: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    // one right row per (key, ts): deterministic tie reduction
-    val r1 = right.groupBy(col(key).as("_k"), col(rightTs).as("_ts"))
-      .agg(payload.map(c => max(col(c)).as(c)).head,
-        payload.map(c => max(col(c)).as(c)).tail: _*)
-    val rTagged = r1.select(
-      Seq(col("_k"), col("_ts"), lit(0).as("_side")) ++
-        leftCols.map(c => lit(null).as(s"_l_$c")) ++
-        payload.map(col): _*)
-    val lTagged = left.select(
-      Seq(col(key).as("_k"), col(leftTs).as("_ts"), lit(1).as("_side")) ++
-        leftCols.map(c => col(c).as(s"_l_$c")) ++
-        payload.map(c => lit(null).as(c)): _*)
+      payload: Seq[String]): DataFrame =
     // right sorts before left at equal ts → inclusive (≤) semantics
-    val w = Window.partitionBy("_k").orderBy(col("_ts"), col("_side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rTagged.unionByName(lTagged)
-      .select(
-        (Seq(col("_side")) ++
-          leftCols.map(c => col(s"_l_$c").as(c)) ++
-          payload.map(c => last(col(c), ignoreNulls = true).over(w).as(c))): _*)
-      .where(col("_side") === 1)
-      .drop("_side")
-  }
+    asOf(left, right, key, leftTs, rightTs, payload, c => max(c), col("_ts"))
 
   /** Forward as-of: every left row + `payload` of the EARLIEST right
     * row with the same key and right time ≥ left time (inclusive) —
@@ -61,11 +39,21 @@ object AsOfJoin {
   def firstAfter(
       left: DataFrame, right: DataFrame,
       key: String, leftTs: String, rightTs: String,
-      payload: Seq[String]): DataFrame = {
+      payload: Seq[String]): DataFrame =
+    // descending traversal; right first at equal ts → inclusive (≥)
+    asOf(left, right, key, leftTs, rightTs, payload, c => min(c), col("_ts").desc)
+
+  /** The one body: right rows tied on (key, time) reduced by `tie`,
+    * then the last right payload carried forward in `order` within key.
+    */
+  private def asOf(
+      left: DataFrame, right: DataFrame,
+      key: String, leftTs: String, rightTs: String,
+      payload: Seq[String], tie: Column => Column, order: Column): DataFrame = {
     val leftCols = left.columns.toSeq
-    val r1 = right.groupBy(col(key).as("_k"), col(rightTs).as("_ts"))
-      .agg(payload.map(c => min(col(c)).as(c)).head,
-        payload.map(c => min(col(c)).as(c)).tail: _*)
+    // one right row per (key, ts): deterministic tie reduction
+    val ties = payload.map(c => tie(col(c)).as(c))
+    val r1 = right.groupBy(col(key).as("_k"), col(rightTs).as("_ts")).agg(ties.head, ties.tail: _*)
     val rTagged = r1.select(
       Seq(col("_k"), col("_ts"), lit(0).as("_side")) ++
         leftCols.map(c => lit(null).as(s"_l_$c")) ++
@@ -74,8 +62,7 @@ object AsOfJoin {
       Seq(col(key).as("_k"), col(leftTs).as("_ts"), lit(1).as("_side")) ++
         leftCols.map(c => col(c).as(s"_l_$c")) ++
         payload.map(c => lit(null).as(c)): _*)
-    // descending traversal; right first at equal ts → inclusive (≥)
-    val w = Window.partitionBy("_k").orderBy(col("_ts").desc, col("_side"))
+    val w = Window.partitionBy("_k").orderBy(order, col("_side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rTagged.unionByName(lTagged)
       .select(

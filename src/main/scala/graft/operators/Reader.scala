@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
-
 /** Batch re-expression of the reference's `KinesisLogsReader`
   * iteration (reference: kinesis_logs_reader/kinesis_logs_reader.py:24-106).
   *
@@ -44,7 +42,6 @@ object Reader {
       startTimeMs: Option[Long] = None,
       takeN: Option[Int] = None,
       permissive: Boolean = false): DataFrame = {
-    GraftSession.ensureRegistered(records.sparkSession)
     val parsed = records.select(graft.functions.cwlEvents(col(dataCol), permissive))
     val timeFiltered = startTimeMs
       .map(t => parsed.where(col("timestamp_ms") >= lit(t)))

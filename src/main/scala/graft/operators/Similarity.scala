@@ -390,11 +390,8 @@ object Similarity {
     */
   private[graft] def hyperplanes(numPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes, dim) { (p, d) =>
-      // splitmix64-style scramble of (p, d)
-      var z = p.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L + 0x42L
-      z ^= z >>> 30; z *= 0xbf58476d1ce4e5b9L
-      z ^= z >>> 27; z *= 0x94d049bb133111ebL
-      z ^= z >>> 31
+      val z = graft.functions.splitmix64(
+        p.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L + 0x42L)
       ((z % 2001L) / 1000.0) // in [-2, 2]
     }
 

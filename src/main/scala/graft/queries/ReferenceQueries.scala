@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.functions.{CwlEvents, cwlFate, graft_gzip}
 import graft.operators.{Reader, Tsv}
 import graft.sources.{CloudWatchLogs, FlowLogs}
 
@@ -24,15 +24,14 @@ object ReferenceQueries {
     lit("event_type"), col("event_type"),
     lit("value"), col("value").cast("string"))
 
-  /** events → per-"shard" gzipped CWL payloads. `messageTypeOf` maps
-    * the shard id to the payload's messageType (r3 uses it to plant
-    * CONTROL_MESSAGEs the reader must drop).
+  /** events → per-"shard" gzipped CWL payloads (shard_id, chunk, data).
+    * `messageTypeOf` maps the shard id to the payload's messageType (r3
+    * and r8 use it to plant CONTROL_MESSAGEs the reader must drop).
     */
   private def payloadsFromEvents(
       events: DataFrame,
       shards: Int = 8,
       messageTypeOf: Column => Column = _ => lit(CloudWatchLogs.DataMessage)): DataFrame = {
-    GraftSession.ensureRegistered(events.sparkSession)
     // chunk within each shard: real Kinesis records carry ~KBs of
     // events, not a whole shard — and the per-record gzip then fans
     // across all cores instead of `shards` tasks
@@ -49,7 +48,7 @@ object ReferenceQueries {
       .groupBy("shard_id", "chunk")
       .agg(collect_list(col("logEvent")).as("logEvents"))
       .select(
-        col("shard_id"),
+        col("shard_id"), col("chunk"),
         CloudWatchLogs.encodePayload(messageTypeOf(col("shard_id")), col("logEvents")).as("data"))
   }
 
@@ -109,7 +108,6 @@ object ReferenceQueries {
   // (union) and the merge dedupes by log id — the reference's
   // "iterate all shards until drained, each event once" contract.
   val r4ShardMerge: Q = (s, dir) => {
-    GraftSession.ensureRegistered(s)
     val recs = events(s, dir)
       .select(
         pmod(col("user_id"), lit(4)).as("shard_id"),
@@ -170,49 +168,23 @@ object ReferenceQueries {
   // (truncated gzip / gzip of non-JSON / CONTROL shard), so the
   // DuckDB oracle predicts every class count from the same
   // construction rules while Spark must EARN them through real
-  // decompression and parsing.
+  // decompression and parsing: `cwlFate` classifies each payload once,
+  // through the same decode `Reader.readLogs` runs.
   val r8IngestReport: Q = (s, dir) => {
-    GraftSession.ensureRegistered(s)
-    import graft.functions.{graft_gzip, graft_try_gunzip}
-    val pl = events(s, dir)
-      .select(
-        pmod(col("user_id"), lit(8)).as("shard_id"),
-        expr("event_id div 500").as("chunk"),
-        struct(
-          col("event_id").cast("string").as("id"),
-          col("ts_ms").as("timestamp"),
-          concat_ws(" ", col("event_id"), col("event_type"), col("value")).as("message"),
-          eventFields.as("extractedFields")
-        ).as("logEvent"))
-      .groupBy("shard_id", "chunk")
-      .agg(collect_list(col("logEvent")).as("logEvents"))
-      .select(col("shard_id"), col("chunk"),
-        CloudWatchLogs.encodePayload(
-          when(col("shard_id") === 7, lit(CloudWatchLogs.ControlMessage))
-            .otherwise(lit(CloudWatchLogs.DataMessage)),
-          col("logEvents")).as("data"))
-    val corrupted = pl.select(
-      when(pmod(col("chunk"), lit(7)) === 3, substring(col("data"), 1, 10))
-        .when(pmod(col("chunk"), lit(7)) === 5,
-          graft_gzip(lit("definitely not json").cast("binary")))
-        .otherwise(col("data")).as("data"))
-    val decoded = graft.functions.opaque(graft_try_gunzip(col("data")))
-    val parsed = graft.functions.opaque(
-      from_json(col("_dec").cast("string"), CloudWatchLogs.payloadSchema))
-    corrupted
-      .withColumn("_dec", decoded)
-      .withColumn("_p", parsed)
-      .agg(
-        count(lit(1)).as("n_payloads"),
-        sum(when(col("_dec").isNull, 1L).otherwise(0L)).as("n_corrupt_gzip"),
-        sum(when(col("_dec").isNotNull && col("_p.messageType").isNull, 1L)
-          .otherwise(0L)).as("n_bad_json"),
-        sum(when(col("_p.messageType") === CloudWatchLogs.ControlMessage, 1L)
-          .otherwise(0L)).as("n_control"),
-        sum(when(col("_p.messageType") === CloudWatchLogs.DataMessage, 1L)
-          .otherwise(0L)).as("n_ok_data"),
-        sum(when(col("_p.messageType") === CloudWatchLogs.DataMessage,
-          size(col("_p.logEvents")).cast("long")).otherwise(0L)).as("n_events_ok"))
+    import CwlEvents.{BadJson, Control, CorruptGzip, Data}
+    val payloads = payloadsFromEvents(events(s, dir), messageTypeOf = shard =>
+      when(shard === 7, lit(CloudWatchLogs.ControlMessage)).otherwise(lit(CloudWatchLogs.DataMessage)))
+    val planted = when(pmod(col("chunk"), lit(7)) === 3, substring(col("data"), 1, 10))
+      .when(pmod(col("chunk"), lit(7)) === 5, graft_gzip(lit("definitely not json").cast("binary")))
+      .otherwise(col("data"))
+    def n(fate: Int): Column = sum(when(col("f.fate") === fate, 1L).otherwise(0L))
+    payloads.select(cwlFate(planted).as("f")).agg(
+      count(lit(1)).as("n_payloads"),
+      n(CorruptGzip).as("n_corrupt_gzip"),
+      n(BadJson).as("n_bad_json"),
+      n(Control).as("n_control"),
+      n(Data).as("n_ok_data"),
+      sum(when(col("f.fate") === Data, col("f.events")).otherwise(0L)).as("n_events_ok"))
   }
 
   val queries: Map[String, Q] = Map(

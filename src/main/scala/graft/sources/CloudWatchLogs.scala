@@ -19,7 +19,8 @@ import graft.functions.graft_gzip
   * gunzips, parses, drops non-DATA payloads and explodes `logEvents`.
   * It falls back to `from_json(gunzip(data).cast("string"),
   * payloadSchema)` for any record its fast path does not accept, so
-  * [[payloadSchema]] defines what a payload decodes to.
+  * [[payloadSchema]] defines what a payload decodes to. r8's ingest
+  * report classifies records through the same decode ([[graft.functions.CwlFate]]).
   */
 object CloudWatchLogs {
   val DataMessage = "DATA_MESSAGE"

@@ -325,7 +325,9 @@ object ParquetLake {
     */
   private[graft] def tempFor(target: Path): Path =
     new Path(target.getParent,
-      s"._graft_tmp.${target.getName}.${java.util.UUID.randomUUID().toString.take(12)}")
+      s"$TempPrefix${target.getName}.${java.util.UUID.randomUUID().toString.take(12)}")
+
+  private val TempPrefix = "._graft_tmp."
 
   /** The one temp-file writer: `content` into a fresh [[tempFor]]
     * sibling of `target`, whose path it returns.
@@ -2878,9 +2880,11 @@ object ParquetLake {
     * in-flight write; pass `retainMillis = 0` only when no writer or
     * compaction can be running. The sweep covers every data file
     * [[dataFilesOnDisk]] lists — root-level files of an unpartitioned
-    * lake included — and refuses to run while a legacy [[compact]]
-    * COMMIT marker is pending. Returns the deleted lake-relative
-    * paths.
+    * lake included — and the [[tempFor]] files a crashed atomic write
+    * left in the root, under the same horizon. It refuses to run while
+    * a legacy [[compact]] COMMIT marker is pending, and never touches
+    * a `.compact_*` aside or its marker. Returns the deleted
+    * lake-relative paths.
     */
   def vacuum(
       spark: SparkSession, path: String, keepVersions: Int = 2,
@@ -2895,8 +2899,17 @@ object ParquetLake {
         s"vacuum refused: interrupted compact() swap(s) pending under $path " +
           s"(${pending.map(_._2.getName).mkString(", ")}); " +
           "run compact() or recoverInterrupted first")
+    val horizon = System.currentTimeMillis() - math.max(0L, retainMillis)
+    // an atomic writer deletes or renames its temp file, so one older
+    // than the horizon was left by a crash between write and rename
+    val temps = if (!fs.exists(root)) Seq.empty[Path] else fs.listStatus(root).toSeq.collect {
+      case s if s.isFile && s.getPath.getName.startsWith(TempPrefix) &&
+          s.getModificationTime <= horizon => s.getPath
+    }
+    temps.foreach(fs.delete(_, false))
+    val tempNames = temps.map(_.getName)
     val versions = manifestVersions(fs, root)
-    if (versions.isEmpty) return Seq.empty
+    if (versions.isEmpty) return tempNames
     // tagged versions are PINNED: a "dataset release" ref must stay
     // replayable no matter how retention is configured (lk22)
     val pinned = manifestTags(spark, path).values.toSet
@@ -2917,7 +2930,6 @@ object ParquetLake {
     // materialization still needs its vectors for the MoR read,
     // however old they are on main
     val (referenced, keptDv) = liveSet(fs, root, kept)
-    val horizon = System.currentTimeMillis() - math.max(0L, retainMillis)
     val dataOrphans = dataFilesOnDisk(fs, root).collect {
       case (rel, f) if f.getModificationTime <= horizon && !referenced(rel) => rel
     }
@@ -2930,7 +2942,7 @@ object ParquetLake {
         .map(d => s"$DvDir/${d.getPath.getName}")
         .filterNot(keptDv)
     dvOrphans.foreach(f => fs.delete(new Path(root, f), true))
-    dataOrphans ++ dvOrphans ++ oldManifests.map(_._2.getName)
+    dataOrphans ++ dvOrphans ++ oldManifests.map(_._2.getName) ++ tempNames
   }
 
   // ---------------------------------------------------------------

@@ -404,6 +404,34 @@ class ParquetLakeSpec extends SparkSpec {
     assert(marker.delete())
   }
 
+  test("vacuum deletes a crash-left ._graft_tmp. file once it is older than retainMillis") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft_tmp_sweep").toString
+    spark.range(4).toDF("id").write.mode("overwrite").parquet(dir)
+    ParquetLake.snapshotManifest(spark, dir)
+    val hour = 60L * 60 * 1000
+    def plant(f: java.io.File, ageMillis: Long): java.io.File = {
+      Files.write(f.toPath, "x\n".getBytes("UTF-8"))
+      assert(f.setLastModified(System.currentTimeMillis() - ageMillis))
+      f
+    }
+    def temp(target: String) =
+      new java.io.File(ParquetLake.tempFor(new Path(dir, target)).toUri.getPath)
+    val old = plant(temp("_graft_manifest.v2"), 2 * hour)
+    val young = plant(temp("_graft_tag.r1"), 0L)
+    // a legacy compact aside is never the sweep's, however old
+    val aside = new java.io.File(dir, ".compact_p_date=2024-01-01")
+    assert(aside.mkdir())
+    val asideFile = plant(new java.io.File(aside, "part-00000.parquet"), 2 * hour)
+    assert(ParquetLake.vacuum(spark, dir, retainMillis = hour) === Seq(old.getName))
+    assert(!old.exists() && young.exists() && asideFile.exists())
+    // with a COMMIT marker pending nothing is swept, temp files included
+    val marker = plant(new java.io.File(dir, ".compact_p_date=2024-01-01.COMMIT"), 2 * hour)
+    val old2 = plant(temp("_graft_manifest.v2"), 2 * hour)
+    intercept[IllegalStateException](ParquetLake.vacuum(spark, dir, retainMillis = hour))
+    assert(old2.exists() && marker.exists() && asideFile.exists())
+  }
+
   test("lk15: mergeManifested applies update/insert/delete atomically, rewriting only affected partitions") {
     val dir = Files.createTempDirectory("graft_merge").toString
     ParquetLake.writePartitioned(

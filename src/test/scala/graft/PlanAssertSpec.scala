@@ -116,6 +116,17 @@ class PlanAssertSpec extends SparkSpec {
     assert(p.contains("keep=[timestamp_ms,fields]"), p.take(4000))
   }
 
+  test("r8: payloads, then the one classifier, then one aggregate") {
+    val p = plan("r8_ingest_report")
+    // each payload is classified once by the decode readLogs runs; no
+    // second gunzip or JSON parse of its own
+    assert("graft_cwl_fate".r.findAllIn(p).length === 1, p.take(6000))
+    assert(!p.contains("from_json") && !p.contains("graft_try_gunzip"), p.take(6000))
+    // the report is one aggregate (partial and final) over the classified payloads
+    val tree = p.linesIterator.takeWhile(l => !l.startsWith("(1)")).mkString("\n")
+    assert("(?<!Object)HashAggregate \\(".r.findAllIn(tree).length === 2, tree)
+  }
+
   test("s1: top-k uses the bounded-heap aggregate, not a global sort of scores") {
     val p = plan("s1_knn_brute")
     assert(p.contains("graft_topk") || p.contains("TopKByScore"), p)

@@ -56,13 +56,13 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("CwlEvents equals the from_json chain under every keep mask, strict and permissive") {
-    import org.scalacheck.{Gen, Prop, Test => Check}
-    import org.scalacheck.rng.Seed
-    import org.apache.spark.sql.{Column, DataFrame, Row}
-    import org.apache.spark.sql.graftshim.ColumnShim
-    import graft.functions.{CwlEvents, Gzip, graft_gunzip, graft_try_gunzip, opaque}
-    import graft.sources.CloudWatchLogs
+  /** CWL records for the decode properties: generated payloads, each
+    * field well typed, null, missing, mistyped or duplicated, under
+    * record mutations; and each anomaly alone in a DATA payload.
+    */
+  private object Cwl {
+    import org.scalacheck.Gen
+    import graft.functions.Gzip
 
     // JSON fragments: raw non-ASCII (é, CJK, a surrogate pair, U+2028),
     // escapes of the same, a lone surrogate escape and control escapes
@@ -120,6 +120,33 @@ class PropertySpec extends SparkSpec {
       1 -> Gen.const(Gzip.gzip(p.getBytes("UTF-8").map(b => if (b == 'q'.toByte) 0xff.toByte else b)))))
     val records = Gen.choose(1, 6).flatMap(Gen.listOfN(_, record))
 
+    // each anomaly alone in an otherwise well-formed DATA payload
+    val ev = Seq("id" -> "\"e1\"", "timestamp" -> "17", "message" -> "\"m\"",
+      "extractedFields" -> "{\"a\":\"1\",\"b\":null,\"a\":\"2\"}")
+    def data(top: Seq[(String, String)] = Seq.empty, e: Seq[(String, String)] = ev,
+        events: String => String = e => s"[$e,null]"): String =
+      obj(Seq("messageType" -> "\"DATA_MESSAGE\"", "owner" -> "\"o\"", "logEvents" -> events(obj(e))) ++ top)
+    val alone = Seq(data(), data(events = _ => "[]"), data(events = _ => "null")) ++
+      (Seq("9223372036854775808", "1e3", "\"12\"") ++ oddValues).map(v => data(e = ev.updated(1, "timestamp" -> v))) ++
+      Seq(0, 2, 3).flatMap(j => oddValues.map(v => data(e = ev.updated(j, ev(j)._1 -> v)))) ++
+      Seq("messageType", "owner", "logGroup", "logStream", "subscriptionFilters", "logEvents")
+        .flatMap(k => oddValues.map(v => data(top = Seq(k -> v)))) ++
+      oddValues.flatMap(v => Seq(data(e = ev.updated(3, "extractedFields" -> s"{\"a\":$v}")),
+        data(events = e => s"[$e,$v]"), data(top = Seq("subscriptionFilters" -> s"[\"f\",$v]")))) ++
+      Seq(data(e = ev :+ ("id" -> "\"e2\"")), data(e = ev :+ ("message" -> "null")),
+        data(top = Seq("messageType" -> "\"CONTROL_MESSAGE\"")), data(top = Seq("logEvents" -> "[]")),
+        data(top = Seq("MessageType" -> "5", "extra" -> "{\"logEvents\":[1]}")))
+  }
+
+  test("CwlEvents equals the from_json chain under every keep mask, strict and permissive") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.graftshim.ColumnShim
+    import graft.functions.{CwlEvents, graft_gunzip, graft_try_gunzip}
+    import graft.sources.CloudWatchLogs
+    import Cwl._
+
     val names = CwlEvents.Schema.fieldNames.toSeq
     // map<string,string> as (keys, values): duplicate keys stay visible
     def normMap(c: Column): Column = when(c.isNotNull, struct(map_keys(c), map_values(c)))
@@ -131,7 +158,7 @@ class PropertySpec extends SparkSpec {
       val df = recs.zipWithIndex.map(_.swap).toDF("i", "data").repartition(1)
       val dec = if (permissive) graft_try_gunzip(col("data")) else graft_gunzip(col("data"))
       val chain = df
-        .withColumn("_p", opaque(from_json(dec.cast("string"), CloudWatchLogs.payloadSchema)))
+        .withColumn("_p", from_json(dec.cast("string"), CloudWatchLogs.payloadSchema))
         .where(col("_p.messageType") === CloudWatchLogs.DataMessage)
         .select(explode(col("_p.logEvents")).as("e"))
         .select(col("e.id"), col("e.timestamp"), col("e.message"), normMap(col("e.extractedFields")))
@@ -150,22 +177,6 @@ class PropertySpec extends SparkSpec {
         case (a, b) => Prop.falsified :| s"permissive=$permissive chain=$a fused=$b"
       }
     }
-    // each anomaly alone in an otherwise well-formed DATA payload
-    val ev = Seq("id" -> "\"e1\"", "timestamp" -> "17", "message" -> "\"m\"",
-      "extractedFields" -> "{\"a\":\"1\",\"b\":null,\"a\":\"2\"}")
-    def data(top: Seq[(String, String)] = Seq.empty, e: Seq[(String, String)] = ev,
-        events: String => String = e => s"[$e,null]"): String =
-      obj(Seq("messageType" -> "\"DATA_MESSAGE\"", "owner" -> "\"o\"", "logEvents" -> events(obj(e))) ++ top)
-    val alone = Seq(data(), data(events = _ => "[]"), data(events = _ => "null")) ++
-      (Seq("9223372036854775808", "1e3", "\"12\"") ++ oddValues).map(v => data(e = ev.updated(1, "timestamp" -> v))) ++
-      Seq(0, 2, 3).flatMap(j => oddValues.map(v => data(e = ev.updated(j, ev(j)._1 -> v)))) ++
-      Seq("messageType", "owner", "logGroup", "logStream", "subscriptionFilters", "logEvents")
-        .flatMap(k => oddValues.map(v => data(top = Seq(k -> v)))) ++
-      oddValues.flatMap(v => Seq(data(e = ev.updated(3, "extractedFields" -> s"{\"a\":$v}")),
-        data(events = e => s"[$e,$v]"), data(top = Seq("subscriptionFilters" -> s"[\"f\",$v]")))) ++
-      Seq(data(e = ev :+ ("id" -> "\"e2\"")), data(e = ev :+ ("message" -> "null")),
-        data(top = Seq("messageType" -> "\"CONTROL_MESSAGE\"")), data(top = Seq("logEvents" -> "[]")),
-        data(top = Seq("MessageType" -> "5", "extra" -> "{\"logEvents\":[1]}")))
     Seq(true, false).foreach { permissive =>
       val r = check(alone.map(gz), permissive)(Gen.Parameters.default)
       assert(r.success, r.labels.mkString("; "))
@@ -177,6 +188,55 @@ class PropertySpec extends SparkSpec {
     }
     val res = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(80).withWorkers(1).withInitialSeed(Seed(2018L)), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("CwlFate equals r8's try_gunzip → from_json chain and class rules, record for record") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.Row
+    import graft.functions.{CwlEvents, cwlFate, graft_try_gunzip}
+    import graft.sources.CloudWatchLogs
+    import CwlEvents.{BadJson, Control, CorruptGzip, Data, OtherType}
+    import Cwl._
+
+    // r8's rules over the whole parsed struct (read whole, so the
+    // optimizer cannot prune the parse to the fields a rule reads):
+    // try_gunzip null → corrupt gzip; no messageType → bad JSON; then
+    // CONTROL, DATA with size(logEvents) (null for a null array, as
+    // `size` gives under ANSI), or another type
+    def r8Class(decNull: Boolean, p: Row): (Int, Any) = {
+      val mt = if (p == null || p.isNullAt(0)) null else p.getString(0)
+      if (decNull) (CorruptGzip, null)
+      else if (mt == null) (BadJson, null)
+      else if (mt == CloudWatchLogs.ControlMessage) (Control, null)
+      else if (mt == CloudWatchLogs.DataMessage)
+        (Data, if (p.isNullAt(5)) null else p.getSeq[Row](5).size.toLong)
+      else (OtherType, null)
+    }
+    def check(recs: Seq[Array[Byte]]): Prop = {
+      val df = recs.zipWithIndex.map(_.swap).toDF("i", "data").repartition(1)
+      val dec = graft_try_gunzip(col("data"))
+      val want = df.select(col("i"), dec.isNull, from_json(dec.cast("string"), CloudWatchLogs.payloadSchema))
+        .collect().map(r => r.getInt(0) -> r8Class(r.getBoolean(1), r.getStruct(2))).toMap
+      val got = df.select(col("i"), cwlFate(col("data")).as("f")).collect()
+        .map(r => r.getInt(0) -> (r.getStruct(1).getInt(0), r.getStruct(1).get(1))).toMap
+      Prop.all(recs.indices.map(i => Prop(got(i) == want(i)) :| s"record $i: fate ${got(i)} chain ${want(i)}"): _*)
+    }
+    // a truncated gzip whose text breaks JSON before the stream fails,
+    // and payloads without events or without a known messageType
+    val html = gz("<html>" + "x" * 4000 + "</html>")
+    val cases = (alone ++ Seq(
+        obj(Seq("messageType" -> "\"DATA_MESSAGE\"")), obj(Seq("messageType" -> "\"DATA_MESSAGE\"", "logEvents" -> "null")),
+        obj(Seq("messageType" -> "\"data_message\"", "logEvents" -> "[]")), obj(Seq("logEvents" -> "[]")),
+        obj(Seq("messageType" -> "null")), obj(Seq("messageType" -> "\"CONTROL_MESSAGE\"")), "[]", "", "null"))
+      .map(gz) ++ Seq(null, html.take(html.length * 3 / 5), html.take(10), Array[Byte](1, 2, 3), Array.empty[Byte])
+    val r = check(cases)(Gen.Parameters.default)
+    assert(r.success, r.labels.mkString("; "))
+
+    val withNulls = Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.frequency(12 -> record, 1 -> Gen.const(null: Array[Byte]))))
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(80).withWorkers(1).withInitialSeed(Seed(2018L)), Prop.forAllNoShrink(withNulls)(check))
     assert(res.passed, res.status)
   }
 }

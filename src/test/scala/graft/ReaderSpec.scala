@@ -105,11 +105,20 @@ class ReaderSpec extends SparkSpec {
   }
 
   test("strict mode fails on a truncated gzip whose text breaks JSON first; permissive drops it") {
-    val html = graft.functions.Gzip.gzip(("<html>" + "x" * 4000 + "</html>").getBytes("UTF-8"))
-    val bad = Seq(html.take(html.length * 3 / 5)).toDF("data")
-    val mixed = fixtureRecords.select($"data").unionAll(bad)
-    intercept[Exception](Reader.readLogs(mixed).count())
-    assert(Reader.readLogs(mixed, permissive = true).count() === 6)
+    import graft.functions.Gzip
+    def root(t: Throwable): Throwable = if (t.getCause == null) t else root(t.getCause)
+    val html = Gzip.gzip(("<html>" + "x" * 4000 + "</html>").getBytes("UTF-8"))
+    val payload = fixtureRecords.select($"data").as[Array[Byte]].head()
+    // strict mode fails with the exception gunzip throws, whether the
+    // JSON breaks first, the trailer is cut, only the header is left or
+    // the record is not gzip at all
+    Seq(html.take(html.length * 3 / 5), payload.take(payload.length - 5), payload.take(10),
+        Array[Byte](1, 2, 3)).foreach { bad =>
+      val mixed = fixtureRecords.select($"data").unionAll(Seq(bad).toDF("data"))
+      val want = intercept[java.io.IOException](Gzip.gunzip(bad)).getClass
+      assert(root(intercept[Exception](Reader.readLogs(mixed).count())).getClass === want)
+      assert(Reader.readLogs(mixed, permissive = true).count() === 6)
+    }
   }
 
   test("plan: the fused decode fills only the columns each consumer reads") {
@@ -139,6 +148,35 @@ class ReaderSpec extends SparkSpec {
 
     // a session built without GraftExtensions decodes every column and
     // returns the same rows
+    withPlainSession { plain =>
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val bare = Reader.readLogs(fixtureIn(plain)).select(col("log_id"), col("fields")("srcport"))
+      assert(kept(bare) === Seq(CwlEvents.Schema.fieldNames.toSeq))
+      assert(rows(bare) === rows(Reader.readLogs(fixtureRecords).select(col("log_id"), col("fields")("srcport"))))
+    }
+  }
+
+  test("readLogs leaves a plain session's function registry as it found it") {
+    withPlainSession { plain =>
+      def graftFns = plain.sessionState.functionRegistry.listFunction().map(_.funcName)
+        .filter(_.startsWith("graft_"))
+      assert(graftFns.isEmpty)
+      assert(Reader.readLogs(fixtureIn(plain), permissive = true).count() === 6)
+      assert(Tsv.render(Reader.readLogs(fixtureIn(plain))).count() === 7)
+      assert(graftFns.isEmpty, graftFns.mkString(", "))
+    }
+  }
+
+  /** The fixture's records in `session`. */
+  private def fixtureIn(session: SparkSession) =
+    session.createDataFrame(fixtureRecords.select("data").collect().toSeq.asJava,
+      fixtureRecords.select("data").schema)
+
+  /** `body` on a fresh session built without GraftExtensions (so no
+    * `graft_*` function and no optimizer rule of graft's), sharing the
+    * suite's SparkContext.
+    */
+  private def withPlainSession(body: SparkSession => Unit): Unit = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -146,12 +184,7 @@ class ReaderSpec extends SparkSpec {
     try {
       val plain = SparkSession.builder().getOrCreate()
       assert(plain ne spark)
-      val recs = plain.createDataFrame(fixtureRecords.select("data").collect().toSeq.asJava,
-        fixtureRecords.select("data").schema)
-      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-      val bare = Reader.readLogs(recs).select(col("log_id"), col("fields")("srcport"))
-      assert(kept(bare) === Seq(CwlEvents.Schema.fieldNames.toSeq))
-      assert(rows(bare) === rows(Reader.readLogs(fixtureRecords).select(col("log_id"), col("fields")("srcport"))))
+      body(plain)
     } finally {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
